@@ -1,0 +1,48 @@
+package perfbench
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** The `file` scheme with its operations counted. Hadoop's local
+  * filesystem keeps byte counts but no operation counts, so a traced run
+  * installs this class as `fs.file.impl`. Reads are opens, listings and
+  * status lookups; writes are creates, renames, deletes and mkdirs. The
+  * checksum files beside each data file are not counted separately.
+  */
+class CountingLocalFileSystem extends LocalFileSystem {
+  import CountingLocalFileSystem.{reads, writes}
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    reads.incrementAndGet(); super.open(f, bufferSize)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    reads.incrementAndGet(); super.listStatus(f)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    reads.incrementAndGet(); super.getFileStatus(f)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    writes.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    writes.incrementAndGet(); super.rename(src, dst)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    writes.incrementAndGet(); super.delete(f, recursive)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    writes.incrementAndGet(); super.mkdirs(f, permission)
+  }
+}
+
+object CountingLocalFileSystem {
+  val reads = new AtomicLong
+  val writes = new AtomicLong
+}
