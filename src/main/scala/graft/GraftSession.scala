@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Canonical SparkSession factory: every entry point (Verify, Bench,
-  * PlanAudit, user code) gets the same scale posture — AQE with skew
+  * PlanDump, user code) gets the same scale posture — AQE with skew
   * handling, bounded shuffle partitions, UTC session time, and the
   * legacy nanos conf the driver's TIMESTAMP(NANOS) test tables need.
   */

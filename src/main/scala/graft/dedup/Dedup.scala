@@ -367,12 +367,6 @@ object Dedup {
     */
   val lastClusterRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Wall seconds of each phase of the most recent [[clusters]] call
-    * (label-init job, then one entry per round) — optimization-probe
-    * telemetry only, never read by gates or bench. */
-  val lastClusterPhaseSecs =
-    new java.util.concurrent.CopyOnWriteArrayList[(String, Double)]()
-
   def clusters(docs: DataFrame, pairs: DataFrame,
                idCol: String = "doc_id", maxIter: Int = 20,
                reliable: Boolean = false): DataFrame = {
@@ -435,13 +429,6 @@ object Dedup {
     // grows the logical plan exponentially with the round count;
     // `reliable` picks durable checkpoints over executor-lifetime
     // blocks (see [[graft.graph.Graph.cut]])
-    lastClusterPhaseSecs.clear()
-    var tPhase = System.nanoTime()
-    def phase(tag: String): Unit = {
-      val now = System.nanoTime()
-      lastClusterPhaseSecs.add(tag -> (now - tPhase) / 1e9)
-      tPhase = now
-    }
     var labelsCkpt = cut(edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id"))
       .sortWithinPartitions("doc_id"), reliable)
@@ -449,7 +436,6 @@ object Dedup {
     // the labels job above materialized the edge cache; the staged
     // pair table has served its purpose
     p.unpersist()
-    phase("init")
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -517,7 +503,6 @@ object Dedup {
       labels = next.select(col("doc_id"), col("cluster_id"))
       converged = !anyChanged
       i += 1
-      phase(s"round_$i")
     }
     lastClusterRounds.set(i)
     edges.unpersist()

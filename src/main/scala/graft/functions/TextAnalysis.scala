@@ -1166,18 +1166,6 @@ object TextAnalysis {
     */
   val MaxTrainBuckets: Int = 1 << 20
 
-  /** When true, [[trainLinearModel]] records each GD step's gradient
-    * plan (`explain("formatted")`) into [[trainStepPlans]] — the
-    * function's OUTPUT is a LocalRelation of collected weights, so the
-    * per-step plan (the thing that repeats at scale) is otherwise
-    * invisible to plan audits. Off by default: explainString re-plans
-    * the tree, pure overhead outside audits. Mirrors
-    * [[graft.graph.Graph.captureStepPlans]].
-    */
-  @volatile private[graft] var captureTrainStepPlans = false
-  private[graft] val trainStepPlans =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
-
   /** TRAIN the linear quality classifier that [[scoreLinearModel]]
     * serves (fastText/DCLM-style): full-batch logistic-regression
     * gradient descent over hashed bag-of-words counts, labels from
@@ -1278,9 +1266,6 @@ object TextAnalysis {
             .groupBy("bucket")
             .agg(sum((col("y6") - col("s6")) * col("cnt")).as("g"))
         }
-      if (captureTrainStepPlans)
-        trainStepPlans.add(gDf.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
       val g = gDf.collect() // ≤ nBuckets rows by construction
       w = g.map { r =>
         val b = r.getLong(0)

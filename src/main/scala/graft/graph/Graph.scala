@@ -12,6 +12,15 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
   */
 object Graph {
 
+  /** The session's shuffle parallelism, as an EXPLICIT repartition
+    * count: a bare `repartition(col)` is AQE-coalescible, and the
+    * superstep no-exchange properties in this file must not depend on
+    * adaptive-plan settings. At scale this is the cluster fan-out; the
+    * value is the same one every other exchange in the query uses.
+    */
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.numShufflePartitions
+
   /** Lineage cut between supersteps. `reliable = false` (default)
     * uses `localCheckpoint` — executor-lifetime blocks, the right
     * cost on a stable cluster — but a lost executor (preemption,
@@ -24,35 +33,7 @@ object Graph {
     * loudly when no checkpoint dir is configured rather than
     * silently degrading durability.
     */
-  /** When true, [[cut]] records each pre-cut superstep plan
-    * (`explain("formatted")`) into [[stepPlans]] — the final plan of
-    * an iterative query is just a projection over the last
-    * checkpoint's LogicalRDD, so the per-superstep plan (the thing
-    * that actually repeats at scale) is otherwise invisible to plan
-    * audits. Off by default: explainString re-plans the tree, which
-    * is pure overhead outside audits.
-    */
-  @volatile private[graft] var captureStepPlans = false
-  private[graft] val stepPlans =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
-
-  private[graft] def cut(df: DataFrame, reliable: Boolean): DataFrame = {
-    if (captureStepPlans)
-      stepPlans.add(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    cutNoCapture(df, reliable)
-  }
-
-  /** The session's shuffle parallelism, as an EXPLICIT repartition
-    * count: a bare `repartition(col)` is AQE-coalescible, and the
-    * superstep no-exchange properties in this file must not depend on
-    * adaptive-plan settings. At scale this is the cluster fan-out; the
-    * value is the same one every other exchange in the query uses.
-    */
-  private def shufflePartitions(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
-  private def cutNoCapture(df: DataFrame, reliable: Boolean): DataFrame =
+  private[graft] def cut(df: DataFrame, reliable: Boolean): DataFrame =
     if (!reliable) df.localCheckpoint()
     else {
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,

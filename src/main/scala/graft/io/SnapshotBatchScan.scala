@@ -1490,12 +1490,8 @@ private[graft] final class SnapshotBatchScan(
     // keep row-group pruning and range splits. Equality deletes
     // stay row-based: their kill test probes row VALUES, which a
     // batch would have to materialize row-by-row anyway.
-    // `graft.scan.forceRowRead` is a PROBE seam (MorProbe times the
-    // columnar MoR path against the row path it replaced); never set
-    // in production
     val canBatch = !withMeta && pushedLimit.isEmpty &&
-      pushedTopN.isEmpty && !dvs.exists(_.startsWith("eq:")) &&
-      !sys.props.get("graft.scan.forceRowRead").contains("true")
+      pushedTopN.isEmpty && !dvs.exists(_.startsWith("eq:"))
     val batchRead =
       if (canBatch)
         ScanBridge.parquetBatchReadFunc(spark, physData, physRequired,

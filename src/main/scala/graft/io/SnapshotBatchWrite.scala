@@ -339,8 +339,10 @@ private[graft] final class SnapshotDataWriter(
       f"part-$partitionId%05d-$uuid-c$fileCount%03d$ext"
     fileCount += 1
     val rel = (commitDir +: dirs :+ name).mkString("/")
-    writer = support.newWriter(s"$path/$rel", dataSchemaPhys, ctx)
+    // recorded BEFORE the writer opens: a factory that creates the
+    // file and then throws must still leave it for abort() to delete
     written += rel
+    writer = support.newWriter(s"$path/$rel", dataSchemaPhys, ctx)
   }
 
   override def write(row: InternalRow): Unit = {

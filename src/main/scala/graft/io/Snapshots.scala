@@ -5753,18 +5753,8 @@ object Snapshots {
     */
   def rewriteDeletes(spark: SparkSession, path: String,
                      convertEq: Boolean = false): Long = {
-    // opt-in phase trace (-Dgraft.probe.rewriteDeletes=true):
-    // optimization-probe telemetry only, dead when unset
-    val trace = sys.props.get("graft.probe.rewriteDeletes").contains("true")
-    var tP = System.nanoTime()
-    def ph(tag: String): Unit = if (trace) {
-      val now = System.nanoTime()
-      println(f"[rewriteDeletes] $tag ${(now - tP) / 1e9}%.3f s")
-      tP = now
-    }
     val st = currentState(spark, path, "rewriteDeletes")
     val f = fs(spark, path)
-    ph("state")
     val posRels = st.dvs.filterNot(_.startsWith("eq:"))
     val eqs = st.dvs.flatMap(eqOf).sortBy(_.base)
     val eqMarkers = st.dvs.filter(_.startsWith("eq:"))
@@ -5780,7 +5770,6 @@ object Snapshots {
       if (posRels.isEmpty) None
       else Some(dvRows(spark, path, posRels)
         .join(liveDf, Seq(DvFileCol), "left_semi"))
-    ph("keptPos_plan")
     if (!convert && posRels.size <= 1) {
       // one file, nothing to merge — rewrite only if it carries
       // stale tombstones: ONE early-out job (left join against the
@@ -5806,7 +5795,6 @@ object Snapshots {
           col("_metadata.row_index").as(DvPosCol)): _*)
       val baseRels: Seq[Set[String]] =
         eqs.map(e => manifest(f, path, e.base).entries.map(relOf).toSet)
-      ph("converted_baseRels")
       val groups = st.entries.groupBy { en =>
         val i = baseRels.indexWhere(_.contains(relOf(en)))
         if (i < 0) eqs.size else i
@@ -5814,18 +5802,15 @@ object Snapshots {
       if (groups.isEmpty) None
       else Some(groups.map { case (i, es) =>
         val ids = idOf(es)
-        ph("converted_idOf")
         eqs.drop(i).map { e =>
           val logicalCols = e.cols.map(c => st.colMap.getOrElse(c, c))
           val keys = spark.read.parquet(s"$path/${e.rel}")
             .select(e.cols.map(col): _*).toDF(logicalCols: _*)
-          ph("converted_keys")
           ids.join(keys, logicalCols, "left_semi")
             .select(col(DvFileCol), col(DvPosCol))
         }.reduce(_ unionByName _)
       }.reduce(_ unionByName _))
     }
-    ph("converted_plan")
     val doomed = (keptPos.toSeq ++ converted.toSeq)
       .map(_.select(col(DvFileCol), col(DvPosCol)))
       .reduceOption(_ unionByName _).map(_.distinct())
@@ -5841,14 +5826,12 @@ object Snapshots {
         val d = d0.persist()
         try {
           val empty = d.limit(1).count() == 0L
-          ph("doomed_materialize")
           if (empty) Nil
           else {
             d.repartition(1)
               .select(col(DvFileCol).as("__file"),
                 col(DvPosCol).as("__pos"))
               .write.parquet(s"$path/$commitDir")
-            ph("marker_write")
             listCommitFiles(f, path, commitDir)
           }
         } finally { d.unpersist(); () }
@@ -5903,7 +5886,6 @@ object Snapshots {
         curBase = newBase
       }
     }
-    ph("publish")
     committed
   }
 

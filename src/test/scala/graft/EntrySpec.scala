@@ -15,4 +15,40 @@ class EntrySpec extends SparkSpec {
     assert(orphans === Set.empty[String],
       s"oracles without a query: $orphans")
   }
+
+  test("only Bench, Verify and PlanDump are entry points, and no engine " +
+    "object reads a graft.* system property") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory,
+      s"run from the repo root: ${root.getAbsolutePath}")
+    def walk(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) walk(f) else Seq(f))
+    val sources = walk(root).filter(_.getName.endsWith(".scala"))
+      .map(f => root.toPath.relativize(f.toPath).toString ->
+        java.nio.file.Files.readString(f.toPath))
+    val pkg = """(?m)^package\s+([\w.]+)""".r
+    val obj = """\bobject\s+(\w+)""".r
+    val main = """\bdef\s+main\s*\(\s*\w+\s*:\s*Array\[String\]""".r
+    val mains = sources.flatMap { case (_, src) =>
+      val prefix = pkg.findFirstMatchIn(src).fold("")(_.group(1) + ".")
+      main.findAllMatchIn(src).map { m =>
+        prefix + obj.findAllMatchIn(src.take(m.start)).toSeq
+          .lastOption.fold("?")(_.group(1))
+      }
+    }.toSet
+    assert(mains === Set("graft.Bench", "graft.Verify", "graft.PlanDump"),
+      "a one-off main is back; measure through Bench or perfbench instead")
+    // the one allowed read is Bench's own output-path option
+    // (Hadoop conf keys such as `conf.getBoolean("graft...")` are
+    // per-session configuration, not system properties)
+    val propRead = ("""(?:sys\.props|System\.getProperty|""" +
+      """Boolean\.getBoolean|Integer\.getInteger|Long\.getLong)""" +
+      """[^"\n]*"(graft\.[^"]*)"""").r
+    val reads = sources.flatMap { case (rel, src) =>
+      propRead.findAllMatchIn(src).map(m => rel -> m.group(1))
+    }.toSet
+    assert(reads === Set("graft/Bench.scala" -> "graft.bench.out"),
+      "engine behaviour must not hang off a JVM-wide system property")
+  }
 }

@@ -290,4 +290,42 @@ class SnapshotWriteSpec extends SparkSpec {
       col("lang") === "no_such_lang", docs.limit(2))
     assert(Snapshots.read(spark, path).count() === before + 2)
   }
+
+  test("a task whose writer factory creates the file and then throws leaves no staged file after abort()") {
+    val path = Files.createTempDirectory("graft_roll").toString
+    val commitDir = "_commit_roll"
+    // the failure shape under test: the file exists on disk, but no
+    // OutputWriter came back for the task to track it by
+    val failing = new org.apache.spark.sql.execution.datasources
+        .OutputWriterFactory {
+      override def getFileExtension(
+          ctx: org.apache.hadoop.mapreduce.TaskAttemptContext): String =
+        ".parquet"
+      override def newInstance(file: String,
+          dataSchema: org.apache.spark.sql.types.StructType,
+          ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+          : org.apache.spark.sql.execution.datasources.OutputWriter = {
+        val p = new org.apache.hadoop.fs.Path(file)
+        p.getFileSystem(ctx.getConfiguration).create(p).close()
+        throw new java.io.IOException("writer init failed after create")
+      }
+    }
+    val support = org.apache.spark.sql.graft.WriteBridge.TaskWriteSupport(
+      failing, new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf()))
+    val id = org.apache.spark.sql.catalyst.expressions.BoundReference(
+      0, org.apache.spark.sql.types.LongType, nullable = false)
+    val w = new graft.io.SnapshotDataWriter(path, commitDir, support,
+      Seq(id), new org.apache.spark.sql.types.StructType()
+        .add("id", "long", nullable = false),
+      Nil, Nil, partitionId = 0, taskId = 0L)
+    intercept[java.io.IOException](
+      w.write(org.apache.spark.sql.catalyst.InternalRow(1L)))
+    w.abort()
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f))
+    val left = files(new java.io.File(s"$path/$commitDir"))
+    assert(left.isEmpty, s"abort() left staged files behind: $left")
+  }
 }

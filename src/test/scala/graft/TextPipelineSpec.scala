@@ -624,11 +624,29 @@ class TextPipelineSpec extends SparkSpec {
     val docs = (0L until 40L)
       .map(i => (i, s"tok${i % 7} tok${i % 3} word$i", (i % 2).toInt))
       .toDF("doc_id", "text", "lab")
-    TextAnalysis.captureTrainStepPlans = true
-    TextAnalysis.trainStepPlans.clear()
-    try TextAnalysis.trainLinearModel(docs, col("lab") === 1, 64).collect()
-    finally TextAnalysis.captureTrainStepPlans = false
-    val plans = TextAnalysis.trainStepPlans.toArray(Array.empty[String])
+    // the function's OUTPUT is a LocalRelation of collected weights, so
+    // each step's gradient plan is only visible to a session listener:
+    // keep the queries whose analyzed output is the (bucket, g) gradient
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener =
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit =
+          if (qe.analyzed.output.map(_.name) == Seq("bucket", "g"))
+            captured.add(qe.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
+      }
+    spark.listenerManager.register(listener)
+    try {
+      TextAnalysis.trainLinearModel(docs, col("lab") === 1, 64).collect()
+      org.apache.spark.graft.ListenerFlush
+        .waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = captured.toArray(Array.empty[String])
     assert(plans.length === 3, "one captured gradient plan per GD step")
     // the cached tables are laid out by hash(doc_id) once (an explicit
     // REPARTITION_BY_NUM in the cache-build subtree); a planner-inserted
