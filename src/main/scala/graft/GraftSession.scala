@@ -8,6 +8,19 @@ import org.apache.spark.sql.SparkSession
   * legacy nanos conf the driver's TIMESTAMP(NANOS) test tables need.
   */
 object GraftSession {
+  /** Entries in Spark's generated-code cache (the static conf
+    * `spark.sql.codegen.cache.maxEntries`, default 100). Catalyst
+    * compiles each whole-stage-codegen source with Janino and keys the
+    * compiled class by (thread context class loader, source), so in
+    * local mode one source that is compiled on a driver-side stage
+    * thread and again inside a task holds two entries. One
+    * `corpus_curation` batch (Jaccard pairs, connected-component
+    * rounds, curation, the mix) plans more than 100 distinct classes,
+    * so at the default size every batch evicts what the previous one
+    * compiled and compiles it again; 1,000 holds a whole pipeline's
+    * working set. */
+  val CodegenCacheEntries = 1000
+
   def build(appName: String = "graft",
             master: String = s"local[${sys.env.getOrElse(
               "SPARK_GRAFT_CPUS", "32")}]",
@@ -22,6 +35,14 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
+      // generated classes are named without the whole-stage-codegen
+      // stage id: AQE numbers stages in the order it re-plans them,
+      // which follows the order query stages finish, so with the id in
+      // the name the same stage's source (the cache key) differs from
+      // run to run and recompiles
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // RocksDB state store: streaming state (stream-stream join
       // buffers, dedup key sets, mapGroupsWithState payloads) lives
       // OFF-HEAP in a native LSM instead of the default provider's

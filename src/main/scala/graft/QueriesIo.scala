@@ -1237,9 +1237,9 @@ private[graft] object QueriesIo {
       docs.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + 5000000L)
         .withColumn("n_chars", lit(-1L)), path, "audit-bad")
-    val bad = graft.io.Snapshots
+    val bad = !graft.io.Snapshots
       .readStaged(s, path, "audit-bad")
-      .filter(col("n_chars") < 0).limit(1).count() > 0
+      .filter(col("n_chars") < 0).isEmpty
     if (bad) graft.io.Snapshots.dropStaged(s, path, "audit-bad")
     graft.io.Snapshots.publishStaged(s, path, "audit-good")
     graft.io.Snapshots.read(s, path)

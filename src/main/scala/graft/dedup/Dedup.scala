@@ -495,7 +495,7 @@ object Dedup {
       val next = cut(stepped.select(col("doc_id"), col("cluster_id"),
         (col("cluster_id") < col("old_label")).as("changed"))
         .sortWithinPartitions("doc_id"), reliable)
-      val anyChanged = next.filter(col("changed")).limit(1).count() > 0L
+      val anyChanged = !next.filter(col("changed")).isEmpty
       // the previous round's blocks are only released AFTER the next
       // checkpoint materialized — its lazy consumers are gone now
       labelsCkpt.unpersist()

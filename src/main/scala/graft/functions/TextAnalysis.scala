@@ -783,7 +783,7 @@ object TextAnalysis {
       // later read. An index whose every doc is tombstoned is not a
       // store to keep; refuse loudly (the un-compacted store keeps
       // serving empty results correctly).
-      require(survivors.limit(1).count() > 0L,
+      require(!survivors.isEmpty,
         "compactBm25Index: every indexed document is tombstoned - " +
           "compaction would leave an unreadable empty store; delete " +
           "the store directory (or rebuild) instead")

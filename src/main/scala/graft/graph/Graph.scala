@@ -233,8 +233,7 @@ object Graph {
       .groupBy("src", "dst").agg(F.min("w").as("w")) // cheapest parallel edge
       .sortWithinPartitions("src", "dst"),
       reliable)
-    val bad = e.filter(col("w") < 0L || col("w") > MaxW).limit(1).count()
-    require(bad == 0L,
+    require(e.filter(col("w") < 0L || col("w") > MaxW).isEmpty,
       s"shortestPaths: edge weights must sit in [0, $MaxW] - negative " +
         "weights break the monotone sentinel algebra and larger ones " +
         "could overflow it; rescale the weights")

@@ -517,16 +517,33 @@ object Snapshots {
     * present and names a different zone (correct, just unpruned) —
     * re-layout (compact) such tables to restore pruning.
     */
-  // write-side: a FRESH clone per store write (a clone is cheap
-  // relative to any parquet write) — a cached clone would snapshot
-  // the parent's runtime conf at FIRST use, silently freezing later
-  // user changes (shuffle partitions, maxRecordsPerFile, codec) out
-  // of every subsequent snapshot write, and pin the parent session
-  // in a never-evicted map
-  private def storeWriteSession(spark: SparkSession): SparkSession =
-    org.apache.spark.sql.graft.Bridge.cloneWithConf(spark,
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-      "spark.sql.session.timeZone" -> "UTC")
+  // write-side: ONE clone per parent session, weak-keyed like the
+  // derive clone below, and synced to the parent's current conf
+  // (set AND unset keys), listeners and extensions before every
+  // write, so later user changes (shuffle partitions,
+  // maxRecordsPerFile, codec) still reach each write. A fresh clone
+  // per write would do the same but carries a new session UUID, and
+  // the executor builds one class loader per session UUID: every
+  // task-side generated class of every write would recompile, and
+  // the loader would stay in the executor's session cache.
+  private val StoreWritePins = Seq(
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    "spark.sql.session.timeZone" -> "UTC")
+  private val storeWriteSessions =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, SparkSession]())
+  private def storeWriteSession(spark: SparkSession): SparkSession = {
+    val ws = storeWriteSessions.synchronized {
+      storeWriteSessions.computeIfAbsent(spark, s =>
+        org.apache.spark.sql.graft.Bridge.cloneWithConf(s,
+          StoreWritePins: _*))
+    }
+    ws.synchronized {
+      org.apache.spark.sql.graft.Bridge.syncClone(spark, ws,
+        StoreWritePins: _*)
+    }
+    ws
+  }
 
   // read-side derive plans are HOT (per prune) so the clone is
   // cached — but weak-keyed, so short-lived parent sessions are not
@@ -4410,10 +4427,7 @@ object Snapshots {
     */
   private def requireNoNullKeys(df: DataFrame, keyCols: Seq[String],
                                 what: String): Unit = {
-    val nulls = df
-      .filter(keyCols.map(col(_).isNull).reduce(_ || _))
-      .limit(1).count()
-    require(nulls == 0L,
+    require(df.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty,
       s"snapshot: $what carries a NULL in a key column " +
         s"(${keyCols.mkString(", ")}) - a NULL key never joins, so it " +
         "cannot address a row; filter or repair NULL keys first")
@@ -4468,10 +4482,9 @@ object Snapshots {
       // a zero-row updates batch is a no-op, not a burned version (a
       // CDC pipeline commonly delivers empty micro-batches) — same
       // idempotence as a delete matching nothing
-      if (upd0.limit(1).count() == 0L) return v
-      val dup = upd0.groupBy(keyExprs: _*)
-        .count().filter(col("count") > 1).limit(1).count()
-      require(dup == 0L,
+      if (upd0.isEmpty) return v
+      require(upd0.groupBy(keyExprs: _*)
+          .count().filter(col("count") > 1).isEmpty,
         "snapshot: updates carry duplicate keys - the upsert would be " +
           "non-deterministic; deduplicate (e.g. keep-latest) before merging")
       val affected = discoverAffected(spark, path, schema, partCols,
@@ -4489,11 +4502,10 @@ object Snapshots {
           // itself holds N > 1 rows for such a key (appends never
           // enforce key uniqueness), N−1 rows would vanish SILENTLY —
           // refuse like the updates-side dup guard, not lose data
-          val tdup = hit
-            .join(upd.select(keyExprs: _*), keyCols, "left_semi")
-            .groupBy(keyExprs: _*).count()
-            .filter(col("count") > 1).limit(1).count()
-          require(tdup == 0L,
+          require(hit
+              .join(upd.select(keyExprs: _*), keyCols, "left_semi")
+              .groupBy(keyExprs: _*).count()
+              .filter(col("count") > 1).isEmpty,
             "snapshot: the table holds duplicate rows for a merged " +
               "key - whole-row merge would silently collapse them " +
               "into one update row; deduplicate the table first " +
@@ -4566,9 +4578,8 @@ object Snapshots {
     val upd0 = updates.persist()
     try {
       requireNoNullKeys(upd0, keyCols, "mergeUpdate updates")
-      val dup = upd0.groupBy(keyExprs: _*)
-        .count().filter(col("count") > 1).limit(1).count()
-      require(dup == 0L,
+      require(upd0.groupBy(keyExprs: _*)
+          .count().filter(col("count") > 1).isEmpty,
         "snapshot: updates carry duplicate keys - the update would be " +
           "non-deterministic; deduplicate (e.g. keep-latest) first")
       val affected = discoverAffected(spark, path, schema, partCols,
@@ -4594,7 +4605,7 @@ object Snapshots {
         else {
           val fresh = upd0
             .join(table.select(keyExprs: _*), keyCols, "left_anti")
-          if (fresh.limit(1).count() == 0L) None
+          if (fresh.isEmpty) None
           else Some(fresh.select(schema.fields.toSeq.map { f =>
             if (keyCols.contains(f.name) || setCols.contains(f.name))
               col(f.name)
@@ -4821,11 +4832,10 @@ object Snapshots {
       // SQL cardinality rule: >1 source row matching one target row
       // is an error (which clause output survives would be arbitrary)
       if (touchesMatched || notMatched.nonEmpty) {
-        val dup = srcKeys
-          .join(live.select(keyCols.map(col): _*), keyCols, "left_semi")
-          .groupBy(keyCols.map(col): _*)
-          .count().filter(col("count") > 1).limit(1).count()
-        require(dup == 0L,
+        require(srcKeys
+            .join(live.select(keyCols.map(col): _*), keyCols, "left_semi")
+            .groupBy(keyCols.map(col): _*)
+            .count().filter(col("count") > 1).isEmpty,
           "snapshot: more than one source row matches a single target " +
             "row (the SQL MERGE cardinality violation) - deduplicate " +
             "the source on the ON keys first")
@@ -4889,8 +4899,15 @@ object Snapshots {
                 .getOrElse(lit(null).cast(f.dataType)).as(f.name)
             }: _*)
           }
-          val ins = rows.reduce(_ unionByName _)
-          if (ins.limit(1).count() == 0L) None else Some(ins)
+          // the clauses insert a row iff any own condition holds; one
+          // probe over that OR, not over the union (a limit pushed
+          // into union branches plans a code-generated LocalLimit,
+          // whose source differs on every call)
+          val anyClause = notMatched.map(_.condition
+              .map(c => coalesce(c, lit(false))).getOrElse(lit(true)))
+            .reduce(_ || _)
+          if (unmatchedSrc.filter(anyClause).isEmpty) None
+          else Some(rows.reduce(_ unionByName _))
         }
       (rewritten, inserts) match {
         case (None, None) => v // nothing matched, nothing to insert
@@ -5042,9 +5059,9 @@ object Snapshots {
     // and only the already-small key set funnels to one writer.
     k.toDF(physCols: _*).repartition(1).write.parquet(s"$path/$commitDir")
     val fresh = listCommitFiles(f, path, commitDir)
-    val any = spark.read.parquet(s"$path/$commitDir")
-      .limit(1).count() > 0L
-    if (!any) { f.delete(new Path(s"$path/$commitDir"), true); return v }
+    if (spark.read.parquet(s"$path/$commitDir").isEmpty) {
+      f.delete(new Path(s"$path/$commitDir"), true); return v
+    }
     val markers = fresh.map(rel =>
       s"eq:$rel|${physCols.mkString(",")}|$v")
     publishWithDeleteMarkers(spark, path, v, schema, partCols, dropped,
@@ -5111,9 +5128,9 @@ object Snapshots {
     val freshDvs = listCommitFiles(f, path, commitDir)
     // an empty delete file still appears (schema-bearing part file);
     // probe the written rows, not the file list
-    val any = spark.read.schema(DvSchema)
-      .parquet(s"$path/$commitDir").limit(1).count() > 0L
-    if (!any) { f.delete(new Path(s"$path/$commitDir"), true); return v }
+    if (spark.read.schema(DvSchema).parquet(s"$path/$commitDir").isEmpty) {
+      f.delete(new Path(s"$path/$commitDir"), true); return v
+    }
     publishWithDeleteMarkers(spark, path, v, schema, partCols, dropped,
       txns, dvs, colMap, entries, commitDir, freshDvs, op)
   }
@@ -5774,11 +5791,10 @@ object Snapshots {
       // one file, nothing to merge — rewrite only if it carries
       // stale tombstones: ONE early-out job (left join against the
       // live set, first orphan wins), not two counts
-      val stale = dvRows(spark, path, posRels)
-        .join(liveDf.withColumn("__live", lit(1)),
-          Seq(DvFileCol), "left")
-        .filter(col("__live").isNull).limit(1).count()
-      if (stale == 0L) return st.v
+      if (dvRows(spark, path, posRels)
+          .join(liveDf.withColumn("__live", lit(1)),
+            Seq(DvFileCol), "left")
+          .filter(col("__live").isNull).isEmpty) return st.v
     }
     // equality deletes → matched (file, pos) identities: group each
     // entry by the FIRST delete whose base contains it (the same
@@ -5825,8 +5841,7 @@ object Snapshots {
         // and ONE file is the consolidation the scan pays for
         val d = d0.persist()
         try {
-          val empty = d.limit(1).count() == 0L
-          if (empty) Nil
+          if (d.isEmpty) Nil
           else {
             d.repartition(1)
               .select(col(DvFileCol).as("__file"),

@@ -529,7 +529,7 @@ object Vectors {
       // later read of lists/. An index whose every vector is deleted
       // is not a store to keep; refuse with the remediation (the
       // un-compacted store keeps serving empty results correctly).
-      require(survivors.limit(1).count() > 0L,
+      require(!survivors.isEmpty,
         "compactIvfIndex: every indexed vector is tombstoned - " +
           "compaction would leave an unreadable empty store; delete " +
           "the store directory (or rebuild) instead")

@@ -316,7 +316,7 @@ class SnapshotSourceProvider extends StreamSourceProvider
         val stable = org.apache.spark.sql.graft.StreamingRelationBridge
           .stableBatch(data).persist()
         try {
-          if (stable.limit(1).count() > 0L) {
+          if (!stable.isEmpty) {
             if (outputMode == OutputMode.Complete()) {
               Snapshots.commit(stable, path, partitionColumns); ()
             } else {

@@ -636,7 +636,7 @@ object Streams {
     checkpoint.foreach(c => writer.option("checkpointLocation", c))
     val q = writer
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (batch.limit(1).count() > 0L) {
+        if (!batch.isEmpty) {
           if (graft.io.Sinks.storeExists(batch.sparkSession, probePath))
             update(batch)
           else build(batch)
@@ -722,12 +722,12 @@ object Streams {
           val adds = b.filter(opNorm.isInCollection(addOps)).drop(opCol)
           val dels = b.filter(opNorm.isInCollection(deleteOps))
             .select(col("doc_id"))
-          if (adds.limit(1).count() > 0L) {
+          if (!adds.isEmpty) {
             if (graft.io.Sinks.storeExists(b.sparkSession, s"$path/doclens"))
               TextAnalysis.updateBm25Index(adds, path)
             else TextAnalysis.buildBm25Index(adds, path, pbuckets)
           }
-          if (dels.limit(1).count() > 0L &&
+          if (!dels.isEmpty &&
               graft.io.Sinks.storeExists(b.sparkSession, s"$path/doclens"))
             TextAnalysis.deleteFromBm25Index(b.sparkSession, path, dels)
           ()
@@ -772,7 +772,7 @@ object Streams {
     checkpoint.foreach(c => writer.option("checkpointLocation", c))
     val q = writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.limit(1).count() > 0L) {
+        if (!batch.isEmpty) {
           graft.io.Snapshots.commitAppend(batch, path,
             txn = Some((appId, batchId))); ()
         }
@@ -806,7 +806,7 @@ object Streams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val b = batch.persist()
         try {
-          if (b.limit(1).count() > 0L) {
+          if (!b.isEmpty) {
             if (graft.io.Snapshots.latestVersion(b.sparkSession, path).isEmpty) {
               // the bootstrap commit bypasses merge, so it must run
               // merge's own key guards: a first batch with duplicate
@@ -836,13 +836,12 @@ object Streams {
   private def requireUpsertableKeys(b: DataFrame, keyCols: Seq[String],
                                     what: String): Unit = {
     val keyExprs = keyCols.map(col)
-    require(b.filter(keyCols.map(col(_).isNull)
-        .reduce(_ || _)).limit(1).count() == 0L,
+    require(b.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty,
       s"$what: the first batch carries a NULL key " +
         s"(${keyCols.mkString(", ")}) - a NULL key can never be " +
         "merged or deleted later; repair the feed")
     require(b.groupBy(keyExprs: _*).count()
-        .filter(col("count") > 1).limit(1).count() == 0L,
+        .filter(col("count") > 1).isEmpty,
       s"$what: the first batch carries duplicate keys - it would seed " +
         "a table violating the upsert key invariant, and a replayed " +
         "batch would then fail inside merge; deduplicate the feed")
@@ -891,13 +890,12 @@ object Streams {
           val ups = b.filter(opNorm.isInCollection(upsertOps)).drop(opCol)
           val dels = b.filter(opNorm.isInCollection(deleteOps))
             .select(keyCols.map(col): _*)
-          val clash = ups.select(keyCols.map(col): _*)
-            .join(dels, keyCols, "left_semi").limit(1).count()
-          require(clash == 0L,
+          require(ups.select(keyCols.map(col): _*)
+              .join(dels, keyCols, "left_semi").isEmpty,
             "cdc: a key appears under both an upsert and a delete in " +
               "one batch - the batch gives no order between them; " +
               "compact the feed per key first")
-          if (ups.limit(1).count() > 0L) {
+          if (!ups.isEmpty) {
             if (graft.io.Snapshots.latestVersion(b.sparkSession, path).isEmpty) {
               // same bootstrap guard as the upsert stream: the seed
               // commit must satisfy what later merges enforce
@@ -905,7 +903,7 @@ object Streams {
               graft.io.Snapshots.commit(ups, path)
             } else graft.io.Snapshots.merge(b.sparkSession, path, ups, keyCols)
           }
-          if (dels.limit(1).count() > 0L &&
+          if (!dels.isEmpty &&
               graft.io.Snapshots.latestVersion(b.sparkSession, path).nonEmpty) {
             // 'eq' is the 100 TB CDC shape: the delete batch commits
             // AS a key file (zero table reads, zero rewrites) and is
@@ -982,12 +980,12 @@ object Streams {
           val adds = b.filter(opNorm.isInCollection(addOps)).drop(opCol)
           val dels = b.filter(opNorm.isInCollection(deleteOps))
             .select(col("vec_id"))
-          if (adds.limit(1).count() > 0L) {
+          if (!adds.isEmpty) {
             if (graft.io.Sinks.storeExists(b.sparkSession, s"$path/lists"))
               Vectors.updateIvfIndex(adds, path)
             else Vectors.buildIvfIndex(adds, centroids, path)
           }
-          if (dels.limit(1).count() > 0L &&
+          if (!dels.isEmpty &&
               graft.io.Sinks.storeExists(b.sparkSession, s"$path/lists"))
             Vectors.deleteFromIvfIndex(b.sparkSession, path, dels)
           ()

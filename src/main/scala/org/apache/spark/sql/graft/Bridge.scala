@@ -42,6 +42,34 @@ object Bridge {
     c
   }
 
+  /** Brings a [[cloneWithConf]] clone of `parent` up to date with it,
+    * so one long-lived clone acts as a fresh clone would: its SQL conf
+    * becomes the parent's current conf plus `overrides` (keys set on
+    * the parent since are copied, keys unset there are unset here),
+    * and it takes the parent's current query-execution listeners and
+    * experimental strategies and optimizations. Only the clone
+    * changes; callers serialize syncs of one clone.
+    */
+  def syncClone(parent: SparkSession, clone: SparkSession,
+                overrides: (String, String)*): Unit = {
+    def state(s: SparkSession) =
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val (p, c) = (state(parent), state(clone))
+    val want = p.conf.getAllConfs ++ overrides
+    val have = c.conf.getAllConfs
+    want.foreach { case (k, v) =>
+      if (!have.get(k).contains(v)) c.conf.setConfString(k, v) }
+    (have.keySet -- want.keySet).foreach(c.conf.unsetConf)
+    val pl = p.listenerManager.listListeners().toSeq
+    val cl = c.listenerManager.listListeners().toSeq
+    pl.filterNot(l => cl.exists(_ eq l)).foreach(c.listenerManager.register)
+    cl.filterNot(l => pl.exists(_ eq l)).foreach(c.listenerManager.unregister)
+    c.experimentalMethods.extraStrategies =
+      p.experimentalMethods.extraStrategies
+    c.experimentalMethods.extraOptimizations =
+      p.experimentalMethods.extraOptimizations
+  }
+
   /** Apply a SparkSessionExtensions bundle to an already-running
     * session (builder-time `.withExtensions` is ignored by
     * `getOrCreate` when a session exists): registers injected

@@ -16,17 +16,21 @@ class EntrySpec extends SparkSpec {
       s"oracles without a query: $orphans")
   }
 
-  test("only Bench, Verify and PlanDump are entry points, and no engine " +
-    "object reads a graft.* system property") {
+  /** (path relative to `src/main/scala`, content) of every main source. */
+  private lazy val sources: Seq[(String, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory,
       s"run from the repo root: ${root.getAbsolutePath}")
     def walk(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.flatMap(f =>
         if (f.isDirectory) walk(f) else Seq(f))
-    val sources = walk(root).filter(_.getName.endsWith(".scala"))
+    walk(root).filter(_.getName.endsWith(".scala"))
       .map(f => root.toPath.relativize(f.toPath).toString ->
         java.nio.file.Files.readString(f.toPath))
+  }
+
+  test("only Bench, Verify and PlanDump are entry points, and no engine " +
+    "object reads a graft.* system property") {
     val pkg = """(?m)^package\s+([\w.]+)""".r
     val obj = """\bobject\s+(\w+)""".r
     val main = """\bdef\s+main\s*\(\s*\w+\s*:\s*Array\[String\]""".r
@@ -50,5 +54,17 @@ class EntrySpec extends SparkSpec {
     }.toSet
     assert(reads === Set("graft/Bench.scala" -> "graft.bench.out"),
       "engine behaviour must not hang off a JVM-wide system property")
+  }
+
+  test("no `.limit(1).count()` emptiness probe in the engine") {
+    // a code-generated limit names its counter after a JVM-wide id, so
+    // its generated class never repeats and every call compiles anew;
+    // `isEmpty` plans a CollectLimit, which is not code-generated
+    val probe = """\.limit\(\s*1\s*\)\s*\.count\(\s*\)""".r
+    val hits = sources.flatMap { case (rel, src) =>
+      probe.findAllMatchIn(src).map(m =>
+        s"$rel:${src.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(hits.isEmpty, s"use isEmpty or a plain count: $hits")
   }
 }

@@ -328,4 +328,37 @@ class SnapshotWriteSpec extends SparkSpec {
     val left = files(new java.io.File(s"$path/$commitDir"))
     assert(left.isEmpty, s"abort() left staged files behind: $left")
   }
+
+  test("the store-write session follows its parent: a listener and a " +
+    "planner strategy added after the first write reach later writes") {
+    // a session of its own: no listener, no graft strategy installed yet
+    val s = spark.newSession()
+    val dir = Files.createTempDirectory("graft_write_follow").toString
+    val rows = s.range(0, 40).select(col("id"), (col("id") % 4).as("g"))
+    Snapshots.commit(rows, s"$dir/a")
+    @volatile var wrote = false
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.executedPlan.toString.contains("TopKPerKey") &&
+            qe.executedPlan.toString.contains(
+              "InsertIntoHadoopFsRelationCommand")) wrote = true
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      // perKey installs TopKStrategy on `s` now, after the first write;
+      // without it the write session could not plan the TopK node
+      val top = graft.plans.TopK.perKey(rows, Seq(col("g")),
+        Seq(col("id").desc), 2)
+      Snapshots.commit(top, s"$dir/b")
+      org.apache.spark.graft.ListenerFlush
+        .waitUntilEmpty(spark.sparkContext)
+    } finally s.listenerManager.unregister(listener)
+    assert(Snapshots.read(s, s"$dir/b").count() === 8L)
+    assert(wrote, "the write's query never reached the parent's listener")
+  }
 }

@@ -17,6 +17,10 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // the generated-code cache posture graft ships (GraftSession)
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // same streaming state-store posture as GraftSession: specs
       // must exercise the store the production session runs on
       .config("spark.sql.streaming.stateStore.providerClass",
