@@ -1193,13 +1193,12 @@ private[graft] object QueriesIo {
     df
   }
 
-  /** DELTA-LOG manifests (Delta's commit-JSON + checkpoint shape):
-    * the base commit lands 40 entries; the three appends each write
-    * an O(batch) delta manifest (`#base=` + line edits) instead of
-    * rewriting the O(table) entry list — at a million files that's
-    * the difference between a few hundred bytes and ~100 MB of
-    * metadata per commit. The read resolves the chain; the oracle is
-    * the plain relational union of the four slices.
+  /** APPEND CHAIN over a multi-file base: the base commit lands 40
+    * entries and three single-file appends each carry them forward
+    * into the next manifest (inline v3 at this size; v4 shards take
+    * over past two shard blocks). The oracle is the plain relational
+    * union of the four slices. The name is kept from the
+    * delta-manifest encoding this gate was written for, since removed.
     */
   def snapshotDeltaLog(s: SparkSession, dir: String): DataFrame = {
     val path = scratch(dir, "snap_dlog")

@@ -70,25 +70,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 object Snapshots {
 
   // v3: line 2 is the snapshot's schema (Spark DataType JSON), line 3
-  // the partition spec ("-" = unpartitioned). v2 (schema, no
-  // partition line) and v1 (files only — schema inferred from
-  // footers) manifests remain readable; writes always produce v3.
+  // the partition spec ("-" = unpartitioned), then the body: marker
+  // lines and file entries. Past the shard threshold a full manifest
+  // is written as v4 instead (below); no other header is accepted.
   private val Header = "graft-snapshot-v3"
-  private val HeaderV2 = "graft-snapshot-v2"
-  private val HeaderV1 = "graft-snapshot-v1"
-
-  /** DELTA manifest header (the Delta-log / Iceberg-manifest-list
-    * answer to commit-time metadata cost): instead of rewriting the
-    * full O(table-files) entry list on every commit, a commit whose
-    * body barely changed writes only the DIFF against the previous
-    * version — `#base=<v-1>` plus `+line`/`-line` body edits — and
-    * readers resolve the chain. Every `interval`-th commit (or any
-    * commit whose diff is not materially smaller) writes a full
-    * manifest, bounding chains: this is Delta's JSON-commits +
-    * parquet-checkpoint shape. At a million files an append's
-    * metadata write drops from ~100 MB to a few hundred bytes.
-    */
-  private val HeaderDelta = "graft-snapshot-delta-1"
 
   /** SHARDED manifest header (v4) — the metadata layer's own
     * partition pruning. Past [[shardSize]] entries, a full manifest
@@ -109,10 +94,8 @@ object Snapshots {
     * ([[renderV4]]): an unchanged group's refs carry over verbatim
     * and an appended-to group reuses its prior shards plus a tail
     * shard for just the fresh entries, so commit-time metadata IO
-    * stays O(delta) — replacing the delta-manifest chain (whose
-    * read-side resolution was O(table files) per query) for large
-    * tables. v1-v3 manifests remain readable; a table crossing the
-    * threshold switches encodings transparently.
+    * stays O(delta). A table crossing the threshold switches
+    * encodings transparently.
     */
   private val HeaderV4 = "graft-snapshot-v4"
   private val ShardHeader = "graft-snapshot-shard-1"
@@ -471,7 +454,7 @@ object Snapshots {
       }
     }
 
-  /** Shard refs of a committed version (empty for v1-v3 manifests) —
+  /** Shard refs of a committed version (empty for v3 manifests) —
     * for the DSv2 scan builder's shard-aware planning. */
   private[graft] def shardRefsAt(spark: SparkSession, path: String,
                                  v: Long): Seq[ShardRef] =
@@ -621,16 +604,6 @@ object Snapshots {
     * after the branch's commit dirs moved but before the version
     * claim — the cross-process race the compensation path undoes. */
   private[graft] var onBeforePromoteClaim: () => Unit = () => ()
-
-  /** Test seam for the delta-manifest checkpoint interval (the
-    * production knob is `graft.snapshot.manifestCheckpointInterval`
-    * in the Hadoop conf, fixed at FileSystem creation). */
-  private[graft] var checkpointIntervalOverride: Option[Int] = None
-
-  /** Test seam: skip the is-it-actually-smaller check so even tiny
-    * tables write delta manifests — lets the model walk drive every
-    * random op through chain resolution. */
-  private[graft] var forceDeltaManifests: Boolean = false
 
   /** List a commit's freshly-written parquet files, store-relative —
     * including Hive-style partition subdirectories (`ym=202403/...`).
@@ -788,33 +761,21 @@ object Snapshots {
       }
     }
 
-  /** Choose the on-disk encoding for version `v`: a DELTA manifest
-    * (`#base=v-1` + `+`/`-` body edits) when the edit list is
-    * materially smaller than the full rendering and the chain is
-    * shorter than the checkpoint interval; the full manifest
-    * otherwise. Commit-time metadata IO thus scales with the BATCH,
-    * not the table — at a million files an append stops rewriting a
-    * ~100 MB entry list — while every `interval`-th commit
-    * checkpoints a full manifest so read-time resolution walks a
-    * bounded chain (Delta's commit-JSON + checkpoint shape). The
-    * `#op=` line is forced into every delta's edit list so history
-    * shows each commit's own operation and [[rollback]] can patch the
-    * single `+#op=` line. Callers publishing non-v3 lines (rollback's
-    * format-verbatim republish of an older store, or of a delta) pass
-    * through untouched.
+  /** Choose the on-disk encoding for version `v`: the inline v3
+    * manifest, or the SHARDED v4 one past the shard threshold, where
+    * both the commit (only changed directory groups rewrite their
+    * shards) and the read (shard-level pruning) stay O(shards); a
+    * huge CTAS shards its very first manifest. Lines that are not v3
+    * (rollback's verbatim republish of a v4 manifest) pass through
+    * untouched.
     */
   private def renderForPublish(f: FileSystem, base: String, v: Long,
                                lines: Seq[String]): Seq[String] = {
-    if (!lines.headOption.contains(Header)) return lines
-    // SHARDED (v4) encoding beats the delta chain past the shard
-    // threshold: a delta keeps the COMMIT cheap but every read still
-    // resolves the full O(files) entry list, while v4 makes both the
-    // commit (only changed directory groups rewrite their shards)
-    // and the read (shard-level pruning) O(shards). Applies to v1
-    // too — a huge CTAS shards its very first manifest.
     val sSize = shardSize(f)
-    if (lines.drop(3).count(l => l.nonEmpty && !l.startsWith("#")) >=
-        sSize * 2) {
+    if (!lines.headOption.contains(Header) ||
+        lines.drop(3).count(l => l.nonEmpty && !l.startsWith("#")) <
+          sSize * 2) lines
+    else {
       // prior version's shard refs feed the append-reuse fast path
       // (refs parse eagerly; entries stay lazy — only groups that
       // CHANGED load their prior shards, from the LRU if warm)
@@ -823,31 +784,8 @@ object Snapshots {
         else
           try manifest(f, base, v - 1L).shardRefs
           catch { case _: IllegalArgumentException => Nil }
-      return renderV4(f, base, lines, sSize, prevRefs)
+      renderV4(f, base, lines, sSize, prevRefs)
     }
-    if (v <= 1L) return lines
-    // Hadoop FileSystem instances are cached with the Configuration
-    // they were first created with, so the conf knob is
-    // deployment-time; the var is the test seam
-    val interval = checkpointIntervalOverride.getOrElse(
-      f.getConf.getInt("graft.snapshot.manifestCheckpointInterval", 16))
-    if (interval <= 0) return lines // deltas disabled
-    val bm =
-      try manifest(f, base, v - 1L)
-      catch { case _: IllegalArgumentException => return lines }
-    if (bm.schema.isEmpty || bm.depth + 1 >= interval) return lines
-    val baseBody = manifestLines(bm.schema.get, bm.partCols, bm.dropped,
-      bm.op, bm.entries, bm.txns, bm.dvs, bm.colMap, bm.props).drop(3)
-    val newBody = lines.drop(3).filter(_.nonEmpty)
-    val baseSet = baseBody.toSet
-    val newSet = newBody.toSet
-    val adds = newBody.filter(l => l.startsWith("#op=") || !baseSet(l))
-    val removes =
-      baseBody.filter(l => l.startsWith("#op=") || !newSet(l))
-    val delta = Seq(HeaderDelta, lines(1), lines(2),
-      s"#base=${v - 1L}") ++ removes.map("-" + _) ++ adds.map("+" + _)
-    if (delta.size * 2 <= lines.size || forceDeltaManifests) delta
-    else lines
   }
 
   /** Advance the `_latest` hint monotonically — per JVM (the
@@ -1106,9 +1044,8 @@ object Snapshots {
           .ExternalCatalogUtils.unescapePathName(s.substring(i + 1))
       }.toMap
 
-  /** A parsed manifest: schema (absent only for v1 manifests — footer
-    * inference applies), partition columns, file entries, and the raw
-    * lines (so [[rollback]] can re-publish format-verbatim).
+  /** A parsed manifest: schema, partition columns, body markers and
+    * file entries.
     */
   /** `partCols` and `dropped` are PHYSICAL names (what file paths
     * and parquet footers carry); `schema` is the LOGICAL schema users
@@ -1117,19 +1054,18 @@ object Snapshots {
     * mapping). Physical names are assigned at column birth and never
     * change; renames move only the logical name.
     */
-  /** `entries` is eager for v1-v3 manifests; for a SHARDED (v4)
+  /** `entries` is eager for v3 manifests; for a SHARDED (v4)
     * manifest it is a memoizing LazyList over the shard files, so
     * mutation paths and full scans see the complete list unchanged
     * while prune paths ([[pruneCandidates]]) go through `shardRefs`
     * and never force it.
     */
   private[graft] final case class SnapManifest(
-      schema: Option[StructType], partCols: Seq[String],
+      schema: StructType, partCols: Seq[String],
       dropped: Set[String], op: String,
       txns: Map[String, Long], dvs: Seq[String],
       colMap: Map[String, String],
-      entries: Seq[String], raw: Seq[String],
-      deltaBase: Option[Long] = None, depth: Int = 0,
+      entries: Seq[String],
       props: Map[String, String] = Map.empty,
       shardRefs: Seq[ShardRef] = Nil)
 
@@ -1167,125 +1103,51 @@ object Snapshots {
       val hit = manifestCache.get(key)
       if (hit != null) return hit
     }
-    // cache (and return) WITHOUT the raw line Seq: only rollback's
-    // format-preserving copy needs it ([[manifestRawLines]]), and
-    // retaining it would double every cached manifest's footprint
-    val m = manifestUncached(f, base, v, p).copy(raw = Nil)
+    val m = manifestUncached(f, base, p)
     manifestCache.synchronized { manifestCache.put(key, m) }
     m
   }
 
-  /** The VERBATIM stored lines of one version's manifest file —
-    * rollback republishes them format-preservingly. Uncached (one
-    * caller, once per rollback). */
-  private def manifestRawLines(f: FileSystem, base: String, v: Long)
-      : Seq[String] = {
-    val p = manifestPath(base, v)
-    if (!f.exists(p)) throw new IllegalArgumentException(
-      s"snapshot: version $v does not exist under $base " +
-        s"(have: ${allManifestVersions(f, base).mkString(", ")})")
-    readLines(f, p)
-  }
-
-  private def manifestUncached(f: FileSystem, base: String, v: Long,
+  private def manifestUncached(f: FileSystem, base: String,
                                p: Path): SnapManifest = {
     val lines = readLines(f, p)
-    def schemaAt(i: Int): StructType = {
-      require(lines.size > i,
-        s"snapshot: ${p.getName} is missing its schema line")
-      DataType.fromJson(lines(i)).asInstanceOf[StructType]
-    }
-    lines.headOption match {
-      case Some(Header) =>
-        require(lines.size >= 3,
-          s"snapshot: ${p.getName} is missing its partition line")
-        parseV3Body(p, schemaAt(1), lines(2),
-          lines.drop(3).filter(_.nonEmpty), lines)
-      case Some(HeaderV4) =>
-        require(lines.size >= 3,
-          s"snapshot: ${p.getName} is missing its partition line")
-        val body = lines.drop(3).filter(_.nonEmpty)
-        val refs = body.filter(_.startsWith("#shard=")).map { l =>
-          val s = l.stripPrefix("#shard=")
-          val i = s.indexOf('|')
-          val j = if (i < 0) -1 else s.indexOf('|', i + 1)
-          require(i > 0 && j > i,
-            s"snapshot: ${p.getName} has a corrupt #shard line '$l'")
-          val cnt = s.substring(i + 1, j)
-          require(cnt.nonEmpty && cnt.forall(_.isDigit),
-            s"snapshot: ${p.getName} has a corrupt #shard count in '$l'")
-          ShardRef(s.substring(0, i), cnt.toInt, s.substring(j + 1))
-        }
-        // marker lines parse exactly like v3 (unknown '#' lines are
-        // ignored there); the entry list resolves LAZILY from the
-        // shard files, memoized — only full-table consumers pay it
-        val m0 = parseV3Body(p, schemaAt(1), lines(2),
-          body.filterNot(_.startsWith("#shard=")), lines)
-        val ents: Seq[String] =
-          refs.to(LazyList).flatMap(r => loadShard(f, base, r.file))
-        m0.copy(entries = ents, shardRefs = refs)
-      case Some(HeaderDelta) =>
-        // delta resolution: reconstruct this version's body from the
-        // base version's CANONICAL rendering (parse -> manifestLines
-        // normalizes line order, so edits match regardless of how the
-        // stored base was laid out) minus the `-` lines plus the `+`
-        // lines. Any drift — a `-` line the base does not carry, an
-        // unprefixed body line — is corruption and refuses loudly:
-        // a silently mis-applied edit would resurrect deleted files
-        // or drop live ones.
-        require(lines.size >= 4 && lines(3).startsWith("#base="),
-          s"snapshot: ${p.getName} is missing its #base line")
-        val bStr = lines(3).stripPrefix("#base=")
-        require(bStr.nonEmpty && bStr.forall(_.isDigit),
-          s"snapshot: ${p.getName} has a corrupt #base line '$bStr'")
-        val bv = bStr.toLong
-        require(bv > 0L && bv < v,
-          s"snapshot: ${p.getName} references an invalid base $bv")
-        val bm = manifest(f, base, bv)
-        require(bm.schema.nonEmpty,
-          s"snapshot: ${p.getName} is a delta over a schema-less " +
-            s"(v1) base $bv - refusing to resolve")
-        val baseBody = manifestLines(bm.schema.get, bm.partCols,
-          bm.dropped, bm.op, bm.entries, bm.txns, bm.dvs, bm.colMap,
-          bm.props).drop(3)
-        val edits = lines.drop(4).filter(_.nonEmpty)
-        val bad = edits.filterNot(l =>
-          l.startsWith("+") || l.startsWith("-"))
-        require(bad.isEmpty,
-          s"snapshot: ${p.getName} has unprefixed delta line(s) " +
-            s"'${bad.head}' - refusing to guess")
-        val adds = edits.collect {
-          case l if l.startsWith("+") => l.drop(1) }
-        val baseSet = baseBody.toSet
-        val removes = edits.collect {
-          case l if l.startsWith("-") => l.drop(1) }
-        val missing = removes.filterNot(baseSet)
-        require(missing.isEmpty,
-          s"snapshot: ${p.getName} removes line(s) its base $bv does " +
-            s"not carry ('${missing.head}') - the chain is corrupt")
-        val removeSet = removes.toSet
-        val m = parseV3Body(p, schemaAt(1), lines(2),
-          baseBody.filterNot(removeSet) ++ adds, lines)
-        m.copy(deltaBase = Some(bv), depth = bm.depth + 1)
-      case Some(HeaderV2) =>
-        SnapManifest(Some(schemaAt(1)), Nil, Set.empty, "unknown",
-          Map.empty, Nil, Map.empty,
-          lines.drop(2).filter(_.nonEmpty), lines)
-      case Some(HeaderV1) =>
-        SnapManifest(None, Nil, Set.empty, "unknown", Map.empty, Nil,
-          Map.empty, lines.drop(1).filter(_.nonEmpty), lines)
-      case _ => throw new IllegalArgumentException(
-        s"snapshot: ${p.getName} is not a graft-snapshot manifest " +
-          s"(v1/v2/v3/delta headers accepted)")
+    val header = lines.headOption
+    require(header.contains(Header) || header.contains(HeaderV4),
+      s"snapshot: ${p.getName} is not a graft-snapshot manifest " +
+        s"(accepted headers: $Header, $HeaderV4)")
+    require(lines.size >= 3,
+      s"snapshot: ${p.getName} is missing its schema or partition line")
+    val schema = DataType.fromJson(lines(1)).asInstanceOf[StructType]
+    val body = lines.drop(3).filter(_.nonEmpty)
+    if (header.contains(Header)) parseV3Body(schema, lines(2), body)
+    else {
+      val refs = body.filter(_.startsWith("#shard=")).map { l =>
+        val s = l.stripPrefix("#shard=")
+        val i = s.indexOf('|')
+        val j = if (i < 0) -1 else s.indexOf('|', i + 1)
+        require(i > 0 && j > i,
+          s"snapshot: ${p.getName} has a corrupt #shard line '$l'")
+        val cnt = s.substring(i + 1, j)
+        require(cnt.nonEmpty && cnt.forall(_.isDigit),
+          s"snapshot: ${p.getName} has a corrupt #shard count in '$l'")
+        ShardRef(s.substring(0, i), cnt.toInt, s.substring(j + 1))
+      }
+      // marker lines parse exactly like v3 (unknown '#' lines are
+      // ignored there); the entry list resolves LAZILY from the
+      // shard files, memoized — only full-table consumers pay it
+      val m0 = parseV3Body(schema, lines(2),
+        body.filterNot(_.startsWith("#shard=")))
+      val ents: Seq[String] =
+        refs.to(LazyList).flatMap(r => loadShard(f, base, r.file))
+      m0.copy(entries = ents, shardRefs = refs)
     }
   }
 
   /** Parse a v3 manifest BODY (marker lines + file entries) — shared
-    * by full v3 manifests and resolved delta chains.
+    * by v3 manifests and the marker lines of v4 ones.
     */
-  private def parseV3Body(p: Path, schema: StructType,
-                          partsLine: String, body: Seq[String],
-                          raw: Seq[String]): SnapManifest = {
+  private def parseV3Body(schema: StructType, partsLine: String,
+                          body: Seq[String]): SnapManifest = {
         val parts =
           if (partsLine == "-") Nil else partsLine.split(',').toSeq
         // '#'-prefixed marker lines extend v3 without a format break
@@ -1341,25 +1203,9 @@ object Snapshots {
                 pair.substring(0, i) -> pair.substring(i + 1)
               }.toMap
         }.getOrElse(Map.empty[String, String])
-        SnapManifest(Some(schema), parts, dropped, op, txns, dvs,
-          colMap, body.filterNot(_.startsWith("#")), raw,
-          props = props)
+        SnapManifest(schema, parts, dropped, op, txns, dvs,
+          colMap, body.filterNot(_.startsWith("#")), props = props)
   }
-
-  /** The manifest's schema, inferring from file footers for legacy v1
-    * manifests (which stored none) — read-compat only; a v1 store's
-    * first v3 commit persists the schema forward.
-    */
-  private def resolveSchema(spark: SparkSession, base: String,
-                            m: SnapManifest): StructType =
-    m.schema.getOrElse {
-      require(m.entries.nonEmpty,
-        s"snapshot: a schema-less (v1) manifest with no files under " +
-          s"$base cannot be read")
-      spark.read.parquet(
-        m.entries.map(e =>
-          entryFilePath(base, relOf(e)).toString): _*).schema
-    }
 
   private def manifestLines(schema: StructType, partCols: Seq[String],
                             dropped: Set[String], op: String,
@@ -1629,8 +1475,7 @@ object Snapshots {
       // its 4 KB stats cap, past which stats are omitted entirely);
       // a truncated/incremented bound carries a '~' suffix. Exact
       // bounds let MIN/MAX(string) answer from the manifest
-      // ([[stringExactStatsOf]]); pruning reads both alike. Legacy
-      // 'S' entries (pre-exactness manifests) parse as never-exact.
+      // ([[stringExactStatsOf]]); pruning reads both alike.
       val strings = (sacc -- dead).map { case (n, (mn, mx)) =>
         val lo =
           if (mn.length <= StrStatBytes) hexBytes(mn)
@@ -1696,10 +1541,10 @@ object Snapshots {
     else entry.substring(i + 1).split(';').iterator.filter(_.nonEmpty)
       .flatMap { part =>
         part.split(':') match {
-          case Array(name, "S" | "T", lo, hi) =>
+          case Array(name, "T", lo, hi) =>
             Some(name -> (hex(lo),
               if (hi == "*") None else Some(hex(hi))))
-          case Array(name, "S" | "T", lo) => // empty upper bound hex
+          case Array(name, "T", lo) => // empty upper bound hex
             Some(name -> (hex(lo), Some(Array.empty[Byte])))
           case _ => None
         }
@@ -1709,9 +1554,9 @@ object Snapshots {
   /** PROVABLY-EXACT string bounds of an entry: name → (exact min,
     * exact max), each present only for a 'T'-kind bound serialized
     * WITHOUT the truncation marker — i.e. the bound is the file's
-    * true MIN/MAX value, the aggregate-pushdown domain. Legacy 'S'
-    * entries and truncated bounds yield None (pruning still uses
-    * them via [[stringStatsOf]]; aggregates refuse).
+    * true MIN/MAX value, the aggregate-pushdown domain. Truncated
+    * bounds yield None (pruning still uses them via
+    * [[stringStatsOf]]; aggregates refuse).
     */
   private[graft] def stringExactStatsOf(entry: String)
       : Map[String, (Option[Array[Byte]], Option[Array[Byte]])] = {
@@ -1896,14 +1741,21 @@ object Snapshots {
       rel =>
         val p = new Path(s"$path/$rel")
         val stats = footerStats(conf, p)
-        // the file's byte length rides as a pseudo-stat so planning
-        // (split sizing, compaction budgets, relation sizeInBytes)
-        // never stats files - the manifest is the only metadata read
-        val bytes = f.getFileStatus(p).getLen
-        val len = s"$LenStat:L:$bytes:$bytes"
-        val all = if (stats.isEmpty) len else s"$len;$stats"
-        s"$rel\t$all"
-    }
+        if (stats.isEmpty) {
+          // no row groups: Spark's file writer writes task 0's file
+          // even when the task has no rows. The manifest carries the
+          // schema, so the file would only cost every later scan an
+          // open
+          f.delete(p, false)
+          None
+        } else {
+          // the file's byte length rides as a pseudo-stat so planning
+          // (split sizing, compaction budgets, relation sizeInBytes)
+          // never stats files - the manifest is the only metadata read
+          val bytes = f.getFileStatus(p).getLen
+          Some(s"$rel\t$LenStat:L:$bytes:$bytes;$stats")
+        }
+    }.flatten
     (commitDir, fresh)
   }
 
@@ -1930,8 +1782,9 @@ object Snapshots {
     val (commitDir, fresh) =
       writeBatchFiles(spark, df, path, partCols, colMap,
         baseProps ++ writeOpts)
-    // an empty PARTITIONED write emits no files at all (dynamic
-    // partitioning writes nothing for zero rows) — that is LEGAL
+    // an empty write leaves no files at all (dynamic partitioning
+    // writes nothing for zero rows, and writeBatchFiles drops the
+    // row-less file an unpartitioned write leaves) — that is LEGAL
     // here: v3 manifests carry the schema, so a carried-only commit
     // (a delete emptying every affected file's rows) or even a fully
     // empty snapshot reads back correctly as zero rows; the fresh
@@ -2036,7 +1889,7 @@ object Snapshots {
                 s"and it cannot be rebased over ($reason) - re-read " +
                 "the table and retry")
           }
-          val wSchema = resolveSchema(spark, path, m)
+          val wSchema = m.schema
           if (m.partCols != partCols) refuse("a partition-spec change")
           if (!wSchema.fieldNames.sameElements(curSchema.fieldNames) ||
               !wSchema.fields.map(_.dataType.catalogString)
@@ -2080,7 +1933,7 @@ object Snapshots {
             // drift check re-runs against the WINNER's schema; a
             // genuine type conflict still refuses loudly mid-rebase
             val (s2, map2) = evolvedSchemaAndMap(
-              resolveSchema(spark, path, m), nullableAll(batchSchema),
+              m.schema, nullableAll(batchSchema),
               path, m.dropped, m.colMap, reuse = colMap,
               partCols = m.partCols)
             // the data files are ALREADY written under this commit's
@@ -2938,8 +2791,7 @@ object Snapshots {
       : (StructType, Seq[String], Seq[String], Seq[String],
          Map[String, String]) = {
     val m = manifest(fs(spark, path), path, v)
-    (resolveSchema(spark, path, m), m.partCols, m.entries, m.dvs,
-      m.colMap)
+    (m.schema, m.partCols, m.entries, m.dvs, m.colMap)
   }
 
   /** The physical-name rendering of a logical schema under a column
@@ -3007,7 +2859,7 @@ object Snapshots {
             "read the versions directly and diff rows instead")
         mTo.entries.filterNot(e => beforeSet(relOf(e)))
       }
-    (resolveSchema(spark, path, mTo), mTo.partCols, delta, mTo.colMap)
+    (mTo.schema, mTo.partCols, delta, mTo.colMap)
   }
 
   /** CREATE an EMPTY table: version 1 is a zero-entry manifest
@@ -3105,7 +2957,7 @@ object Snapshots {
             if (m.txns.get(a).exists(_ >= b)) return v
           }
           val (s2, map2) = evolvedSchemaAndMap(
-            resolveSchema(spark, path, m), nullableAll(df.schema),
+            m.schema, nullableAll(df.schema),
             path, m.dropped, m.colMap, partCols = m.partCols)
           (m.entries, s2, m.partCols, m.dropped, m.txns, m.dvs, map2,
             m.props)
@@ -3258,7 +3110,7 @@ object Snapshots {
     val (baseV, batchSchema, _, stagedMap, entries) =
       parseStaged(f, path, wapId)
     val m = manifest(f, path, baseV)
-    val (s2, map2) = evolvedSchemaAndMap(resolveSchema(spark, path, m),
+    val (s2, map2) = evolvedSchemaAndMap(m.schema,
       batchSchema, path, m.dropped, m.colMap, reuse = stagedMap,
       partCols = m.partCols)
     openLive(spark, path, s2, m.partCols, m.entries ++ entries,
@@ -3297,7 +3149,7 @@ object Snapshots {
           s"${stagedParts.mkString(",")}) - the staged layout is " +
           "wrong; drop the staged append and re-stage")
       val (s2, map2) = evolvedSchemaAndMap(
-        resolveSchema(spark, path, m), batchSchema, path, m.dropped,
+        m.schema, batchSchema, path, m.dropped,
         m.colMap, reuse = stagedMap, partCols = m.partCols)
       val oldP = l2p(stagedMap); val newP = l2p(map2)
       batchSchema.fieldNames.foreach(c => require(
@@ -3472,7 +3324,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(f, path, v)
-    openLive(spark, path, resolveSchema(spark, path, m), m.partCols,
+    openLive(spark, path, m.schema, m.partCols,
       m.entries, m.dvs, m.colMap)
   }
 
@@ -3579,7 +3431,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(f, path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     require(schema.fieldNames.contains(column),
       s"snapshot: readBetween column $column is not in the table " +
         s"schema (${schema.fieldNames.mkString(", ")})")
@@ -3672,7 +3524,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(f, path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     require(schema.fieldNames.contains(column),
       s"snapshot: readBetweenStrings column $column is not in the " +
         s"table schema (${schema.fieldNames.mkString(", ")})")
@@ -3726,7 +3578,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(f, path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     require(schema.fieldNames.contains(column),
       s"snapshot: readEquals column $column is not in the table " +
         s"schema (${schema.fieldNames.mkString(", ")})")
@@ -3753,7 +3605,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(fs(spark, path), path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     if (!schema.fieldNames.contains(column)) return None
     val dt = schema(column).dataType
     val phys = toPhysicalName(m.colMap, column)
@@ -3893,7 +3745,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(f, path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     val (kept, _) =
       prunedEntriesEquals(spark, path, column, value, Some(v))
     val base =
@@ -3943,7 +3795,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(f, path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     if (!schema.fieldNames.contains(column)) return None
     val dt = schema(column).dataType
     val phys = toPhysicalName(m.colMap, column)
@@ -4117,7 +3969,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(f, path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     if (!schema.fieldNames.contains(column)) return None
     val phys = toPhysicalName(m.colMap, column)
     // SHARD FAST PATH for `IS NOT NULL` — Catalyst conjoins it onto
@@ -4159,7 +4011,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
     val m = manifest(fs(spark, path), path, v)
-    val schema = resolveSchema(spark, path, m)
+    val schema = m.schema
     if (!schema.fieldNames.contains(column) ||
         schema(column).dataType !=
           org.apache.spark.sql.types.StringType)
@@ -4247,24 +4099,21 @@ object Snapshots {
       s"snapshot: changeFeed fromVersion must be >= 0: $fromVersion")
     val f = fs(spark, path)
     val mEnd = manifest(f, path, toVersion)
-    val endSchema = resolveSchema(spark, path, mEnd)
+    val endSchema = mEnd.schema
     val cols = endSchema.fieldNames.toSeq
     // fromVersion 0 = "before the table existed": version 1's own
     // contents stream as inserts (the CDF startingVersion=1 case)
-    val empty0 = SnapManifest(Some(endSchema), Nil, Set.empty,
-      "none", Map.empty, Nil, Map.empty, Nil, Nil)
+    val empty0 = SnapManifest(endSchema, Nil, Set.empty,
+      "none", Map.empty, Nil, Map.empty, Nil)
     // each interior manifest is read ONCE: step v's B side carries
     // forward as step v+1's A side
     var mA = if (fromVersion == 0L) empty0
              else manifest(f, path, fromVersion)
-    var sA = if (fromVersion == 0L) endSchema
-             else resolveSchema(spark, path, mA)
     val steps = (fromVersion until toVersion).map { v =>
       val mB =
         if (v + 1 == toVersion) mEnd else manifest(f, path, v + 1)
-      val sB =
-        if (v + 1 == toVersion) endSchema
-        else resolveSchema(spark, path, mB)
+      val sA = mA.schema
+      val sB = mB.schema
       require(sA.fieldNames.sameElements(sB.fieldNames) &&
         sA.fields.map(_.dataType).sameElements(sB.fields.map(_.dataType)),
         s"snapshot: the schema changed between versions $v and ${v + 1} " +
@@ -4338,7 +4187,6 @@ object Snapshots {
       // nothing matches and nothing double-counts
       val eqRevived = eqMatch(droppedEqs, mB, sB)
       mA = mB
-      sA = sB
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], endSchema)
       val rem = removedRows.getOrElse(empty)
@@ -4414,7 +4262,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path to $what"))
     val m = manifest(fs(spark, path), path, v)
-    CurState(v, resolveSchema(spark, path, m), m.partCols, m.dropped,
+    CurState(v, m.schema, m.partCols, m.dropped,
       m.txns, m.dvs, m.colMap, m.entries)(m.props)
   }
 
@@ -5185,7 +5033,7 @@ object Snapshots {
               s"and it cannot be rebased over ($reason) - re-read " +
               "and retry")
         }
-        val wSchema = resolveSchema(spark, path, m)
+        val wSchema = m.schema
         if (m.partCols != partCols) refuse("a partition-spec change")
         if (!wSchema.fieldNames.sameElements(schema.fieldNames) ||
             !wSchema.fields.map(_.dataType.catalogString)
@@ -5722,7 +5570,7 @@ object Snapshots {
     while (committed < 0L) {
       val next = curBase + 1L
       if (tryPublishManifest(f, path, next,
-          manifestLines(resolveSchema(spark, path, m), m.partCols,
+          manifestLines(m.schema, m.partCols,
             m.dropped, "analyze", m.entries.map(amend), m.txns,
             m.dvs, m.colMap, m.props))) {
         bumpLatestHint(f, path, next)
@@ -5877,7 +5725,7 @@ object Snapshots {
               s"delete files on $path and it cannot be rebased over " +
               s"($reason) - re-read and retry")
         }
-        val wSchema = resolveSchema(spark, path, m)
+        val wSchema = m.schema
         if (m.partCols != st.partCols) refuse("a partition-spec change")
         if (!wSchema.fieldNames.sameElements(st.schema.fieldNames) ||
             !wSchema.fields.map(_.dataType.catalogString)
@@ -6471,10 +6319,10 @@ object Snapshots {
 
   /** The table's commit history — DESCRIBE HISTORY: one row per
     * surviving version with its commit time (manifest mtime, the
-    * [[versionAsOf]] clock), operation (`#op=` marker; `unknown` for
-    * legacy manifests), file count and total bytes — the operational
-    * at-a-glance every table format owes its operators. Metadata
-    * only: reads manifests, never data.
+    * [[versionAsOf]] clock), operation (`#op=` marker), file count,
+    * total bytes and manifest encoding (`full` inline v3, or
+    * `sharded` v4) — the operational at-a-glance every table format
+    * owes its operators. Metadata only: reads manifests, never data.
     */
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -6482,11 +6330,7 @@ object Snapshots {
     allManifestVersions(f, path).map { v =>
       val m = manifest(f, path, v)
       val mt = f.getFileStatus(manifestPath(path, v)).getModificationTime
-      // encoding column: where the delta chains checkpoint — the
-      // operator's view of commit-metadata economics
-      val enc = m.deltaBase
-        .map(b => s"delta(base=$b,depth=${m.depth})")
-        .getOrElse("full")
+      val enc = if (m.shardRefs.isEmpty) "full" else "sharded"
       (v, new java.sql.Timestamp(mt), m.op, m.entries.size.toLong,
         m.entries.map(e => entryLen(f, path, e)).sum, enc)
     }.toDF("version", "committed_at", "operation", "n_files",
@@ -6635,13 +6479,13 @@ object Snapshots {
     val f = fs(spark, path)
     val v = latestVersion(spark, path).getOrElse(return None)
     val m = manifest(f, path, v)
-    if (m.shardRefs.isEmpty || m.schema.isEmpty) return None
+    if (m.shardRefs.isEmpty) return None
     val sSize = shardSize(f)
     val accreted = m.shardRefs.groupBy(r => shardGroupKey(r.pseudo))
       .exists { case (_, rs) =>
         rs.size > (rs.map(_.count.toLong).sum + sSize - 1) / sSize }
     if (!accreted) return None
-    val full = manifestLines(m.schema.get, m.partCols, m.dropped,
+    val full = manifestLines(m.schema, m.partCols, m.dropped,
       "reshard", m.entries, m.txns, m.dvs, m.colMap, m.props)
     val lines = renderV4(f, path, full, sSize, forceRechunk = true)
     val next = v + 1L
@@ -6684,35 +6528,24 @@ object Snapshots {
   }
 
   /** Roll the table back to `toVersion`: a NEW version whose manifest
-    * is a byte-for-byte copy of the old one (format-preserving, so a
-    * legacy-manifest snapshot rolls back verbatim) — constant-time,
+    * is a byte-for-byte copy of the old one, operation marker aside
+    * (a v4 copy reuses the source's shards) — constant-time,
     * no data IO, and the rolled-back-from snapshot stays readable
     * (rollback is an ordinary commit in the history, not an erasure).
     * Refuses when a concurrent commit claims the version first.
     */
   def rollback(spark: SparkSession, path: String, toVersion: Long): Long = {
     val f = fs(spark, path)
-    val raw = manifestRawLines(f, path, toVersion)
+    manifest(f, path, toVersion) // refuses unknown versions and headers
     val base = allManifestVersions(f, path).last
     val v = base + 1L
     // format-preserving copy, except the operation marker: history
-    // must show THIS commit as a rollback, not the source's op. A
-    // delta source keeps its `#base=` (the republished version still
-    // resolves against the same historical base — retention pins it)
-    // and only its forced `+#op=` edit line is rewritten.
-    val lines =
-      if (raw.headOption.contains(Header) ||
-          raw.headOption.contains(HeaderV4))
-        // v4 republishes verbatim too: its shard refs are
-        // content-addressed and immutable, so the rollback reuses
-        // them untouched (vacuum keeps every referenced shard alive)
-        raw.filterNot(_.startsWith("#op=")).patch(3,
-          Seq(s"#op=rollback(to=$toVersion)"), 0)
-      else if (raw.headOption.contains(HeaderDelta))
-        raw.map(l =>
-          if (l.startsWith("+#op=")) s"+#op=rollback(to=$toVersion)"
-          else l)
-      else raw
+    // must show THIS commit as a rollback, not the source's op. v4
+    // shard refs are content-addressed and immutable, so the rollback
+    // reuses them untouched (vacuum keeps every referenced shard alive)
+    val lines = readLines(f, manifestPath(path, toVersion))
+      .filterNot(_.startsWith("#op=")).patch(3,
+        Seq(s"#op=rollback(to=$toVersion)"), 0)
     if (!tryPublishManifest(f, path, v, lines))
       throw new java.util.ConcurrentModificationException(
         s"snapshot: concurrent commit detected while rolling back $path " +
@@ -6741,10 +6574,9 @@ object Snapshots {
 
   /** Base versions every surviving manifest needs: an
     * equality-delete marker's base MANIFEST defines which files the
-    * delete applies to, and a DELTA manifest resolves against its
-    * `#base=` chain — both must outlive their referrer, so retention
-    * pins them like tags. Closed transitively: a pinned base may
-    * itself be a delta or carry markers with earlier bases.
+    * delete applies to, so it must outlive its referrer and retention
+    * pins it like a tag. Closed transitively: a pinned base may
+    * itself carry markers with earlier bases.
     */
   private def eqBasesReferenced(f: FileSystem, path: String,
                                 roots: Set[Long]): Set[Long] = {
@@ -6752,10 +6584,7 @@ object Snapshots {
     var frontier = roots
     while (frontier.nonEmpty) {
       val next = frontier
-        .flatMap { v =>
-          val m = manifest(f, path, v)
-          m.dvs.flatMap(eqOf).map(_.base) ++ m.deltaBase
-        }
+        .flatMap(v => manifest(f, path, v).dvs.flatMap(eqOf).map(_.base))
         .diff(seen ++ frontier)
       seen ++= frontier
       frontier = next
@@ -6784,14 +6613,13 @@ object Snapshots {
       .filter(v => f.getFileStatus(manifestPath(path, v))
         .getModificationTime < cutoff)
       .toSet
-    // Base chains are pinned from EVERY survivor — latest, tags, AND
-    // the young manifests the age filter keeps. Unlike [[expire]],
-    // survivors here are not a suffix: a young delta manifest below
-    // the last full checkpoint resolves against a `#base=` older than
+    // Equality-delete bases are pinned from EVERY survivor — latest,
+    // tags, AND the young manifests the age filter keeps. Unlike
+    // [[expire]], survivors here are not a suffix: a young non-latest
+    // manifest can carry an equality delete whose base is older than
     // the cutoff, and dropping that base would make the survivor
-    // unreadable (and vacuum/history, which resolve every version,
-    // throw for the whole table). eqBasesReferenced closes
-    // transitively, so bases-of-bases survive too.
+    // unreadable. eqBasesReferenced closes transitively, so
+    // bases-of-bases survive too.
     val pinned = eqBasesReferenced(f, path, all.toSet -- candidates)
     val drop = all.filter(candidates).filterNot(pinned)
     drop.foreach(v => f.delete(manifestPath(path, v), false))
@@ -6920,7 +6748,7 @@ object Snapshots {
       s"snapshot: $source version $v carries live delete files - a " +
         "clone cannot apply them (row identity is store-relative); " +
         "compact the source, then clone")
-    val schema = resolveSchema(spark, source, m)
+    val schema = m.schema
     val srcBase = sfs.makeQualified(new Path(source)).toString
       .stripSuffix("/")
     val entries = m.entries.map { e =>
@@ -7046,7 +6874,7 @@ object Snapshots {
       s"snapshot: branch '$name' has pending staged append(s) " +
         s"${pending.mkString(", ")} - publish or drop them before " +
         "fast-forwarding")
-    val schema = resolveSchema(spark, bPath, bm)
+    val schema = bm.schema
     val mainRoot = f.makeQualified(new Path(path)).toUri.toString
       .stripSuffix("/")
     val mainRootAlt = f.makeQualified(new Path(path)).toString

@@ -56,6 +56,20 @@ class EntrySpec extends SparkSpec {
       "engine behaviour must not hang off a JVM-wide system property")
   }
 
+  test("object Snapshots declares no global var beyond its publish " +
+    "hooks and the coordinator registry") {
+    // members of `object Snapshots` sit at two-space indent; locals
+    // and nested objects' members sit deeper
+    val topVar = """(?m)^  (?:[\w\[\]@]+\s+)*var\s+(\w+)""".r
+    val src = sources.collectFirst {
+      case (rel, s) if rel == "graft/io/Snapshots.scala" => s
+    }.get
+    val vars = topVar.findAllMatchIn(src).map(_.group(1)).toSet
+    assert(vars === Set("onBeforePublish", "onBeforeStagedClaim",
+      "onBeforePromoteClaim", "coordinators"),
+      "a test seam must not live as a global var on the store")
+  }
+
   test("no `.limit(1).count()` emptiness probe in the engine") {
     // a code-generated limit names its counter after a JVM-wide id, so
     // its generated class never repeats and every call compiles anew;

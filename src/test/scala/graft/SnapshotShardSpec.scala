@@ -239,8 +239,8 @@ class SnapshotShardSpec extends SparkSpec {
         "fixture must shard")
       val n = docs.count()
       // TAMPER the store into the legacy shape: strip every stat
-      // from one shard member (a v1/v2-era entry carried into a v4
-      // manifest has none) and from its shard's pseudo-entry (one
+      // from one shard member (an entry committed before stats were
+      // collected has none) and from its shard's pseudo-entry (one
       // stat-less member drops ALL merged pseudo-stats). The agg
       // pushdown's pseudo tier must answer None here — never hand
       // the bare '<dir>/_' rel to getFileStatus

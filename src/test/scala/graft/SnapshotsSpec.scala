@@ -68,10 +68,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("empty commit keeps its schema; unknown version refuses loudly") {
     val path = newStore
-    // Spark writes a schema-bearing empty part file, so an empty
-    // snapshot is legitimate and must read back as 0 rows with the
-    // right columns (the no-file refusal in commit only fires for
-    // writers that emit nothing at all)
+    // the manifest carries the schema, so an empty snapshot reads
+    // back as 0 rows with the right columns
     Snapshots.commit(docs.filter(lit(false)), path)
     val got = Snapshots.read(spark, path)
     assert(got.count() === 0L)
@@ -98,32 +96,11 @@ class SnapshotsSpec extends SparkSpec {
       docs.filter(col("n_chars") > 500).count())
   }
 
-  test("vacuum collects crashed-commit orphans; legacy v2 manifests stay readable") {
+  test("vacuum collects crashed-commit orphans") {
     val path = newStore
     Snapshots.commit(docs.filter(col("doc_id") < 100), path) // v1
-    // a LEGACY (round-9 format) v2 manifest hand-written into the
-    // store: no partition line, schema on line 2. Exclusive-create
-    // commits treat any manifest on disk as committed, and the v2
-    // format must read (back-compat: format v3 added a read path for
-    // v1/v2, never a break)
-    docs.filter(col("doc_id") >= 100).write
-      .parquet(s"$path/data/c-legacy")
-    val legacyFiles = new java.io.File(s"$path/data/c-legacy")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => s"data/c-legacy/${f.getName}").sorted
-    val manifest =
-      ("graft-snapshot-v2" +: docs.schema.json +: legacyFiles.toSeq) :+ ""
-    Files.writeString(
-      java.nio.file.Paths.get(s"$path/_manifests/v000000002.manifest"),
-      manifest.mkString("\n"))
-    // the manifest IS the commit: v2 is latest and reads through the
-    // v2-format fallback
-    assert(Snapshots.latestVersion(spark, path) === Some(2L))
-    assert(Snapshots.read(spark, path).count() ===
-      docs.filter(col("doc_id") >= 100).count())
-    // the next commit claims v3 on top of it
     val v = Snapshots.commit(docs, path)
-    assert(v === 3L)
+    assert(v === 2L)
     // every manifest on disk protects its files from vacuum
     assert(Snapshots.vacuum(spark, path, graceMs = 0) === 0)
     // a crash BEFORE the manifest publish leaves a commit dir no
@@ -135,29 +112,46 @@ class SnapshotsSpec extends SparkSpec {
     // is not a version
     Files.writeString(java.nio.file.Paths.get(
       s"$path/_manifests/_tmp_v000000009.manifest"), "junk")
-    assert(Snapshots.latestVersion(spark, path) === Some(3L))
+    assert(Snapshots.latestVersion(spark, path) === Some(2L))
   }
 
-  test("legacy v1 manifests (no schema line) read via footer inference") {
+  test("a manifest headed by anything but v3 or v4 refuses on read, naming the accepted headers") {
+    Seq("graft-snapshot-v1", "graft-snapshot-v2",
+        "graft-snapshot-delta-1").foreach { header =>
+      val path = newStore
+      Snapshots.commit(docs.filter(col("doc_id") < 100), path)
+      val v1 = java.nio.file.Paths.get(
+        s"$path/_manifests/v000000001.manifest")
+      // the v1 manifest's own schema/partition/body lines under the
+      // retired header: only the header decides
+      val lines = new String(Files.readAllBytes(v1),
+        java.nio.charset.StandardCharsets.UTF_8).split('\n').toSeq
+      Files.writeString(java.nio.file.Paths.get(
+        s"$path/_manifests/v000000002.manifest"),
+        (header +: lines.tail).mkString("", "\n", "\n"))
+      assert(Snapshots.latestVersion(spark, path) === Some(2L))
+      val e = intercept[IllegalArgumentException](
+        Snapshots.read(spark, path))
+      assert(e.getMessage.contains(
+        "accepted headers: graft-snapshot-v3, graft-snapshot-v4"),
+        s"$header: ${e.getMessage}")
+    }
+  }
+
+  test("a commit whose first write task is empty lists no 0-row file") {
+    import spark.implicits._
     val path = newStore
-    docs.write.parquet(s"$path/data/c-v1era")
-    val files = new java.io.File(s"$path/data/c-v1era")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => s"data/c-v1era/${f.getName}").sorted
-    Files.createDirectories(
-      java.nio.file.Paths.get(s"$path/_manifests"))
-    Files.writeString(
-      java.nio.file.Paths.get(s"$path/_manifests/v000000001.manifest"),
-      (("graft-snapshot-v1" +: files.toSeq) :+ "").mkString("\n"))
-    val got = Snapshots.read(spark, path)
-    assert(got.count() === docs.count())
-    assert(got.columns.sorted === docs.columns.sorted)
-    // the first modern commit persists a v3 manifest on top; appends
-    // carry the legacy files forward
-    Snapshots.commitAppend(
-      docs.limit(3).select((-col("doc_id") - 1).as("doc_id"), col("text"),
-        col("lang"), col("source"), col("n_chars")), path)
-    assert(Snapshots.read(spark, path).count() === docs.count() + 3)
+    // slice 0 of a 2-row, 3-slice parallelize is empty, and Spark's
+    // file writer still writes a (schema-only) file for task 0
+    val df = spark.sparkContext.parallelize(Seq(1L -> "a", 2L -> "b"), 3)
+      .toDF("id", "s")
+    Snapshots.commit(df, path)
+    val rows = Snapshots.files(spark, path).select("rows")
+      .as[Option[Long]].collect().toSeq
+    assert(rows === Seq(Some(1L), Some(1L)),
+      "a committed entry holds no rows")
+    assert(dataFiles(path).size === 2, "the empty file was left on disk")
+    assert(Snapshots.read(spark, path).count() === 2L)
   }
 
   test("concurrent appends: the publish loser rebases and both survive") {
@@ -1215,22 +1209,31 @@ class SnapshotsSpec extends SparkSpec {
     runModelWalk(seed = 7)
   }
 
-  test("model-based random walk UNDER FORCED DELTA MANIFESTS: every commit resolves through chains") {
-    // tiny walk tables never pass the is-it-smaller check, so the
-    // normal walk runs on full manifests; forcing deltas (checkpoint
-    // every 5th) drives all 55 random ops - rollbacks republishing
-    // deltas included - through chain resolution and the same exact
-    // reference model
-    Snapshots.forceDeltaManifests = true
-    Snapshots.checkpointIntervalOverride = Some(5)
-    try runModelWalk(seed = 11)
-    finally {
-      Snapshots.forceDeltaManifests = false
-      Snapshots.checkpointIntervalOverride = None
-    }
+  test("model-based random walk under one-entry shards: commits of two or more files are v4 manifests") {
+    // a shard size of 1 makes every manifest of two or more entries
+    // v4, so the walk's appends (tail-shard reuse), rewrites
+    // (re-chunk) and rollbacks (verbatim republish) run on sharded
+    // manifests against the same reference model; only commits left
+    // with one file (a full compaction) stay inline v3
+    Snapshots.shardSizeOverride = Some(1)
+    val path =
+      try runModelWalk(seed = 11)
+      finally Snapshots.shardSizeOverride = None
+    val headers = Snapshots.versions(spark, path)
+      .map(v => manifestLinesOf(path, v).head)
+    val v4 = headers.count(_ == "graft-snapshot-v4")
+    info(s"$v4 of ${headers.size} manifests are v4")
+    assert(v4 * 2 > headers.size, headers.groupBy(identity).map {
+      case (h, hs) => s"$h: ${hs.size}" }.mkString(", "))
+    // history's encoding column names each version's manifest shape
+    val enc = Snapshots.history(spark, path).orderBy("version")
+      .select("encoding").collect().map(_.getString(0)).toSeq
+    assert(enc === headers.map(h =>
+      if (h == "graft-snapshot-v4") "sharded" else "full"))
   }
 
-  private def runModelWalk(seed: Int): Unit = {
+  /** Runs the walk and returns its store's path. */
+  private def runModelWalk(seed: Int): String = {
     import spark.implicits._
     val rnd = new scala.util.Random(seed) // seeded: failures reproduce
     val path = newStore
@@ -1386,6 +1389,7 @@ class SnapshotsSpec extends SparkSpec {
       assert(replayed.exceptAll(now).count() === 0L, "feed over-replays")
       assert(now.exceptAll(replayed).count() === 0L, "feed under-replays")
     } finally { feed.unpersist(); () }
+    path
   }
 
   test("tags pin versions through retention; retag refuses; drop releases") {
@@ -2693,137 +2697,6 @@ class SnapshotsSpec extends SparkSpec {
     Files.readAllLines(manifestFile(path, v)).asScala.toSeq
   }
 
-  test("delta manifests: appends write O(batch) metadata, chains resolve, checkpoints bound them") {
-    val path = newStore
-    // 40 entries so an append's edit list is much smaller than the
-    // full manifest - the delta encoding must kick in
-    Snapshots.commit(docs.filter(col("doc_id") % 4 =!= 0)
-      .repartition(40), path)
-    assert(manifestLinesOf(path, 1L).head.startsWith("graft-snapshot-v3"))
-    val fullLines = manifestLinesOf(path, 1L).size
-    Snapshots.commitAppend(
-      docs.filter(col("doc_id") % 12 === 0).coalesce(1), path)
-    Snapshots.commitAppend(
-      docs.filter(col("doc_id") % 12 === 4).coalesce(1), path)
-    Snapshots.commitAppend(
-      docs.filter(col("doc_id") % 12 === 8).coalesce(1), path)
-    // the three appends are DELTAS: O(batch) lines, not O(table)
-    (2L to 4L).foreach { v =>
-      val lines = manifestLinesOf(path, v)
-      assert(lines.head === "graft-snapshot-delta-1", s"v$v: ${lines.head}")
-      assert(lines.size < fullLines / 2,
-        s"v$v delta has ${lines.size} lines vs full $fullLines")
-      assert(lines.exists(_.startsWith("#base=")))
-    }
-    // every version reads correctly through the chain
-    assert(Snapshots.read(spark, path, Some(1L)).count() ===
-      docs.filter(col("doc_id") % 4 =!= 0).count())
-    assert(Snapshots.read(spark, path, Some(2L)).count() ===
-      docs.filter(col("doc_id") % 4 =!= 0 ||
-        col("doc_id") % 12 === 0).count())
-    assert(Snapshots.read(spark, path).count() === docs.count())
-    assert(Snapshots.read(spark, path)
-      .select(sum("doc_id")).head.getLong(0) ===
-      docs.select(sum("doc_id")).head.getLong(0))
-    // depth >= the checkpoint interval forces a FULL manifest
-    Snapshots.checkpointIntervalOverride = Some(4)
-    try {
-      // depth(v4)=3; 3+1 >= 4 => v5 checkpoints full
-      Snapshots.commitAppend(
-        docs.filter(col("doc_id") === 1L), path)
-      assert(manifestLinesOf(path, 5L).head
-        .startsWith("graft-snapshot-v3"))
-      // and the next commit starts a fresh chain
-      Snapshots.commitAppend(
-        docs.filter(col("doc_id") === 2L), path)
-      assert(manifestLinesOf(path, 6L).head === "graft-snapshot-delta-1")
-    } finally Snapshots.checkpointIntervalOverride = None
-    val dup = Snapshots.read(spark, path)
-    assert(dup.filter(col("doc_id") === 1L).count() === 2L)
-    assert(dup.filter(col("doc_id") === 2L).count() === 2L)
-    // history sees each commit's own op through the chain
-    val hist = Snapshots.history(spark, path)
-    assert(hist.filter(col("operation") === "append").count() === 5L)
-  }
-
-  test("delta manifests: rollback, retention pinning, mutations over chains, corruption refusal") {
-    val path = newStore
-    Snapshots.commit(docs.repartition(40), path)
-    Snapshots.commitAppend(docs.filter(col("doc_id") === 3L)
-      .withColumn("doc_id", lit(900001L)), path)
-    Snapshots.commitAppend(docs.filter(col("doc_id") === 3L)
-      .withColumn("doc_id", lit(900002L)), path)
-    assert(manifestLinesOf(path, 3L).head === "graft-snapshot-delta-1")
-    // rollback TO a delta version republishes the delta verbatim
-    // (same #base) with a patched op; the result resolves identically
-    val v4 = Snapshots.rollback(spark, path, 2L)
-    assert(v4 === 4L)
-    assert(manifestLinesOf(path, 4L).head === "graft-snapshot-delta-1")
-    assert(Snapshots.read(spark, path).count() ===
-      Snapshots.read(spark, path, Some(2L)).count())
-    assert(Snapshots.history(spark, path)
-      .filter(col("version") === 4L).select("operation")
-      .head.getString(0) === "rollback(to=2)")
-    // a MERGE over a chained table lands and reads correctly
-    val up = docs.filter(col("doc_id") === 5L)
-      .withColumn("text", lit("chained"))
-      .select(docs.columns.map(col).toSeq: _*)
-    Snapshots.merge(spark, path, up, Seq("doc_id"))
-    assert(Snapshots.read(spark, path)
-      .filter(col("doc_id") === 5L).select("text")
-      .head.getString(0) === "chained")
-    // a mor delete over the chain: zero data-file rewrites
-    Snapshots.deleteWhere(spark, path, col("doc_id") === 7L,
-      mode = "mor")
-    assert(Snapshots.read(spark, path)
-      .filter(col("doc_id") === 7L).count() === 0L)
-    // retention pins every surviving delta's base chain
-    Snapshots.expire(spark, path, keepLast = 1)
-    val vs = Snapshots.versions(spark, path)
-    assert(vs.contains(1L), s"chain base expired: $vs")
-    assert(Snapshots.read(spark, path)
-      .filter(col("doc_id") === 7L).count() === 0L)
-    assert(Snapshots.read(spark, path)
-      .filter(col("doc_id") === 900001L).count() === 1L)
-    // vacuum keeps every file the surviving chain references
-    Snapshots.vacuum(spark, path, graceMs = 0L)
-    assert(Snapshots.read(spark, path)
-      .filter(col("doc_id") === 5L).select("text")
-      .head.getString(0) === "chained")
-    // a corrupt delta (removing a line its base never carried)
-    // refuses loudly instead of resurrecting or dropping files
-    val next = Snapshots.versions(spark, path).last + 1L
-    val forged = Seq("graft-snapshot-delta-1",
-      manifestLinesOf(path, 1L)(1), "-",
-      s"#base=${Snapshots.versions(spark, path).last}",
-      "-data/never-existed.parquet", "+#op=forged")
-    Files.write(manifestFile(path, next),
-      forged.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val e = intercept[IllegalArgumentException](
-      Snapshots.read(spark, path).count())
-    assert(e.getMessage.contains("chain is corrupt"), e.getMessage)
-    Files.delete(manifestFile(path, next))
-  }
-
-  test("delta manifests at scale: append metadata is O(batch) bytes, not O(table)") {
-    val path = newStore
-    val li = Tables.t(spark, sf, "lineitem")
-    Snapshots.commit(li.repartition(300), path)
-    val fullBytes = Files.size(manifestFile(path, 1L))
-    Snapshots.commitAppend(li.limit(10).coalesce(1), path)
-    assert(manifestLinesOf(path, 2L).head === "graft-snapshot-delta-1")
-    val deltaBytes = Files.size(manifestFile(path, 2L))
-    info(s"300-file table: full manifest $fullBytes B, " +
-      s"1-file append delta $deltaBytes B " +
-      s"(${fullBytes / deltaBytes}x smaller)")
-    // the commit-time metadata write must be at least 20x smaller
-    // than the full rewrite at this file count - and the ratio GROWS
-    // with the table (the delta is O(batch), the full is O(files))
-    assert(deltaBytes * 20 < fullBytes,
-      s"delta $deltaBytes B vs full $fullBytes B")
-  }
-
   test("write-audit-publish: staging is invisible, audit reads base+staged, publish is atomic metadata") {
     val path = newStore
     val base = docs.filter(col("doc_id") % 3 =!= 0)
@@ -3440,46 +3313,37 @@ class SnapshotsSpec extends SparkSpec {
       e.getMessage)
   }
 
-  test("expireOlderThan: pins the base chain of every SURVIVING manifest, not just latest+tags") {
+  test("expireOlderThan: pins the equality-delete base of every SURVIVING manifest, not just latest+tags") {
     val path = newStore
-    Snapshots.forceDeltaManifests = true
-    Snapshots.checkpointIntervalOverride = Some(2)
-    try {
-      Snapshots.commit(docs.filter(col("doc_id") % 2 === 0), path)  // v1 full
-      Snapshots.commitAppend(docs.filter(col("doc_id") === 1L), path) // v2 delta(#base=1)
-      Snapshots.commitAppend(docs.filter(col("doc_id") === 3L), path) // v3 checkpoints FULL (depth 1+1 >= 2)
-      assert(manifestLinesOf(path, 2L).head === "graft-snapshot-delta-1")
-      assert(manifestLinesOf(path, 3L).head.startsWith("graft-snapshot-v3"))
-      // age v1 past any cutoff; v2 (a young non-latest delta resolving
-      // against v1) and v3 (latest, a full checkpoint so its chain
-      // never touches v1) stay young
-      java.nio.file.Files.setLastModifiedTime(manifestFile(path, 1L),
+    val keep = col("doc_id") % 2 === 0
+    Snapshots.commit(docs.filter(keep), path) // v1
+    // v2: an equality delete whose marker's base is v1
+    Snapshots.deleteKeysEq(spark, path,
+      docs.filter(col("doc_id") % 4 === 0).select("doc_id"), Seq("doc_id"))
+    // v3: the delete turns positional, so the latest manifest carries
+    // no equality marker and pins nothing
+    assert(Snapshots.rewriteDeletes(spark, path, convertEq = true) === 3L)
+    assert(!manifestLinesOf(path, 3L).exists(_.startsWith("#dv=eq")),
+      manifestLinesOf(path, 3L).filter(_.startsWith("#dv=")).mkString)
+    assert(manifestLinesOf(path, 2L).exists(l =>
+      l.startsWith("#dv=eq:") && l.endsWith("|1")))
+    def age(v: Long): Unit =
+      Files.setLastModifiedTime(manifestFile(path, v),
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() - 10000000L))
-      // v1 is old and OFF the latest chain - but surviving v2 needs it
-      assert(Snapshots.expireOlderThan(spark, path, 3600000L) === 0)
-      assert(Snapshots.versions(spark, path) === Seq(1L, 2L, 3L))
-      // time travel to v2 resolves, and history/vacuum (which resolve
-      // EVERY version) keep working for the whole table
-      assert(Snapshots.read(spark, path, Some(2L)).count() ===
-        docs.filter(col("doc_id") % 2 === 0 || col("doc_id") === 1L)
-          .count())
-      assert(Snapshots.history(spark, path).count() === 3L)
-      Snapshots.vacuum(spark, path, graceMs = 0L)
-      // once the referring delta itself ages out, base + delta drop
-      // TOGETHER in one pass
-      java.nio.file.Files.setLastModifiedTime(manifestFile(path, 2L),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 10000000L))
-      assert(Snapshots.expireOlderThan(spark, path, 3600000L) === 2)
-      assert(Snapshots.versions(spark, path) === Seq(3L))
-      assert(Snapshots.read(spark, path).count() ===
-        docs.filter(col("doc_id") % 2 === 0 || col("doc_id") === 1L ||
-          col("doc_id") === 3L).count())
-    } finally {
-      Snapshots.forceDeltaManifests = false
-      Snapshots.checkpointIntervalOverride = None
-    }
+    // v1 is old and unneeded by latest - but the young v2 needs it
+    age(1L)
+    assert(Snapshots.expireOlderThan(spark, path, 3600000L) === 0)
+    assert(Snapshots.versions(spark, path) === Seq(1L, 2L, 3L))
+    val live = docs.filter(keep && col("doc_id") % 4 =!= 0).count()
+    assert(Snapshots.read(spark, path, Some(2L)).count() === live)
+    Snapshots.vacuum(spark, path, graceMs = 0L)
+    assert(Snapshots.read(spark, path, Some(2L)).count() === live)
+    // once the referring v2 itself ages out, both drop in one pass
+    age(2L)
+    assert(Snapshots.expireOlderThan(spark, path, 3600000L) === 2)
+    assert(Snapshots.versions(spark, path) === Seq(3L))
+    assert(Snapshots.read(spark, path).count() === live)
   }
 
   test("write-audit-publish: a drop racing inside publish's commit window blocks and refuses") {
