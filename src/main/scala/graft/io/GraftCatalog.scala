@@ -89,38 +89,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def spark: SparkSession = SparkSession.active
 
-  /** V2 functions backing the hidden partition transforms — Spark's
-    * storage-partitioned-join planner loads `bucket` from here to
-    * resolve two scans' reported `bucket(n, col)` partitionings into
-    * comparable expressions (same canonical function + same count ⇒
-    * the join needs no Exchange), and the WRITE planner loads every
-    * transform to turn [[SnapshotWrite]]'s declared clustering into
-    * the rebalance+sort it plans ([[GraftTimeFunction]],
-    * [[GraftTruncateFunction]]).
-    */
-  private val transformFunctionNames =
-    Seq("bucket", "years", "months", "days", "hours", "truncate")
-
+  /** The hidden partition transforms as V2 functions
+    * ([[TransformFunctions]]). */
   override def listFunctions(namespace: Array[String])
-      : Array[Identifier] =
-    if (namespace.isEmpty)
-      transformFunctionNames
-        .map(n => Identifier.of(Array.empty[String], n)).toArray
-    else Array.empty
+      : Array[Identifier] = TransformFunctions.listFunctions(namespace)
 
   override def loadFunction(ident: Identifier)
       : org.apache.spark.sql.connector.catalog.functions.UnboundFunction =
-    if (ident.namespace().nonEmpty)
-      throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchFunctionException(ident)
-    else ident.name() match {
-      case "bucket" => GraftBucketFunction
-      case k @ ("years" | "months" | "days" | "hours") =>
-        new GraftTimeFunction(k)
-      case "truncate" => GraftTruncateFunction
-      case _ => throw new org.apache.spark.sql.catalyst.analysis
-        .NoSuchFunctionException(ident)
-    }
+    TransformFunctions.loadFunction(ident)
 
   /** Identifier segments become path components: '..', '.', empty,
     * '/'-bearing or NUL-bearing segments would escape the warehouse
@@ -274,7 +250,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** The staged side of an atomic CTAS/RTAS: collects the write's
-    * commit dirs + file rels (the data lands invisible — no manifest)
+    * commit dirs + file entries (the data lands invisible — no manifest)
     * and publishes or deletes them wholesale. */
   private final class GraftStagedTable(path: String, ident: String,
                                        schema0: StructType,
@@ -286,7 +262,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
     private val commitDirs = scala.collection.mutable.ArrayBuffer
       .empty[String]
-    private val rels = scala.collection.mutable.ArrayBuffer
+    private val entries = scala.collection.mutable.ArrayBuffer
       .empty[String]
 
     override def name(): String = ident
@@ -320,16 +296,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             Snapshots.V2Append,
             stagedState = Some(Snapshots.V2WriteState(0L, schema0,
               partCols, Map.empty, props)),
-            stagedCollect = Some((dir, rs) =>
+            stagedCollect = Some((dir, es) =>
               GraftStagedTable.this.synchronized {
                 commitDirs += dir
-                rels ++= rs
+                entries ++= es
               }))
       }
 
     override def commitStagedChanges(): Unit = {
       Snapshots.publishStagedTable(spark, path, schema0, partCols,
-        props, commitDirs.toSeq, rels.toSeq, allowCreate, allowReplace)
+        props, commitDirs.toSeq, entries.toSeq, allowCreate, allowReplace)
       ()
     }
 

@@ -4,16 +4,18 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences, BoundReference, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.functions.{col, pmod}
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The snapshot store's hidden TIME and TRUNCATE transforms as
   * catalog V2 functions — the piece that lets Spark PLAN writes into
   * those layouts: [[SnapshotBatchWrite]] declares
   * `Distributions.clustered(days(ts), ...)` and Spark's
   * `DistributionAndOrderingUtils` resolves each transform through
-  * [[GraftCatalog.loadFunction]] into an evaluable expression for its
+  * [[TransformFunctions]] into an evaluable expression for its
   * rebalance/sort, exactly like `bucket` ([[GraftBucketFunction]])
   * already resolves for storage-partitioned joins.
   *
@@ -27,17 +29,55 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * against a one-column relation and binds the result), not
   * re-implemented.
   */
+/** V2 functions backing the hidden partition transforms, as the
+  * function catalog of every snapshot write and of [[GraftCatalog]]:
+  * Spark's storage-partitioned-join planner loads `bucket` to resolve
+  * two scans' reported `bucket(n, col)` partitionings into comparable
+  * expressions (same canonical function + same count ⇒ the join needs
+  * no Exchange), and the WRITE planner loads every transform to turn
+  * [[SnapshotWrite]]'s declared clustering into the rebalance+sort it
+  * plans.
+  */
+private[graft] object TransformFunctions extends FunctionCatalog {
+  override def initialize(name: String,
+                          options: CaseInsensitiveStringMap): Unit = ()
+  override def name(): String = "graft_transforms"
+
+  private val names =
+    Seq("bucket", "years", "months", "days", "hours", "truncate")
+
+  override def listFunctions(namespace: Array[String])
+      : Array[Identifier] =
+    if (namespace.isEmpty)
+      names.map(n => Identifier.of(Array.empty[String], n)).toArray
+    else Array.empty
+
+  override def loadFunction(ident: Identifier): UnboundFunction =
+    if (ident.namespace().nonEmpty)
+      throw new org.apache.spark.sql.catalyst.analysis
+        .NoSuchFunctionException(ident)
+    else ident.name() match {
+      case "bucket" => GraftBucketFunction
+      case k @ ("years" | "months" | "days" | "hours") =>
+        new GraftTimeFunction(k)
+      case "truncate" => GraftTruncateFunction
+      case _ => throw new org.apache.spark.sql.catalyst.analysis
+        .NoSuchFunctionException(ident)
+    }
+}
+
 private[graft] object DerivedExprs {
 
   /** The analyzed, executable catalyst expression of
     * `field.derive(col, dt)` with the source column read from
-    * `ordinal` of the eval input row. Driver-only (analysis needs the
+    * `ordinal` of the eval input row, analyzed under UTC like the
+    * writer's directory values. Driver-only (analysis needs the
     * active session); the returned tree is serializable and its
     * `eval` is executor-safe.
     */
   def bound(field: Snapshots.PartField, dt: DataType,
             ordinal: Int = 0): Expression = {
-    val spark = SparkSession.active
+    val spark = Snapshots.utcDeriveSession(SparkSession.active)
     val df = spark.createDataFrame(
       java.util.Collections.emptyList[Row](),
       StructType(Seq(StructField("c", dt, nullable = true))))
@@ -73,8 +113,7 @@ private[graft] object DerivedExprs {
 /** `years(ts)` / `months(ts)` / `days(ts)` / `hours(ts)` as V2
   * functions: one argument (timestamp or date), result = the integer
   * directory value the writer derives (`year*100+month` for months,
-  * etc. — [[Snapshots.PTime.derive]] verbatim, session-timezone
-  * semantics captured at bind time).
+  * etc. — [[Snapshots.PTime.derive]] verbatim, under UTC).
   */
 private[graft] final class GraftTimeFunction(kind: String)
     extends UnboundFunction {

@@ -397,6 +397,9 @@ private[graft] final class SnapshotScanBuilder(
       .collect { case f: Snapshots.PIdentity => f }
       .map(f => colMap.getOrElse(f.source, f.source) -> f).toMap
 
+  private lazy val layoutTz = Snapshots.layoutZone(spark, path,
+    Some(pinnedV), idByLogical.keys.map(tableSchema(_).dataType).toSeq)
+
   /** Identity columns whose directory key EVERY entry carries — the
     * absorbability precondition (a pre-spec-evolution file holds
     * arbitrary values). One manifest pass, lazily, however many
@@ -453,7 +456,6 @@ private[graft] final class SnapshotScanBuilder(
       val dt = tableSchema(c).dataType
       if (!injective(dt) || vs.exists(_ == null)) None
       else {
-        val tz = spark.sessionState.conf.sessionLocalTimeZone
         val ss = vs.map { v =>
           val litE = org.apache.spark.sql.catalyst.expressions
             .Literal.create(v)
@@ -461,10 +463,10 @@ private[graft] final class SnapshotScanBuilder(
             .Expression =
             if (litE.dataType == dt) litE
             else org.apache.spark.sql.catalyst.expressions
-              .Cast(litE, dt, Option(tz))
+              .Cast(litE, dt, Option(layoutTz))
           Option(org.apache.spark.sql.catalyst.expressions
             .Cast(typed, org.apache.spark.sql.types.StringType,
-              Option(tz)).eval(null)).map(_.toString).getOrElse("")
+              Option(layoutTz)).eval(null)).map(_.toString).getOrElse("")
         }
         if (ss.exists(s => s.isEmpty || s == default)) None
         else Some(ss.toSet)
@@ -590,8 +592,8 @@ private[graft] final class SnapshotScanBuilder(
     val idTypes = idFields.map(f =>
       tableSchema(logicalName(f.source)).dataType)
     def groupKeyOf(e: String): Seq[Any] = {
-      val row = Snapshots.identityValuesRow(spark,
-        Snapshots.relOfEntry(e), idFields.map(_.source), idTypes)
+      val row = Snapshots.identityValuesRow(Snapshots.relOfEntry(e),
+        idFields.map(_.source), idTypes, layoutTz)
       groupCols.map { c =>
         val i = idNames.indexOf(c)
         row.get(i, idTypes(i))
@@ -728,8 +730,9 @@ private[graft] final class SnapshotScanBuilder(
                     val (rel, rows) = Snapshots.entryMetaStat(e)
                     if (!Snapshots.partValsOf(rel).contains(fld.dirName))
                       None
-                    else if (Snapshots.identityValuesRow(spark, rel,
-                        Seq(fld.source), Seq(idTypes(idx))).isNullAt(0))
+                    else if (Snapshots.identityValuesRow(rel,
+                        Seq(fld.source), Seq(idTypes(idx)), layoutTz)
+                        .isNullAt(0))
                       Some(0L)
                     else rows.map(_ - posDelCounts.getOrElse(rel, 0L))
                   }
@@ -878,9 +881,12 @@ private[graft] final class SnapshotBatchScan(
   private val idTypes: Seq[org.apache.spark.sql.types.DataType] =
     idFields.map(f => tableSchema(logicalName(f.source)).dataType)
 
+  private lazy val layoutTz =
+    Snapshots.layoutZone(spark, path, Some(pinnedV), idTypes)
+
   private def idRowOf(rel: String): InternalRow =
-    Snapshots.identityValuesRow(spark, rel,
-      idFields.map(_.source), idTypes)
+    Snapshots.identityValuesRow(rel, idFields.map(_.source), idTypes,
+      layoutTz)
 
   /** Catalyst type of each partition-KEY tuple slot, field order:
     * bucket numbers are ints, identity slots their column type. */

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder => VSortOrder, Expression => VExpression}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsDynamicOverwrite, SupportsOverwrite, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.WriteBridge
@@ -15,18 +16,19 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-/** TRUE DSv2 batch write path for snapshot tables — every SQL and
-  * `writeTo` shape plans through Spark's own write framework:
+/** The ONE write path into snapshot tables: SQL `INSERT`/CTAS, `writeTo`,
+  * row-level DML and every programmatic commit ([[Snapshots]] runs
+  * its batches through [[SnapshotWriteTable]]) plan through Spark's
+  * own DSv2 write framework:
   *
   *   - the declared `RequiresDistributionAndOrdering` actually PLANS:
   *     Spark resolves the table's transforms (identity natively;
   *     `bucket` / `years/months/days/hours` / `truncate` through
-  *     [[GraftCatalog]]'s V2 functions) and inserts an AQE
+  *     [[TransformFunctions]]) and inserts an AQE
   *     `RebalancePartitions` on the derived directory values plus a
   *     per-task sort — each partition directory is written by ONE
   *     task in one Spark-planned shuffle (files track data size, not
-  *     task count × partition count), replacing the V1-era
-  *     committer-side rebalance the exec used to ignore;
+  *     task count × partition count);
   *   - `INSERT OVERWRITE` under `partitionOverwriteMode=dynamic`
   *     lands as [[Snapshots.replacePartitions]] semantics (only the
   *     batch's partitions replaced, one atomic commit) — the
@@ -36,12 +38,14 @@ import org.apache.spark.sql.types.StructType
   *     Spark's `FileFormatWriter` uses
   *     ([[org.apache.spark.sql.graft.WriteBridge]]), directory names
   *     through the same `getPartitionPathString(cast-to-string)`
-  *     rule, so DSv2-written files are indistinguishable from the
-  *     programmatic commit paths';
-  *   - the driver's `BatchWrite.commit` folds the tasks' file lists
-  *     into ONE manifest claim with the usual OCC
-  *     ([[Snapshots.commitWrittenV2]]): appends rebase over
-  *     interlopers, every overwrite shape refuses conflicts loudly.
+  *     rule, derived under UTC whatever the session zone;
+  *   - each task builds its closed files' manifest entries (byte
+  *     length plus footer stats) and ships them in its commit
+  *     message, so the driver's `BatchWrite.commit` lists nothing and
+  *     reads no footer before it folds them into ONE manifest claim
+  *     with the usual OCC ([[Snapshots.commitWrittenV2]]): appends
+  *     rebase over interlopers, every overwrite shape refuses
+  *     conflicts loudly.
   *
   * A failed/speculative task attempt may leave orphan files under the
   * commit dir; the manifest lists only files from COMMITTED task
@@ -102,9 +106,11 @@ private[graft] final class SnapshotWrite(
   // physical names, layout and props the task files are written
   // under; commitWrittenV2 re-reads at commit and refuses if a
   // concurrent schema/layout change invalidated them. A STAGED
-  // CTAS/RTAS write has no committed table to read - its state is
-  // the staged declaration, and commit defers to the staged table's
-  // one-manifest publish ([[Snapshots.publishStagedTable]])
+  // write brings its own state and commit defers to its collector:
+  // a CTAS/RTAS has no committed table to read (its state is the
+  // staged declaration, published by
+  // [[Snapshots.publishStagedTable]]), and a programmatic commit
+  // ([[SnapshotWriteTable]]) publishes through its own OCC loop
   private val st = stagedState.getOrElse(
     Snapshots.v2WriteState(spark, path, inputSchema, at))
   private val fields = st.partCols.map(Snapshots.parsePartField)
@@ -157,15 +163,15 @@ private[graft] final class SnapshotWrite(
 
   /** Per-field directory-value expressions over the INPUT row: the
     * write-path `derive(col).cast("string")` analyzed verbatim
-    * ([[DerivedExprs]]), so DSv2 directory names agree byte-for-byte
-    * with every other commit path on the same values.
+    * ([[DerivedExprs]]) on the UTC derive session, so time transforms
+    * and identity-timestamp directories name the same values the
+    * read-side prune derives, whatever the writer's session zone.
     */
   private val dirExprs: Seq[Expression] = fields.map { f =>
     val ln = logicalName(f.source)
     val i = inputSchema.fieldIndex(ln)
     val dt = inputSchema(i).dataType
-    val sparkS = spark
-    val df = sparkS.createDataFrame(
+    val df = Snapshots.utcDeriveSession(spark).createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       StructType(Seq(org.apache.spark.sql.types.StructField(
         "c", dt, nullable = true))))
@@ -226,7 +232,9 @@ private[graft] final class SnapshotWrite(
 
   /** The serializable per-task writer factory for `commitDir` — the
     * SAME data-file writing the append path uses, reused by the
-    * row-level delta write for its inserted/updated rows. */
+    * row-level delta write for its inserted/updated rows. The
+    * session's `spark.sql.files.maxRecordsPerFile` caps rows per
+    * file, as it does for Spark's own file writer. */
   private[graft] def writerFactory(commitDir: String)
       : SnapshotWriterFactory = {
     val bloomConf: Map[String, String] =
@@ -237,7 +245,8 @@ private[graft] final class SnapshotWrite(
     val support =
       WriteBridge.parquetWriteSupport(spark, dataSchemaPhys, bloomConf)
     SnapshotWriterFactory(path, commitDir, support, dataExprs,
-      dataSchemaPhys, dirExprs, dirNames)
+      dataSchemaPhys, dirExprs, dirNames,
+      spark.sessionState.conf.maxRecordsPerFile)
   }
 
   override def toBatch: BatchWrite = {
@@ -255,24 +264,26 @@ private[graft] final class SnapshotBatchWrite(
     buildColMap: Map[String, String], buildPartCols: Seq[String],
     stagedCollect: Option[(String, Seq[String]) => Unit] = None)
   extends BatchWrite {
+  // `stagedCollect` receives the commit dir and the written files'
+  // manifest entries
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = factory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val rels = messages.flatMap {
-      case m: SnapshotWriteMessage => m.rels
+    val entries = messages.flatMap {
+      case m: SnapshotWriteMessage => m.entries
       case other => throw new IllegalStateException(
         s"graft: unexpected commit message $other")
     }.toSeq
     stagedCollect match {
-      // staged CTAS/RTAS: the files exist but stay INVISIBLE (no
-      // manifest names them) until the staged table's
-      // commitStagedChanges publishes the whole statement atomically
-      case Some(collect) => collect(commitDir, rels)
+      // staged CTAS/RTAS and programmatic commits: the files exist but
+      // stay INVISIBLE (no manifest names them) until the caller
+      // publishes them
+      case Some(collect) => collect(commitDir, entries)
       case None =>
         Snapshots.commitWrittenV2(SparkSession.active, path, commitDir,
-          rels, mode, batchSchema, buildColMap, buildPartCols)
+          entries, mode, batchSchema, buildColMap, buildPartCols)
         ()
     }
   }
@@ -285,34 +296,63 @@ private[graft] final class SnapshotBatchWrite(
   }
 }
 
-private[graft] final case class SnapshotWriteMessage(rels: Array[String])
+/** A task's written files as manifest entry lines (store-relative
+  * path, `__len` and footer stats). */
+private[graft] final case class SnapshotWriteMessage(entries: Array[String])
   extends WriterCommitMessage
 
 private[graft] final case class SnapshotWriterFactory(
     path: String, commitDir: String,
     support: WriteBridge.TaskWriteSupport,
     dataExprs: Seq[Expression], dataSchemaPhys: StructType,
-    dirExprs: Seq[Expression], dirNames: Seq[String])
+    dirExprs: Seq[Expression], dirNames: Seq[String],
+    maxRecordsPerFile: Long)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new SnapshotDataWriter(path, commitDir, support, dataExprs,
-      dataSchemaPhys, dirExprs, dirNames, partitionId, taskId)
+      dataSchemaPhys, dirExprs, dirNames, partitionId, taskId,
+      maxRecordsPerFile)
+}
+
+/** A write-only table over ONE planned commit: Spark appends a
+  * batch to it ([[WriteBridge.append]]) and the write hands the
+  * commit dir and the files' manifest entries to `collect` instead
+  * of publishing — the programmatic commits' data write, which
+  * publish through their own OCC loops. `state` is the commit's own
+  * (schema, partition spec, column map, properties). */
+private[graft] final class SnapshotWriteTable(
+    path: String, batchSchema: StructType, state: Snapshots.V2WriteState,
+    collect: (String, Seq[String]) => Unit)
+  extends Table with SupportsWrite {
+  override def name(): String = path
+  override def schema(): StructType = batchSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_WRITE)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder {
+      override def build(): Write = new SnapshotWrite(path, path,
+        info.schema(), Snapshots.V2Append, stagedState = Some(state),
+        stagedCollect = Some(collect))
+    }
 }
 
 /** One task's writer: rows arrive sorted by the partition transforms
   * (the Write's requiredOrdering), so one parquet file is open at a
-  * time — a directory-value switch closes the current file and opens
-  * the next. Unsorted input (a table with `write.rebalance=false` and
-  * no ordering honored) stays CORRECT: a revisited directory gets a
-  * fresh `-cNNN` file, never a corrupt append.
+  * time — a directory-value switch, or `maxRecordsPerFile` rows when
+  * that is positive, closes the current file and opens the next.
+  * Unsorted input (a table with `write.rebalance=false` and no
+  * ordering honored) stays CORRECT: a revisited directory gets a
+  * fresh `-cNNN` file, never a corrupt append. A file opens on its
+  * first row, so an empty task writes nothing. Each closed file's
+  * manifest entry is built here, from the footer just written.
   */
 private[graft] final class SnapshotDataWriter(
     path: String, commitDir: String,
     support: WriteBridge.TaskWriteSupport,
     dataExprs: Seq[Expression], dataSchemaPhys: StructType,
     dirExprs: Seq[Expression], dirNames: Seq[String],
-    partitionId: Int, taskId: Long)
+    partitionId: Int, taskId: Long, maxRecordsPerFile: Long = 0L)
   extends DataWriter[InternalRow] {
 
   private val ctx = support.context(partitionId,
@@ -331,14 +371,27 @@ private[graft] final class SnapshotDataWriter(
   private var writer
       : org.apache.spark.sql.execution.datasources.OutputWriter = null
   private var fileCount = 0
+  private var curDirs: Seq[String] = Nil
+  private var rows = 0L
   private val written = ArrayBuffer.empty[String]
+  private val entries = ArrayBuffer.empty[String]
 
-  private def roll(dirs: Seq[String]): Unit = {
-    if (writer != null) writer.close()
+  private def closeFile(): Unit = if (writer != null) {
+    writer.close()
+    writer = null
+    val (entry, bytes) =
+      Snapshots.writtenEntry(ctx.getConfiguration, path, written.last)
+    entries += entry
+    WriteBridge.recordOutput(bytes, rows)
+  }
+
+  private def roll(): Unit = {
+    closeFile()
     val name =
       f"part-$partitionId%05d-$uuid-c$fileCount%03d$ext"
     fileCount += 1
-    val rel = (commitDir +: dirs :+ name).mkString("/")
+    rows = 0L
+    val rel = (commitDir +: curDirs :+ name).mkString("/")
     // recorded BEFORE the writer opens: a factory that creates the
     // file and then throws must still leave it for abort() to delete
     written += rel
@@ -353,18 +406,21 @@ private[graft] final class SnapshotDataWriter(
         // the exact dynamic-partition naming rule Spark's own writer
         // uses: cast-to-string value, null/empty -> the default
         // sentinel, Hive path escaping
-        roll(dirNames.indices.map { i =>
+        curDirs = dirNames.indices.map { i =>
           ExternalCatalogUtils.getPartitionPathString(dirNames(i),
             if (dr.isNullAt(i)) null else dr.getUTF8String(i).toString)
-        })
+        }
+        roll()
       }
-    } else if (writer == null) roll(Nil)
+    } else if (writer == null) roll()
+    if (maxRecordsPerFile > 0 && rows == maxRecordsPerFile) roll()
     writer.write(dataProj(row))
+    rows += 1
   }
 
   override def commit(): WriterCommitMessage = {
-    if (writer != null) { writer.close(); writer = null }
-    SnapshotWriteMessage(written.toArray)
+    closeFile()
+    SnapshotWriteMessage(entries.toArray)
   }
 
   override def abort(): Unit = {

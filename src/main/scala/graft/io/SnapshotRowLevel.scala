@@ -169,13 +169,13 @@ private[graft] final class GraftReplaceBatchWrite(
     factory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dataRels = messages.flatMap {
-      case m: SnapshotWriteMessage => m.rels
+    val dataEntries = messages.flatMap {
+      case m: SnapshotWriteMessage => m.entries
       case other => throw new IllegalStateException(
         s"graft: unexpected rewrite commit message $other")
     }.toSeq
     Snapshots.commitReplaceV2(SparkSession.active, path, commitDir,
-      dataRels, scannedRels().toSeq, pinnedV, rowSchema, opName)
+      dataEntries, scannedRels().toSeq, pinnedV, rowSchema, opName)
     ()
   }
 
@@ -263,7 +263,7 @@ private[graft] final class GraftDeltaBatchWrite(
         s"graft: unexpected delta commit message $other")
     }
     Snapshots.commitDeltaV2(SparkSession.active, path, commitDir,
-      msgs.flatMap(_.dataRels).toSeq, msgs.flatMap(_.deleteRels).toSeq,
+      msgs.flatMap(_.dataEntries).toSeq, msgs.flatMap(_.deleteRels).toSeq,
       pinnedV, rowSchema, opName)
     ()
   }
@@ -277,7 +277,7 @@ private[graft] final class GraftDeltaBatchWrite(
 }
 
 private[graft] final case class GraftDeltaMessage(
-    dataRels: Array[String], deleteRels: Array[String])
+    dataEntries: Array[String], deleteRels: Array[String])
   extends WriterCommitMessage
 
 private[graft] final case class GraftDeltaWriterFactory(
@@ -341,12 +341,12 @@ private[graft] final class GraftDeltaWriter(
 
   override def commit(): WriterCommitMessage = {
     if (delWriter != null) { delWriter.close(); delWriter = null }
-    val dataRels = insertW.map(_.commit() match {
-      case m: SnapshotWriteMessage => m.rels
+    val dataEntries = insertW.map(_.commit() match {
+      case m: SnapshotWriteMessage => m.entries
       case other => throw new IllegalStateException(
         s"graft: unexpected insert message $other")
     }).getOrElse(Array.empty[String])
-    GraftDeltaMessage(dataRels,
+    GraftDeltaMessage(dataEntries,
       if (delRel == null) Array.empty else Array(delRel))
   }
 

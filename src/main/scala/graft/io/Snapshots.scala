@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, log, not, pmod, round, when}
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType,
-  FloatType, IntegerType, LongType, ShortType, StructType}
+  FloatType, IntegerType, LongType, ShortType, StructType, TimestampType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Snapshot-versioned parquet store: manifest-based time travel,
@@ -163,28 +163,6 @@ object Snapshots {
 
   private def shardPath(base: String, name: String): Path =
     new Path(s"$base/_manifests/shards/$name")
-
-  /** Order-preserving parallel map over driver-side metadata work
-    * (footer stats, file status probes). Fixed-bound pool per call:
-    * enough to hide per-file IO latency, bounded so object stores
-    * aren't hit with unbounded concurrent connections. Exceptions
-    * propagate to the caller like a plain map.
-    */
-  private def parMapOrdered[A, B](xs: Seq[A])(fn: A => B): Seq[B] = {
-    if (xs.size <= 4) return xs.map(fn)
-    val n = math.min(32, Runtime.getRuntime.availableProcessors())
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = xs.map(x => new java.util.concurrent.Callable[B] {
-        override def call(): B = fn(x)
-      })
-      pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
-    } catch {
-      case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause
-    } finally pool.shutdown()
-  }
 
   /** Parsed-shard LRU (shard files are immutable and content-named;
     * 256 shards ≈ a few hundred thousand cached entry lines max).
@@ -481,15 +459,11 @@ object Snapshots {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Session CLONES with store-pinned conf — the conf-scoping that
-    * used to be set/restore on the SHARED session conf (a data race
-    * against every concurrent query on it). [[storeWriteSession]]
-    * pins TIMESTAMP_MICROS parquet output and UTC (directory
-    * derivation); [[utcDeriveSession]] pins UTC for the read-side
-    * 1-row derive plans, so prune-time directory bounds are computed
-    * under the SAME zone the write-time layout used — a reader
-    * session in any tz prunes correctly. Clones share the parent's
-    * SparkContext.
+  /** A session CLONE pinned to UTC for the 1-row derive plans and the
+    * write's directory-value expressions, so prune-time directory
+    * bounds are computed under the SAME zone the write-time layout
+    * used — a reader or writer session in any tz agrees with the
+    * layout. Clones share the parent's SparkContext.
     *
     * MIGRATION NOTE: tables whose time-transform / identity-
     * timestamp directories were written by a pre-UTC-pinning embed
@@ -500,38 +474,10 @@ object Snapshots {
     * present and names a different zone (correct, just unpruned) —
     * re-layout (compact) such tables to restore pruning.
     */
-  // write-side: ONE clone per parent session, weak-keyed like the
-  // derive clone below, and synced to the parent's current conf
-  // (set AND unset keys), listeners and extensions before every
-  // write, so later user changes (shuffle partitions,
-  // maxRecordsPerFile, codec) still reach each write. A fresh clone
-  // per write would do the same but carries a new session UUID, and
-  // the executor builds one class loader per session UUID: every
-  // task-side generated class of every write would recompile, and
-  // the loader would stay in the executor's session cache.
-  private val StoreWritePins = Seq(
-    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-    "spark.sql.session.timeZone" -> "UTC")
-  private val storeWriteSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
-  private def storeWriteSession(spark: SparkSession): SparkSession = {
-    val ws = storeWriteSessions.synchronized {
-      storeWriteSessions.computeIfAbsent(spark, s =>
-        org.apache.spark.sql.graft.Bridge.cloneWithConf(s,
-          StoreWritePins: _*))
-    }
-    ws.synchronized {
-      org.apache.spark.sql.graft.Bridge.syncClone(spark, ws,
-        StoreWritePins: _*)
-    }
-    ws
-  }
-
-  // read-side derive plans are HOT (per prune) so the clone is
-  // cached — but weak-keyed, so short-lived parent sessions are not
-  // leaked. Only the pinned timeZone matters to a 1-row local plan,
-  // so the first-use conf snapshot is harmless here.
+  // derive plans are HOT (per prune) so the clone is cached — but
+  // weak-keyed, so short-lived parent sessions are not leaked. Only
+  // the pinned timeZone matters to a 1-row local plan, so the
+  // first-use conf snapshot is harmless here.
   private val utcDeriveSessions =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, SparkSession]())
@@ -604,24 +550,6 @@ object Snapshots {
     * after the branch's commit dirs moved but before the version
     * claim — the cross-process race the compensation path undoes. */
   private[graft] var onBeforePromoteClaim: () => Unit = () => ()
-
-  /** List a commit's freshly-written parquet files, store-relative —
-    * including Hive-style partition subdirectories (`ym=202403/...`).
-    */
-  private def listCommitFiles(f: FileSystem, base: String,
-                              commitDir: String): Seq[String] = {
-    val root = new Path(s"$base/$commitDir")
-    val rootPath = f.makeQualified(root).toUri.getPath
-    val it = f.listFiles(root, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-        out += commitDir +
-          st.getPath.toUri.getPath.stripPrefix(rootPath)
-    }
-    out.toSeq.sorted
-  }
 
   private def writeTextAtomic(f: FileSystem, target: Path,
                               lines: Seq[String]): Unit = {
@@ -1262,19 +1190,6 @@ object Snapshots {
       f.copy(name = lp.getOrElse(f.name, f.name))))
   }
 
-  /** Rename a logical-named DataFrame to physical column names for
-    * the write path (columns outside the map pass through).
-    */
-  private def toPhysicalDf(df: DataFrame,
-                           colMap: Map[String, String]): DataFrame = {
-    if (colMap.isEmpty) df
-    else {
-      val lp = l2p(colMap)
-      df.select(df.columns.map(c =>
-        col(c).as(lp.getOrElse(c, c))).toSeq: _*)
-    }
-  }
-
   /** Every committed version on disk — with exclusive-create commits,
     * a manifest's existence IS its commit (a crash can only leave
     * `_tmp_` files, which this listing excludes).
@@ -1301,21 +1216,37 @@ object Snapshots {
   def versions(spark: SparkSession, path: String): Seq[Long] =
     allManifestVersions(fs(spark, path), path)
 
+  /** The manifest entry of a file just written under `base`, with
+    * its byte length: the store-relative path, the length as a
+    * pseudo-stat (so planning — split sizing, compaction budgets,
+    * relation sizeInBytes — never stats files) and its footer stats.
+    * Built by the writing task ([[SnapshotDataWriter]]), so a commit
+    * lists no directory and reads no footer on the driver.
+    */
+  private[graft] def writtenEntry(conf: org.apache.hadoop.conf.Configuration,
+                                  base: String, rel: String)
+      : (String, Long) = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new Path(s"$base/$rel"), conf)
+    val len = s"$LenStat:L:${in.getLength}:${in.getLength}"
+    val stats = footerStats(in)
+    (s"$rel\t" + (if (stats.isEmpty) len else s"$len;$stats"),
+      in.getLength)
+  }
+
   /** Per-file numeric column stats from the parquet FOOTER, as the
     * manifest entry suffix: top-level INT64/DOUBLE columns whose
     * every row group carries valid statistics (a single stats-less
     * row group drops the column — conservative: a file without stats
     * is simply never pruned). Column names containing the entry
-    * separators are skipped. One footer read per file, at commit
-    * time only.
+    * separators are skipped. One footer read per file, in the task
+    * that wrote it ([[writtenEntry]]).
     */
-  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-                          p: Path): String = {
+  private def footerStats(in: org.apache.parquet.io.InputFile): String = {
     import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import scala.jdk.CollectionConverters._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    val reader = ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       if (blocks.isEmpty) return ""
@@ -1632,6 +1563,50 @@ object Snapshots {
                                          baseDvs: Seq[String])
       extends OnConflict
 
+  /** The data-write half of a commit: write `df` under a fresh
+    * `data/c-<uuid>` dir (physical column names; Hive-style dirs for
+    * identity and hidden-transform partition fields) and return the
+    * commit dir plus the stats-bearing manifest entry lines, sorted by
+    * path. Shared by the publishing commits ([[writeCommit]]), the
+    * delete-file writes and the write-audit-publish staging path
+    * ([[stageAppend]]), which publishes later.
+    *
+    * The batch runs as a DSv2 append on the caller's session through
+    * the SAME [[SnapshotWrite]] SQL `INSERT` plans, over the commit's
+    * own state: `partCols` (physical sources), `colMap`, and `props`
+    * (`write.rebalance`, `write.sort.columns`, `write.bloom.columns`).
+    * Its schema is the batch's own — a column narrower than the
+    * table's widened type is written as-is, per
+    * [[evolvedSchemaAndMap]]. An empty batch writes no file.
+    */
+  private def writeBatchFiles(spark: SparkSession, df: DataFrame,
+                              path: String, partCols: Seq[String],
+                              colMap: Map[String, String],
+                              props: Map[String, String] = Map.empty)
+      : (String, Seq[String]) = {
+    partCols.foreach(c => require(!c.contains(',') && !c.contains('/'),
+      s"snapshot: illegal partition column name '$c'"))
+    val phys = df.columns.map(c => toPhysicalName(colMap, c))
+    val fields = partCols.map(parsePartField)
+    fields.foreach(fld => require(phys.contains(fld.source),
+      s"snapshot: partition source column ${fld.source} is missing " +
+        s"from the batch (${phys.mkString(", ")})"))
+    // a hidden field's directory key must not shadow a data column:
+    // directory values are read back by name
+    fields.filterNot(_.isInstanceOf[PIdentity]).foreach(fld =>
+      require(!phys.contains(fld.dirName),
+        s"snapshot: hidden partition field ${fld.spec} derives " +
+          s"directory column ${fld.dirName}, which collides with a " +
+          "data column - rename one of them"))
+    var written: (String, Seq[String]) = null
+    org.apache.spark.sql.graft.WriteBridge.append(spark,
+      new SnapshotWriteTable(path, df.schema,
+        V2WriteState(0L, df.schema, partCols, colMap, props),
+        (dir, es) => written = (dir, es.sortBy(relOf))),
+      df, TransformFunctions)
+    written
+  }
+
   /** Write `df`'s files, then claim the next version by exclusive
     * manifest create. On a lost claim: [[RebaseAppend]] re-carries
     * the winner's files (re-running the drift check against its
@@ -1641,124 +1616,6 @@ object Snapshots {
     * exists, and publishing it would silently drop the winner's
     * changes.
     */
-  /** The data-write half of a commit: write `df` under a fresh
-    * `data/c-<uuid>` dir (physical column names; Hive-style dirs for
-    * identity and hidden-transform partition fields) and return the
-    * commit dir plus the stats-bearing manifest entry lines. Shared
-    * by the publishing commits ([[writeCommit]]) and the
-    * write-audit-publish staging path ([[stageAppend]]), which
-    * publishes later.
-    */
-  private def writeBatchFiles(spark: SparkSession, df: DataFrame,
-                              path: String, partCols: Seq[String],
-                              colMap: Map[String, String],
-                              props: Map[String, String] = Map.empty)
-      : (String, Seq[String]) = {
-    val f = fs(spark, path)
-    partCols.foreach(c => require(!c.contains(',') && !c.contains('/'),
-      s"snapshot: illegal partition column name '$c'"))
-    val commitDir = s"data/c-${java.util.UUID.randomUUID()}"
-    // files carry PHYSICAL names: the logical batch renames through
-    // the column mapping at the write boundary (identity when no
-    // rename ever happened), and partition directories use the
-    // physical partition names so old and new files agree
-    // STORE-WRITE SESSION: the physical write (and everything derived
-    // below it — hidden-transform directory values, identity
-    // partition-dir rendering, parquet timestamp encoding) runs on a
-    // cached CLONE of the caller's session with exactly two overrides:
-    //   - parquet.outputTimestampType=TIMESTAMP_MICROS: store files
-    //     need INT64 MICROS footers (legacy INT96 has no usable
-    //     statistics; the 'U'-kind manifest bounds that let
-    //     `ts BETWEEN` prune come from these). Scoped to the clone so
-    //     Verify dumps and user sinks on the PARENT session keep the
-    //     session default — the previous set/restore on the shared
-    //     conf raced concurrent writes on the same session.
-    //   - session.timeZone=UTC: time-transform directory values
-    //     (years/months/days/hours) and identity timestamp partition
-    //     dirs derive under a PINNED zone, so the read-side prune
-    //     (prunedEntriesEquals/Bound, which derives bounds under the
-    //     same pinned UTC) can never skew from the layout however the
-    //     reader's session tz is set. Timestamps INSIDE the data are
-    //     tz-agnostic micros; only directory NAMING is affected, and
-    //     the caller's own expressions keep their already-resolved
-    //     session zone (the plan below was analyzed on the parent).
-    val ws = storeWriteSession(spark)
-    val pdf = org.apache.spark.sql.graft.Bridge.ofRows(ws,
-      org.apache.spark.sql.graft.Bridge.logicalPlan(
-        toPhysicalDf(df, colMap)))
-    val fields = partCols.map(parsePartField)
-    val writer = if (fields.isEmpty) pdf.write else {
-      fields.foreach(fld => require(pdf.columns.contains(fld.source),
-        s"snapshot: partition source column ${fld.source} is missing " +
-          s"from the batch (${pdf.columns.mkString(", ")})"))
-      // hidden-transform dirs write through a transient derived
-      // column; the name must not shadow a data column (the derived
-      // value would silently replace it in the directory layout)
-      fields.filterNot(_.isInstanceOf[PIdentity]).foreach(fld =>
-        require(!pdf.columns.contains(fld.dirName),
-          s"snapshot: hidden partition field ${fld.spec} derives " +
-            s"directory column ${fld.dirName}, which collides with a " +
-            "data column - rename one of them"))
-      val derived = fields.filterNot(_.isInstanceOf[PIdentity])
-        .foldLeft(pdf)((d, fld) => d.withColumn(fld.dirName,
-          fld.derive(col(fld.source), pdf.schema(fld.source).dataType)))
-      // OPTIMIZED WRITE (Delta's optimizeWrite / AQE rebalance): a
-      // raw partitionBy writes one file PER TASK PER PARTITION VALUE
-      // — a 32-task batch into 32 buckets is 1,024 small files per
-      // commit, the classic 100 TB small-file explosion. Rebalancing
-      // on the derived directory columns first routes each partition
-      // value to one task (AQE splits genuinely oversized partitions
-      // and coalesces tiny ones), so file count tracks DATA size,
-      // not task count. `write.rebalance=false` opts a table out
-      // (e.g. when the batch is already clustered by the layout).
-      val distributed =
-        if (props.getOrElse("write.rebalance", "true") == "false") derived
-        else derived.hint("rebalance", fields.map(_.dirName): _*)
-      distributed.write.partitionBy(fields.map(_.dirName): _*)
-    }
-    // `write.bloom.columns` property: per-column parquet BLOOM
-    // FILTERS (split-block, parquet-mr native) on every data write -
-    // point lookups on high-cardinality unsorted columns skip row
-    // groups where min/max ranges are too wide to help. Declared once
-    // as a table property, inherited by appends, compaction and
-    // staged writes alike; physical names because the files are
-    val withBloom = props.get("write.bloom.columns").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      .map(c => toPhysicalName(colMap, c))
-      .foldLeft(writer)((w, phys) =>
-        w.option(s"parquet.bloom.filter.enabled#$phys", "true"))
-    // timestamps write as INT64 MICROS and dirs derive under UTC via
-    // the clone's conf (see storeWriteSession above) — no shared-conf
-    // mutation anywhere in the write
-    withBloom.parquet(s"$path/$commitDir")
-    val conf = spark.sessionState.newHadoopConf()
-    // footer stats in PARALLEL (order-preserving): a commit of 100k
-    // small files would otherwise serialize ~100k footer reads on
-    // the driver — minutes of wall clock where the write itself took
-    // seconds. Hadoop FileSystem reads are thread-safe; bounded pool
-    // so an object store isn't hammered with unbounded connections
-    val fresh = parMapOrdered(listCommitFiles(f, path, commitDir)) {
-      rel =>
-        val p = new Path(s"$path/$rel")
-        val stats = footerStats(conf, p)
-        if (stats.isEmpty) {
-          // no row groups: Spark's file writer writes task 0's file
-          // even when the task has no rows. The manifest carries the
-          // schema, so the file would only cost every later scan an
-          // open
-          f.delete(p, false)
-          None
-        } else {
-          // the file's byte length rides as a pseudo-stat so planning
-          // (split sizing, compaction budgets, relation sizeInBytes)
-          // never stats files - the manifest is the only metadata read
-          val bytes = f.getFileStatus(p).getLen
-          Some(s"$rel\t$LenStat:L:$bytes:$bytes;$stats")
-        }
-    }.flatten
-    (commitDir, fresh)
-  }
-
   private def writeCommit(spark: SparkSession, df: DataFrame,
                           path: String, carried: Seq[String],
                           schema: StructType, partCols: Seq[String],
@@ -1782,13 +1639,11 @@ object Snapshots {
     val (commitDir, fresh) =
       writeBatchFiles(spark, df, path, partCols, colMap,
         baseProps ++ writeOpts)
-    // an empty write leaves no files at all (dynamic partitioning
-    // writes nothing for zero rows, and writeBatchFiles drops the
-    // row-less file an unpartitioned write leaves) — that is LEGAL
-    // here: v3 manifests carry the schema, so a carried-only commit
-    // (a delete emptying every affected file's rows) or even a fully
-    // empty snapshot reads back correctly as zero rows; the fresh
-    // list is simply empty
+    // an empty write leaves no files at all (a writer opens its file
+    // on the first row) — that is LEGAL here: v3 manifests carry the
+    // schema, so a carried-only commit (a delete emptying every
+    // affected file's rows) or even a fully empty snapshot reads back
+    // correctly as zero rows; the fresh list is simply empty
     publishLoop(spark, path, Seq(commitDir), fresh, carried, schema,
       partCols, dropped, txns, dvs, colMap, base, onConflict, op,
       baseProps, ownTxn, df.schema, df.columns.toSeq)
@@ -1800,8 +1655,8 @@ object Snapshots {
     * `batchColumns` describe the written batch for the rebase-time
     * schema re-evolution and physical-name drift check (the files are
     * on disk — a concurrent rename that re-maps a batch column makes
-    * them WRONG, not stale). Shared by [[writeCommit]] (V1 data
-    * write) and [[commitWrittenV2]] (DSv2 task-written files).
+    * them WRONG, not stale). Shared by [[writeCommit]] (programmatic
+    * commits) and [[commitWrittenV2]] (SQL writes).
     */
   private def publishLoop(spark: SparkSession, path: String,
                           commitDirs: Seq[String],
@@ -1994,27 +1849,6 @@ object Snapshots {
     V2WriteState(st.v, s2, st.partCols, map2, st.props)
   }
 
-  /** Stats-bearing manifest entries for task-written files — the same
-    * footer fold [[writeBatchFiles]] runs, from an explicit rel list
-    * (commit messages) instead of a directory listing, so orphan
-    * files from failed task attempts never enter the manifest. */
-  private def v2EntryLines(spark: SparkSession, path: String,
-                           rels: Seq[String]): Seq[String] = {
-    val f = fs(spark, path)
-    val conf = spark.sessionState.newHadoopConf()
-    // footer stats in PARALLEL, same rationale as [[writeBatchFiles]]:
-    // a DSv2 INSERT into a many-directory layout otherwise serializes
-    // one footer read per written file on the driver — the dominant
-    // cost of the commit once the directory fan-out passes a few dozen
-    parMapOrdered(rels.sorted) { rel =>
-      val p = new Path(s"$path/$rel")
-      val stats = footerStats(conf, p)
-      val bytes = f.getFileStatus(p).getLen
-      val len = s"$LenStat:L:$bytes:$bytes"
-      s"$rel\t" + (if (stats.isEmpty) len else s"$len;$stats")
-    }
-  }
-
   /** Run `body`; on ANY failure delete the commit dir(s) FIRST (task
     * files must never outlive a refused commit as invisible orphans
     * waiting for vacuum), then rethrow. The publish loops' own
@@ -2047,7 +1881,7 @@ object Snapshots {
                                         partCols: Seq[String],
                                         props: Map[String, String],
                                         commitDirs: Seq[String],
-                                        rels: Seq[String],
+                                        entries0: Seq[String],
                                         allowCreate: Boolean,
                                         allowReplace: Boolean): Long = {
     props.foreach { case (k, v) => requirePropPair(k, v) }
@@ -2061,7 +1895,6 @@ object Snapshots {
     val f = fs(spark, path)
     onBeforePublish()
     orDropCommit(f, path, commitDirs) {
-      val entries0 = v2EntryLines(spark, path, rels)
       // `stats.ndv.auto` at CTAS: the staged table is born analyzed
       // (same delta-only sketch pass the append path runs in
       // publishLoop — a CTAS's delta IS the whole table, once)
@@ -2107,11 +1940,11 @@ object Snapshots {
     * planning (partition-spec evolution; a rename/drop that re-maps a
     * batch column's physical name); mere interleaved appends rebase
     * (append mode) or refuse (overwrite modes) exactly like the
-    * DataFrame commit paths.
+    * programmatic commits.
     */
   private[graft] def commitWrittenV2(spark: SparkSession, path: String,
                                      commitDir: String,
-                                     rels: Seq[String],
+                                     entries: Seq[String],
                                      mode: V2CommitMode,
                                      batchSchema: StructType,
                                      buildColMap: Map[String, String],
@@ -2136,7 +1969,7 @@ object Snapshots {
         oldP.getOrElse(c, c) != newP.getOrElse(c, c)))
       refuse("a schema change re-mapped a batch column's physical " +
         "name since write planning")
-    val fresh = v2EntryLines(spark, path, rels)
+    val fresh = entries.sortBy(relOf)
     val batchCols = batchSchema.fieldNames.toSeq
     mode match {
       case V2Append =>
@@ -2180,7 +2013,8 @@ object Snapshots {
           val vals = partValsOf(rel)
           fields.map(fld => vals.getOrElse(fld.dirName, default))
         }
-        val doomed: Set[Seq[String]] = rels.map(tupleOf).toSet
+        val doomed: Set[Seq[String]] =
+          entries.map(e => tupleOf(relOf(e))).toSet
         val carried =
           st.entries.filterNot(e => doomed.contains(tupleOf(relOf(e))))
         publishLoop(spark, path, Seq(commitDir), fresh, carried, s2,
@@ -2230,13 +2064,13 @@ object Snapshots {
     */
   private[graft] def commitDeltaV2(spark: SparkSession, path: String,
                                    commitDir: String,
-                                   dataRels: Seq[String],
+                                   dataEntries: Seq[String],
                                    deleteRels: Seq[String],
                                    expectedBase: Long,
                                    batchSchema: StructType,
                                    op: String): Long = {
     val f = fs(spark, path)
-    if (dataRels.isEmpty && deleteRels.isEmpty) {
+    if (dataEntries.isEmpty && deleteRels.isEmpty) {
       f.delete(new Path(s"$path/$commitDir"), true)
       return expectedBase
     }
@@ -2252,8 +2086,8 @@ object Snapshots {
       if (batchSchema.fields.isEmpty) (st.schema, st.colMap)
       else evolvedSchemaAndMap(st.schema, nullableAll(batchSchema),
         path, st.dropped, st.colMap, partCols = st.partCols)
-    val fresh = v2EntryLines(spark, path, dataRels)
-    publishLoop(spark, path, Seq(commitDir), fresh, st.entries, s2,
+    publishLoop(spark, path, Seq(commitDir), dataEntries.sortBy(relOf),
+      st.entries, s2,
       st.partCols, st.dropped, st.txns, st.dvs ++ deleteRels, map2,
       Some(st.v), RefuseConflict(op), op, st.props, None,
       batchSchema, batchSchema.fieldNames.toSeq)
@@ -2272,13 +2106,13 @@ object Snapshots {
     */
   private[graft] def commitReplaceV2(spark: SparkSession, path: String,
                                      commitDir: String,
-                                     dataRels: Seq[String],
+                                     dataEntries: Seq[String],
                                      replacedRels: Seq[String],
                                      expectedBase: Long,
                                      batchSchema: StructType,
                                      op: String): Long = {
     val f = fs(spark, path)
-    if (dataRels.isEmpty && replacedRels.isEmpty) {
+    if (dataEntries.isEmpty && replacedRels.isEmpty) {
       f.delete(new Path(s"$path/$commitDir"), true)
       return expectedBase
     }
@@ -2291,9 +2125,9 @@ object Snapshots {
       else evolvedSchemaAndMap(st.schema, nullableAll(batchSchema),
         path, st.dropped, st.colMap, partCols = st.partCols)
     val replaced = replacedRels.toSet
-    val fresh = v2EntryLines(spark, path, dataRels)
     val carried = st.entries.filterNot(e => replaced(relOf(e)))
-    publishLoop(spark, path, Seq(commitDir), fresh, carried, s2,
+    publishLoop(spark, path, Seq(commitDir), dataEntries.sortBy(relOf),
+      carried, s2,
       st.partCols, st.dropped, st.txns, st.dvs, map2, Some(st.v),
       RefuseConflict(op), op, st.props, None, batchSchema,
       batchSchema.fieldNames.toSeq)
@@ -2446,27 +2280,41 @@ object Snapshots {
                                e: String): (String, Long, Option[Long]) =
     (relOf(e), entryLen(fs(spark, path), path, e), entryRows(e))
 
-  /** A Hive-partition directory value cast to the partition column's
-    * declared type (the same string→type cast Spark's own partition
-    * discovery applies; `__HIVE_DEFAULT_PARTITION__` is NULL).
+  /** The zone a table's directory names were derived under — its
+    * [[LayoutTzProp]] at version `at` (latest when absent), UTC when
+    * unset. Identity-timestamp directory strings cast back to
+    * instants under it, never under the reader's session zone. Only
+    * a timestamp value depends on the zone, so a layout whose
+    * identity columns (`idTypes`) hold none reads no manifest.
     */
+  private[graft] def layoutZone(spark: SparkSession, path: String,
+                                at: Option[Long],
+                                idTypes: Seq[DataType]): String =
+    if (!idTypes.contains(TimestampType)) "UTC"
+    else at.orElse(latestVersion(spark, path)).flatMap(v =>
+      manifest(fs(spark, path), path, v).props.get(LayoutTzProp))
+      .getOrElse("UTC")
+
   /** An entry's IDENTITY partition values as a catalyst row in the
     * given fields' order (internal values, the same cast
-    * [[entriesRelation]] applies) — [[SnapshotBatchScan]] attaches
-    * them per input partition so the parquet reader reconstructs
-    * directory-borne columns. `idFields` are PHYSICAL names; `dts`
-    * their logical types.
+    * [[entriesRelation]] applies, under the layout zone `tz`) —
+    * [[SnapshotBatchScan]] attaches them per input partition so the
+    * parquet reader reconstructs directory-borne columns. `idFields`
+    * are PHYSICAL names; `dts` their logical types.
     */
-  private[graft] def identityValuesRow(spark: SparkSession,
-                                       rel: String,
+  private[graft] def identityValuesRow(rel: String,
                                        idFields: Seq[String],
-                                       dts: Seq[DataType]): InternalRow = {
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
+                                       dts: Seq[DataType],
+                                       tz: String): InternalRow = {
     val vals = partValsOf(rel)
     InternalRow.fromSeq(idFields.zip(dts).map { case (c, dt) =>
       castPartVal(vals.get(c), dt, tz) })
   }
 
+  /** A Hive-partition directory value cast to the partition column's
+    * declared type (the same string→type cast Spark's own partition
+    * discovery applies; `__HIVE_DEFAULT_PARTITION__` is NULL).
+    */
   private def castPartVal(raw: Option[String],
                           dt: DataType, tz: String): Any =
     raw match {
@@ -2505,7 +2353,7 @@ object Snapshots {
     val partitionSchema = StructType(idCols.map(c => schema(c)))
     val dataSchema =
       StructType(schema.fields.filterNot(f => idCols.contains(f.name)))
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val tz = layoutZone(spark, path, None, idCols.map(schema(_).dataType))
     val f = fs(spark, path)
     val qualBase = f.makeQualified(new Path(path))
     val parts = entries
@@ -4894,10 +4742,8 @@ object Snapshots {
     physCols.foreach(c => require(!c.contains('|') && !c.contains(','),
       s"snapshot: key column '$c' contains an equality-delete marker " +
         "separator ('|' or ',') - rename it first"))
-    val f = fs(spark, path)
     val k = keys.select(keyCols.map(col): _*).distinct()
     requireNoNullKeys(k, keyCols, "deleteKeysEq keys")
-    val commitDir = s"data/c-${java.util.UUID.randomUUID()}"
     // ONE key file per delete batch: every eq marker costs every
     // subsequent read (and the eq→positional rewrite) a per-marker
     // key-file open plus semi-join, so marker count must track delete
@@ -4905,13 +4751,11 @@ object Snapshots {
     // observed committing 25 markers (one per range partition). The
     // repartition lands after the distinct, so dedup stays parallel
     // and only the already-small key set funnels to one writer.
-    k.toDF(physCols: _*).repartition(1).write.parquet(s"$path/$commitDir")
-    val fresh = listCommitFiles(f, path, commitDir)
-    if (spark.read.parquet(s"$path/$commitDir").isEmpty) {
-      f.delete(new Path(s"$path/$commitDir"), true); return v
-    }
-    val markers = fresh.map(rel =>
-      s"eq:$rel|${physCols.mkString(",")}|$v")
+    val (commitDir, fresh) = writeBatchFiles(spark,
+      k.toDF(physCols: _*).repartition(1), path, Nil, Map.empty)
+    if (fresh.isEmpty) return v
+    val markers = fresh.map(e =>
+      s"eq:${relOf(e)}|${physCols.mkString(",")}|$v")
     publishWithDeleteMarkers(spark, path, v, schema, partCols, dropped,
       txns, dvs, colMap, all, commitDir, markers, "deleteKeysEq")
   }
@@ -4970,17 +4814,11 @@ object Snapshots {
                                colMap: Map[String, String],
                                entries: Seq[String],
                                doomed: DataFrame, op: String): Long = {
-    val f = fs(spark, path)
-    val commitDir = s"data/c-${java.util.UUID.randomUUID()}"
-    doomed.write.parquet(s"$path/$commitDir")
-    val freshDvs = listCommitFiles(f, path, commitDir)
-    // an empty delete file still appears (schema-bearing part file);
-    // probe the written rows, not the file list
-    if (spark.read.schema(DvSchema).parquet(s"$path/$commitDir").isEmpty) {
-      f.delete(new Path(s"$path/$commitDir"), true); return v
-    }
+    val (commitDir, fresh) =
+      writeBatchFiles(spark, doomed, path, Nil, Map.empty)
+    if (fresh.isEmpty) return v
     publishWithDeleteMarkers(spark, path, v, schema, partCols, dropped,
-      txns, dvs, colMap, entries, commitDir, freshDvs, op)
+      txns, dvs, colMap, entries, commitDir, fresh.map(relOf), op)
   }
 
   /** The delete-commit publish loop shared by positional and
@@ -5678,26 +5516,17 @@ object Snapshots {
     val doomed = (keptPos.toSeq ++ converted.toSeq)
       .map(_.select(col(DvFileCol), col(DvPosCol)))
       .reduceOption(_ unionByName _).map(_.distinct())
-    val commitDir = s"data/c-${java.util.UUID.randomUUID()}"
-    val markers: Seq[String] = doomed match {
-      case None => Nil
-      case Some(d0) =>
-        // count BEFORE writing (the empty case then writes nothing,
-        // instead of writing a schema-only file and re-reading it);
-        // one output file: a delete sliver is routing-budget-sized
-        // by construction (the budget is why this rewrite exists),
-        // and ONE file is the consolidation the scan pays for
-        val d = d0.persist()
-        try {
-          if (d.isEmpty) Nil
-          else {
-            d.repartition(1)
-              .select(col(DvFileCol).as("__file"),
-                col(DvPosCol).as("__pos"))
-              .write.parquet(s"$path/$commitDir")
-            listCommitFiles(f, path, commitDir)
-          }
-        } finally { d.unpersist(); () }
+    // one output file: a delete sliver is routing-budget-sized by
+    // construction (the budget is why this rewrite exists), and ONE
+    // file is the consolidation the scan pays for; an empty sliver
+    // writes none
+    val (commitDir, markers) = doomed match {
+      case None => ("", Nil)
+      case Some(d) =>
+        val (dir, es) = writeBatchFiles(spark, d.repartition(1)
+          .select(col(DvFileCol).as("__file"), col(DvPosCol).as("__pos")),
+          path, Nil, Map.empty)
+        (dir, es.map(relOf))
     }
     val newDvs = (if (convert) Nil else eqMarkers) ++ markers
     onBeforePublish()
@@ -5881,8 +5710,8 @@ object Snapshots {
       "compact", st.props,
       // compact already laid the data out (repartitionByRange +
       // within-partition sort, partition columns leading) — the
-      // writer's AQE rebalance hint would RE-shuffle on the directory
-      // columns and destroy the disjoint per-file key ranges the
+      // write's AQE rebalance would RE-shuffle on the directory
+      // values and destroy the disjoint per-file key ranges the
       // clustering exists to produce
       writeOpts = Map("write.rebalance" -> "false"))
   }

@@ -28,11 +28,11 @@ object Bridge {
 
   /** A cloned session (shared SparkContext/SharedState, cloned
     * SessionState incl. runtime conf and temp views) with the given
-    * conf overrides applied to the CLONE only — the per-write /
-    * per-plan conf-scoping primitive: mutating a shared session's
-    * conf around a write (set/restore) races every concurrent query
-    * on that session, while a clone scopes the override to exactly
-    * the plans executed through it.
+    * conf overrides applied to the CLONE only — the per-plan
+    * conf-scoping primitive: mutating a shared session's conf around
+    * a plan (set/restore) races every concurrent query on that
+    * session, while a clone scopes the override to exactly the plans
+    * analyzed through it.
     */
   def cloneWithConf(spark: SparkSession,
                     overrides: (String, String)*): SparkSession = {
@@ -40,34 +40,6 @@ object Bridge {
       .cloneSession()
     overrides.foreach { case (k, v) => c.conf.set(k, v) }
     c
-  }
-
-  /** Brings a [[cloneWithConf]] clone of `parent` up to date with it,
-    * so one long-lived clone acts as a fresh clone would: its SQL conf
-    * becomes the parent's current conf plus `overrides` (keys set on
-    * the parent since are copied, keys unset there are unset here),
-    * and it takes the parent's current query-execution listeners and
-    * experimental strategies and optimizations. Only the clone
-    * changes; callers serialize syncs of one clone.
-    */
-  def syncClone(parent: SparkSession, clone: SparkSession,
-                overrides: (String, String)*): Unit = {
-    def state(s: SparkSession) =
-      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-    val (p, c) = (state(parent), state(clone))
-    val want = p.conf.getAllConfs ++ overrides
-    val have = c.conf.getAllConfs
-    want.foreach { case (k, v) =>
-      if (!have.get(k).contains(v)) c.conf.setConfString(k, v) }
-    (have.keySet -- want.keySet).foreach(c.conf.unsetConf)
-    val pl = p.listenerManager.listListeners().toSeq
-    val cl = c.listenerManager.listListeners().toSeq
-    pl.filterNot(l => cl.exists(_ eq l)).foreach(c.listenerManager.register)
-    cl.filterNot(l => pl.exists(_ eq l)).foreach(c.listenerManager.unregister)
-    c.experimentalMethods.extraStrategies =
-      p.experimentalMethods.extraStrategies
-    c.experimentalMethods.extraOptimizations =
-      p.experimentalMethods.extraOptimizations
   }
 
   /** Apply a SparkSessionExtensions bundle to an already-running

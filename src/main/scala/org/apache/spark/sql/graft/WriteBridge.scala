@@ -2,7 +2,10 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.AppendData
+import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Table}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
@@ -20,6 +23,21 @@ import org.apache.spark.util.SerializableConfiguration
   * hierarchy) could not be constructed from library code.
   */
 object WriteBridge {
+
+  /** Append `df`'s rows to `table` as a DSv2 append on `spark`, the
+    * plan an `INSERT INTO` runs, without a catalog entry: the
+    * table's write declares its distribution and ordering (its
+    * transforms resolve through `functions`), Spark plans them, the
+    * tasks write and the batch commit runs before this returns. The
+    * table's schema must be `df`'s.
+    */
+  def append(spark: SparkSession, table: Table, df: DataFrame,
+             functions: FunctionCatalog): Unit = {
+    Bridge.ofRows(spark, AppendData.byPosition(
+      DataSourceV2Relation.create(table, Some(functions), None),
+      Bridge.logicalPlan(df)))
+    ()
+  }
 
   /** Everything a task needs to open parquet writers: the prepared
     * factory plus the job's Hadoop conf (Spark's serializable
@@ -51,6 +69,18 @@ object WriteBridge {
                   ctx: TaskAttemptContext): OutputWriter =
       factory.newInstance(path, dataSchema, ctx)
   }
+
+  /** Credit a file a DSv2 task wrote to the task's output metrics, as
+    * Spark's own file writer does; Spark's DSv2 write task leaves
+    * them at zero, and listeners and the UI read written bytes and
+    * rows there. A no-op outside a task.
+    */
+  def recordOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+      val om = tc.taskMetrics().outputMetrics
+      om.setBytesWritten(om.bytesWritten + bytes)
+      om.setRecordsWritten(om.recordsWritten + records)
+    }
 
   /** Prepare a parquet write of `dataSchema` (PHYSICAL column names)
     * under the session's parquet settings; `extraConf` carries

@@ -70,6 +70,25 @@ class EntrySpec extends SparkSpec {
       "a test seam must not live as a global var on the store")
   }
 
+  test("Snapshots writes no file through a DataFrameWriter, and the " +
+    "store-write session, its sync and the commit-dir listing are gone") {
+    val snapshots = sources.collectFirst {
+      case (rel, s) if rel == "graft/io/Snapshots.scala" => s
+    }.get
+    // `os.write(bytes)` is a stream write; a DataFrameWriter is
+    // reached as `.write` with no argument list
+    val dfWrite = """\.write\b(?!\s*\()""".r
+    val hits = dfWrite.findAllMatchIn(snapshots)
+      .map(m => snapshots.take(m.start).count(_ == '\n') + 1).toSeq
+    assert(hits.isEmpty, s"Snapshots.scala lines $hits write through a " +
+      "DataFrameWriter; commit files through writeBatchFiles")
+    val gone = Seq("storeWriteSession", "StoreWritePins", "syncClone",
+      "listCommitFiles", "parMapOrdered")
+    val back = sources.flatMap { case (rel, src) =>
+      gone.filter(src.contains).map(n => s"$rel: $n") }
+    assert(back.isEmpty, s"second write path is back: $back")
+  }
+
   test("no `.limit(1).count()` emptiness probe in the engine") {
     // a code-generated limit names its counter after a JVM-wide id, so
     // its generated class never repeats and every call compiles anew;

@@ -291,6 +291,74 @@ class SnapshotWriteSpec extends SparkSpec {
     assert(Snapshots.read(spark, path).count() === before + 2)
   }
 
+  /** Runs `body` with the shared session's zone set to `tz`. */
+  private def inZone[A](tz: String)(body: => A): A = {
+    val key = "spark.sql.session.timeZone"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, tz)
+    try body finally spark.conf.set(key, was)
+  }
+
+  // 2024-03-01T03:00Z, which is 2024-02-29 19:00 in Los Angeles
+  private val marchFirst3amUtc = 1709262000000000L
+
+  private def countOf(sql: String): Long =
+    spark.sql(sql).collect()(0).getLong(0)
+
+  test("a SQL INSERT under a non-UTC session names days(ts) directories " +
+    "in UTC, and readEquals and a catalog WHERE ts = ... find the row") {
+    val (cat, wh) = freshCatalog()
+    val path = s"$wh/db/e"
+    spark.sql(s"CREATE NAMESPACE $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.e (ev BIGINT, ts TIMESTAMP) " +
+      "PARTITIONED BY (days(ts))")
+    inZone("America/Los_Angeles") {
+      spark.sql(s"INSERT INTO $cat.db.e " +
+        s"SELECT 1L, timestamp_micros($marchFirst3amUtc)")
+      val dirs = dataFiles(path).map(_.getParentFile.getName).toSet
+      assert(dirs === Set("ts_day=20240301"), dirs.toString)
+      assert(Snapshots.readEquals(spark, path, "ts",
+        new java.sql.Timestamp(marchFirst3amUtc / 1000)).count() === 1L)
+      assert(countOf(s"SELECT count(*) FROM $cat.db.e " +
+        s"WHERE ts = timestamp_micros($marchFirst3amUtc)") === 1L)
+    }
+  }
+
+  test("identity-timestamp partition values read back under the " +
+    "table's layout zone, not the reader's session zone") {
+    val (cat, wh) = freshCatalog()
+    val path = s"$wh/db/p"
+    Snapshots.commit(spark.range(1).selectExpr("id AS v",
+      s"timestamp_micros($marchFirst3amUtc) AS ts"), path,
+      partitionBy = Seq("ts"))
+    inZone("America/Los_Angeles") {
+      assert(Snapshots.read(spark, path).selectExpr("unix_micros(ts)")
+        .collect()(0).getLong(0) === marchFirst3amUtc)
+      assert(countOf(s"SELECT unix_micros(ts) FROM $cat.db.p") ===
+        marchFirst3amUtc)
+      assert(countOf(s"SELECT count(*) FROM $cat.db.p " +
+        s"WHERE ts = timestamp_micros($marchFirst3amUtc)") === 1L)
+      assert(Snapshots.readEquals(spark, path, "ts",
+        new java.sql.Timestamp(marchFirst3amUtc / 1000)).count() === 1L)
+    }
+  }
+
+  test("a SQL INSERT under spark.sql.files.maxRecordsPerFile=2 writes " +
+    "no file over 2 rows") {
+    val (cat, wh) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.m (id BIGINT, g BIGINT) " +
+      "PARTITIONED BY (g)")
+    val key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "2")
+    try spark.sql(s"INSERT INTO $cat.db.m SELECT id, id % 2 FROM range(11)")
+    finally spark.conf.unset(key)
+    val rows = dataFiles(s"$wh/db/m")
+      .map(f => spark.read.parquet(f.getPath).count())
+    assert(rows.sum === 11L && rows.forall(_ <= 2L), rows.mkString(","))
+    assert(countOf(s"SELECT count(*) FROM $cat.db.m") === 11L)
+  }
+
   test("a task whose writer factory creates the file and then throws leaves no staged file after abort()") {
     val path = Files.createTempDirectory("graft_roll").toString
     val commitDir = "_commit_roll"
@@ -329,8 +397,8 @@ class SnapshotWriteSpec extends SparkSpec {
     assert(left.isEmpty, s"abort() left staged files behind: $left")
   }
 
-  test("the store-write session follows its parent: a listener and a " +
-    "planner strategy added after the first write reach later writes") {
+  test("programmatic commits write on the caller's session: a listener " +
+    "and a planner strategy added after the first write reach later writes") {
     // a session of its own: no listener, no graft strategy installed yet
     val s = spark.newSession()
     val dir = Files.createTempDirectory("graft_write_follow").toString
@@ -342,8 +410,7 @@ class SnapshotWriteSpec extends SparkSpec {
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit =
         if (qe.executedPlan.toString.contains("TopKPerKey") &&
-            qe.executedPlan.toString.contains(
-              "InsertIntoHadoopFsRelationCommand")) wrote = true
+            qe.executedPlan.toString.contains("AppendData")) wrote = true
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
@@ -351,7 +418,7 @@ class SnapshotWriteSpec extends SparkSpec {
     s.listenerManager.register(listener)
     try {
       // perKey installs TopKStrategy on `s` now, after the first write;
-      // without it the write session could not plan the TopK node
+      // without it the write could not plan the TopK node
       val top = graft.plans.TopK.perKey(rows, Seq(col("g")),
         Seq(col("id").desc), 2)
       Snapshots.commit(top, s"$dir/b")
