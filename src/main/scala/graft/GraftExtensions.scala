@@ -18,9 +18,6 @@ import graft.plans.{CosineSimilarityExpr, TopKStrategy}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKStrategy)
-    // SQL UPDATE / MERGE INTO for snapshot catalog tables (the
-    // built-in planner refuses both for non-row-level-op tables)
-    ext.injectPlannerStrategy(_ => graft.plans.GraftDmlStrategy)
     // rank-filter window pattern -> bounded-heap TopKPerKeyPlan
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
     ext.injectFunction((
@@ -54,16 +51,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
               throw new IllegalArgumentException(
                 s"snapshot: no tag '$tag' under $path"))
         }
-        val (schema, partCols, entries, dvs, colMap) =
-          graft.io.Snapshots.stateAt(spark, path, v)
-        // merge-on-read deletes need the anti-join plan (and renamed
-        // columns the mapping select); without either the relation
-        // keeps its plan shape
-        if (dvs.isEmpty && colMap.isEmpty)
-          org.apache.spark.sql.graft.StreamingRelationBridge.batchPlanOf(
-            graft.io.Snapshots.entriesRelation(spark, path, schema,
-              partCols, entries))
-        else org.apache.spark.sql.graft.Bridge.logicalPlan(
+        // the same pinned DSv2 relation Snapshots.read returns
+        org.apache.spark.sql.graft.Bridge.logicalPlan(
           graft.io.Snapshots.read(spark, path, Some(v)))
       }))
     // SELECT * FROM graft_snapshot_history('/path') — DESCRIBE

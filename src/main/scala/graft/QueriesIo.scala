@@ -1640,7 +1640,7 @@ private[graft] object QueriesIo {
 
   /** RANGE file-skipping gate on the SQL (DSv2) read path
     * ([[graft.io.SnapshotBatchScan]] `keptEntries` ×
-    * [[graft.io.Snapshots.prunedEntriesBound]]): eight shifted
+    * [[graft.io.Snapshots.boundKeepFn]]): eight shifted
     * commits build a 40M-wide doc_id domain, a z-order compact
     * re-clusters it, and `WHERE doc_id BETWEEN 2000 AND 5002000`
     * — a boundary-STRADDLING window covering ~1/8 of the domain —
@@ -2430,9 +2430,9 @@ private[graft] object QueriesIo {
     s.sql(s"SELECT doc_id, text, lang, source, n_chars FROM $cat.db.docs")
   }
 
-  /** SQL UPDATE on a snapshot catalog table
-    * ([[graft.plans.GraftDmlStrategy]] lowering `UPDATE` onto
-    * [[graft.io.Snapshots.updateWhere]]'s copy-on-write commit):
+  /** SQL UPDATE on a snapshot catalog table (Spark's row-level
+    * rewrite into a `WriteDelta` over the table's (file, pos) rowId,
+    * one merge-on-read commit — [[graft.io.GraftRowLevelOperation]]):
     * uppercase + lengthen the short documents in place, read the
     * table back. Rows whose predicate is NULL (missing n_chars) stay
     * untouched — SQL semantics end to end.
@@ -2457,12 +2457,12 @@ private[graft] object QueriesIo {
   }
 
   /** SQL MERGE INTO on a snapshot catalog table — the full clause
-    * surface through [[graft.plans.GraftDmlStrategy]] onto
-    * [[graft.io.Snapshots.mergeInto]]: a conditional WHEN MATCHED
-    * UPDATE, a fall-through WHEN MATCHED DELETE (first matching
-    * clause wins, so it catches the rows the condition rejects), and
-    * a WHEN NOT MATCHED INSERT naming a column subset (the rest
-    * NULL). One copy-on-write commit; affected files only.
+    * surface through Spark's row-level merge rewrite
+    * ([[graft.io.GraftRowLevelOperation]]): a conditional WHEN
+    * MATCHED UPDATE, a fall-through WHEN MATCHED DELETE (first
+    * matching clause wins, so it catches the rows the condition
+    * rejects), and a WHEN NOT MATCHED INSERT naming a column subset
+    * (the rest NULL). One merge-on-read commit; matched rows only.
     */
   def snapshotSqlMerge(s: SparkSession, dir: String): DataFrame = {
     val wh = scratch(dir, "snap_sqlmrg_wh")

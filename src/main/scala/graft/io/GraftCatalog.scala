@@ -5,14 +5,12 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column => SqlColumn, DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column => SqlColumn, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, PrunedFilteredScan, TableScan}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -34,13 +32,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * API reads), so SQL and code share tables with no registration
   * step beyond the catalog conf.
   *
-  * Reads go through the DSv2 manifest-backed scan
-  * ([[SnapshotBatchScan]]: column pruning, manifest/aggregate
-  * pushdown, storage-partitioned joins, in-reader merge-on-read
-  * deletes), falling back to a V1 relation only when a table's
-  * delete sliver outgrows the shipping budget; unhandled filters are
-  * re-applied by Spark above, so pushdown is an IO optimization,
-  * never a correctness dependency. Writes go through the DSv2
+  * Each table is a [[GraftTable]], the same version-pinned relation
+  * the programmatic reads return: reads go through the DSv2
+  * manifest-backed scan ([[SnapshotBatchScan]]: column pruning,
+  * manifest/aggregate pushdown, storage-partitioned joins, in-reader
+  * merge-on-read deletes); unhandled filters are re-applied by Spark
+  * above, so pushdown is an IO optimization, never a correctness
+  * dependency. Writes go through the DSv2
   * `BatchWrite` ([[SnapshotBatchWrite]]) — Spark plans the
   * layout-aligned rebalance+sort the write declares, and every SQL
   * write is an atomic, time-travelable commit with the same OCC
@@ -59,10 +57,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     warehouse = options.get("warehouse")
     require(warehouse != null && warehouse.nonEmpty,
       s"graft catalog '$name' needs spark.sql.catalog.$name.warehouse")
-    // configuring the catalog enables its SQL DML: UPDATE and
-    // MERGE INTO plan through the strategy, not the built-ins (which
-    // refuse non-row-level-op tables at planning)
-    graft.plans.GraftDmlStrategy.ensure(spark)
   }
 
   override def name(): String = catalogName
@@ -144,7 +138,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // scan must all see the same snapshot even if a commit lands
     // between analysis and execution (writes/deletes still target
     // the live table - mutable=true)
-    new GraftTable(path, ident.toString, Some(v), mutable = true)
+    new GraftTable(spark, path, ident.toString, Some(v), mutable = true)
   }
 
   /** `VERSION AS OF n` — n is a snapshot version (or a tag name). */
@@ -159,7 +153,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           s"snapshot: '$version' is neither a version nor a tag of " +
             s"$path (tags: ${Snapshots.tags(spark, path).keys.toSeq
               .sorted.mkString(", ")})")))
-    new GraftTable(path, s"$ident@v$v", Some(v), mutable = false)
+    new GraftTable(spark, path, s"$ident@v$v", Some(v), mutable = false)
   }
 
   /** `TIMESTAMP AS OF ts` — micros since epoch per the DSv2 contract;
@@ -171,7 +165,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchTableException(ident)
     val v = Snapshots.versionAsOf(spark, path, timestampMicros / 1000L)
-    new GraftTable(path, s"$ident@v$v", Some(v), mutable = false)
+    new GraftTable(spark, path, s"$ident@v$v", Some(v), mutable = false)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -190,7 +184,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // version 1 is a zero-entry manifest carrying schema + layout -
     // partitioned CREATEs included (no empty parquet write needed)
     val v = Snapshots.createEmpty(spark, path, schema, partCols, props)
-    new GraftTable(path, ident.toString, Some(v), mutable = true)
+    new GraftTable(spark, path, ident.toString, Some(v), mutable = true)
   }
 
   /** ATOMIC `CREATE TABLE ... AS SELECT` / `[CREATE OR] REPLACE
@@ -499,308 +493,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       f.delete(new Path(dir), true)
     }
   }
-
-  /** A snapshot store as a DSv2 Table: reads through the
-    * manifest-backed DSv2 scan (V1 fallback only past the
-    * merge-on-read shipping budget); writes through the DSv2
-    * `BatchWrite` onto append/overwrite/dynamic-replace commits.
-    */
-  private[graft] class GraftTable(path: String, ident: String,
-                                  version: Option[Long],
-                                  mutable: Boolean = true)
-      extends Table with SupportsRead with SupportsWrite
-      with SupportsDelete with SupportsMetadataColumns
-      with SupportsRowLevelOperations {
-
-    /** The snapshot store's base path — [[graft.plans.GraftDmlStrategy]]
-      * routes SQL UPDATE / MERGE INTO through [[Snapshots]] with it. */
-    private[graft] def snapshotPath: String = path
-    /** False for a time-travelled load (`VERSION AS OF`): DML against
-      * a pinned historical version must refuse. */
-    private[graft] def isMutable: Boolean = mutable
-
-    // the pinned version's state, read ONCE (manifests are
-    // immutable): schema()/partitioning()/readSchema() are called
-    // repeatedly during analysis and each used to re-read the
-    // manifest
-    private lazy val pinnedV: Long =
-      version.orElse(Snapshots.latestVersion(spark, path)).get
-    private lazy val pinnedState = Snapshots.stateAt(spark, path, pinnedV)
-
-    /** SQL `DELETE FROM ... WHERE ...` — a copy-on-write
-      * [[Snapshots.deleteWhere]] commit (OCC-guarded, history
-      * intact); `TRUNCATE TABLE` rides the always-true default.
-      * Translation here is EXACT ([[translateFilterExact]]): unlike
-      * the scan path, nothing re-applies filters above a delete, so
-      * a partially-translated predicate would DELETE TOO MUCH —
-      * untranslatable shapes refuse at analysis instead.
-      */
-    override def canDeleteWhere(filters: Array[Filter]): Boolean =
-      mutable && filters.forall(f => translateFilterExact(f).isDefined)
-
-    override def deleteWhere(filters: Array[Filter]): Unit = {
-      require(mutable,
-        "graft catalog: cannot DELETE FROM a time-travelled table")
-      val cols = filters.map(f => translateFilterExact(f).getOrElse(
-        throw new UnsupportedOperationException(
-          s"graft catalog: cannot translate delete filter $f")))
-      val cond = cols.reduceOption(_ && _)
-        .getOrElse(org.apache.spark.sql.functions.lit(true))
-      // the delete.mode table property routes SQL DELETE FROM:
-      // 'mor' commits a positional delete file (no data rewrites -
-      // the CDC-heavy posture), 'cow' (default) rewrites affected
-      // files; either way the result is identical and versioned
-      val mode = Snapshots.properties(spark, path)
-        .getOrElse("delete.mode", "cow")
-      require(mode == "cow" || mode == "mor",
-        s"graft catalog: table property delete.mode must be 'cow' " +
-          s"or 'mor', got '$mode'")
-      Snapshots.deleteWhere(spark, path, cond, mode = mode)
-      ()
-    }
-
-    override def name(): String = ident
-
-    override def schema(): StructType = pinnedState._1
-
-    override def partitioning(): Array[Transform] = {
-      val (_, pc, _, _, cm) = pinnedState
-      Snapshots.logicalPartSpecs(pc, cm).map(spec =>
-        Snapshots.parsePartField(spec) match {
-          case Snapshots.PIdentity(s) => Expressions.identity(s)
-          case Snapshots.PTime("years", s) => Expressions.years(s)
-          case Snapshots.PTime("months", s) => Expressions.months(s)
-          case Snapshots.PTime("days", s) => Expressions.days(s)
-          case Snapshots.PTime(_, s) => Expressions.hours(s)
-          case Snapshots.PBucket(n, s) => Expressions.bucket(n, s)
-          case Snapshots.PTruncate(w, s) => Expressions.apply(
-            "truncate", Expressions.literal(w), Expressions.column(s))
-        }).toArray
-    }
-
-    override def capabilities(): util.Set[TableCapability] =
-      Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-        TableCapability.TRUNCATE,
-        // filter-scoped overwrites (static PARTITION (k=v) /
-        // writeTo.overwrite(cond)) lower onto
-        // Snapshots.overwriteWhere semantics in one atomic manifest
-        // claim; OVERWRITE_DYNAMIC routes INSERT OVERWRITE under
-        // partitionOverwriteMode=dynamic (and writeTo
-        // .overwritePartitions()) onto replacePartitions semantics —
-        // only the batch's partitions replaced, one commit
-        TableCapability.OVERWRITE_BY_FILTER,
-        TableCapability.OVERWRITE_DYNAMIC,
-        // MERGE WITH SCHEMA EVOLUTION: Spark's analyzer turns the
-        // source's extra columns into alterTable ADD COLUMNS against
-        // this catalog (metadata-only here), then resolves the merge
-        // against the evolved schema - the programmatic twin is
-        // Snapshots.mergeInto(evolve = true)
-        TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
-
-    override def properties(): util.Map[String, String] =
-      Snapshots.properties(spark, path, Some(pinnedV)).asJava
-
-    /** Row-identity METADATA COLUMNS: the store-relative data-file
-      * path and the row's physical position in it — the same
-      * (file, pos) identity every merge-on-read delete names. Queries
-      * may select them (`SELECT __graft_file, ...`), and Spark's
-      * row-level framework resolves them as the delta rowId
-      * ([[GraftRowLevelOperation]]).
-      */
-    override def metadataColumns(): Array[MetadataColumn] = Array(
-      new MetadataColumn {
-        override def name(): String = SnapshotBatchScan.MetaFileCol
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.StringType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "store-relative path of the row's data file"
-      },
-      new MetadataColumn {
-        override def name(): String = SnapshotBatchScan.MetaPosCol
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "physical row position within the data file"
-      })
-
-    /** Spark-NATIVE row-level SQL DML (`SupportsRowLevelOperations`):
-      * DELETE / UPDATE / MERGE rewrite through Spark's own
-      * `RewriteDeleteFromTable` / `RewriteUpdateTable` /
-      * `RewriteMergeIntoTable` into a delta plan over the (file, pos)
-      * rowId — matched rows become positional delete entries, new and
-      * updated rows become ordinary data files, ONE atomic manifest
-      * claim pinned to the version the scan read (any concurrent
-      * commit refuses: the named positions would be stale). This is
-      * the merge-on-read twin of the copy-on-write programmatic API;
-      * simple DELETE predicates still take the metadata-only
-      * [[SupportsDelete]] path above (Spark's
-      * `OptimizeMetadataOnlyDeleteFromTable` prefers it).
-      */
-    override def newRowLevelOperationBuilder(
-        info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-        : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-      require(mutable,
-        "graft catalog: cannot UPDATE/MERGE/DELETE a time-travelled " +
-          "table - DML mutates the live table only")
-      // the dml.mode table property picks the physical strategy:
-      // 'merge-on-read' (default) commits positional deletes +
-      // fresh rows; 'copy-on-write' rewrites the matched files
-      // whole (read-optimized; no delete files accumulate)
-      val mode = Snapshots.properties(spark, path)
-        .getOrElse("dml.mode", "merge-on-read")
-      mode match {
-        case "merge-on-read" =>
-          () => new GraftRowLevelOperation(this, info.command)
-        case "copy-on-write" =>
-          () => new GraftCowRowLevelOperation(this, info.command)
-        case other => throw new IllegalArgumentException(
-          s"graft catalog: table property dml.mode must be " +
-            s"'merge-on-read' or 'copy-on-write', got '$other'")
-      }
-    }
-
-    /** The DSv2 scan builder for row-level DML — the one scan shape
-      * that can emit the (file, pos) rowId. Refuses (rather than
-      * falling back to V1, which cannot) when the delete sliver
-      * outgrew the shipping budget.
-      */
-    private[graft] def rowLevelScanBuilder(
-        onBuild: SnapshotBatchScan => Unit = _ => ()): ScanBuilder = {
-      val (sch, pc, entries, dvs, cm) = pinnedState
-      require(dvs.isEmpty ||
-        Snapshots.v2DeleteBytes(spark, path, dvs) <=
-          spark.conf.get("spark.graft.snapshot.v2.maxDeleteBytes",
-            (64L << 20).toString).toLong,
-        s"graft catalog: $ident carries more delete-file bytes than " +
-          "the row-level DML scan can ship per task " +
-          "(spark.graft.snapshot.v2.maxDeleteBytes) - run CALL " +
-          "compact first to apply the backlog")
-      new SnapshotScanBuilder(spark, path, pinnedV, sch, pc, cm,
-        entries, dvs, onBuild,
-        shardRefs = Snapshots.shardRefsAt(spark, path, pinnedV))
-    }
-
-    private[graft] def pinnedVersion: Long = pinnedV
-
-    override def newScanBuilder(options: CaseInsensitiveStringMap)
-        : ScanBuilder = {
-      // DSv2 scan path for every table — merge-on-read tables
-      // included, as long as their delete sliver fits the shipping
-      // budget (see below) — gated ONLY on the store's own opt-out
-      // (default ON): the scan
-      // is correct with or without Spark's v2-bucketing flag — when
-      // that flag is off Spark simply treats the reported
-      // KeyGroupedPartitioning as unknown and plans its own
-      // Exchanges, while manifest pruning, aggregate pushdown and
-      // runtime filtering still apply. (The previous routing read
-      // `spark.sql.sources.v2.bucketing.enabled` with a "false"
-      // fallback — conf.get ignores the registered ConfigEntry
-      // default, so the whole DSv2 path silently never activated on
-      // stock sessions.) Bucket-only and identity-only layouts
-      // report KeyGroupedPartitioning, so two tables partitioned
-      // alike on the join key join with no Exchange
-      // (storage-partitioned joins); identity values attach per
-      // input partition (the parquet reader reconstructs
-      // directory-borne columns); bare COUNT/integral MIN/MAX answer
-      // from the manifest as a one-row scan. Tables with live delete
-      // files (merge-on-read) ALSO route here — the scan applies the
-      // positional/equality deletes inside each reader, so the
-      // CDC-heavy tables keep SPJ, runtime filtering and manifest
-      // pruning — as long as the delete sliver fits the per-task
-      // shipping budget; past it (compaction overdue) the V1 plan's
-      // distributed anti-joins take over.
-      val (sch, pc, entries, dvs, cm) = pinnedState
-      val v2Ready =
-        spark.conf.get("spark.graft.snapshot.v2.enabled", "true")
-          .toBoolean &&
-        (dvs.isEmpty ||
-          Snapshots.v2DeleteBytes(spark, path, dvs) <=
-            spark.conf.get("spark.graft.snapshot.v2.maxDeleteBytes",
-              (64L << 20).toString).toLong)
-      if (v2Ready)
-        new SnapshotScanBuilder(spark, path, pinnedV, sch, pc, cm,
-          entries, dvs,
-          shardRefs = Snapshots.shardRefsAt(spark, path, pinnedV))
-      else v1ScanBuilder
-    }
-
-    private def v1ScanBuilder: ScanBuilder = new ScanBuilder {
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = GraftTable.this.schema()
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val df = Snapshots.read(context.sparkSession, path,
-            Some(pinnedV))
-          (new BaseRelation with TableScan with PrunedFilteredScan {
-            override val sqlContext: SQLContext = context
-            override def schema: StructType = df.schema
-            override def buildScan()
-                : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-              df.rdd
-            override def buildScan(requiredColumns: Array[String],
-                                   filters: Array[Filter])
-                : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-              // prune + push what translates; Spark re-applies every
-              // filter above (unhandledFilters default = all), so a
-              // skipped translation costs IO, never correctness.
-              // An equality filter first re-plans through the
-              // MANIFEST-level point-lookup pruning: hidden partition
-              // transforms (bucket/days/truncate dirs) and file stats
-              // shrink the entry list before any file opens — SQL
-              // `WHERE source = 'x'` reads one directory's sliver of
-              // a 100 TB table, not every file
-              val sess = context.sparkSession
-              val base = filters.collectFirst {
-                case sources.EqualTo(att, v)
-                    if v != null && df.columns.contains(att) =>
-                  Snapshots.readEquals(sess, path, att, v, Some(pinnedV))
-              }.getOrElse(df)
-              val pruned =
-                if (requiredColumns.isEmpty) base
-                else base.select(requiredColumns.map(col).toSeq: _*)
-              filters.flatMap(translateFilter)
-                .foldLeft(pruned)((d, c) => d.filter(c)).rdd
-            }
-          }).asInstanceOf[T]
-        }
-      }
-    }
-
-    /** TRUE DSv2 WRITE path ([[SnapshotWriteBuilder]]): the `Write`
-      * declares `RequiresDistributionAndOrdering` over the table's
-      * own transforms and Spark PLANS it — an AQE rebalance on the
-      * derived directory values plus a per-task sort — so an
-      * `INSERT INTO` a bucketed table lands bucket-aligned files in
-      * one Spark-planned shuffle and a storage-partitioned join reads
-      * them back Exchange-free. Overwrites: `truncate` → whole-table
-      * commit; `SupportsOverwrite` filters (static `PARTITION (k=v)`
-      * / `writeTo.overwrite(cond)`) → single-commit filter-scoped
-      * replace; `SupportsDynamicOverwrite`
-      * (`partitionOverwriteMode=dynamic` / `overwritePartitions()`) →
-      * [[Snapshots.replacePartitions]] semantics. Every shape is one
-      * atomic, time-travelable manifest claim with the usual OCC.
-      */
-    override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-      require(mutable,
-        "graft catalog: cannot write to a time-travelled table")
-      new SnapshotWriteBuilder(path, ident, info)
-    }
-  }
-
-  private def translateFilterExact(f: Filter): Option[SqlColumn] =
-    FilterTranslate.exact(f)
-
-  private def translateFilter(f: Filter): Option[SqlColumn] =
-    FilterTranslate.lenient(f)
 }
 
 /** The v1 `Filter` subset worth forwarding (equality, ranges, IN,
   * null tests, conjunction); everything else stays NULL and relies
-  * on Spark's re-filter above the relation. Shared by the catalog's
-  * V1 scan/DELETE paths and the DSv2 write's overwrite-filter
-  * translation ([[SnapshotWriteBuilder]]).
+  * on Spark's re-filter above the relation. Shared by SQL DELETE,
+  * the residual of [[Snapshots.readWhere]] and the DSv2 write's
+  * overwrite-filter translation ([[SnapshotWriteBuilder]]).
   */
 private[graft] object FilterTranslate {
   import org.apache.spark.sql.functions.col

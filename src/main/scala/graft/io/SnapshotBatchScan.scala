@@ -46,22 +46,21 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, ByteType, DataType, 
   *
   * Exactness posture: every filter is reported back as post-scan, so
   * pushdown is IO-only — parquet row-group pruning plus manifest
-  * point-lookup pruning ([[Snapshots.prunedEntriesEquals]], covering
-  * transform directories AND column stats) can never change answers;
+  * pruning ([[Snapshots.filterKeepFn]], covering transform
+  * directories AND column stats) can never change answers;
   * aggregate pushdown only fires when every entry carries the exact
   * pseudo-stat it needs. Files are read through the SAME
   * `ParquetFileFormat` closure `FileSourceScanExec` ships
   * ([[org.apache.spark.sql.graft.ScanBridge]]), so type promotion
   * (widening) and rebase rules behave identically to every other
-  * read path. [[GraftCatalog.GraftTable.newScanBuilder]] routes here
-  * by default (opt-out: `spark.graft.snapshot.v2.enabled=false`);
-  * tables whose delete sliver outgrew the shipping budget keep the
-  * V1 fallback (its plan applies the positional/equality anti-joins
-  * distributedly).
+  * read path. [[GraftTable.newScanBuilder]] routes every read here
+  * — catalog SQL and the programmatic front doors alike — except
+  * tables whose delete sliver outgrew the shipping budget
+  * ([[Snapshots.readWhere]] applies their deletes by anti-join).
   */
 object SnapshotBatchScan {
 
-  /** Row-identity METADATA COLUMNS ([[GraftCatalog.GraftTable]]
+  /** Row-identity METADATA COLUMNS ([[GraftTable]]
     * `SupportsMetadataColumns`): the store-relative data-file path and
     * the row's physical position — the exact (file, pos) identity the
     * store's positional delete files name, so Spark's row-level DML
@@ -915,124 +914,12 @@ private[graft] final class SnapshotBatchScan(
     })
   }
 
-  /** Manifest-level pruning over the residual filters' conjunctive
-    * LEAVES: equalities prune through
-    * [[Snapshots.prunedEntriesEquals]] (hidden-transform directories
-    * AND committed column stats — a point lookup reads one sliver);
-    * `IN` unions the per-value point lookups; range predicates
-    * (`>[=]`/`<[=]` — a SQL `BETWEEN` arrives as the two one-sided
-    * leaves) prune through [[Snapshots.prunedEntriesBound]]'s
-    * committed min/max stats, so `WHERE ts BETWEEN a AND b` on a
-    * z-ordered/clustered table opens the overlapping sliver instead
-    * of every file — at millions of files the footer-open pass IS
-    * the planning bottleneck these stats exist to kill; `LIKE 'p%'`
-    * prunes via the prefix byte range. Every leaf is prune-on-proof
-    * (stats-less files/columns/value-types keep) and every leaf
-    * STAYS in-plan — this narrows IO only, exactness never depends
-    * on it.
-    */
-  /** Survivor-set PROOF for one filter tree, or None (no proof —
-    * prune nothing). AND intersects whatever proofs its sides offer
-    * (a side with no proof simply contributes nothing); OR unions
-    * and needs BOTH sides proved — a file one branch's stats skip
-    * may still match the other, so `ym = 202401 OR ym = 202402`
-    * (the month-window disjunction) keeps exactly the two months'
-    * files while `x = 1 OR unknowable(y)` keeps everything. NOT
-    * offers no proof: min/max can prove "no row matches", never
-    * "every row matches", which is what a sound negation would
-    * need.
-    */
-  /** The per-entry KEEP predicate of one filter, composed
-    * structurally over And/Or (And of an unknown side keeps the
-    * known side; Or with an unknown side proves nothing). Leaves
-    * delegate to the manifest prune predicates, every one of which
-    * is sound on shard pseudo-entries too — so the WHOLE tree
-    * becomes one predicate and [[keptEntries]] makes one
-    * shard-aware walk, instead of materializing a rel-set per leaf
-    * (each O(that leaf's survivors) — a mid-table BETWEEN at 100k
-    * files enumerated two ~50k-entry sets per query to keep 500)
-    * and intersecting.
-    */
-  private def leafKeep(f: Filter): Option[String => Boolean] = {
-    val inSchema = tableSchema.fieldNames.toSet
-    f match {
-      case sources.And(l, r) =>
-        (leafKeep(l), leafKeep(r)) match {
-          case (Some(a), Some(b)) =>
-            Some((e: String) => a(e) && b(e))
-          case (a, None) => a
-          case (None, b) => b
-        }
-      case sources.Or(l, r) =>
-        for { a <- leafKeep(l); b <- leafKeep(r) }
-          yield (e: String) => a(e) || b(e)
-      case sources.EqualTo(c, v) if v != null && inSchema(c) =>
-        Snapshots.equalsKeepFn(spark, path, c, v, Some(pinnedV))
-      case sources.EqualNullSafe(c, v) if v != null && inSchema(c) =>
-        Snapshots.equalsKeepFn(spark, path, c, v, Some(pinnedV))
-      case sources.EqualNullSafe(c, null) if inSchema(c) =>
-        // `c <=> NULL` IS `c IS NULL`: null-bearing files only
-        Snapshots.nullKeepFn(
-          spark, path, c, isNull = true, Some(pinnedV))
-      case sources.In(c, vs)
-          if inSchema(c) && vs.nonEmpty &&
-            vs.length <= SnapshotBatchScan.MaxStaticInSet &&
-            vs.exists(_ != null) =>
-        // a NULL in the list matches nothing (three-valued IN):
-        // the non-null values' union covers every matchable row
-        val fns = vs.filter(_ != null).toSeq.map(v =>
-          Snapshots.equalsKeepFn(spark, path, c, v, Some(pinnedV)))
-        if (fns.exists(_.isEmpty)) None
-        else fns.flatten.reduceOption((a, b) =>
-          (e: String) => a(e) || b(e))
-      case sources.GreaterThan(c, v) if v != null && inSchema(c) =>
-        Snapshots.boundKeepFn(
-          spark, path, c, v, lower = true, Some(pinnedV))
-      case sources.GreaterThanOrEqual(c, v)
-          if v != null && inSchema(c) =>
-        Snapshots.boundKeepFn(
-          spark, path, c, v, lower = true, Some(pinnedV))
-      case sources.LessThan(c, v) if v != null && inSchema(c) =>
-        Snapshots.boundKeepFn(
-          spark, path, c, v, lower = false, Some(pinnedV))
-      case sources.LessThanOrEqual(c, v)
-          if v != null && inSchema(c) =>
-        Snapshots.boundKeepFn(
-          spark, path, c, v, lower = false, Some(pinnedV))
-      case sources.StringStartsWith(c, p)
-          if p != null && inSchema(c) =>
-        Snapshots.prefixKeepFn(spark, path, c, p, Some(pinnedV))
-      case sources.IsNull(c) if inSchema(c) =>
-        Snapshots.nullKeepFn(
-          spark, path, c, isNull = true, Some(pinnedV))
-      case sources.IsNotNull(c) if inSchema(c) =>
-        // Catalyst conjoins IsNotNull onto nearly every predicate:
-        // this skips a sparse column's all-null files on every query
-        // that touches it, and answers None straight from the shard
-        // pseudos on the (common) no-nulls tables
-        Snapshots.nullKeepFn(
-          spark, path, c, isNull = false, Some(pinnedV))
-      case _ => None // unknown shape: prune nothing
-    }
-  }
-
-  private lazy val keptEntries: Seq[String] = {
-    val keeps = filters.flatMap(leafKeep)
-    if (keeps.isEmpty) entries
-    else {
-      val all = keeps.reduce((a, b) => (e: String) => a(e) && b(e))
-      if (shardLazy)
-        // `entries` is the UNFORCED full lazy list: one walk tests
-        // each shard's pseudo against the whole tree, loads only the
-        // surviving shards, filters members — O(matching shards)
-        Snapshots.pruneWith(spark, path, pinnedV, all)
-      else
-        // the builder already materialized (and possibly absorbed
-        // down) `entries`: enforce the composed predicate per entry
-        // so absorbed narrowing is never widened back
-        entries.filter(all)
-    }
-  }
+  // `entries` is a sharded manifest's unforced full list only when
+  // `shardLazy`; otherwise the builder materialized (and possibly
+  // absorbed down) `entries`, and filtering them never widens that
+  private lazy val keptEntries: Seq[String] =
+    Snapshots.keptByFilters(spark, path, pinnedV, tableSchema, filters,
+      entries, walk = shardLazy)
 
   /** RUNTIME FILTERING (DSv2 dynamic partition pruning): in a star
     * join against a filtered dimension, Spark collects the dim side's
@@ -1154,12 +1041,17 @@ private[graft] final class SnapshotBatchScan(
           // manifest point-lookup (hidden-transform dirs + stats) -
           // the union of survivors is the runtime keep-set
           val dt = tableSchema(logicalName(fields(i).source)).dataType
-          val ext = vs.map(v => externalValue(v.value(), dt))
-          if (ext.forall(_.isDefined)) {
-            val col = logicalName(fields(i).source)
-            val kept = ext.flatMap(_.toSeq).flatMap(v =>
-              Snapshots.prunedEntriesEquals(spark, path, col, v,
-                Some(pinnedV))._1.map(Snapshots.relOfEntry)).toSet
+          val col = logicalName(fields(i).source)
+          val keeps = vs.map(v => externalValue(v.value(), dt).flatMap(
+            Snapshots.equalsKeepFn(spark, path, col, _, Some(pinnedV))))
+          if (keeps.forall(_.isDefined)) {
+            val keep = (e: String) => keeps.exists(_.get(e))
+            // a sharded manifest walks shard-aware (whole shards the
+            // IN-set disproves never load)
+            val kept = (if (shardLazy)
+                Snapshots.pruneWith(spark, path, pinnedV, keep)
+              else scanEntries.filter(keep))
+              .map(Snapshots.relOfEntry).toSet
             runtimeKeptRels = Some(
               runtimeKeptRels.map(_ intersect kept).getOrElse(kept))
           }
@@ -1394,6 +1286,7 @@ private[graft] final class SnapshotBatchScan(
   override def description(): String =
     s"graft-snapshot spj $path v$pinnedV " +
       s"[${partCols.mkString(", ")}]" +
+      s" PushedFilters: ${parquetFilters.mkString("[", ", ", "]")}" +
       pushedLimit.map(k => s" pushedLimit=$k").getOrElse("") +
       pushedTopN.map { case (ks, k) =>
         val keys = ks.map(x =>
@@ -1434,13 +1327,25 @@ private[graft] final class SnapshotBatchScan(
     planned.toArray[InputPartition]
   }
 
+  private lazy val idLogical: Set[String] =
+    idFields.map(f => logicalName(f.source)).toSet
+
+  // identity columns never live in the files: the reader gets the
+  // DATA subset plus a partitionSchema, appends the per-partition
+  // values, and a positional projection restores the required order
+  private lazy val physData: StructType = Snapshots.physicalSchemaOf(
+    StructType(tableSchema.fields.filterNot(f => idLogical(f.name))),
+    colMap)
+
+  /** The residual filters handed to parquet row-group pruning, under
+    * physical column names (none for metadata-column reads, whose
+    * positions must count every row). */
+  private lazy val parquetFilters: Seq[Filter] =
+    if (withMeta) Nil
+    else filters.flatMap(toPhysicalFilter(colMap.map(_.swap)))
+      .filter(_.references.forall(physData.fieldNames.contains))
+
   override def createReaderFactory(): PartitionReaderFactory = {
-    val idLogical = idFields.map(f => logicalName(f.source)).toSet
-    // identity columns never live in the files: the reader gets the
-    // DATA subset plus a partitionSchema, appends the per-partition
-    // values, and a positional projection restores the required order
-    val dataTable = StructType(
-      tableSchema.fields.filterNot(f => idLogical(f.name)))
     // equality-delete key columns must be readable even when the
     // query pruned them away: extend the DATA projection (extras sit
     // after the required data columns; the output projection below
@@ -1453,16 +1358,10 @@ private[graft] final class SnapshotBatchScan(
       .map(n => tableSchema(n))
     val dataRequired = StructType(
       reqData.fields.filterNot(f => idLogical(f.name)) ++ eqExtra)
-    val physData = Snapshots.physicalSchemaOf(dataTable, colMap)
     val physRequired = Snapshots.physicalSchemaOf(dataRequired, colMap)
     val partSchema = StructType(idFields.zip(idTypes).map {
       case (f, dt) => org.apache.spark.sql.types
         .StructField(f.source, dt, nullable = true) })
-    val l2p = colMap.map(_.swap)
-    val physFilters =
-      if (withMeta) Nil // whole-file filterless: positions count true
-      else filters.flatMap(toPhysicalFilter(l2p))
-        .filter(_.references.forall(physData.fieldNames.contains))
     // reader emits dataRequired ++ idFields (++ file, pos when
     // metadata is requested); required wants its own order - map
     // each required ordinal to the reader's layout
@@ -1501,7 +1400,7 @@ private[graft] final class SnapshotBatchScan(
     val batchRead =
       if (canBatch)
         ScanBridge.parquetBatchReadFunc(spark, physData, physRequired,
-          physFilters, conf, partSchema)
+          parquetFilters, conf, partSchema)
       else None
     // the filterless twin for positional-delete files (row-group
     // skipping would desynchronize position counting); only built
@@ -1513,7 +1412,7 @@ private[graft] final class SnapshotBatchScan(
       else None
     new SnapshotReaderFactory(
       ScanBridge.parquetReadFunc(spark, physData, physRequired,
-        physFilters, conf, partSchema),
+        parquetFilters, conf, partSchema),
       // delete-bearing files read FILTERLESS (row-group skipping
       // would desynchronize position counting); Spark re-applies
       // every filter above the scan, so this costs IO only
@@ -2025,6 +1924,7 @@ private[graft] final class SnapshotReaderFactory(
     new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
       private val it = slice.files.iterator.flatMap { fs =>
         SnapshotReaderFactory.filesOpened.incrementAndGet()
+        ScanBridge.setInputFile(fs.path, fs.start, fs.len)
         if (fs.hasDeletes) deletedBatches(fs)
         else read(fs.path, fs.start, fs.len, fs.fileSize, slice.idRow)
       }.map { b =>
@@ -2037,7 +1937,7 @@ private[graft] final class SnapshotReaderFactory(
         if (it.hasNext) { cur = it.next(); true } else false
       override def get()
           : org.apache.spark.sql.vectorized.ColumnarBatch = cur
-      override def close(): Unit = ()
+      override def close(): Unit = ScanBridge.unsetInputFile()
     }
   }
 
@@ -2128,6 +2028,7 @@ private[graft] final class SnapshotReaderFactory(
       private val raw = slice.files.iterator
         .flatMap { fs =>
           SnapshotReaderFactory.filesOpened.incrementAndGet()
+          ScanBridge.setInputFile(fs.path, fs.start, fs.len)
           if (withMeta) metaRows(fs, slice.idRow, slice.rel)
           else if (fs.hasDeletes) liveRows(fs, slice.idRow)
           else readFunc(fs.path, fs.start, fs.len, fs.fileSize,
@@ -2163,7 +2064,7 @@ private[graft] final class SnapshotReaderFactory(
       override def next(): Boolean =
         if (it.hasNext) { cur = it.next(); true } else false
       override def get(): InternalRow = cur
-      override def close(): Unit = ()
+      override def close(): Unit = ScanBridge.unsetInputFile()
     }
   }
 }

@@ -15,9 +15,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `SupportsRowLevelOperations` + `SupportsDelta` integration, so
   * `DELETE FROM` / `UPDATE` / `MERGE INTO` plan through Spark's own
   * `RewriteDeleteFromTable` / `RewriteUpdateTable` /
-  * `RewriteMergeIntoTable` rewrites instead of a custom strategy
-  * ([[graft.plans.GraftDmlStrategy]] remains registered only as the
-  * documented fallback for sessions that disable this path):
+  * `RewriteMergeIntoTable` rewrites — the one route SQL DML takes:
   *
   *   - the rowId is the store's own MERGE-ON-READ row identity —
   *     `(__graft_file, __graft_pos)`, the metadata columns
@@ -45,7 +43,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * non-translatable functions, MERGE.
   */
 private[graft] final class GraftRowLevelOperation(
-    table: GraftCatalog#GraftTable,
+    table: GraftTable,
     cmd: RowLevelOperation.Command)
   extends RowLevelOperation with SupportsDelta {
 
@@ -83,7 +81,7 @@ private[graft] final class GraftRowLevelOperation(
   * Iceberg/Delta mode split.
   */
 private[graft] final class GraftCowRowLevelOperation(
-    table: GraftCatalog#GraftTable,
+    table: GraftTable,
     cmd: RowLevelOperation.Command)
   extends RowLevelOperation {
 

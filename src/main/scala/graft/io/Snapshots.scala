@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, log, not, pmod, round, when}
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StructType, TimestampType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -801,7 +802,7 @@ object Snapshots {
 
   /** TIMESTAMP(MICROS) bounds of an entry ('U' kind): name →
     * (min, max) micros since epoch — the timestamp range-pruning
-    * domain ([[prunedEntriesBound]] coerces literals to the same
+    * domain ([[boundKeepFn]] coerces literals to the same
     * unit). Kept apart from 'L': the unit belongs to the write-time
     * parquet annotation, and only MICROS files commit it. */
   private[graft] def tsStatsOf(entry: String): Map[String, (Long, Long)] = {
@@ -1285,7 +1286,7 @@ object Snapshots {
         val logical = c.getPrimitiveType.getLogicalTypeAnnotation
         // DATE rides the INT32 path: its stats are epoch DAYS, exact
         // longs — the unit range pruning coerces date literals to
-        // ([[prunedEntriesBound]]). Catalyst-typed consumers
+        // ([[boundKeepFn]]). Catalyst-typed consumers
         // (aggregate pushdown, CBO min/max) key on integral CATALYST
         // types, so a DateType column never mis-serves as a long.
         val plainNumeric = logical == null ||
@@ -2342,7 +2343,7 @@ object Snapshots {
                                      schema: StructType,
                                      partCols: Seq[String],
                                      entries: Seq[String])
-      : org.apache.spark.sql.sources.BaseRelation = {
+      : sources.BaseRelation = {
     // hidden-transform fields partition DIRECTORIES only: the source
     // column lives in the data files, so the relation's partition
     // schema carries identity fields alone (a transform dir level in
@@ -2525,9 +2526,9 @@ object Snapshots {
 
   /** Total bytes of a manifest's delete files — the DSv2 routing
     * guard: the in-scan apply ships the delete sliver to every task,
-    * so a table whose deletes outgrew sliver size (pathological MoR
-    * backlog; compaction is overdue anyway) stays on the V1 plan,
-    * which anti-joins distributedly.
+    * so a table whose deletes outgrew sliver size
+    * ([[overDeleteBudget]]) reads through the anti-join plan,
+    * which applies them distributedly.
     */
   private[graft] def v2DeleteBytes(spark: SparkSession, path: String,
                                    dvs: Seq[String]): Long = {
@@ -2636,8 +2637,7 @@ object Snapshots {
     * the state a reader or streaming source plans against.
     */
   private[graft] def stateAt(spark: SparkSession, path: String, v: Long)
-      : (StructType, Seq[String], Seq[String], Seq[String],
-         Map[String, String]) = {
+      : TableState = {
     val m = manifest(fs(spark, path), path, v)
     (m.schema, m.partCols, m.entries, m.dvs, m.colMap)
   }
@@ -2961,8 +2961,8 @@ object Snapshots {
     val (s2, map2) = evolvedSchemaAndMap(m.schema,
       batchSchema, path, m.dropped, m.colMap, reuse = stagedMap,
       partCols = m.partCols)
-    openLive(spark, path, s2, m.partCols, m.entries ++ entries,
-      m.dvs, map2)
+    readWhere(spark, path, baseV,
+      state = Some((s2, m.partCols, m.entries ++ entries, m.dvs, map2)))
   }
 
   /** WRITE-AUDIT-PUBLISH, stage 2: atomically publish a staged
@@ -3163,36 +3163,81 @@ object Snapshots {
     * stores (a file from before a column was added null-fills it),
     * never whichever random file footer Spark happens to sample,
     * which after an evolution would silently drop or surface columns
-    * depending on sampling luck.
+    * depending on sampling luck. The result is the same DSv2 relation
+    * catalog SQL plans ([[readWhere]]), so filters applied to it
+    * prune files through the scan's pushdown.
     */
   def read(spark: SparkSession, path: String,
-           version: Option[Long] = None): DataFrame = {
-    val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
-    val m = manifest(f, path, v)
-    openLive(spark, path, m.schema, m.partCols,
-      m.entries, m.dvs, m.colMap)
-  }
+           version: Option[Long] = None): DataFrame =
+    readWhere(spark, path, resolveVersion(spark, path, version))
 
-  /** `SELECT count(*)` answered from METADATA when the manifest can
-    * prove it: every entry carries its `__rows` pseudo-stat and no
-    * merge-on-read deletes are live (a delete file removes rows the
-    * entry counts — summing would overcount). Falls back to a real
-    * scan-count otherwise, never guesses. At 100 TB the difference
-    * is one manifest read vs opening a million footers.
+  /** `SELECT count(*)`: the scan's aggregate pushdown answers from
+    * the manifest when its pseudo-stats prove the count (positional
+    * deletes subtracted per file) and scans otherwise, never
+    * guessing. At 100 TB the difference is one manifest read vs
+    * opening a million footers.
     */
   def rowCount(spark: SparkSession, path: String,
-               version: Option[Long] = None): Long = {
-    val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
+               version: Option[Long] = None): Long =
+    read(spark, path, version).count()
+
+  private def resolveVersion(spark: SparkSession, path: String,
+                             version: Option[Long]): Long =
+    version.orElse(latestVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot: no committed version under $path"))
-    val m = manifest(f, path, v)
-    val counted = m.entries.flatMap(entryRows)
-    if (m.dvs.isEmpty && counted.size == m.entries.size) counted.sum
-    else read(spark, path, Some(v)).count()
+
+  /** A version's (schema, partition columns, entries, delete files,
+    * column map) — what a [[GraftTable]] reads. */
+  private[graft] type TableState = (StructType, Seq[String], Seq[String],
+    Seq[String], Map[String, String])
+
+  /** The conf key bounding the delete-file bytes the DSv2 scan ships
+    * to every task. */
+  private[graft] val MaxDeleteBytesConf =
+    "spark.graft.snapshot.v2.maxDeleteBytes"
+
+  /** True when a version's delete files outgrow what the DSv2 scan
+    * ships to every task (a pathological merge-on-read backlog;
+    * compaction is overdue anyway): such a version reads through the
+    * distributed anti-join plan instead. */
+  private[graft] def overDeleteBudget(spark: SparkSession, path: String,
+                                      dvs: Seq[String]): Boolean =
+    dvs.nonEmpty && v2DeleteBytes(spark, path, dvs) >
+      spark.conf.get(MaxDeleteBytesConf, (64L << 20).toString).toLong
+
+  /** The one batch read route behind every snapshot front door:
+    * version `v` (or the explicit `state`) as the DSv2 relation over
+    * a pinned [[GraftTable]], filtered by `where`. Spark pushes
+    * `where` into the scan, which skips files and shards through the
+    * manifest keep-predicates ([[filterKeepFn]]) and applies deletes
+    * in-scan. Past the delete-shipping budget ([[overDeleteBudget]])
+    * the same keep-predicates select the entries [[openLive]]'s
+    * anti-join plan reads, so point and range reads keep their
+    * skipping there too. `where` stays in-plan as the residual
+    * (lenient translation: a filter that does not translate is
+    * dropped, never narrowed), so skipping is IO-only.
+    */
+  private[graft] def readWhere(spark: SparkSession, path: String, v: Long,
+                               where: Seq[sources.Filter] = Nil,
+                               state: Option[TableState] = None)
+      : DataFrame = {
+    val table = new GraftTable(spark, path, s"$path@v$v", Some(v),
+      mutable = false, state)
+    val base =
+      if (!table.overDeleteBudget)
+        org.apache.spark.sql.graft.Bridge.ofRows(spark,
+          org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2Relation.create(table, Some(TransformFunctions),
+              None))
+      else {
+        val (schema, partCols, entries, dvs, colMap) = table.pinnedState
+        openLive(spark, path, schema, partCols,
+          keptByFilters(spark, path, v, schema, where, entries,
+            walk = state.isEmpty), dvs, colMap)
+      }
+    where.flatMap(FilterTranslate.lenient).reduceOption(_ && _)
+      .fold(base)(base.filter)
   }
 
   /** Time travel BY TIMESTAMP — Delta's `timestampAsOf` posture: the
@@ -3224,38 +3269,6 @@ object Snapshots {
                tsMillis: Long): DataFrame =
     read(spark, path, Some(versionAsOf(spark, path, tsMillis)))
 
-  /** The manifest entries a `[lo, hi]` range scan on `column` must
-    * read, against the total entry count — the file-skipping decision
-    * exposed for specs and planning. Pruning proof comes from footer
-    * stats OR, for a partition column, from the Hive-style value in
-    * the entry's path (a whole-partition prune needs no stats at
-    * all). An entry with neither is always kept (prune only on
-    * proof).
-    */
-  private[graft] def prunedEntries(spark: SparkSession, path: String,
-                                   column: String, lo: Double, hi: Double,
-                                   version: Option[Long] = None):
-      (Seq[String], Int) = {
-    val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
-    val m = manifest(f, path, v)
-    // stats and partition-path values are keyed by PHYSICAL name
-    val phys = toPhysicalName(m.colMap, column)
-    def keep(e: String): Boolean = {
-      val range = statsOf(e).get(phys).orElse(
-        partValsOf(relOf(e)).get(phys)
-          .flatMap(s => scala.util.Try(s.toDouble).toOption)
-          .map(d => (d, d)))
-      range match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi // ranges overlap
-        case None => true
-      }
-    }
-    (pruneCandidates(f, path, m)(keep).filter(keep), entryCountOf(m))
-  }
-
   /** Range scan with MANIFEST-LEVEL file skipping: files whose
     * committed min/max stats — or whose partition-directory value —
     * prove no row can satisfy `column BETWEEN lo AND hi` are never
@@ -3265,97 +3278,44 @@ object Snapshots {
     * and manifest stats cut it to the overlapping sliver (after a
     * [[compact]] with `sortBy` on the column, that sliver is ~1
     * file; on a partition column it is exactly the overlapping
-    * partitions). Stats cover top-level BIGINT/DOUBLE columns
-    * (widened-to-double compare — exact below 2^53); files without
-    * stats for the column are read, never wrongly skipped, and the
-    * residual in-plan BETWEEN keeps the result exact regardless of
-    * how coarse the pruning was.
+    * partitions). The bounds reach the scan as pushed filters
+    * ([[boundKeepFn]]); files without stats for the column are read,
+    * never wrongly skipped, and the residual in-plan BETWEEN keeps
+    * the result exact regardless of how coarse the pruning was.
     */
   def readBetween(spark: SparkSession, path: String, column: String,
                   lo: Double, hi: Double,
                   version: Option[Long] = None): DataFrame = {
-    val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
-    val m = manifest(f, path, v)
-    val schema = m.schema
+    val v = resolveVersion(spark, path, version)
+    val schema = stateAt(spark, path, v)._1
     require(schema.fieldNames.contains(column),
       s"snapshot: readBetween column $column is not in the table " +
         s"schema (${schema.fieldNames.mkString(", ")})")
-    val (kept, _) = prunedEntries(spark, path, column, lo, hi, Some(v))
-    // pruning stays SAFE under merge-on-read deletes: deletion only
-    // removes rows, so committed min/max stats over-approximate and
-    // prune-on-proof still never skips a live row; the live read
-    // below applies the deletes to whatever survives the prune
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else openLive(spark, path, schema, m.partCols, kept, m.dvs,
-        m.colMap)
-    // integral column + whole-number bounds → long literals, so the
-    // residual predicate reaches the parquet scan as a pushed filter
-    // instead of hiding behind a cast-to-double
+    // integral column → long bounds (ceil the lower, floor the
+    // upper: the same rows for integral values), so the predicate
+    // reaches the scan as a pushed filter instead of hiding behind a
+    // cast-to-double; bounds outside the long range stay doubles
     val integral = schema(column).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType => true
+      case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    val (l, h) =
-      if (integral && lo.isWhole && hi.isWhole)
-        (lit(lo.toLong), lit(hi.toLong))
-      else (lit(lo), lit(hi))
-    base.filter(col(column) >= l && col(column) <= h)
-  }
-
-  /** STRING file-skipping decision for `column BETWEEN lo AND hi`
-    * (UTF-8 byte order — the order Spark's own string comparison
-    * uses): an entry survives when its truncated-prefix bounds — or
-    * its string partition-directory value — cannot disprove overlap.
-    * Prune only on proof: bounds are conservative by construction
-    * (lower = truncation ≤ true min; upper = truncated increment
-    * ≥ true max, or unbounded), so a skipped file PROVABLY holds no
-    * matching row.
-    */
-  private[graft] def prunedEntriesString(spark: SparkSession,
-                                         path: String, column: String,
-                                         lo: String, hi: String,
-                                         version: Option[Long] = None)
-      : (Seq[String], Int) = {
-    val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
-    val m = manifest(f, path, v)
-    val phys = toPhysicalName(m.colMap, column)
-    val loB = lo.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val hiB = hi.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    def keep(e: String): Boolean = {
-      val range: Option[(Array[Byte], Option[Array[Byte]])] =
-        stringStatsOf(e).get(phys).orElse(
-          partValsOf(relOf(e)).get(phys).map { s =>
-            val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            (b, Some(b)) // a partition value is an exact bound
-          })
-      range match {
-        case Some((mn, mxOpt)) =>
-          val upperOk = mxOpt.forall(mx => bytesCompare(mx, loB) >= 0)
-          upperOk && bytesCompare(mn, hiB) <= 0
-        case None => true
-      }
-    }
-    (pruneCandidates(f, path, m)(keep).filter(keep), entryCountOf(m))
+    def bound(d: Double, round: Double => Double): Any =
+      if (integral && d >= Long.MinValue.toDouble &&
+          d < Long.MaxValue.toDouble) round(d).toLong
+      else d
+    readWhere(spark, path, v, Seq(
+      sources.GreaterThanOrEqual(column, bound(lo, math.ceil)),
+      sources.LessThanOrEqual(column, bound(hi, math.floor))))
   }
 
   /** [[readBetween]] for STRING columns: manifest-level file skipping
     * from 16-byte truncated-prefix bounds (Parquet's own truncation
     * rule) or string partition-directory values — the `source` /
-    * `lang` / `url` range scans a text corpus lives by, previously
-    * full-table file opens. The residual in-plan BETWEEN keeps the
-    * result exact however coarse the pruning was; a boundary-
-    * straddling file is read, never skipped.
+    * `lang` / `url` range scans a text corpus lives by. Bounds
+    * compare in UTF-8 byte order, the order Spark's own string
+    * comparison uses, and are conservative by construction, so a
+    * boundary-straddling file is read, never skipped; the residual
+    * in-plan BETWEEN keeps the result exact.
     */
   def readBetweenStrings(spark: SparkSession, path: String,
                          column: String, lo: String, hi: String,
@@ -3367,12 +3327,8 @@ object Snapshots {
       lo.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       hi.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0,
       s"snapshot: string range is backwards ('$lo' > '$hi')")
-    val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
-    val m = manifest(f, path, v)
-    val schema = m.schema
+    val v = resolveVersion(spark, path, version)
+    val schema = stateAt(spark, path, v)._1
     require(schema.fieldNames.contains(column),
       s"snapshot: readBetweenStrings column $column is not in the " +
         s"table schema (${schema.fieldNames.mkString(", ")})")
@@ -3380,15 +3336,9 @@ object Snapshots {
       org.apache.spark.sql.types.StringType,
       s"snapshot: $column is ${schema(column).dataType.simpleString}, " +
         "not string - use readBetween for numeric ranges")
-    val (kept, _) =
-      prunedEntriesString(spark, path, column, lo, hi, Some(v))
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else openLive(spark, path, schema, m.partCols, kept, m.dvs,
-        m.colMap)
-    base.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+    readWhere(spark, path, v, Seq(
+      sources.GreaterThanOrEqual(column, lo),
+      sources.LessThanOrEqual(column, hi)))
   }
 
   /** The manifest entries a `column = value` point lookup must read,
@@ -3422,9 +3372,7 @@ object Snapshots {
       "snapshot: readEquals needs a non-null value (col = NULL " +
         "matches nothing in SQL; use isNull reads instead)")
     val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     val m = manifest(f, path, v)
     val schema = m.schema
     require(schema.fieldNames.contains(column),
@@ -3449,9 +3397,7 @@ object Snapshots {
                                   useFileStats: Boolean = true)
       : Option[String => Boolean] = {
     if (value == null) return None
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     val m = manifest(fs(spark, path), path, v)
     val schema = m.schema
     if (!schema.fieldNames.contains(column)) return None
@@ -3581,28 +3527,32 @@ object Snapshots {
     * including HIDDEN transform directories (`bucket(n, col)` cuts
     * the scan to 1/n of the table with the source column untouched
     * in the data files; `days(ts)` to one day) — and file stats
-    * cannot disprove a match. The residual in-plan equality keeps
-    * the result exact however coarse the pruning was. This is the
-    * Iceberg hidden-partitioning read path: the caller names the
-    * DATA column; the layout's transforms are the store's concern.
+    * cannot disprove a match ([[equalsKeepFn]], through the scan's
+    * pushdown). The residual in-plan equality keeps the result
+    * exact however coarse the pruning was. This is the Iceberg
+    * hidden-partitioning read path: the caller names the DATA
+    * column; the layout's transforms are the store's concern.
     */
   def readEquals(spark: SparkSession, path: String, column: String,
                  value: Any, version: Option[Long] = None): DataFrame = {
-    val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
-    val m = manifest(f, path, v)
-    val schema = m.schema
-    val (kept, _) =
-      prunedEntriesEquals(spark, path, column, value, Some(v))
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else openLive(spark, path, schema, m.partCols, kept, m.dvs,
-        m.colMap)
-    base.filter(col(column) === lit(value).cast(schema(column).dataType))
+    require(value != null,
+      "snapshot: readEquals needs a non-null value (col = NULL " +
+        "matches nothing in SQL; use isNull reads instead)")
+    val v = resolveVersion(spark, path, version)
+    val schema = stateAt(spark, path, v)._1
+    require(schema.fieldNames.contains(column),
+      s"snapshot: readEquals column $column is not in the table " +
+        s"schema (${schema.fieldNames.mkString(", ")})")
+    // the value cast to the column's type, as an external value the
+    // pushed filter carries
+    val dt = schema(column).dataType
+    val typed = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .convertToScala(org.apache.spark.sql.catalyst.expressions.Cast(
+        org.apache.spark.sql.catalyst.expressions.Literal(value), dt,
+        Option(spark.sessionState.conf.sessionLocalTimeZone)).eval(),
+        dt)
+    readWhere(spark, path, v,
+      Seq(sources.EqualTo(column, typed)))
   }
 
   /** ONE-SIDED range file-skipping decision for `column >[=] value`
@@ -3639,9 +3589,7 @@ object Snapshots {
                                  version: Option[Long] = None)
       : Option[String => Boolean] = {
     val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     val m = manifest(f, path, v)
     val schema = m.schema
     if (!schema.fieldNames.contains(column)) return None
@@ -3813,9 +3761,7 @@ object Snapshots {
                                 version: Option[Long] = None)
       : Option[String => Boolean] = {
     val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     val m = manifest(f, path, v)
     val schema = m.schema
     if (!schema.fieldNames.contains(column)) return None
@@ -3849,15 +3795,13 @@ object Snapshots {
     * (StringStartsWith): matching strings occupy exactly the byte
     * range [p, incrementBound(p)), so an entry is kept only when its
     * string bounds overlap it. Same prune-only-on-proof posture as
-    * [[prunedEntriesBound]]. */
+    * [[boundKeepFn]]. */
   private[graft] def prefixKeepFn(spark: SparkSession,
                                   path: String, column: String,
                                   prefix: String,
                                   version: Option[Long] = None)
       : Option[String => Boolean] = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     val m = manifest(fs(spark, path), path, v)
     val schema = m.schema
     if (!schema.fieldNames.contains(column) ||
@@ -3882,6 +3826,98 @@ object Snapshots {
     }
     Some(keep)
   }
+
+  /** The per-entry KEEP predicate of one pushed filter at version
+    * `v` over a table with `schema`, composed structurally over
+    * And/Or (And of an unknown side keeps the known side; Or with an
+    * unknown side proves nothing). Leaves delegate to the manifest
+    * prune predicates — equalities to [[equalsKeepFn]] (hidden-
+    * transform directories AND committed column stats), `IN` to the
+    * union of its point lookups, one-sided ranges to [[boundKeepFn]]
+    * (a SQL `BETWEEN` arrives as the two leaves), `LIKE 'p%'` to
+    * [[prefixKeepFn]], null tests to [[nullKeepFn]] — every one of
+    * which is sound on shard pseudo-entries too, so a whole filter
+    * tree becomes one predicate for one shard-aware walk
+    * ([[pruneWith]]). NOT offers no proof: min/max can prove "no row
+    * matches", never "every row matches". Every leaf is
+    * prune-on-proof and STAYS in-plan — this narrows IO only.
+    */
+  private[graft] def filterKeepFn(spark: SparkSession, path: String,
+                                  v: Long, schema: StructType,
+                                  f: sources.Filter)
+      : Option[String => Boolean] = {
+    val inSchema = schema.fieldNames.toSet
+    def keep(g: sources.Filter): Option[String => Boolean] =
+      filterKeepFn(spark, path, v, schema, g)
+    f match {
+      case sources.And(l, r) =>
+        (keep(l), keep(r)) match {
+          case (Some(a), Some(b)) =>
+            Some((e: String) => a(e) && b(e))
+          case (a, None) => a
+          case (None, b) => b
+        }
+      case sources.Or(l, r) =>
+        for { a <- keep(l); b <- keep(r) }
+          yield (e: String) => a(e) || b(e)
+      case sources.EqualTo(c, x) if x != null && inSchema(c) =>
+        equalsKeepFn(spark, path, c, x, Some(v))
+      case sources.EqualNullSafe(c, x) if x != null && inSchema(c) =>
+        equalsKeepFn(spark, path, c, x, Some(v))
+      case sources.EqualNullSafe(c, null) if inSchema(c) =>
+        // `c <=> NULL` IS `c IS NULL`: null-bearing files only
+        nullKeepFn(spark, path, c, isNull = true, Some(v))
+      case sources.In(c, vs)
+          if inSchema(c) && vs.nonEmpty &&
+            vs.length <= SnapshotBatchScan.MaxStaticInSet &&
+            vs.exists(_ != null) =>
+        // a NULL in the list matches nothing (three-valued IN):
+        // the non-null values' union covers every matchable row
+        val fns = vs.filter(_ != null).toSeq.map(x =>
+          equalsKeepFn(spark, path, c, x, Some(v)))
+        if (fns.exists(_.isEmpty)) None
+        else fns.flatten.reduceOption((a, b) =>
+          (e: String) => a(e) || b(e))
+      case sources.GreaterThan(c, x) if x != null && inSchema(c) =>
+        boundKeepFn(spark, path, c, x, lower = true, Some(v))
+      case sources.GreaterThanOrEqual(c, x)
+          if x != null && inSchema(c) =>
+        boundKeepFn(spark, path, c, x, lower = true, Some(v))
+      case sources.LessThan(c, x) if x != null && inSchema(c) =>
+        boundKeepFn(spark, path, c, x, lower = false, Some(v))
+      case sources.LessThanOrEqual(c, x)
+          if x != null && inSchema(c) =>
+        boundKeepFn(spark, path, c, x, lower = false, Some(v))
+      case sources.StringStartsWith(c, p)
+          if p != null && inSchema(c) =>
+        prefixKeepFn(spark, path, c, p, Some(v))
+      case sources.IsNull(c) if inSchema(c) =>
+        nullKeepFn(spark, path, c, isNull = true, Some(v))
+      case sources.IsNotNull(c) if inSchema(c) =>
+        // Catalyst conjoins IsNotNull onto nearly every predicate:
+        // this skips a sparse column's all-null files on every query
+        // that touches it, and answers None straight from the shard
+        // pseudos on the (common) no-nulls tables
+        nullKeepFn(spark, path, c, isNull = false, Some(v))
+      case _ => None // unknown shape: prune nothing
+    }
+  }
+
+  /** The entries every filter's keep-predicate ([[filterKeepFn]])
+    * keeps: one shard-aware walk of version `v`'s manifest when
+    * `entries` is its full list (`walk`), else a filter of `entries`.
+    */
+  private[graft] def keptByFilters(spark: SparkSession, path: String,
+                                   v: Long, schema: StructType,
+                                   filters: Seq[sources.Filter],
+                                   entries: Seq[String], walk: Boolean)
+      : Seq[String] =
+    filters.flatMap(filterKeepFn(spark, path, v, schema, _))
+      .reduceOption((a, b) => (e: String) => a(e) && b(e)) match {
+      case None => entries
+      case Some(k) if walk => pruneWith(spark, path, v, k)
+      case Some(k) => entries.filter(k)
+    }
 
   /** ONE shard-aware walk applying a composed keep predicate: test
     * each shard's pseudo-entry (skip whole shards the WHOLE filter
@@ -5429,7 +5465,7 @@ object Snapshots {
     * lands one tiny positional delete file per commit, so a
     * long-running merge-on-read table accretes hundreds of delete
     * slivers — eventually tripping the DSv2 routing budget
-    * ([[v2DeleteBytes]]) and degrading every read to the V1
+    * ([[overDeleteBudget]]) and degrading every read to the
     * anti-join plan. This rewrite:
     *
     *   - CONSOLIDATES all positional delete files into one commit's
@@ -6092,9 +6128,7 @@ object Snapshots {
   def properties(spark: SparkSession, path: String,
                  version: Option[Long] = None): Map[String, String] = {
     val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     manifest(f, path, v).props
   }
 
@@ -6179,9 +6213,7 @@ object Snapshots {
             version: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     val m = manifest(f, path, v)
     m.entries.map { e =>
       val rel = relOf(e)
@@ -6255,9 +6287,7 @@ object Snapshots {
                  version: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val f = fs(spark, path)
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot: no committed version under $path"))
+    val v = resolveVersion(spark, path, version)
     val m = manifest(f, path, v)
     m.entries.groupBy(e => partValsOf(relOf(e)).toSeq.sortBy(_._1))
       .map { case (tuple, es) =>

@@ -23,6 +23,17 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   */
 object ScanBridge {
 
+  /** Name the file a reader task is on, as `FileScanRDD` and
+    * `FilePartitionReader` do, so `input_file_name()` and
+    * `input_file_block_start/length()` see it. Readers unset it at
+    * close. */
+  def setInputFile(path: String, start: Long, length: Long): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.set(
+      SparkPath.fromPathString(path).urlEncoded, start, length)
+
+  def unsetInputFile(): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.unset()
+
   /** A (absolutePath, fileLength) → row-iterator read function over
     * parquet files with `dataSchema` on disk, projecting
     * `requiredSchema` (positions must match the scan's readSchema)

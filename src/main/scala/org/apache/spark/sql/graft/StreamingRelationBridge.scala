@@ -16,14 +16,6 @@ object StreamingRelationBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LogicalRelation(rel, isStreaming = true))
 
-  /** The batch LogicalPlan of a resolved relation — what the
-    * `graft_snapshot(...)` table-valued function returns to the
-    * analyzer (`LogicalRelation.apply` is `private[sql]`).
-    */
-  def batchPlanOf(rel: BaseRelation)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    LogicalRelation(rel)
-
   /** Wrap an ARBITRARY batch plan as one STREAMING micro-batch — the
     * change-feed source's batches are composed diffs (exceptAll /
     * joins over changed files), not a single relation, so the

@@ -89,6 +89,44 @@ class EntrySpec extends SparkSpec {
     assert(back.isEmpty, s"second write path is back: $back")
   }
 
+  test("one batch read route: no V1 opt-out or DML strategy, and the " +
+    "public readers reach the anti-join plan only through readWhere") {
+    val gone = Seq("spark.graft.snapshot.v2.enabled", "GraftDmlStrategy",
+      "prunedEntriesString")
+    val back = sources.flatMap { case (rel, src) =>
+      (gone.filter(src.contains) ++
+        """\bprunedEntries\b""".r.findFirstIn(src)).map(n => s"$rel: $n")
+    }
+    assert(back.isEmpty, s"second read route is back: $back")
+    val snapshots = sources.collectFirst {
+      case (rel, s) if rel == "graft/io/Snapshots.scala" => s
+    }.get
+    // a public member of `object Snapshots` runs from its `def` at
+    // two-space indent to the next two-space-indent line
+    val member = """(?m)^  def (\w+)\b""".r
+    val starts = member.findAllMatchIn(snapshots).toSeq
+    val bodies = starts.map { m =>
+      val rest = snapshots.substring(m.end)
+      val end = """(?m)^  \S""".r.findFirstMatchIn(rest)
+        .fold(rest.length)(_.start)
+      m.group(1) -> rest.take(end)
+    }
+    val readers = bodies.filter { case (n, _) =>
+      n.startsWith("read") || n == "rowCount" }
+    val names = Seq("read", "readAsOf", "readTag", "readStaged",
+      "readBetween", "readBetweenStrings", "readEquals", "rowCount")
+    assert(names.forall(readers.map(_._1).contains), readers.map(_._1))
+    val direct = readers.collect { case (n, b) if Seq("openLive",
+      "openEntries", "liveWithId", "entriesRelation").exists(b.contains) => n }
+    assert(direct.isEmpty,
+      s"public readers opening entries past readWhere: $direct")
+    val tvf = sources.collectFirst {
+      case (rel, s) if rel == "graft/GraftExtensions.scala" => s
+    }.get
+    assert(!tvf.contains("entriesRelation"),
+      "graft_snapshot() must return the pinned DSv2 relation")
+  }
+
   test("no `.limit(1).count()` emptiness probe in the engine") {
     // a code-generated limit names its counter after a JVM-wide id, so
     // its generated class never repeats and every call compiles anew;

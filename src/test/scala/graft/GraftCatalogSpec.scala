@@ -81,8 +81,7 @@ class GraftCatalogSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.db.p SELECT * FROM dl")
     val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
     // the layout is real: manifest partition pruning proves on lang
-    val (kept, total) = Snapshots.prunedEntriesString(
-      spark, s"$wh/db/p", "lang", "en", "en")
+    val (kept, total) = plannedBetweenStrings(s"$wh/db/p", "lang", "en", "en")
     assert(kept.nonEmpty && kept.size < total,
       s"no partition layout: kept ${kept.size} of $total")
     assert(spark.sql(

@@ -311,13 +311,18 @@ class PlanRegressionSpec extends SparkSpec {
     // and the predicate still reaches parquet
     assert(p.contains("PushedFilters") && p.contains("LessThan(doc_id,100)"),
       s"pushdown lost:\n$p")
-    // with a pending DV the SAME read gains exactly the anti-join
+    // with a pending DV the SAME read applies it in-scan: still no
+    // join, and exactly the replay's rows
     graft.io.Snapshots.deleteWhere(spark, path,
       col("n_chars") < 300, mode = "mor")
-    val p2 = graft.io.Snapshots.read(spark, path)
+    val mor = graft.io.Snapshots.read(spark, path)
       .filter(col("doc_id") < 100)
-      .queryExecution.executedPlan.toString
-    assert(p2.contains("LeftAnti"), s"mor read must anti-join:\n$p2")
+    val p2 = mor.queryExecution.executedPlan.toString
+    assert(!p2.contains("Join"), s"mor read must not join:\n$p2")
+    val want = docs.filter(col("doc_id") < 100 &&
+      !(col("n_chars") < 300).eqNullSafe(true))
+    assert(mor.count() === want.count())
+    assert(mor.exceptAll(want).isEmpty && want.exceptAll(mor).isEmpty)
   }
 
   test("equality-delete read: the key anti-join BROADCASTS (never a shuffled SMJ on the table side)") {
@@ -329,8 +334,11 @@ class PlanRegressionSpec extends SparkSpec {
     graft.io.Snapshots.deleteKeysEq(spark, path,
       docs.filter(col("doc_id") % 9 === 0).select("doc_id"),
       Seq("doc_id"))
-    val p = graft.io.Snapshots.read(spark, path)
+    // past the delete-shipping budget, where the anti-join plans
+    spark.conf.set(graft.io.Snapshots.MaxDeleteBytesConf, "1")
+    val p = try graft.io.Snapshots.read(spark, path)
       .queryExecution.executedPlan.toString
+    finally spark.conf.unset(graft.io.Snapshots.MaxDeleteBytesConf)
     // the delete-key file is tiny relative to the table - at 100 TB
     // the table side must NOT shuffle to apply a CDC delete batch
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
@@ -355,8 +363,7 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("partitioned snapshot read: Catalyst partition filters prune inside the scan") {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.FilterExec
     val path = java.nio.file.Files
       .createTempDirectory("graft_snap_plan").toString + "/tbl"
     val docs = Tables.t(spark, dir, "documents")
@@ -365,19 +372,12 @@ class PlanRegressionSpec extends SparkSpec {
       partitionBy = Seq("bucket"))
     val df = graft.io.Snapshots.read(spark, path)
       .filter(col("bucket") === 2L)
-    df.collect()
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(scans)
-    }
-    val s = scans(df.queryExecution.executedPlan)
-    assert(s.nonEmpty, df.queryExecution.executedPlan.toString)
-    // the partition predicate must land in PartitionFilters (not as a
-    // row-level data filter) and actually shrink the file set the
-    // SnapshotFileIndex serves
-    assert(s.head.toString.contains("PartitionFilters"), s.head.toString)
-    val scanned = s.head.metrics("numFiles").value
+    // the partition predicate must be answered by the manifest (no
+    // row-level Filter above the scan) and actually shrink the file
+    // set the scan plans
+    assert(df.queryExecution.sparkPlan.collect {
+      case f: FilterExec => f }.isEmpty, df.queryExecution.sparkPlan)
+    val scanned = plannedFiles(df).size
     val total = graft.io.Snapshots.read(spark, path)
       .select(org.apache.spark.sql.functions.input_file_name())
       .distinct().count()

@@ -129,18 +129,6 @@ class SnapshotSpjSpec extends SparkSpec {
     }
   }
 
-  test("spark.graft.snapshot.v2.enabled=false opts back into the V1 read path") {
-    val (cat, _) = freshCatalog()
-    setupTables(cat)
-    withConfs("spark.graft.snapshot.v2.enabled" -> "false") {
-      val df = spark.sql(joinSql(cat))
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("graft-snapshot spj"), p)
-      assert(df.count() ===
-        Tables.t(spark, sf, "orders").count())
-    }
-  }
-
   test("DSv2 path: equality point lookup prunes to one bucket's files and stays exact") {
     val (cat, wh) = freshCatalog()
     setupTables(cat)
@@ -288,7 +276,7 @@ class SnapshotSpjSpec extends SparkSpec {
     }
   }
 
-  test("unpartitioned tables read through the DSv2 per-file scan and agree with the V1 path") {
+  test("unpartitioned tables read through the DSv2 per-file scan and agree with the relational replay") {
     val (cat, wh) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.db")
     spark.sql(s"CREATE TABLE $cat.db.flat (o_orderkey BIGINT, " +
@@ -306,14 +294,10 @@ class SnapshotSpjSpec extends SparkSpec {
         .contains("graft-snapshot spj"))
       df.collect().toSeq
     }
-    val v1 = withConfs(
-      "spark.graft.snapshot.v2.enabled" -> "false") {
-      val df = spark.sql(q)
-      assert(!df.queryExecution.executedPlan.toString
-        .contains("graft-snapshot spj"))
-      df.collect().toSeq
-    }
-    assert(v2.sortBy(_.getLong(0)) === v1.sortBy(_.getLong(0)))
+    val replay = Tables.t(spark, sf, "orders")
+      .filter(col("o_custkey") === 7L)
+      .select("o_orderkey", "o_totalprice").collect().toSeq
+    assert(v2.sortBy(_.getLong(0)) === replay.sortBy(_.getLong(0)))
     assert(v2.nonEmpty)
   }
 
@@ -1071,12 +1055,10 @@ class SnapshotSpjSpec extends SparkSpec {
       .contains("manifest-agg"), nn.queryExecution.executedPlan)
     assert(nn.head.getLong(0) ===
       expect.filter(col("lang").isNotNull).count())
-    // and the V1 path agrees on the equality read
-    val v1 = withConfs("spark.graft.snapshot.v2.enabled" -> "false") {
-      spark.sql(q).agg(count(lit(1)), sum("doc_id"), sum("n_chars"))
-        .head()
-    }
-    assert(v1 === want)
+    // and the relational replay agrees on the projected rows
+    assert(df.collect().toSeq.sortBy(_.getLong(0)) ===
+      expect.filter(col("lang") === "zh").select("doc_id", "n_chars")
+        .collect().toSeq.sortBy(_.getLong(0)))
   }
 
   test("absorbed IN-lists and IS NULL: filtered aggregates stay metadata-only, null semantics exact") {

@@ -383,8 +383,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.compact(spark, path, targetFileBytes = 8L << 10,
       sortBy = Seq("source"))
     // a selective source range provably keeps fewer files than total
-    val (kept, total) = Snapshots.prunedEntriesString(
-      spark, path, "source", "src10", "src13")
+    val (kept, total) = plannedBetweenStrings(path, "source", "src10", "src13")
     assert(total > 1, s"compact produced $total file(s) - widen the spec")
     assert(kept.nonEmpty && kept.size < total,
       s"no string prune: kept ${kept.size} of $total")
@@ -405,8 +404,7 @@ class SnapshotsSpec extends SparkSpec {
     // stats at all
     val parted = newStore
     Snapshots.commit(docs, parted, partitionBy = Seq("lang"))
-    val (keptP, totalP) = Snapshots.prunedEntriesString(
-      spark, parted, "lang", "en", "en")
+    val (keptP, totalP) = plannedBetweenStrings(parted, "lang", "en", "en")
     assert(keptP.nonEmpty && keptP.size < totalP)
     assert(Snapshots.readBetweenStrings(spark, parted, "lang",
       "en", "en").count() === docs.filter(col("lang") === "en").count())
@@ -431,13 +429,11 @@ class SnapshotsSpec extends SparkSpec {
       s"$prefix-lo-000", s"$prefix-lo-049")
     assert(inZone.count() === 50L)
     // below the common prefix everything provably prunes
-    val (kept, total) = Snapshots.prunedEntriesString(
-      spark, path, "k", "a", "aaaa")
+    val (kept, total) = plannedBetweenStrings(path, "k", "a", "aaaa")
     assert(total === 2 && kept.isEmpty,
       s"expected full prune below the prefix, kept $kept")
     // above it too ('b' > every 'aaaa...' string)
-    val (kept2, _) = Snapshots.prunedEntriesString(
-      spark, path, "k", "b", "c")
+    val (kept2, _) = plannedBetweenStrings(path, "k", "b", "c")
     assert(kept2.isEmpty, s"expected full prune above, kept $kept2")
   }
 
@@ -499,8 +495,7 @@ class SnapshotsSpec extends SparkSpec {
       parted.filter(col("bucket") === 2).count())
     // manifest-level partition pruning still proves on the renamed
     // column (stats/paths stay keyed by the physical name)
-    val (kept, total) = Snapshots.prunedEntries(
-      spark, path, "shard", 2.0, 2.0)
+    val (kept, total) = plannedBetween(path, "shard", 2.0, 2.0)
     assert(kept.nonEmpty && kept.size < total,
       s"no partition prune after rename: $kept of $total")
     // dynamic partition overwrite under the new logical name
@@ -942,7 +937,11 @@ class SnapshotsSpec extends SparkSpec {
   test("merge discovery scans only the key columns, never the payload") {
     val path = newStore
     Snapshots.commit(docs, path)
-    val table = Snapshots.read(spark, path)
+    // merge discovers over the manifest relation its internals open
+    val (schema, partCols, entries, _, _) =
+      Snapshots.stateAt(spark, path, 1L)
+    val table = spark.baseRelationToDataFrame(
+      Snapshots.entriesRelation(spark, path, schema, partCols, entries))
     val plan = Snapshots.affectedFilesPlan(
       table, docs.limit(10), Seq("doc_id"))
       .queryExecution.executedPlan.toString
@@ -1167,7 +1166,7 @@ class SnapshotsSpec extends SparkSpec {
       Snapshots.commitAppend(docs.filter(col("doc_id") % 4 === q), path))
     Snapshots.compact(spark, path, targetFileBytes = 16L << 10,
       sortBy = Seq("doc_id"))
-    val (kept, total) = Snapshots.prunedEntries(spark, path, "doc_id",
+    val (kept, total) = plannedBetween(path, "doc_id",
       10, 30)
     assert(total > 1, s"want a multi-file table, got $total")
     assert(kept.size < total,
@@ -1182,7 +1181,7 @@ class SnapshotsSpec extends SparkSpec {
     assert(none.count() === 0L)
     assert(none.columns.toSeq === docs.columns.toSeq)
     // a STRING column carries no stats — pruning keeps every file
-    val (keptS, totalS) = Snapshots.prunedEntries(spark, path, "lang", 0, 1)
+    val (keptS, totalS) = plannedBetween(path, "lang", 0, 1)
     assert(keptS.size === totalS)
     // a double column containing NaN: stats must be dropped for that
     // file so it can never be WRONGLY pruned (NaN compares false
@@ -1191,13 +1190,13 @@ class SnapshotsSpec extends SparkSpec {
     val nanPath = newStore
     Snapshots.commit(Seq((1L, 1.0), (2L, Double.NaN), (3L, 9.0))
       .toDF("id", "v").coalesce(1), nanPath)
-    val (keptN, totalN) = Snapshots.prunedEntries(spark, nanPath, "v",
+    val (keptN, totalN) = plannedBetween(nanPath, "v",
       100, 200)
     assert(keptN.size === totalN,
       "NaN-bearing stats must keep the file, not prune it")
     assert(Snapshots.readBetween(spark, nanPath, "v", 0, 2).count() === 1L)
     // the id column's stats are unaffected by its neighbor's NaN
-    val (keptI, _) = Snapshots.prunedEntries(spark, nanPath, "id", 100, 200)
+    val (keptI, _) = plannedBetween(nanPath, "id", 100, 200)
     assert(keptI.isEmpty, "clean long stats still prune")
     // unknown column refuses
     val e = intercept[IllegalArgumentException](
@@ -1540,7 +1539,7 @@ class SnapshotsSpec extends SparkSpec {
     assert(got.filter(col("bucket") =!= col("doc_id") % 4).count() === 0L)
     // a one-partition range scan keeps ONLY that partition's files -
     // proved from the manifest alone, no footer logic involved
-    val (kept, total) = Snapshots.prunedEntries(spark, path, "bucket", 2, 2)
+    val (kept, total) = plannedBetween(path, "bucket", 2, 2)
     assert(total >= 4, s"want >=4 partition files, got $total")
     assert(kept.nonEmpty && kept.size < total,
       s"partition prune kept ${kept.size}/$total")
@@ -1554,7 +1553,7 @@ class SnapshotsSpec extends SparkSpec {
       .withColumn("bucket", lit(7L))
     Snapshots.commitAppend(extra, path)
     assert(Snapshots.read(spark, path).count() === docs.count() + 3)
-    val (kept7, _) = Snapshots.prunedEntries(spark, path, "bucket", 7, 7)
+    val (kept7, _) = plannedBetween(path, "bucket", 7, 7)
     assert(kept7.nonEmpty && kept7.forall(_.contains("bucket=7")))
   }
 
@@ -1571,7 +1570,7 @@ class SnapshotsSpec extends SparkSpec {
     assert(afterMerge.filter(col("doc_id") % 10 === 0 &&
       col("text") =!= upper(col("text"))).count() === 0L)
     // rewritten files still carry Hive partition dirs (pruning works)
-    val (kept, total) = Snapshots.prunedEntries(spark, path, "bucket", 1, 1)
+    val (kept, total) = plannedBetween(path, "bucket", 1, 1)
     assert(kept.size < total && kept.forall(_.contains("bucket=1")))
     Snapshots.deleteKeys(spark, path,
       parted.filter(col("doc_id") % 10 === 3).select("doc_id"),
@@ -1583,7 +1582,7 @@ class SnapshotsSpec extends SparkSpec {
     val compacted = Snapshots.read(spark, path)
     assert(compacted.count() ===
       docs.count() - docs.filter(col("doc_id") % 10 === 3).count())
-    val (keptC, totalC) = Snapshots.prunedEntries(spark, path, "bucket", 0, 0)
+    val (keptC, totalC) = plannedBetween(path, "bucket", 0, 0)
     assert(keptC.size < totalC && keptC.forall(_.contains("bucket=0")))
   }
 
@@ -1713,10 +1712,10 @@ class SnapshotsSpec extends SparkSpec {
     assert(got.count() === docs.count())
     assert(got.columns.toSeq === Seq("doc_id", "k2", "text"))
     // a selective range on EACH dimension must skip files
-    val (k1, t1) = Snapshots.prunedEntries(spark, path, "doc_id", 0, 40)
+    val (k1, t1) = plannedBetween(path, "doc_id", 0, 40)
     assert(t1 > 2, s"want a multi-file table, got $t1")
     assert(k1.size < t1, s"doc_id prune kept ${k1.size}/$t1")
-    val (k2, t2) = Snapshots.prunedEntries(spark, path, "k2", 0, 40)
+    val (k2, t2) = plannedBetween(path, "k2", 0, 40)
     assert(k2.size < t2, s"k2 prune kept ${k2.size}/$t2")
     // exactness survives the re-layout
     val want = keyed.filter(col("doc_id").between(100, 199))
@@ -1753,7 +1752,7 @@ class SnapshotsSpec extends SparkSpec {
     val got = Snapshots.read(spark, path)
     assert(got.count() === docs.count())
     Seq("doc_id", "k2", "k3").foreach { c =>
-      val (kept, total) = Snapshots.prunedEntries(spark, path, c, 0, 40)
+      val (kept, total) = plannedBetween(path, c, 0, 40)
       assert(total > 2, s"want a multi-file table, got $total")
       assert(kept.size < total, s"$c prune kept ${kept.size}/$total")
     }
@@ -1802,7 +1801,7 @@ class SnapshotsSpec extends SparkSpec {
       zorderBy = Seq("doc_id", "k2", "k3", "k4"))
     assert(Snapshots.read(spark, path).count() === 8000L)
     Seq("doc_id", "k2", "k3", "k4").foreach { c =>
-      val (kept, total) = Snapshots.prunedEntries(spark, path, c, 0, 30)
+      val (kept, total) = plannedBetween(path, c, 0, 30)
       assert(total > 2, s"want a multi-file table, got $total")
       assert(kept.size < total, s"$c prune kept ${kept.size}/$total")
     }
@@ -1994,7 +1993,7 @@ class SnapshotsSpec extends SparkSpec {
     docs.withColumn("bucket", col("doc_id") % 4).write
       .format("graft-snapshot").option("partitionBy", "bucket")
       .mode("append").save(parted)
-    val (kept, total) = Snapshots.prunedEntries(spark, parted, "bucket", 1, 1)
+    val (kept, total) = plannedBetween(parted, "bucket", 1, 1)
     assert(kept.size < total && kept.forall(_.contains("bucket=1")))
     // streaming sink: one append commit per micro-batch through the
     // standard writeStream API

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session;
@@ -8,6 +9,34 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Store-relative paths of the data files the DSv2 snapshot scans
+    * in `df`'s physical plan read — their planned input partitions,
+    * after the scan's manifest pruning. */
+  def plannedFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case b: BatchScanExec => b.scan
+    }.collect { case s: graft.io.SnapshotBatchScan =>
+      s.planInputPartitions().toSeq.map(
+        _.asInstanceOf[graft.io.SnapshotInputPartition].rel)
+    }.flatten.distinct
+
+  /** The data files a store's latest version lists. */
+  def storeFiles(path: String): Int =
+    graft.io.Snapshots.stateAt(spark, path,
+      graft.io.Snapshots.latestVersion(spark, path).get)._3.size
+
+  /** (files a `readBetween` plans, files the store lists). */
+  def plannedBetween(path: String, column: String, lo: Double,
+                     hi: Double): (Seq[String], Int) =
+    (plannedFiles(graft.io.Snapshots.readBetween(spark, path, column,
+      lo, hi)), storeFiles(path))
+
+  /** (files a `readBetweenStrings` plans, files the store lists). */
+  def plannedBetweenStrings(path: String, column: String, lo: String,
+                            hi: String): (Seq[String], Int) =
+    (plannedFiles(graft.io.Snapshots.readBetweenStrings(spark, path,
+      column, lo, hi)), storeFiles(path))
 }
 
 object SparkSpec {
