@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 import graft.functions.TextAnalysis
 
 /** Deduplication operators for training-data pipelines, all designed
@@ -325,51 +326,133 @@ object Dedup {
         col("jaccard"))
   }
 
-  /** Connected-components clustering of near-duplicate pairs — the step
-    * between pair generation ([[jaccardPairs]] / [[fuzzy]]) and survivor
-    * selection: transitively-linked documents form one cluster, labeled
-    * by the minimal member id. Output: `(doc_id, cluster_id)` for every
-    * id in `docs`; singletons label themselves.
-    *
-    * Algorithm: iterative min-label propagation with ADAPTIVE POINTER
-    * JUMPING. Each round (a) joins the current labels across the
-    * (symmetrized) edge list and takes the minimum neighbor label;
-    * from round 3 on it also (b) path-compresses: every node's label
-    * is re-mapped through the label-node's own label (Shiloach–
-    * Vishkin-style pointer doubling). Step (b) lets a label travel the
-    * distance ALREADY covered by its parent each round, so chains
-    * converge in O(log diameter) rounds instead of O(diameter) — while
-    * the overwhelmingly common case (tiny cliques, converged in 2
-    * pull-only rounds) never pays the compression join at all.
-    *
-    * Execution shape — ONE materialization job per round, by design:
-    * the convergence check is FOLDED into the round itself. Each
-    * node's pre-round label rides the pull aggregate as
-    * `min(cluster_id) over the self row` (`old_label`), so a
-    * `changed` flag falls out of the round's own columns, the round
-    * localCheckpoints, and the fixpoint probe is a trivial aggregate
-    * over the already-materialized blocks. The previous cadence
-    * design (checkpoint every 3rd round, probe via a join against
-    * the lazy tail) re-executed up to two rounds of joins per probe
-    * — and the interplay of those replays with AQE made the round's
-    * SHUFFLE BYTES run-variant, breaking the repo's own
-    * "shuffle bytes are the plan tripwire" methodology on its most
-    * expensive gate. One eager job per round is both cheaper (no
-    * replay) and byte-deterministic (fixed inputs → fixed plan →
-    * fixed shuffle). The executed round count is published at
-    * [[lastClusterRounds]] for gates/bench to record. `maxIter`
-    * bounds pathological graphs.
-    */
   /** Executed round count of the most recent [[clusters]] call in
     * this JVM — published so gates and bench runs can record the
     * iteration depth next to the timing (a convergence regression
     * shows as a round-count jump even when wall-time noise hides it).
+    * A call that labelled its pair graph on the driver ran no round
+    * and reads 0.
     */
   val lastClusterRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Connected-components clustering of near-duplicate pairs — the step
+    * between pair generation ([[jaccardPairs]] / [[fuzzy]]) and survivor
+    * selection: transitively-linked documents form one cluster, labeled
+    * by the minimal member id. Output: `(doc_id, cluster_id)`, both
+    * long, for every id in `docs`; singletons label themselves. Pairs
+    * with a NULL endpoint link nothing.
+    *
+    * Execution shape — two paths, picked by the pair table's size. The
+    * staged pair table is cached, then ONE bounded collect,
+    * `limit(n + 1)`, reads it, where n = `spark.sql.
+    * autoBroadcastJoinThreshold` / 16 (two 8-byte ids per pair). That
+    * is Spark's own "small enough to ship whole" size, so no option of
+    * its own decides the split. With broadcasting off (threshold ≤ 0,
+    * so n = 0) there is no collect and every graph takes the rounds.
+    *
+    *  - At most n pairs (integral ids): the driver labels the graph
+    *    with union-find — the larger root is linked under the smaller,
+    *    finds path-compress — so every component's root is its minimum
+    *    member, exactly the rounds' fixpoint. `docs` is left-joined to
+    *    those labels as a local relation: no edge cache, checkpoint or
+    *    round runs, `maxIter` and `reliable` have nothing to bound or
+    *    checkpoint, and [[lastClusterRounds]] reads 0. Near-dup graphs
+    *    are a sliver of the corpus, so this is the common case: the
+    *    collect replaces the rounds' dozen or more jobs.
+    *  - More pairs: distributed min-label propagation with ADAPTIVE
+    *    POINTER JUMPING. Each round (a) joins the current labels across
+    *    the (symmetrized) edge list and takes the minimum neighbor
+    *    label; from round 3 on it also (b) path-compresses: every
+    *    node's label is re-mapped through the label-node's own label
+    *    (Shiloach–Vishkin-style pointer doubling), so chains converge
+    *    in O(log diameter) rounds instead of O(diameter), while tiny
+    *    cliques converge in 2 pull-only rounds and never pay the
+    *    compression join. Each round is ONE materialization job: the
+    *    node's pre-round label rides the pull aggregate as `old_label`,
+    *    so a `changed` flag falls out of the round's own columns, the
+    *    round is cut (`reliable` picks durable checkpoints over
+    *    executor-lifetime blocks, see [[graft.graph.Graph.cut]]), and
+    *    the fixpoint probe reads the materialized blocks — no replay,
+    *    and fixed inputs give fixed shuffle bytes. [[lastClusterRounds]]
+    *    records the executed rounds; a graph still unconverged after
+    *    `maxIter` rounds throws rather than return partial labels.
+    */
   def clusters(docs: DataFrame, pairs: DataFrame,
                idCol: String = "doc_id", maxIter: Int = 20,
                reliable: Boolean = false): DataFrame = {
+    // materialize the pair table ONCE: the size probe reads it, and
+    // the rounds' symmetric union reads it twice more (one branch per
+    // direction), so an un-materialized pairs plan — a full PPJoin
+    // verify for the Jaccard gates — would EXECUTE again per read
+    // (guide §1.2 #1: don't recompute what you already have).
+    // Unpersisted once labelled, or right after the rounds' edge cache
+    // materializes.
+    // in-partition sort BEFORE caching, same reasoning as the rounds'
+    // edge cache: the pair generator's last shuffle emits rows in
+    // map-block arrival order, so unsorted cached blocks would make
+    // the mirror union's map outputs — and the edge repartition's
+    // compressed shuffle BYTES — run-variant (observed: ±2% on
+    // q_dedup_clusters between otherwise byte-identical runs). The
+    // sort pins block content; the staged pair table is a sliver, so
+    // the one-time in-partition sort is noise next to pair generation.
+    val p = pairs.select(col("doc_a"), col("doc_b"))
+      .sortWithinPartitions("doc_a", "doc_b").cache()
+    val labels = driverLabels(p) match {
+      case Some(small) =>
+        p.unpersist()
+        lastClusterRounds.set(0)
+        small
+      case None => roundLabels(p, maxIter, reliable)
+    }
+    docs.select(col(idCol).cast("long").as("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+  }
+
+  /** `(doc_id, cluster_id)` for every endpoint of the pairs in `p`,
+    * labelled on the driver, or None when `p` holds more than
+    * `autoBroadcastJoinThreshold / 16` pairs (see [[clusters]]) or a
+    * non-integral id column. One bounded collect reads `p`. */
+  private def driverLabels(p: DataFrame): Option[DataFrame] = {
+    val spark = p.sparkSession
+    val n = math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16,
+      Int.MaxValue - 1L)
+    val integral = p.schema.forall(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    if (n <= 0 || !integral) return None
+    val rows = p.limit(n.toInt + 1).collect()
+    if (rows.length > n) return None
+    val parent = scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val a = r.getAs[Number](0).longValue
+        val b = r.getAs[Number](1).longValue
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    val labels = parent.keys.toArray.sorted.map(k => Row(k, find(k)))
+    Some(spark.createDataFrame(java.util.Arrays.asList(labels: _*),
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("cluster_id", LongType)))))
+  }
+
+  /** [[clusters]]' distributed rounds over the cached pair table `p`,
+    * which they unpersist: `(doc_id, cluster_id)` for every endpoint. */
+  private def roundLabels(p: DataFrame, maxIter: Int,
+                          reliable: Boolean): DataFrame = {
     import graft.graph.Graph.cut
     // sortWithinPartitions before caching: a shuffle's reduce side
     // emits rows in map-block ARRIVAL order (genuinely
@@ -388,22 +471,6 @@ object Dedup {
     // operations keyed the same way share one exchange). The sort
     // still pins block content, so shuffle bytes stay
     // run-deterministic — the bench tripwire this cache exists for.
-    // materialize the pair table ONCE before mirroring it: the
-    // symmetric union below reads `pairs` twice (one branch per
-    // direction), and an un-materialized pairs plan — a full PPJoin
-    // verify for the Jaccard gates — would EXECUTE twice (guide
-    // §1.2 #1: don't recompute what you already have). Unpersisted
-    // right after the edge cache materializes.
-    // in-partition sort BEFORE caching, same reasoning as the edges
-    // cache below: the pair generator's last shuffle emits rows in
-    // map-block arrival order, so unsorted cached blocks would make
-    // the mirror union's map outputs — and the edge repartition's
-    // compressed shuffle BYTES — run-variant (observed: ±2% on
-    // q_dedup_clusters between otherwise byte-identical runs). The
-    // sort pins block content; the staged pair table is a sliver, so
-    // the one-time in-partition sort is noise next to pair generation.
-    val p = pairs.select(col("doc_a"), col("doc_b"))
-      .sortWithinPartitions("doc_a", "doc_b").cache()
     // one exchange, not two: hash-partition the mirrored rows by the
     // pull-join key FIRST (explicit count — a bare repartition(col)
     // is AQE-coalescible and the no-per-round-exchange property below
@@ -414,7 +481,7 @@ object Dedup {
     // distinct exchange AND a dst repartition exchange over the full
     // edge table (guide §2.4: two operations keyed compatibly should
     // share one exchange).
-    val nPart = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    val nPart = p.sparkSession.sessionState.conf.numShufflePartitions
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(
         p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -515,10 +582,7 @@ object Dedup {
         s"label propagation did not converge within maxIter=$maxIter " +
           "rounds; the near-dup graph has a component with diameter > " +
           s"$maxIter — raise maxIter or investigate the pair generator")
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+    labels
   }
 
   /** C4-style line-level dedup: across the whole corpus, every repeated

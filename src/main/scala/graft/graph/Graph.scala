@@ -258,10 +258,16 @@ object Graph {
 
   /** Connected components of the UNDIRECTED graph induced by the edge
     * table: `(id, component)` for every node, labeled by the minimal
-    * member id — [[graft.dedup.Dedup.clusters]]' adaptive pointer-
-    * jumping label propagation (O(log diameter) rounds, fixpoint-
-    * checked, loud on non-convergence) exposed under the graph API it
-    * belongs to. Self-loops are fine (they never move a label);
+    * member id — [[graft.dedup.Dedup.clusters]] exposed under the graph
+    * API it belongs to, with both of its paths. An edge table of at
+    * most `spark.sql.autoBroadcastJoinThreshold / 16` edges (integral
+    * ids) is labelled on the driver by union-find after one bounded
+    * collect: no round runs, `maxIter` and `reliable` do not apply, and
+    * `Dedup.lastClusterRounds` reads 0. A larger table runs the
+    * adaptive pointer-jumping label propagation (O(log diameter)
+    * rounds, each cut durably when `reliable`, fixpoint-checked, loud
+    * when `maxIter` rounds do not converge). Self-loops are fine (they
+    * never move a label); edges with a NULL endpoint are dropped;
     * isolated ids never appear (the node set IS the edge endpoints —
     * pass a `docs` frame to [[graft.dedup.Dedup.clusters]] directly
     * to label a wider universe with singletons).

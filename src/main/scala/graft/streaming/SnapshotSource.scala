@@ -5,8 +5,9 @@ import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation,
-  CreatableRelationProvider, DataSourceRegister, RelationProvider,
-  StreamSinkProvider, StreamSourceProvider}
+  CreatableRelationProvider, DataSourceRegister, Filter,
+  PrunedFilteredScan, RelationProvider, StreamSinkProvider,
+  StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 import graft.io.Snapshots
 
@@ -367,18 +368,21 @@ class SnapshotSourceProvider extends StreamSourceProvider
     if (dvs.isEmpty && colMap.isEmpty)
       Snapshots.entriesRelation(spark, path, schema, partCols, entries)
     else {
-      // merge-on-read deletes need the anti-join applied: serve a
-      // TableScan over the live read (correctness over pushdown on
-      // this DSv1 path; the plan-native reads keep full pruning)
-      val live = Snapshots.read(spark, path, Some(v))
+      // delete files and renamed columns need the snapshot scan's
+      // merge-on-read: each scan is the version-pinned DSv2 read with
+      // Spark's pushed filters (manifest and shard skipping) and only
+      // the required columns; Spark re-applies every filter above
       val sql = sqlContext
-      new org.apache.spark.sql.sources.BaseRelation
-        with org.apache.spark.sql.sources.TableScan {
+      val liveSchema = Snapshots.readWhere(spark, path, v).schema
+      new BaseRelation with PrunedFilteredScan {
         override val sqlContext: SQLContext = sql
-        override def schema: StructType = live.schema
-        override def buildScan()
-            : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-          live.rdd
+        override def schema: StructType = liveSchema
+        override def buildScan(cols: Array[String], filters: Array[Filter])
+            : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
+          val df = Snapshots.readWhere(spark, path, v, filters.toSeq)
+          df.select(cols.toSeq.map(c =>
+            df.col("`" + c.replace("`", "``") + "`")): _*).rdd
+        }
       }
     }
   }

@@ -36,13 +36,8 @@ class CodegenReuseSpec extends SparkSpec {
     compiles() - c0
   }
 
-  private def withoutAqe[A](body: => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    val was = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  private def withoutAqe[A](body: => A): A =
+    withSQLConf("spark.sql.adaptive.enabled" -> "false")(body)
 
   /** ~60 documents: 30 distinct bases over a 60-word vocabulary, and
     * 10 near-duplicate chains base → first → second, each hop swapping
@@ -65,30 +60,46 @@ class CodegenReuseSpec extends SparkSpec {
     }.toDF("doc_id", "text", "source")
   }
 
+  /** One curation pass: the leakage-safe split's counts and the
+    * curated ids. */
+  private def curationPass(): (Map[String, Long], Seq[Long]) = {
+    val splits = Curation.leakageSafeSplit(corpus,
+        Dedup.jaccardPairs(corpus, 0.5),
+        Seq("train" -> 90, "valid" -> 95), "test")
+      .groupBy("split").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val kept = Curation.curate(corpus, minChars = 20,
+        maxStopwordRatio = 0.5, stopwords = Seq("w0", "w1"),
+        jaccardThreshold = 0.5)
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    CacheScope.release(spark)
+    (splits, kept)
+  }
+
+  /** Runs two passes; asserts the second returns the same and compiles
+    * no class. Returns the first pass's `lastClusterRounds`. */
+  private def secondPassCompilesNothing(): Int = withoutAqe {
+    val first = curationPass()
+    val rounds = Dedup.lastClusterRounds.get()
+    var second: (Map[String, Long], Seq[Long]) = null
+    val n = compilesOf { second = curationPass() }
+    assert(second === first)
+    assert(first._2.size < corpus.count(), "curation removes near-dups")
+    assert(n === 0L, s"the second pass compiled $n generated classes")
+    rounds
+  }
+
   test("a second curation pass over the same corpus compiles nothing") {
-    val stop = Seq("w0", "w1")
-    def pass(): (Map[String, Long], Seq[Long]) = {
-      val splits = Curation.leakageSafeSplit(corpus,
-          Dedup.jaccardPairs(corpus, 0.5),
-          Seq("train" -> 90, "valid" -> 95), "test")
-        .groupBy("split").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val kept = Curation.curate(corpus, minChars = 20,
-          maxStopwordRatio = 0.5, stopwords = stop, jaccardThreshold = 0.5)
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      CacheScope.release(spark)
-      (splits, kept)
-    }
-    withoutAqe {
-      val first = pass()
-      assert(Dedup.lastClusterRounds.get() > 1,
+    // broadcasting off: the labelling runs its distributed rounds
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(secondPassCompilesNothing() > 1,
         "the chains must make the labelling iterate")
-      var second: (Map[String, Long], Seq[Long]) = null
-      val n = compilesOf { second = pass() }
-      assert(second === first)
-      assert(first._2.size < corpus.count(), "curation removes near-dups")
-      assert(n === 0L, s"the second pass compiled $n generated classes")
     }
+  }
+
+  test("a second curation pass labelled on the driver compiles nothing") {
+    assert(secondPassCompilesNothing() === 0,
+      "the pair graph is small enough to label on the driver")
   }
 
   test("a second same-shaped mergeInto compiles nothing, and a conf " +

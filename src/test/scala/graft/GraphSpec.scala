@@ -80,9 +80,11 @@ class GraphSpec extends SparkSpec {
       sortedRows(Graph.connectedComponents(edges)))
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
     val docs = (1L to 9L).toDF("doc_id")
-    assert(sortedRows(graft.dedup.Dedup.clusters(docs, pairs,
-        reliable = true)) ===
-      sortedRows(graft.dedup.Dedup.clusters(docs, pairs)))
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(sortedRows(graft.dedup.Dedup.clusters(docs, pairs,
+          reliable = true)) ===
+        sortedRows(graft.dedup.Dedup.clusters(docs, pairs)))
+    }
     // durable mode really wrote checkpoint data
     val wrote = new java.io.File(dir).listFiles()
     assert(wrote != null && wrote.nonEmpty, s"no checkpoint data under $dir")

@@ -133,6 +133,28 @@ class SnapshotReadRouteSpec extends SparkSpec {
     assert(Snapshots.rowCount(spark, path) === scanned.toLong)
   }
 
+  test("format(graft-snapshot) loads of a positional-delete table push filters and columns into the scan") {
+    val path = newStore
+    (0L until 400L by 100L).foreach(lo => Snapshots.commitAppend(
+      spark.range(lo, lo + 100L).toDF("k")
+        .withColumn("c", format_string("c%04d", col("k"))).coalesce(1),
+      path))
+    Snapshots.deleteWhere(spark, path, col("k") % 3 === 0, mode = "mor")
+    val total = storeFiles(path)
+    assert(total === 4)
+    def load(k: Long): DataFrame = spark.read.format("graft-snapshot")
+      .option("path", path).load().where(col("k") === k).select("c")
+    graft.io.SnapshotReaderFactory.filesOpened.set(0L)
+    val got = load(250L).collect().toSeq
+    val opened = graft.io.SnapshotReaderFactory.filesOpened.get()
+    assert(got === Seq(Row("c0250")))
+    assert(opened < total, s"opened $opened of $total files")
+    assert(load(252L).collect().isEmpty, "a deleted row stays deleted")
+    val all = spark.read.format("graft-snapshot").option("path", path)
+      .load().select("c").collect().map(_.getString(0)).sorted.toSeq
+    assert(all === (0L until 400L).filter(_ % 3 != 0).map(k => f"c$k%04d"))
+  }
+
   test("input_file_name() names each data file on a catalog table") {
     val wh = java.nio.file.Files.createTempDirectory("graft_ifn").toString
     val cat = s"gifn${System.nanoTime()}"

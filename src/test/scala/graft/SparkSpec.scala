@@ -21,6 +21,17 @@ trait SparkSpec extends AnyFunSuite {
         _.asInstanceOf[graft.io.SnapshotInputPartition].rel)
     }.flatten.distinct
 
+  /** Runs `body` with the given session confs set, restoring each
+    * key's previous value (or unsetting it) afterwards. */
+  def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
+    val was = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally was.foreach { case (k, old) =>
+      old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   /** The data files a store's latest version lists. */
   def storeFiles(path: String): Int =
     graft.io.Snapshots.stateAt(spark, path,

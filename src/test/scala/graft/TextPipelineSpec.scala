@@ -756,39 +756,46 @@ class TextPipelineSpec extends SparkSpec {
   }
 
   test("clusters: transitive pairs form one component, min-id labeled") {
-    import spark.implicits._
-    val docs = (0L to 6L).toDF("doc_id")
-    // components: {0,1,2} via chain 0-1,1-2; {4,5}; singletons 3, 6
-    val pairs = Seq((0L, 1L), (1L, 2L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val out = Dedup.clusters(docs, pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out === Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L,
-      4L -> 4L, 5L -> 4L, 6L -> 6L))
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      import spark.implicits._
+      val docs = (0L to 6L).toDF("doc_id")
+      // components: {0,1,2} via chain 0-1,1-2; {4,5}; singletons 3, 6
+      val pairs = Seq((0L, 1L), (1L, 2L), (4L, 5L)).toDF("doc_a", "doc_b")
+      val out = Dedup.clusters(docs, pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out === Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L,
+        4L -> 4L, 5L -> 4L, 6L -> 6L))
+    }
   }
 
   test("clusters: long chain converges within iteration bound") {
-    import spark.implicits._
-    // a 100-node chain (diameter 99) under maxIter=12 only converges
-    // if pointer jumping gives O(log diameter) rounds — plain 1-hop
-    // propagation would need ~99 rounds and throw
-    val n = 100L
-    val docs = (0L until n).toDF("doc_id")
-    val pairs = (0L until n - 1).map(i => (i + 1, i)).toDF("doc_a", "doc_b")
-    val out = Dedup.clusters(docs, pairs, maxIter = 12).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out.values.forall(_ === 0L), "whole chain collapses to min id")
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      import spark.implicits._
+      // a 100-node chain (diameter 99) under maxIter=12 only converges
+      // if pointer jumping gives O(log diameter) rounds — plain 1-hop
+      // propagation would need ~99 rounds and throw
+      val n = 100L
+      val docs = (0L until n).toDF("doc_id")
+      val pairs = (0L until n - 1).map(i => (i + 1, i))
+        .toDF("doc_a", "doc_b")
+      val out = Dedup.clusters(docs, pairs, maxIter = 12).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out.values.forall(_ === 0L), "whole chain collapses to min id")
+    }
   }
 
   test("clusters: throws instead of returning unconverged labels") {
-    import spark.implicits._
-    // diameter-9 chain cannot converge in 2 rounds — silent partial
-    // labels would pass the gate with wrong data; the contract is throw
-    val docs = (0L until 10L).toDF("doc_id")
-    val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val e = intercept[IllegalStateException] {
-      Dedup.clusters(docs, pairs, maxIter = 2).collect()
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      import spark.implicits._
+      // diameter-9 chain cannot converge in 2 rounds — silent partial
+      // labels would pass the gate with wrong data; the contract is throw
+      val docs = (0L until 10L).toDF("doc_id")
+      val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      val e = intercept[IllegalStateException] {
+        Dedup.clusters(docs, pairs, maxIter = 2).collect()
+      }
+      assert(e.getMessage.contains("maxIter=2"))
     }
-    assert(e.getMessage.contains("maxIter=2"))
   }
 
   test("randomProject: deterministic, linear, zero maps to zero") {
