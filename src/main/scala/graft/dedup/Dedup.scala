@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.TextAnalysis
 
 /** Deduplication operators for training-data pipelines, all designed
@@ -335,6 +335,28 @@ object Dedup {
     */
   val lastClusterRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The most pairs [[clusters]] labels on the driver, whatever the
+    * broadcast threshold. The driver path's cost on the driver grows
+    * with the pairs it collects: about 1.6 KB allocated per pair on the
+    * calling thread (boxed rows, the union-find map, the label rows),
+    * where the rounds allocate a flat ~58 MB of planning there. On a
+    * 4-core box (local[4], synthetic graphs of 3-node cliques and of
+    * 17-node chains with scattered ids), the driver path was the faster
+    * at every size measured, up to 1M pairs; at 100,000 pairs it took
+    * 0.78 s and 7 jobs against the rounds' 1.4 s and 19 jobs (cliques)
+    * or 6.2 s and 109 jobs (chains), allocated 161 MB against 58 MB, and
+    * left the process's peak RSS lower than the rounds did. The bound
+    * thus caps driver memory, not time; a corpus batch holds 121–137
+    * pairs. */
+  private[graft] val DriverLabelMaxPairs = 100000
+
+  /** How many pairs [[clusters]] labels on the driver under a
+    * `spark.sql.autoBroadcastJoinThreshold` of `threshold` bytes: 16
+    * bytes (two long ids) per pair, at most [[DriverLabelMaxPairs]],
+    * and 0 — every graph takes the rounds — with broadcasting off. */
+  private[graft] def driverLabelPairs(threshold: Long): Int =
+    math.max(0L, math.min(threshold / 16, DriverLabelMaxPairs.toLong)).toInt
+
   /** Connected-components clustering of near-duplicate pairs — the step
     * between pair generation ([[jaccardPairs]] / [[fuzzy]]) and survivor
     * selection: transitively-linked documents form one cluster, labeled
@@ -343,16 +365,20 @@ object Dedup {
     * with a NULL endpoint link nothing.
     *
     * Execution shape — two paths, picked by the pair table's size. The
-    * staged pair table is cached, then ONE bounded collect,
-    * `limit(n + 1)`, reads it, where n = `spark.sql.
-    * autoBroadcastJoinThreshold` / 16 (two 8-byte ids per pair). That
-    * is Spark's own "small enough to ship whole" size, so no option of
-    * its own decides the split. With broadcasting off (threshold ≤ 0,
-    * so n = 0) there is no collect and every graph takes the rounds.
+    * staged pair table (ids cast to long) is cached, then ONE bounded
+    * collect, `limit(n + 1)`, reads it, where n =
+    * [[driverLabelPairs]]: `spark.sql.autoBroadcastJoinThreshold` / 16
+    * (two 8-byte ids per pair), capped at [[DriverLabelMaxPairs]]
+    * (100,000) so a raised threshold cannot pull a large graph onto the
+    * driver. The threshold is Spark's own "small enough to ship whole"
+    * size, so no option of its own decides the split. With broadcasting
+    * off (threshold ≤ 0, so n = 0) there is no collect and every graph
+    * takes the rounds; a graph of more than n pairs pays the collect of
+    * n + 1 rows before its rounds.
     *
-    *  - At most n pairs (integral ids): the driver labels the graph
-    *    with union-find — the larger root is linked under the smaller,
-    *    finds path-compress — so every component's root is its minimum
+    *  - At most n pairs: the driver labels the graph with union-find —
+    *    the larger root is linked under the smaller, finds
+    *    path-compress — so every component's root is its minimum
     *    member, exactly the rounds' fixpoint. `docs` is left-joined to
     *    those labels as a local relation: no edge cache, checkpoint or
     *    round runs, `maxIter` and `reliable` have nothing to bound or
@@ -395,7 +421,8 @@ object Dedup {
     // q_dedup_clusters between otherwise byte-identical runs). The
     // sort pins block content; the staged pair table is a sliver, so
     // the one-time in-partition sort is noise next to pair generation.
-    val p = pairs.select(col("doc_a"), col("doc_b"))
+    val p = pairs.select(col("doc_a").cast("long").as("doc_a"),
+        col("doc_b").cast("long").as("doc_b"))
       .sortWithinPartitions("doc_a", "doc_b").cache()
     val labels = driverLabels(p) match {
       case Some(small) =>
@@ -412,18 +439,13 @@ object Dedup {
 
   /** `(doc_id, cluster_id)` for every endpoint of the pairs in `p`,
     * labelled on the driver, or None when `p` holds more than
-    * `autoBroadcastJoinThreshold / 16` pairs (see [[clusters]]) or a
-    * non-integral id column. One bounded collect reads `p`. */
+    * [[driverLabelPairs]] pairs (see [[clusters]]). One bounded collect
+    * reads `p`. */
   private def driverLabels(p: DataFrame): Option[DataFrame] = {
     val spark = p.sparkSession
-    val n = math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16,
-      Int.MaxValue - 1L)
-    val integral = p.schema.forall(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-    if (n <= 0 || !integral) return None
-    val rows = p.limit(n.toInt + 1).collect()
+    val n = driverLabelPairs(spark.sessionState.conf.autoBroadcastJoinThreshold)
+    if (n <= 0) return None
+    val rows = p.limit(n + 1).collect()
     if (rows.length > n) return None
     val parent = scala.collection.mutable.LongMap[Long]()
     def find(x: Long): Long = {
@@ -435,8 +457,7 @@ object Dedup {
     }
     rows.foreach { r =>
       if (!r.isNullAt(0) && !r.isNullAt(1)) {
-        val a = r.getAs[Number](0).longValue
-        val b = r.getAs[Number](1).longValue
+        val (a, b) = (r.getLong(0), r.getLong(1))
         parent.getOrElseUpdate(a, a)
         parent.getOrElseUpdate(b, b)
         val (ra, rb) = (find(a), find(b))

@@ -260,13 +260,15 @@ object Graph {
     * table: `(id, component)` for every node, labeled by the minimal
     * member id — [[graft.dedup.Dedup.clusters]] exposed under the graph
     * API it belongs to, with both of its paths. An edge table of at
-    * most `spark.sql.autoBroadcastJoinThreshold / 16` edges (integral
-    * ids) is labelled on the driver by union-find after one bounded
-    * collect: no round runs, `maxIter` and `reliable` do not apply, and
-    * `Dedup.lastClusterRounds` reads 0. A larger table runs the
-    * adaptive pointer-jumping label propagation (O(log diameter)
-    * rounds, each cut durably when `reliable`, fixpoint-checked, loud
-    * when `maxIter` rounds do not converge). Self-loops are fine (they
+    * most `spark.sql.autoBroadcastJoinThreshold / 16` edges, and never
+    * more than 100,000 (`Dedup.DriverLabelMaxPairs`), is labelled on
+    * the driver by union-find after one bounded collect: no round runs,
+    * `maxIter` and `reliable` do not apply, and
+    * `Dedup.lastClusterRounds` reads 0. A larger table, and every table
+    * with broadcasting off, runs the adaptive pointer-jumping label
+    * propagation (each round cut durably when `reliable`,
+    * fixpoint-checked, loud when `maxIter` rounds do not converge).
+    * Self-loops are fine (they
     * never move a label); edges with a NULL endpoint are dropped;
     * isolated ids never appear (the node set IS the edge endpoints —
     * pass a `docs` frame to [[graft.dedup.Dedup.clusters]] directly

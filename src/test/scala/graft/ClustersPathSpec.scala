@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 
 import graft.dedup.Dedup
 
 /** `Dedup.clusters` labels a pair graph of at most
-  * `spark.sql.autoBroadcastJoinThreshold / 16` pairs on the driver and a
-  * larger one in distributed rounds; both paths give the same rows. */
+  * `Dedup.driverLabelPairs(spark.sql.autoBroadcastJoinThreshold)` pairs
+  * on the driver and a larger one in distributed rounds; both paths give
+  * the same rows. */
 class ClustersPathSpec extends SparkSpec {
 
   private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
@@ -79,6 +81,25 @@ class ClustersPathSpec extends SparkSpec {
       assert(pastRounds > 0, "n + 1 pairs take the rounds")
       assert(past.map(_._2) ===
         Seq.fill(n + 2)(0L) ++ ((n + 2) to 10).map(_.toLong))
+    }
+  }
+
+  test("no threshold labels more than DriverLabelMaxPairs pairs on the driver") {
+    val n = Dedup.DriverLabelMaxPairs
+    assert(Dedup.driverLabelPairs(Long.MaxValue) === n)
+    assert(Dedup.driverLabelPairs(16L * n + 16) === n)
+    assert(Dedup.driverLabelPairs(-1) === 0 && Dedup.driverLabelPairs(15) === 0)
+    // disjoint pairs (2i, 2i + 1): two-node components at any size
+    def pairs(m: Int) = spark.range(m)
+      .select((col("id") * 2).as("doc_a"), (col("id") * 2 + 1).as("doc_b"))
+    val docs = spark.range(4).toDF("doc_id")
+    withSQLConf(Threshold -> Long.MaxValue.toString) {
+      val (atCap, capRounds) = labels(docs, pairs(n))
+      assert(capRounds === 0, "DriverLabelMaxPairs pairs take the driver path")
+      val (past, pastRounds) = labels(docs, pairs(n + 1))
+      assert(pastRounds > 0, "one pair more takes the rounds")
+      assert(atCap === Seq(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L))
+      assert(past === atCap)
     }
   }
 }
