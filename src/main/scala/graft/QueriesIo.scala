@@ -656,8 +656,8 @@ private[graft] object QueriesIo {
   }
 
   /** Partition columns in the snapshot manifest
-    * ([[graft.io.Snapshots.commit]] with `partitionBy` +
-    * [[graft.io.SnapshotFileIndex]]): events land Hive-style under
+    * ([[graft.io.Snapshots.commit]] with `partitionBy`, read through
+    * the snapshot DSv2 scan): events land Hive-style under
     * `ym=<yyyymm>/`, and a one-month range read prunes to that
     * month's files from the manifest alone — the month-directory
     * pruning layout (reference `conte-etl-step-2-manager.py:817-821`)

@@ -390,10 +390,17 @@ object Dedup {
     *    the (symmetrized) edge list and takes the minimum neighbor
     *    label; from round 3 on it also (b) path-compresses: every
     *    node's label is re-mapped through the label-node's own label
-    *    (Shiloach–Vishkin-style pointer doubling), so chains converge
-    *    in O(log diameter) rounds instead of O(diameter), while tiny
-    *    cliques converge in 2 pull-only rounds and never pay the
-    *    compression join. Each round is ONE materialization job: the
+    *    (Shiloach–Vishkin-style pointer jumping). Tiny cliques
+    *    converge in 2 pull-only rounds and never pay the compression
+    *    join. The jump does NOT bound chains by O(log diameter) when
+    *    ids are scattered along the chain: measured on synthetic
+    *    graphs with broadcasting off, 17-node chains with scattered
+    *    ids took 17 rounds (109 Spark jobs), about the diameter, and
+    *    65-node chains were still unconverged at the default
+    *    `maxIter` of 20 and threw. So a graph above
+    *    [[DriverLabelMaxPairs]] (or any graph with broadcasting off)
+    *    holding long scattered-id chains can exhaust `maxIter`.
+    *    Each round is ONE materialization job: the
     *    node's pre-round label rides the pull aggregate as `old_label`,
     *    so a `changed` flag falls out of the round's own columns, the
     *    round is cut (`reliable` picks durable checkpoints over
@@ -559,8 +566,10 @@ object Dedup {
       // construction). Near-dup graphs are overwhelmingly tiny cliques
       // that converge in 2 pull-only rounds — those pay nothing; a
       // graph still unconverged by round 3 has proven itself deep, and
-      // compression turns the remaining O(diameter) rounds into
-      // O(log diameter). `pulled` is deliberately NOT checkpointed in
+      // the jump shortens chains whose ids run in chain order, but not
+      // scattered-id chains: those measured about one round per node
+      // (17 rounds for 17 nodes; 65 nodes exhausted maxIter = 20).
+      // `pulled` is deliberately NOT checkpointed in
       // the jump: the self-join's two sides share the aggregate's
       // shuffle (exchange reuse), so the jump costs one extra in-round
       // join, not an extra materialization job per round.

@@ -9,8 +9,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, Filter, PrunedFilteredScan, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -25,8 +24,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * replace commits.
   *
   * `state` replaces the pinned version's (schema, partition columns,
-  * entries, delete files, column map) — a staged append's base plus
-  * staged files ([[Snapshots.readStaged]]).
+  * entries, delete files, column map): a staged append's base plus
+  * staged files ([[Snapshots.readStaged]]), or an explicit file set
+  * with no delete files — the one relation the snapshot internals
+  * open data files through ([[Snapshots.openFiles]]: mutations,
+  * change feeds, sketch passes, streaming batches), their row
+  * identity read from the metadata columns below.
   */
 private[graft] class GraftTable(spark: SparkSession, path: String,
                                 ident: String, version: Option[Long],
@@ -219,31 +222,16 @@ private[graft] class GraftTable(spark: SparkSession, path: String,
     if (!overDeleteBudget) scanBuilder(_ => ())
     else v1ScanBuilder
 
-  /** Past the delete-shipping budget: a V1 relation over
-    * [[Snapshots.readWhere]], which plans the distributed anti-join
-    * over the entries the pushed filters keep. */
+  /** Past the delete-shipping budget: the V1 relation over
+    * [[Snapshots.readWhere]] ([[Snapshots.readWhereRelation]]), which
+    * plans the distributed anti-join. */
   private def v1ScanBuilder: ScanBuilder = new ScanBuilder {
     override def build(): Scan = new V1Scan {
       override def readSchema(): StructType = GraftTable.this.schema()
       override def toV1TableScan[T <: BaseRelation with TableScan](
           context: SQLContext): T =
-        (new BaseRelation with TableScan with PrunedFilteredScan {
-          override val sqlContext: SQLContext = context
-          override def schema: StructType = readSchema()
-          override def buildScan()
-              : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-            buildScan(Array.empty, Array.empty)
-          // Spark re-applies every filter above (unhandledFilters
-          // default = all), so the residual is an IO optimization
-          override def buildScan(requiredColumns: Array[String],
-                                 filters: Array[Filter])
-              : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            val df = Snapshots.readWhere(context.sparkSession, path,
-              pinnedV, filters.toSeq, state)
-            (if (requiredColumns.isEmpty) df
-             else df.select(requiredColumns.map(col).toSeq: _*)).rdd
-          }
-        }).asInstanceOf[T]
+        Snapshots.readWhereRelation(spark, path, pinnedV, state)
+          .asInstanceOf[T]
     }
   }
 

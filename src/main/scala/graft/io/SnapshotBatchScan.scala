@@ -840,16 +840,19 @@ private[graft] final class SnapshotBatchScan(
 
   import SnapshotBatchScan._
 
-  /** Metadata-column request ([[SnapshotBatchScan.MetaFileCol]] /
-    * [[SnapshotBatchScan.MetaPosCol]] in the pruned schema): rows
-    * must carry their (file, pos) identity, so every file reads
-    * WHOLE and FILTERLESS (row-group skipping or range splits would
-    * desynchronize position counting) and the reader appends the
-    * two values per row. `reqData` is the pruned schema minus the
-    * metadata columns — what actually reads from parquet.
+  /** Metadata-column requests in the pruned schema. The file path
+    * ([[SnapshotBatchScan.MetaFileCol]]) is constant per input
+    * partition and rides with the identity partition values, so a
+    * file-only scan keeps columnar batches, row-group pruning and
+    * range splits. A position request ([[SnapshotBatchScan.MetaPosCol]])
+    * makes every file read WHOLE and FILTERLESS (row-group skipping
+    * or range splits would desynchronize position counting) and the
+    * reader appends the position per row. `reqData` is the pruned
+    * schema minus the metadata columns — what actually reads from
+    * parquet.
     */
-  private val withMeta =
-    required.fields.exists(f => MetaNames(f.name))
+  private val withFile = required.fieldNames.contains(MetaFileCol)
+  private val withPos = required.fieldNames.contains(MetaPosCol)
   private val reqData =
     StructType(required.fields.filterNot(f => MetaNames(f.name)))
 
@@ -886,6 +889,16 @@ private[graft] final class SnapshotBatchScan(
   private def idRowOf(rel: String): InternalRow =
     Snapshots.identityValuesRow(rel, idFields.map(_.source), idTypes,
       layoutTz)
+
+  /** The per-partition constants the parquet reader appends after
+    * the data columns: identity values, then the file path when
+    * [[withFile]]. */
+  private def partValuesOf(rel: String): InternalRow =
+    if (!withFile && idFields.isEmpty) InternalRow.empty
+    else if (!withFile) idRowOf(rel)
+    else InternalRow.fromSeq(
+      (if (idFields.isEmpty) Nil else idRowOf(rel).toSeq(idTypes)) :+
+        org.apache.spark.unsafe.types.UTF8String.fromString(rel))
 
   /** Catalyst type of each partition-KEY tuple slot, field order:
     * bucket numbers are ints, identity slots their column type. */
@@ -949,9 +962,7 @@ private[graft] final class SnapshotBatchScan(
       // the rowId file column, when requested (row-level DML scans):
       // Spark's runtime GROUP filtering prunes unmatched files
       // before the copy-on-write rewrite reads them
-      (if (withMeta && required.fieldNames.contains(MetaFileCol))
-         Seq(MetaFileCol)
-       else Nil))
+      (if (withFile) Seq(MetaFileCol) else Nil))
       .map(Expressions.column).toArray
 
   // allowed KEY-slot values per field index; absent = no constraint
@@ -1227,7 +1238,6 @@ private[graft] final class SnapshotBatchScan(
   private lazy val partitions: Array[SnapshotInputPartition] = {
     val f = new Path(path).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val empty = InternalRow.empty
     def sliceOf(e: String): FileSlice = {
       val (rel, len, _) = Snapshots.entryMeta(spark, path, e)
       val p = if (Snapshots.isForeignRel(rel)) new Path(rel)
@@ -1249,8 +1259,7 @@ private[graft] final class SnapshotBatchScan(
         keyRowOf(rel).toSeq(keyTypes).mkString("\u0001") + " " + rel
       }.map { e =>
         val rel = Snapshots.relOfEntry(e)
-        SnapshotInputPartition(keyRowOf(rel),
-          if (idFields.isEmpty) empty else idRowOf(rel),
+        SnapshotInputPartition(keyRowOf(rel), partValuesOf(rel),
           Array(sliceOf(e)),
           rowCount = Snapshots.entryMeta(spark, path, e)._3,
           rel = rel)
@@ -1266,8 +1275,8 @@ private[graft] final class SnapshotBatchScan(
       scanEntries.iterator.flatMap { e =>
         val s = sliceOf(e)
         val rel = Snapshots.relOfEntry(e)
-        val idRow = if (idFields.isEmpty) empty else idRowOf(rel)
-        if (s.hasDeletes || withMeta)
+        val idRow = partValuesOf(rel)
+        if (s.hasDeletes || withPos)
           Seq(SnapshotInputPartition(InternalRow.empty, idRow,
             Array(s), rel = rel))
         else (0L until s.fileSize by maxSplit).map(off =>
@@ -1341,7 +1350,7 @@ private[graft] final class SnapshotBatchScan(
     * physical column names (none for metadata-column reads, whose
     * positions must count every row). */
   private lazy val parquetFilters: Seq[Filter] =
-    if (withMeta) Nil
+    if (withPos) Nil
     else filters.flatMap(toPhysicalFilter(colMap.map(_.swap)))
       .filter(_.references.forall(physData.fieldNames.contains))
 
@@ -1360,15 +1369,15 @@ private[graft] final class SnapshotBatchScan(
       reqData.fields.filterNot(f => idLogical(f.name)) ++ eqExtra)
     val physRequired = Snapshots.physicalSchemaOf(dataRequired, colMap)
     val partSchema = StructType(idFields.zip(idTypes).map {
-      case (f, dt) => org.apache.spark.sql.types
-        .StructField(f.source, dt, nullable = true) })
-    // reader emits dataRequired ++ idFields (++ file, pos when
-    // metadata is requested); required wants its own order - map
-    // each required ordinal to the reader's layout
+      case (f, dt) => StructField(f.source, dt, nullable = true) } ++
+      (if (withFile) Seq(StructField(MetaFileCol, StringType)) else Nil))
+    // reader emits dataRequired ++ partSchema (++ pos when requested);
+    // required wants its own order - map each required ordinal to
+    // the reader's layout
     val nData = dataRequired.fields.length
     def readerOrdinal(name: String): Int =
       if (name == MetaFileCol) nData + idFields.length
-      else if (name == MetaPosCol) nData + idFields.length + 1
+      else if (name == MetaPosCol) nData + partSchema.length
       else if (idLogical(name))
         nData + idFields.indexWhere(i => logicalName(i.source) == name)
       else dataRequired.fieldIndex(name)
@@ -1385,7 +1394,7 @@ private[graft] final class SnapshotBatchScan(
     }.toArray
     val conf = spark.sessionState.newHadoopConf()
     // COLUMNAR hand-off for clean and POSITIONAL-delete scans (no
-    // row identity, no per-reader limit/heap, no equality deletes):
+    // row positions, no per-reader limit/heap, no equality deletes):
     // batches flow straight into Spark's codegen'd ColumnarToRow
     // instead of draining a row iterator — the FileSourceScanExec
     // posture. Positional deletes apply as a zero-copy SELECTION
@@ -1395,7 +1404,7 @@ private[graft] final class SnapshotBatchScan(
     // keep row-group pruning and range splits. Equality deletes
     // stay row-based: their kill test probes row VALUES, which a
     // batch would have to materialize row-by-row anyway.
-    val canBatch = !withMeta && pushedLimit.isEmpty &&
+    val canBatch = !withPos && pushedLimit.isEmpty &&
       pushedTopN.isEmpty && !dvs.exists(_.startsWith("eq:"))
     val batchRead =
       if (canBatch)
@@ -1421,7 +1430,7 @@ private[graft] final class SnapshotBatchScan(
       ordinals,
       required.fields.map(_.dataType),
       eqApplies,
-      withMeta,
+      withPos,
       batchReadFunc = batchRead,
       plainBatchReadFunc = plainBatchRead,
       readCap = pushedLimit,
@@ -1854,7 +1863,7 @@ private[graft] final class SnapshotReaderFactory(
     ordinals: Array[Int],
     outTypes: Array[org.apache.spark.sql.types.DataType],
     eqApplies: Array[EqApply] = Array.empty,
-    withMeta: Boolean = false,
+    withPos: Boolean = false,
     batchReadFunc: Option[(String, Long, Long, Long, InternalRow)
       => Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]] =
       None,
@@ -1981,19 +1990,18 @@ private[graft] final class SnapshotReaderFactory(
       }
   }
 
-  /** Same, but every surviving row carries its (file, pos) identity
-    * appended after the data + partition-value columns — the delta
-    * rowId of Spark's row-level DML. Positions are PHYSICAL (deleted
-    * rows advance the counter), so a positional delete written
-    * against them composes with existing delete files exactly.
+  /** Same, but every surviving row carries its physical position
+    * appended after the data + partition-value columns — with the
+    * file path among the latter, the delta rowId of Spark's
+    * row-level DML. Positions are PHYSICAL (deleted rows advance the
+    * counter), so a positional delete written against them composes
+    * with existing delete files exactly.
     */
-  private def metaRows(fs: FileSlice, idRow: InternalRow, rel: String)
+  private def posRows(fs: FileSlice, idRow: InternalRow)
       : Iterator[InternalRow] = {
     val applies = fs.eqIdx.map(eqApplies)
     val meta = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(2)
-    meta.update(0,
-      org.apache.spark.unsafe.types.UTF8String.fromString(rel))
+      .GenericInternalRow(1)
     val joined =
       new org.apache.spark.sql.catalyst.expressions.JoinedRow
     var pos = 0L
@@ -2008,7 +2016,7 @@ private[graft] final class SnapshotReaderFactory(
           }
         if (posKilled || eqKilled(applies, row)) None
         else {
-          meta.setLong(1, p)
+          meta.setLong(0, p)
           Some(joined(row, meta))
         }
       }
@@ -2029,7 +2037,7 @@ private[graft] final class SnapshotReaderFactory(
         .flatMap { fs =>
           SnapshotReaderFactory.filesOpened.incrementAndGet()
           ScanBridge.setInputFile(fs.path, fs.start, fs.len)
-          if (withMeta) metaRows(fs, slice.idRow, slice.rel)
+          if (withPos) posRows(fs, slice.idRow)
           else if (fs.hasDeletes) liveRows(fs, slice.idRow)
           else readFunc(fs.path, fs.start, fs.len, fs.fileSize,
             slice.idRow)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, log,
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StructType, TimestampType}
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Snapshot-versioned parquet store: manifest-based time travel,
   * rollback and retention over immutable data files — the minimal
@@ -1692,15 +1692,14 @@ object Snapshots {
       val cols = autoNdvColumns(baseProps, schema, partCols, colMap)
       if (cols.isEmpty || fresh.isEmpty) fresh
       else {
-        val sk = ndvSketchPass(spark, path,
-          toPhysicalSchema(schema, colMap), partCols, fresh, cols)
+        val sk = ndvSketchPass(spark, path, base.getOrElse(0L), schema,
+          partCols, colMap, fresh, cols)
         val bloomPhys = bloomColumnsOf(baseProps, colMap, cols)
         val bl =
           if (bloomPhys.isEmpty)
             Map.empty[String, Map[String, (Int, Int, Array[Long])]]
-          else bloomSketchPass(spark, path,
-            toPhysicalSchema(schema, colMap), partCols, fresh,
-            bloomPhys, sk)
+          else bloomSketchPass(spark, path, base.getOrElse(0L), schema,
+            partCols, colMap, fresh, bloomPhys, sk)
         fresh.map(e => amendBloomEntry(amendNdvEntry(e, sk), bl,
           toPhysicalSchema(schema, colMap)))
       }
@@ -1904,9 +1903,8 @@ object Snapshots {
           Map.empty)
         if (cols.isEmpty || entries0.isEmpty) entries0
         else {
-          val sk = ndvSketchPass(spark, path,
-            toPhysicalSchema(nullableAll(schema), Map.empty), specs,
-            entries0, cols)
+          val sk = ndvSketchPass(spark, path, 0L, nullableAll(schema),
+            specs, Map.empty, entries0, cols)
           entries0.map(e => amendNdvEntry(e, sk))
         }
       }
@@ -2026,7 +2024,7 @@ object Snapshots {
         requireLocalEntries(st.entries, path, "overwrite into")
         val affected =
           if (st.entries.isEmpty) Set.empty[String]
-          else liveWithId(spark, path, s2, st.partCols, st.entries,
+          else liveWithId(spark, path, st.v, s2, st.partCols, st.entries,
               st.dvs, map2)
             .filter(coalesce(cond, lit(false)))
             .select(DvFileCol).distinct()
@@ -2037,7 +2035,7 @@ object Snapshots {
         val (dirs2, fresh2) =
           if (affected.isEmpty) (Nil, Nil)
           else {
-            val survivors = openLive(spark, path, s2, st.partCols,
+            val survivors = openLive(spark, path, st.v, s2, st.partCols,
               st.entries.filter(e => affected(relOf(e))), st.dvs, map2)
               .filter(not(coalesce(cond, lit(false))))
             val (d2, f2) = writeBatchFiles(spark, survivors, path,
@@ -2292,16 +2290,20 @@ object Snapshots {
                                 at: Option[Long],
                                 idTypes: Seq[DataType]): String =
     if (!idTypes.contains(TimestampType)) "UTC"
-    else at.orElse(latestVersion(spark, path)).flatMap(v =>
-      manifest(fs(spark, path), path, v).props.get(LayoutTzProp))
+    // version 0 (files no version lists yet) lays out in UTC, the
+    // zone every new table is stamped with
+    else at.orElse(latestVersion(spark, path)).filter(_ > 0L)
+      .flatMap(v =>
+        manifest(fs(spark, path), path, v).props.get(LayoutTzProp))
       .getOrElse("UTC")
 
   /** An entry's IDENTITY partition values as a catalyst row in the
-    * given fields' order (internal values, the same cast
-    * [[entriesRelation]] applies, under the layout zone `tz`) —
-    * [[SnapshotBatchScan]] attaches them per input partition so the
-    * parquet reader reconstructs directory-borne columns. `idFields`
-    * are PHYSICAL names; `dts` their logical types.
+    * given fields' order (internal values, the same string→type
+    * cast Spark's partition discovery applies, under the layout
+    * zone `tz`) — [[SnapshotBatchScan]] attaches them per input
+    * partition so the parquet reader reconstructs directory-borne
+    * columns. `idFields` are PHYSICAL names; `dts` their logical
+    * types.
     */
   private[graft] def identityValuesRow(rel: String,
                                        idFields: Seq[String],
@@ -2328,73 +2330,23 @@ object Snapshots {
           dt, Option(tz)).eval(null)
     }
 
-  /** Build the scan relation for a set of manifest entries —
-    * [[SnapshotFileIndex]] under a `HadoopFsRelation`: the manifest
-    * IS the file index (partition values and byte sizes come from
-    * the entries, never from directory listing or file stats), so
-    * planning costs zero filesystem metadata calls and Catalyst
-    * partition pruning works across commit generations where
-    * Hive-style directory inference structurally cannot.
-    * Unpartitioned stores are the one-partition degenerate case of
-    * the same path. Also the relation behind [[SnapshotSource]]'s
-    * streaming batches.
+  /** The one relation that turns snapshot data files into rows: the
+    * DSv2 relation over a [[GraftTable]] whose explicit state holds
+    * exactly `entries`, no delete files, and version `v`'s schema,
+    * partition columns and column map. Every read of data files
+    * outside the catalog scan — mutation internals, change feeds,
+    * sketch passes, streaming batches — opens them here, so the scan
+    * alone decides how a file becomes rows; row identity is its
+    * [[DvFileCol]]/[[DvPosCol]] metadata columns. `v` pins the
+    * manifest the scan's pruning and layout zone consult (0 for
+    * files no version lists yet).
     */
-  private[graft] def entriesRelation(spark: SparkSession, path: String,
-                                     schema: StructType,
-                                     partCols: Seq[String],
-                                     entries: Seq[String])
-      : sources.BaseRelation = {
-    // hidden-transform fields partition DIRECTORIES only: the source
-    // column lives in the data files, so the relation's partition
-    // schema carries identity fields alone (a transform dir level in
-    // the path is invisible to the reader — pruning on it happens at
-    // the manifest, e.g. readEquals)
-    val idCols = partCols.map(parsePartField)
-      .collect { case PIdentity(s) => s }
-    val partitionSchema = StructType(idCols.map(c => schema(c)))
-    val dataSchema =
-      StructType(schema.fields.filterNot(f => idCols.contains(f.name)))
-    val tz = layoutZone(spark, path, None, idCols.map(schema(_).dataType))
-    val f = fs(spark, path)
-    val qualBase = f.makeQualified(new Path(path))
-    val parts = entries
-      .groupBy(e => idCols.map(c => partValsOf(relOf(e)).get(c)))
-      .toSeq
-      .map { case (vals, es) =>
-        val row = InternalRow.fromSeq(idCols.zip(vals).map {
-          case (c, v) => castPartVal(v, schema(c).dataType, tz) })
-        val files = es.map { e =>
-          val rel = relOf(e)
-          val p = if (isForeignRel(rel)) new Path(rel)
-                  else new Path(qualBase, rel)
-          new FileStatus(entryLen(f, path, e), false, 1, 128L << 20,
-            0L, p)
-        }
-        (row, files)
-      }
-    val index = new SnapshotFileIndex(spark, qualBase,
-      partitionSchema, parts)
-    org.apache.spark.sql.execution.datasources
-      .HadoopFsRelation(index, partitionSchema, dataSchema, None,
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetFileFormat, Map.empty)(spark)
-  }
-
-  /** Open manifest entries as a DataFrame under the snapshot's
-    * schema (manifest column order restored over the relation's
-    * data-then-partition layout).
-    */
-  private def openEntries(spark: SparkSession, path: String,
-                          schema: StructType, partCols: Seq[String],
-                          entries: Seq[String],
-                          colMap: Map[String, String] = Map.empty)
-      : DataFrame = {
-    val phys = toPhysicalSchema(schema, colMap)
-    spark.baseRelationToDataFrame(
-        entriesRelation(spark, path, phys, partCols, entries))
-      .select(phys.fields.zip(schema.fields).map { case (p, l) =>
-        col(p.name).as(l.name) }.toSeq: _*)
-  }
+  private def openFiles(spark: SparkSession, path: String, v: Long,
+                        schema: StructType, partCols: Seq[String],
+                        entries: Seq[String],
+                        colMap: Map[String, String]): DataFrame =
+    readWhere(spark, path, v,
+      state = Some((schema, partCols, entries, Nil, colMap)))
 
   /** Merge-on-read delete files: (file, position) pairs a live read
     * anti-joins out. The Iceberg-v2 positional-delete shape — a
@@ -2402,8 +2354,8 @@ object Snapshots {
     * rewriting whole data files, and [[compact]] applies them
     * physically later.
     */
-  private val DvFileCol = "__graft_file"
-  private val DvPosCol = "__graft_pos"
+  private val DvFileCol = SnapshotBatchScan.MetaFileCol
+  private val DvPosCol = SnapshotBatchScan.MetaPosCol
   private val DvSchema = StructType(Seq(
     org.apache.spark.sql.types.StructField("__file",
       org.apache.spark.sql.types.StringType),
@@ -2413,14 +2365,6 @@ object Snapshots {
   /** The positional-delete file schema, for writers outside this
     * object ([[GraftDeltaWriter]]). */
   private[graft] def dvWriteSchema: StructType = DvSchema
-
-  /** The scanned file's store-relative path, in-plan — the same
-    * `data/c-<uuid>/...` suffix [[relativize]] extracts, computed
-    * from the constant per-file metadata column (no data read).
-    */
-  private def relPathExpr: Column =
-    org.apache.spark.sql.functions.regexp_extract(
-      col("_metadata.file_path"), "^.*/(data/c-[^/]+/.+)$", 1)
 
   private def dvRows(spark: SparkSession, path: String,
                      dvs: Seq[String]): DataFrame =
@@ -2460,26 +2404,23 @@ object Snapshots {
   private[graft] def dvRelOf(d: String): String =
     eqOf(d).map(_.rel).getOrElse(d)
 
-  /** Live rows of `entries` — deletes applied — WITH the row-identity
-    * helper columns ([[DvFileCol]], [[DvPosCol]]) still attached, for
-    * mutation discovery and mor-delete writes. Identity is
-    * materialized BEFORE the anti-join so `_metadata` is never
-    * referenced post-join (both join sides are parquet scans; a
-    * post-join metadata reference would be ambiguous).
+  /** Live rows of `entries` at version `v` — deletes applied by
+    * distributed anti-joins — WITH the row-identity columns
+    * ([[DvFileCol]], [[DvPosCol]]) still attached, for mutation
+    * discovery and mor-delete writes. Identity is selected from
+    * [[openFiles]]' metadata columns BEFORE any join, where the name
+    * still resolves against one relation; a consumer that drops
+    * [[DvPosCol]] keeps the scan's columnar, split read.
     */
-  private def liveWithId(spark: SparkSession, path: String,
+  private def liveWithId(spark: SparkSession, path: String, v: Long,
                          schema: StructType, partCols: Seq[String],
                          entries: Seq[String], dvs: Seq[String],
                          colMap: Map[String, String] = Map.empty)
       : DataFrame = {
-    val phys = toPhysicalSchema(schema, colMap)
-    def withIdOf(es: Seq[String]): DataFrame = spark
-      .baseRelationToDataFrame(
-        entriesRelation(spark, path, phys, partCols, es))
-      .select(phys.fields.zip(schema.fields).map { case (p, l) =>
-        col(p.name).as(l.name) } ++ Seq(
-        relPathExpr.as(DvFileCol),
-        col("_metadata.row_index").as(DvPosCol)): _*)
+    def withIdOf(es: Seq[String]): DataFrame =
+      openFiles(spark, path, v, schema, partCols, es, colMap)
+        .select(schema.fieldNames.map(col).toSeq ++
+          Seq(col(DvFileCol), col(DvPosCol)): _*)
     val pos = dvs.filterNot(_.startsWith("eq:"))
     val eqs = dvs.flatMap(eqOf).sortBy(_.base)
     def afterPos(es: Seq[String]): DataFrame = {
@@ -2596,41 +2537,33 @@ object Snapshots {
     }
   }
 
-  /** Open entries with merge-on-read deletes APPLIED — the read every
-    * consumer of current table state goes through. Without delete
-    * files this is exactly [[openEntries]] (no identity columns, no
-    * join — the common path keeps its plan shape).
+  /** Live rows of `entries` at version `v`, merge-on-read deletes
+    * APPLIED — the read every consumer of current table state goes
+    * through: [[liveWithId]] with the identity columns dropped, so
+    * without delete files the plan is [[openFiles]]' scan alone.
     */
-  private def openLive(spark: SparkSession, path: String,
+  private def openLive(spark: SparkSession, path: String, v: Long,
                        schema: StructType, partCols: Seq[String],
                        entries: Seq[String], dvs: Seq[String],
                        colMap: Map[String, String] = Map.empty)
       : DataFrame =
-    if (dvs.isEmpty)
-      openEntries(spark, path, schema, partCols, entries, colMap)
-    else liveWithId(spark, path, schema, partCols, entries, dvs, colMap)
+    liveWithId(spark, path, v, schema, partCols, entries, dvs, colMap)
       .select(schema.fieldNames.map(col).toSeq: _*)
 
   /** Affected-file discovery, DV-aware: the store-relative paths of
-    * files holding at least one LIVE row matching an update key.
-    * Without DVs this is [[affectedFilesPlan]]'s key-only scan; with
-    * them the same scan plus the row-identity anti-join.
+    * files holding at least one LIVE row matching an update key —
+    * [[affectedFilesPlan]] over [[liveWithId]].
     */
   private def discoverAffected(spark: SparkSession, path: String,
-                               schema: StructType, partCols: Seq[String],
+                               v: Long, schema: StructType,
+                               partCols: Seq[String],
                                entries: Seq[String], dvs: Seq[String],
                                updates: DataFrame, keyCols: Seq[String],
                                colMap: Map[String, String] = Map.empty)
       : Set[String] =
-    if (dvs.isEmpty)
-      affectedFilesPlan(
-        openEntries(spark, path, schema, partCols, entries, colMap),
-        updates, keyCols)
-        .collect().map(r => relativize(r.getString(0))).toSet
-    else liveWithId(spark, path, schema, partCols, entries, dvs, colMap)
-      .select(keyCols.map(col) :+ col(DvFileCol): _*)
-      .join(updates.select(keyCols.map(col): _*), keyCols, "left_semi")
-      .select(DvFileCol).distinct()
+    affectedFilesPlan(
+      liveWithId(spark, path, v, schema, partCols, entries, dvs, colMap),
+      updates, keyCols)
       .collect().map(_.getString(0)).toSet
 
   /** A committed version's (schema, partition columns, entries) —
@@ -2643,8 +2576,7 @@ object Snapshots {
   }
 
   /** The physical-name rendering of a logical schema under a column
-    * mapping — for [[graft.streaming.SnapshotSource]], which builds
-    * scan relations directly from [[entriesRelation]]. */
+    * mapping. */
   private[graft] def physicalSchemaOf(schema: StructType,
                                       colMap: Map[String, String])
       : StructType = toPhysicalSchema(schema, colMap)
@@ -2842,7 +2774,7 @@ object Snapshots {
     requireSameTypes(schema, batch.schema, "overwriteWhere batch")
     val affected =
       if (all.isEmpty) Set.empty[String]
-      else liveWithId(spark, path, schema, partCols, all,
+      else liveWithId(spark, path, v, schema, partCols, all,
           dvs, colMap)
         .filter(coalesce(predicate, lit(false)))
         .select(DvFileCol).distinct()
@@ -2853,7 +2785,7 @@ object Snapshots {
     // the batch (no empty-entry read plan to build)
     val out =
       if (affected.isEmpty) aligned
-      else openLive(spark, path, schema, partCols,
+      else openLive(spark, path, v, schema, partCols,
           all.filter(e => affected(relOf(e))), dvs, colMap)
         .filter(not(coalesce(predicate, lit(false))))
         // carried files still need the old delete markers; markers
@@ -3212,8 +3144,9 @@ object Snapshots {
     * `where` into the scan, which skips files and shards through the
     * manifest keep-predicates ([[filterKeepFn]]) and applies deletes
     * in-scan. Past the delete-shipping budget ([[overDeleteBudget]])
-    * the same keep-predicates select the entries [[openLive]]'s
-    * anti-join plan reads, so point and range reads keep their
+    * the same keep-predicates select the entries [[openLive]] reads:
+    * the same DSv2 scan with no deletes, which the distributed
+    * anti-joins then apply, so point and range reads keep their
     * skipping there too. `where` stays in-plan as the residual
     * (lenient translation: a filter that does not translate is
     * dropped, never narrowed), so skipping is IO-only.
@@ -3232,13 +3165,47 @@ object Snapshots {
               None))
       else {
         val (schema, partCols, entries, dvs, colMap) = table.pinnedState
-        openLive(spark, path, schema, partCols,
+        openLive(spark, path, v, schema, partCols,
           keptByFilters(spark, path, v, schema, where, entries,
             walk = state.isEmpty), dvs, colMap)
       }
     where.flatMap(FilterTranslate.lenient).reduceOption(_ && _)
       .fold(base)(base.filter)
   }
+
+  /** The one V1 relation over [[readWhere]], for the V1 consumers:
+    * the catalog scan past the delete-shipping budget,
+    * `format("graft-snapshot")` loads and streaming micro-batches.
+    * Spark's pushed filters become `readWhere`'s skipping
+    * predicates (it re-applies every filter above), exactly the
+    * required columns are selected, and rows leave as the frame's
+    * own `InternalRow`s — no external-`Row` round trip.
+    */
+  private[graft] def readWhereRelation(spark: SparkSession, path: String,
+                                       v: Long,
+                                       state: Option[TableState] = None)
+      : sources.BaseRelation with sources.TableScan
+        with sources.PrunedFilteredScan =
+    new sources.BaseRelation with sources.TableScan
+        with sources.PrunedFilteredScan {
+      override val sqlContext: org.apache.spark.sql.SQLContext =
+        spark.sqlContext
+      override lazy val schema: StructType =
+        state.getOrElse(stateAt(spark, path, v))._1
+      override def needConversion: Boolean = false
+      override def buildScan()
+          : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+        buildScan(schema.fieldNames, Array.empty)
+      override def buildScan(requiredColumns: Array[String],
+                             filters: Array[sources.Filter])
+          : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
+        val df = readWhere(spark, path, v, filters.toSeq, state)
+        df.select(requiredColumns.toSeq.map(c =>
+            df.col("`" + c.replace("`", "``") + "`")): _*)
+          .queryExecution.toRdd
+          .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
+      }
+    }
 
   /** Time travel BY TIMESTAMP — Delta's `timestampAsOf` posture: the
     * newest version whose manifest file's modification time is at or
@@ -3906,13 +3873,16 @@ object Snapshots {
   /** The entries every filter's keep-predicate ([[filterKeepFn]])
     * keeps: one shard-aware walk of version `v`'s manifest when
     * `entries` is its full list (`walk`), else a filter of `entries`.
+    * Version 0 (files no version lists yet) has no manifest to
+    * consult and keeps every entry.
     */
   private[graft] def keptByFilters(spark: SparkSession, path: String,
                                    v: Long, schema: StructType,
                                    filters: Seq[sources.Filter],
                                    entries: Seq[String], walk: Boolean)
       : Seq[String] =
-    filters.flatMap(filterKeepFn(spark, path, v, schema, _))
+    if (v == 0L) entries
+    else filters.flatMap(filterKeepFn(spark, path, v, schema, _))
       .reduceOption((a, b) => (e: String) => a(e) && b(e)) match {
       case None => entries
       case Some(k) if walk => pruneWith(spark, path, v, k)
@@ -3954,7 +3924,7 @@ object Snapshots {
       appendDelta(spark, path, fromVersion, toVersion)
     if (fresh.isEmpty)
       read(spark, path, Some(toVersion)).limit(0)
-    else openEntries(spark, path, schema, partCols, fresh, colMap)
+    else openFiles(spark, path, toVersion, schema, partCols, fresh, colMap)
   }
 
   /** CHANGE DATA FEED — row-level changes between two committed
@@ -4016,17 +3986,17 @@ object Snapshots {
       val sel = cols.map(col)
       val removedRows =
         if (removed.isEmpty) None
-        else Some(openLive(spark, path, sA, mA.partCols, removed,
+        else Some(openLive(spark, path, v, sA, mA.partCols, removed,
           mA.dvs, mA.colMap).select(sel: _*))
       val addedRows =
         if (added.isEmpty) None
-        else Some(openLive(spark, path, sB, mB.partCols, added,
+        else Some(openLive(spark, path, v + 1, sB, mB.partCols, added,
           mB.dvs, mB.colMap).select(sel: _*))
       // rows a fresh delete file killed: prior live rows at their
       // (file, pos) identities — only files the delete file names
       val morKilled =
         if (freshDvs.isEmpty) None
-        else Some(liveWithId(spark, path, sA, mA.partCols, mA.entries,
+        else Some(liveWithId(spark, path, v, sA, mA.partCols, mA.entries,
             mA.dvs, mA.colMap)
           .join(dvRows(spark, path, freshDvs),
             Seq(DvFileCol, DvPosCol), "left_semi")
@@ -4035,8 +4005,8 @@ object Snapshots {
       // files in its applicability set (present at its base) that
       // match its keys — same-commit markers carry disjoint keys, so
       // no double count within a step
-      def eqMatch(es: Seq[EqDelete], m: SnapManifest, s: StructType)
-          : Option[DataFrame] =
+      def eqMatch(es: Seq[EqDelete], mv: Long, m: SnapManifest,
+                  s: StructType): Option[DataFrame] =
         es.flatMap { e =>
           val baseRels = manifest(f, path, e.base).entries
             .map(relOf).toSet
@@ -4046,12 +4016,12 @@ object Snapshots {
             val logicalCols = e.cols.map(c => m.colMap.getOrElse(c, c))
             val keys = spark.read.parquet(s"$path/${e.rel}")
               .select(e.cols.map(col): _*).toDF(logicalCols: _*)
-            Some(openLive(spark, path, s, m.partCols, applicable,
+            Some(openLive(spark, path, mv, s, m.partCols, applicable,
                 m.dvs, m.colMap)
               .join(keys, logicalCols, "left_semi").select(sel: _*))
           }
         }.reduceOption(_ unionByName _)
-      val eqKilled = eqMatch(freshEqs, mA, sA)
+      val eqKilled = eqMatch(freshEqs, v, mA, sA)
       // rows a REMOVED delete file resurrects (a rollback undoing a
       // mor delete restores the same entries with fewer DVs): B-side
       // live rows the dropped delete file used to kill. When the
@@ -4060,7 +4030,7 @@ object Snapshots {
       // double count.
       val morRevived =
         if (droppedDvs.isEmpty) None
-        else Some(liveWithId(spark, path, sB, mB.partCols, mB.entries,
+        else Some(liveWithId(spark, path, v + 1, sB, mB.partCols, mB.entries,
             mB.dvs, mB.colMap)
           .join(dvRows(spark, path, droppedDvs),
             Seq(DvFileCol, DvPosCol), "left_semi")
@@ -4069,7 +4039,7 @@ object Snapshots {
       // rows it used to kill; a full compact drops the marker while
       // also rewriting the files OUT of its applicability set, so
       // nothing matches and nothing double-counts
-      val eqRevived = eqMatch(droppedEqs, mB, sB)
+      val eqRevived = eqMatch(droppedEqs, v + 1, mB, sB)
       mA = mB
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], endSchema)
@@ -4098,19 +4068,6 @@ object Snapshots {
       .withColumn("_commit_version", lit(0L))
       .limit(0)
     steps.foldLeft(none)(_ unionByName _)
-  }
-
-  /** The store-relative manifest entry for a scanned file's
-    * `_metadata.file_path` URI: everything from the `data/c-<uuid>`
-    * commit directory down (partition subdirectories included) — no
-    * string-matching against the (possibly URI-mangled) base path.
-    */
-  private def relativize(filePath: String): String = {
-    val seg = filePath.split('/')
-    val idx = (seg.length - 2).to(1, -1).find(i =>
-      seg(i - 1) == "data" && seg(i).startsWith("c-"))
-    require(idx.isDefined, s"snapshot: unparseable file path $filePath")
-    seg.drop(idx.get - 1).mkString("/")
   }
 
   /** Current snapshot's version, schema, partition columns, and file
@@ -4195,7 +4152,7 @@ object Snapshots {
     val st @ CurState(v, schema, partCols, dropped, txns, dvs, colMap, all) =
       currentState(spark, path, "merge into")
     requireLocalEntries(all, path, "merge into")
-    val table = openLive(spark, path, schema, partCols, all, dvs, colMap)
+    val table = openLive(spark, path, v, schema, partCols, all, dvs, colMap)
     require(table.columns.sorted.sameElements(updates.columns.sorted),
       s"snapshot: merge updates columns ${updates.columns.sorted.mkString(",")} " +
         s"differ from the table's ${table.columns.sorted.mkString(",")}")
@@ -4219,7 +4176,7 @@ object Snapshots {
           .count().filter(col("count") > 1).isEmpty,
         "snapshot: updates carry duplicate keys - the upsert would be " +
           "non-deterministic; deduplicate (e.g. keep-latest) before merging")
-      val affected = discoverAffected(spark, path, schema, partCols,
+      val affected = discoverAffected(spark, path, v, schema, partCols,
         all, dvs, upd0, keyCols, colMap)
       val carried = all.filterNot(e => affected(relOf(e)))
       val cols = table.columns.toSeq.map(col)
@@ -4227,7 +4184,7 @@ object Snapshots {
       val fresh =
         if (affected.isEmpty) upd // pure insert: nothing to rewrite
         else {
-          val hit = openLive(spark, path, schema, partCols,
+          val hit = openLive(spark, path, v, schema, partCols,
             all.filter(e => affected(relOf(e))), dvs, colMap)
           // whole-row replacement collapses EVERY table row of an
           // updated key into the single update row; if the table
@@ -4305,7 +4262,7 @@ object Snapshots {
       s"snapshot: columns ${expected.filterNot(updates.columns.contains)
         .mkString(",")} missing from updates")
     requireSameTypes(schema, updates.schema, "mergeUpdate updates")
-    val table = openLive(spark, path, schema, partCols, all, dvs, colMap)
+    val table = openLive(spark, path, v, schema, partCols, all, dvs, colMap)
     val keyExprs = keyCols.map(col)
     val upd0 = updates.persist()
     try {
@@ -4314,7 +4271,7 @@ object Snapshots {
           .count().filter(col("count") > 1).isEmpty,
         "snapshot: updates carry duplicate keys - the update would be " +
           "non-deterministic; deduplicate (e.g. keep-latest) first")
-      val affected = discoverAffected(spark, path, schema, partCols,
+      val affected = discoverAffected(spark, path, v, schema, partCols,
         all, dvs, upd0, keyCols, colMap)
       val renamed = upd0.select(keyExprs ++
         setCols.map(c => col(c).as(s"__u_$c")) :+
@@ -4323,7 +4280,7 @@ object Snapshots {
         .getOrElse(lit(true))
       val rewritten =
         if (affected.isEmpty) None
-        else Some(openLive(spark, path, schema, partCols,
+        else Some(openLive(spark, path, v, schema, partCols,
             all.filter(e => affected(relOf(e))), dvs, colMap)
           .join(renamed, keyCols, "left")
           .select(tableCols.map { c =>
@@ -4387,7 +4344,7 @@ object Snapshots {
     val pred = predicate.map(p => coalesce(p, lit(false)))
     val affected = pred match {
       case Some(p) =>
-        liveWithId(spark, path, schema, partCols, all, dvs, colMap)
+        liveWithId(spark, path, v, schema, partCols, all, dvs, colMap)
           .filter(p)
           .select(DvFileCol).distinct()
           .collect().map(_.getString(0)).toSet
@@ -4396,7 +4353,7 @@ object Snapshots {
     if (affected.isEmpty) return v
     val setMap = sets.toMap
     val carried = all.filterNot(e => affected(relOf(e)))
-    val rewritten = openLive(spark, path, schema, partCols,
+    val rewritten = openLive(spark, path, v, schema, partCols,
         all.filter(e => affected(relOf(e))), dvs, colMap)
       .select(schema.fields.toSeq.map { f =>
         setMap.get(f.name) match {
@@ -4559,7 +4516,7 @@ object Snapshots {
         col(t) === col(s"$SrcPrefix$sCol") }.reduce(_ && _)
       val srcKeys = srcR.select(on.map { case (t, sCol) =>
         col(s"$SrcPrefix$sCol").as(t) }: _*)
-      val live = openLive(spark, path, schema, partCols, all, dvs, colMap)
+      val live = openLive(spark, path, v, schema, partCols, all, dvs, colMap)
       val touchesMatched = matched.nonEmpty || notMatchedBySource.nonEmpty
       // SQL cardinality rule: >1 source row matching one target row
       // is an error (which clause output survives would be arbitrary)
@@ -4575,7 +4532,7 @@ object Snapshots {
       val affected: Set[String] =
         if (notMatchedBySource.nonEmpty) all.map(relOf).toSet
         else if (matched.nonEmpty)
-          discoverAffected(spark, path, schema, partCols, all, dvs,
+          discoverAffected(spark, path, v, schema, partCols, all, dvs,
             srcKeys, keyCols, colMap)
         else Set.empty
       def condOf(c: Option[Column], base: Column): Column =
@@ -4590,7 +4547,7 @@ object Snapshots {
           val guarded: Seq[(Column, WhenMatched)] =
             matched.map(cl => (condOf(cl.condition, hit), cl)) ++
             notMatchedBySource.map(cl => (condOf(cl.condition, miss), cl))
-          val joined = openLive(spark, path, schema, partCols,
+          val joined = openLive(spark, path, v, schema, partCols,
               all.filter(e => affected(relOf(e))), dvs, colMap)
             .join(srcR, joinCond, "left")
           val killed = guarded.foldRight(lit(false)) { case ((g, cl), els) =>
@@ -4673,18 +4630,19 @@ object Snapshots {
           s"${t.catalogString} - cast before mutating")))
   }
 
-  /** The merge discovery plan: distinct file paths holding at least
-    * one update key. Split out so SnapshotsSpec can pin its scale
-    * property — the scan reads ONLY the key columns (plus constant
-    * file metadata), never the table's payload.
+  /** The merge discovery plan: distinct store-relative paths of
+    * `table`'s files ([[DvFileCol]]) holding at least one update
+    * key. Split out so SnapshotsSpec can pin its scale property —
+    * the scan reads ONLY the key columns (plus the constant file
+    * path), never the table's payload.
     */
   private[graft] def affectedFilesPlan(table: DataFrame, updates: DataFrame,
                                        keyCols: Seq[String]): DataFrame = {
     val keyExprs = keyCols.map(col)
     table
-      .select(keyExprs :+ col("_metadata.file_path").as("__graft_fp"): _*)
+      .select(keyExprs :+ col(DvFileCol): _*)
       .join(updates.select(keyExprs: _*), keyCols, "left_semi")
-      .select("__graft_fp").distinct()
+      .select(DvFileCol).distinct()
   }
 
   /** Copy-on-write DELETE BY KEY: every table row whose `keyCols`
@@ -4718,19 +4676,19 @@ object Snapshots {
     try {
       requireNoNullKeys(k, keyCols, "deleteKeys keys")
       if (mode == "mor") {
-        val doomed = liveWithId(spark, path, schema, partCols, all,
+        val doomed = liveWithId(spark, path, v, schema, partCols, all,
           dvs, colMap)
           .join(k, keyCols, "left_semi")
           .select(col(DvFileCol).as("__file"), col(DvPosCol).as("__pos"))
         publishMorDelete(spark, path, v, schema, partCols, dropped,
           txns, dvs, colMap, all, doomed, "deleteKeys(mor)")
       } else {
-        val affected = discoverAffected(spark, path, schema, partCols,
+        val affected = discoverAffected(spark, path, v, schema, partCols,
           all, dvs, k, keyCols, colMap)
         if (affected.isEmpty) v
         else {
           val carried = all.filterNot(e => affected(relOf(e)))
-          val survivors = openLive(spark, path, schema, partCols,
+          val survivors = openLive(spark, path, v, schema, partCols,
               all.filter(e => affected(relOf(e))), dvs, colMap)
             .join(k, keyCols, "left_anti")
           writeCommit(spark, survivors, path, carried, schema, partCols,
@@ -4813,21 +4771,21 @@ object Snapshots {
       currentState(spark, path, "delete from")
     requireLocalEntries(all, path, "delete from")
     if (mode == "mor") {
-      val doomed = liveWithId(spark, path, schema, partCols, all,
+      val doomed = liveWithId(spark, path, v, schema, partCols, all,
         dvs, colMap)
         .filter(coalesce(predicate, lit(false)))
         .select(col(DvFileCol).as("__file"), col(DvPosCol).as("__pos"))
       return publishMorDelete(spark, path, v, schema, partCols,
         dropped, txns, dvs, colMap, all, doomed, "deleteWhere(mor)")
     }
-    val affected = liveWithId(spark, path, schema, partCols, all,
+    val affected = liveWithId(spark, path, v, schema, partCols, all,
       dvs, colMap)
       .filter(coalesce(predicate, lit(false)))
       .select(DvFileCol).distinct()
       .collect().map(_.getString(0)).toSet
     if (affected.isEmpty) return v
     val carried = all.filterNot(e => affected(relOf(e)))
-    val survivors = openLive(spark, path, schema, partCols,
+    val survivors = openLive(spark, path, v, schema, partCols,
         all.filter(e => affected(relOf(e))), dvs, colMap)
       .filter(not(coalesce(predicate, lit(false))))
     writeCommit(spark, survivors, path, carried, schema, partCols,
@@ -5022,6 +4980,17 @@ object Snapshots {
     * whatever entry set won (amended rels that were rewritten away
     * simply lose their sketch).
     */
+  /** The rows the sketch passes fold per (file, column): each row's
+    * store-relative file as `__rel`, then every column under its
+    * PHYSICAL name (sketches key on physical columns). */
+  private def sketchRows(spark: SparkSession, path: String, v: Long,
+                         schema: StructType, partCols: Seq[String],
+                         colMap: Map[String, String],
+                         entries: Seq[String]): DataFrame =
+    openFiles(spark, path, v, schema, partCols, entries, colMap)
+      .select(col(DvFileCol).as("__rel") +: schema.fieldNames.toSeq.map(
+        n => col(n).as(toPhysicalName(colMap, n))): _*)
+
   /** The distributed NDV sketch pass, factored so [[analyzeNdv]]
     * (whole-table ANALYZE) and the `stats.ndv.auto` write path
     * (delta-only, at commit) run the IDENTICAL arithmetic — sketches
@@ -5032,14 +5001,14 @@ object Snapshots {
     * distributed via collect_list, never files × registers rows.
     */
   private def ndvSketchPass(spark: SparkSession, path: String,
-                            phys: StructType, partCols: Seq[String],
+                            v: Long, schema: StructType,
+                            partCols: Seq[String],
+                            colMap: Map[String, String],
                             entries: Seq[String],
                             physCols: Seq[String])
       : Map[String, Map[String, (Array[Int], Option[Array[Double]])]] = {
-    val df = spark.baseRelationToDataFrame(
-      entriesRelation(spark, path, phys, partCols, entries))
-      .select(relPathExpr.as("__rel") +: phys.fields.map(f =>
-        col(f.name)): _*)
+    val phys = toPhysicalSchema(schema, colMap)
+    val df = sketchRows(spark, path, v, schema, partCols, colMap, entries)
     // trailing-zero rank of the xxhash64: lsb = h & -h is a power of
     // two, which doubles represent EXACTLY, so round(log2(lsb)) is
     // the true bit index; h == 0 and the sign bit get the max rank
@@ -5222,7 +5191,9 @@ object Snapshots {
     * Returns physCol → (rel → (m, k, words)).
     */
   private def bloomSketchPass(spark: SparkSession, path: String,
-                              phys: StructType, partCols: Seq[String],
+                              v: Long, schema: StructType,
+                              partCols: Seq[String],
+                              colMap: Map[String, String],
                               entries: Seq[String],
                               physCols: Seq[String],
                               ndvRegs: Map[String,
@@ -5230,10 +5201,7 @@ object Snapshots {
                                   (Array[Int], Option[Array[Double]])]])
       : Map[String, Map[String, (Int, Int, Array[Long])]] = {
     import spark.implicits._
-    val df = spark.baseRelationToDataFrame(
-      entriesRelation(spark, path, phys, partCols, entries))
-      .select(relPathExpr.as("__rel") +: phys.fields.map(f =>
-        col(f.name)): _*)
+    val df = sketchRows(spark, path, v, schema, partCols, colMap, entries)
     physCols.flatMap { pc =>
       ndvRegs.get(pc).filter(_.nonEmpty).map { regsByRel =>
         val params = regsByRel.view.mapValues(r =>
@@ -5416,15 +5384,15 @@ object Snapshots {
       s"snapshot: analyzeNdv column $c is identity-partitioned - " +
         "its per-file NDV is 1 by construction; analyze the " +
         "data-borne columns instead"))
-    // sketch keys are STORE-RELATIVE rels (relPathExpr); a shallow
+    // sketch keys are STORE-RELATIVE rels (DvFileCol); a shallow
     // clone's foreign URIs would never match and the commit would
     // silently add nothing - refuse loudly instead
     requireLocalEntries(st.entries, path, "analyze NDV sketches for")
     if (st.entries.isEmpty) return st.v
     val phys = toPhysicalSchema(st.schema, st.colMap)
     val analyzedPhys = columns.map(c => toPhysicalName(st.colMap, c))
-    val sketches = ndvSketchPass(spark, path, phys, st.partCols,
-      st.entries, analyzedPhys)
+    val sketches = ndvSketchPass(spark, path, st.v, st.schema,
+      st.partCols, st.colMap, st.entries, analyzedPhys)
     // bloom blocks ride the analyze for the columns the
     // `stats.bloom.columns` property names (sizing needs the NDV
     // registers this pass just computed)
@@ -5432,8 +5400,8 @@ object Snapshots {
     val blooms =
       if (bloomPhys.isEmpty)
         Map.empty[String, Map[String, (Int, Int, Array[Long])]]
-      else bloomSketchPass(spark, path, phys, st.partCols,
-        st.entries, bloomPhys, sketches)
+      else bloomSketchPass(spark, path, st.v, st.schema, st.partCols,
+        st.colMap, st.entries, bloomPhys, sketches)
     def amend(entry: String): String =
       amendBloomEntry(amendNdvEntry(entry, sketches), blooms, phys)
     val f = fs(spark, path)
@@ -5523,14 +5491,9 @@ object Snapshots {
     // nested-bases rule [[liveWithId]] applies), semi-join the
     // group's rows against every applicable delete's key file
     val converted: Option[DataFrame] = if (!convert) None else {
-      val phys = toPhysicalSchema(st.schema, st.colMap)
-      def idOf(es: Seq[String]): DataFrame = spark
-        .baseRelationToDataFrame(
-          entriesRelation(spark, path, phys, st.partCols, es))
-        .select(phys.fields.zip(st.schema.fields).map {
-          case (p, l) => col(p.name).as(l.name) } ++ Seq(
-          relPathExpr.as(DvFileCol),
-          col("_metadata.row_index").as(DvPosCol)): _*)
+      // each group's rows with identity, before any delete applies
+      def idOf(es: Seq[String]): DataFrame = liveWithId(spark, path,
+        st.v, st.schema, st.partCols, es, Nil, st.colMap)
       val baseRels: Seq[Set[String]] =
         eqs.map(e => manifest(f, path, e.base).entries.map(relOf).toSet)
       val groups = st.entries.groupBy { en =>
@@ -5701,7 +5664,7 @@ object Snapshots {
       dvs.isEmpty &&
       !selected.exists(e => isForeignRel(relOf(e)))) return v
     if (selected.isEmpty) return v
-    val table = openLive(spark, path, schema, partCols, selected, dvs,
+    val table = openLive(spark, path, v, schema, partCols, selected, dvs,
       colMap)
     // multi-dimensional clustering: files cover compact
     // hyper-rectangles of the key space via the bit-interleaved z

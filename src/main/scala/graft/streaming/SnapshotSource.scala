@@ -5,9 +5,8 @@ import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation,
-  CreatableRelationProvider, DataSourceRegister, Filter,
-  PrunedFilteredScan, RelationProvider, StreamSinkProvider,
-  StreamSourceProvider}
+  CreatableRelationProvider, DataSourceRegister, RelationProvider,
+  StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 import graft.io.Snapshots
 
@@ -40,10 +39,12 @@ import graft.io.Snapshots
   *     schema — pinned by WidenProbeSpec, never a silent
   *     truncation); restart the query to pick up the widened
   *     schema.
-  *   - **Batches read through [[graft.io.SnapshotFileIndex]]** — the
-  *     same zero-listing manifest-driven scan as batch reads, wrapped
-  *     streaming via the same `isStreaming` relation flag the
-  *     built-in file source uses.
+  *   - **Batches read through the snapshot DSv2 scan** — each batch
+  *     is [[Snapshots.readWhereRelation]] over the batch's files (no
+  *     delete files, the pinned schema), the same zero-listing
+  *     manifest-driven scan batch reads plan, wrapped streaming via
+  *     the `isStreaming` relation flag the built-in file source
+  *     uses; column pruning and filters above still reach the scan.
   */
 private[graft] class SnapshotSource(sqlContext: SQLContext,
                                     path: String,
@@ -71,14 +72,17 @@ private[graft] class SnapshotSource(sqlContext: SQLContext,
 
   private val spark = sqlContext.sparkSession
 
-  private val (pinnedSchema, pinnedPhysSchema, pinnedPartCols)
-      : (StructType, StructType, Seq[String]) = {
+  // the version whose schema, partition columns and column map every
+  // batch reads under (its manifest names the batches' columns, so
+  // the scan's pruning consults it)
+  private val (pinnedV, pinnedSchema, pinnedPartCols, pinnedColMap)
+      : (Long, StructType, Seq[String], Map[String, String]) = {
     val v = Snapshots.latestVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(
         s"snapshot source: no committed version under $path - commit " +
           "the table (or its first batch) before streaming from it"))
     val (s, pc, _, _, cm) = Snapshots.stateAt(spark, path, v)
-    (s, Snapshots.physicalSchemaOf(s, cm), pc)
+    (v, s, pc, cm)
   }
 
   override val schema: StructType =
@@ -187,10 +191,8 @@ private[graft] class SnapshotSource(sqlContext: SQLContext,
       case Some(s) => Snapshots.appendDelta(spark, path, s, endV)._3
     }
     org.apache.spark.sql.graft.StreamingRelationBridge.streamingFrom(
-        spark, Snapshots.entriesRelation(spark, path, pinnedPhysSchema,
-          pinnedPartCols, fresh))
-      .select(pinnedPhysSchema.fields.zip(pinnedSchema.fields).map {
-        case (p, l) => col(p.name).as(l.name) }.toSeq: _*)
+      spark, Snapshots.readWhereRelation(spark, path, pinnedV, Some(
+        (pinnedSchema, pinnedPartCols, fresh, Nil, pinnedColMap))))
   }
 
   override def stop(): Unit = ()
@@ -214,9 +216,11 @@ private[graft] object SnapshotSource {
   *   - **Batch**: `spark.read.format("graft-snapshot").load(path)` —
   *     latest snapshot; `option("version", v)` /
   *     `option("timestampAsOf", epochMillis)` / `option("tag", name)`
-  *     time-travel. Returns the manifest-driven relation directly
-  *     (column order: data columns then partition columns — the
-  *     HadoopFsRelation layout every format-based reader exposes).
+  *     time-travel. Returns [[Snapshots.readWhereRelation]] at that
+  *     version: the snapshot scan with Spark's pushed filters and
+  *     only the required columns, in manifest column order — the
+  *     order [[Snapshots.read]], `sourceSchema` and streaming
+  *     batches use, with or without delete files.
   *   - **Streaming**: `spark.readStream.format("graft-snapshot")
   *     .load(path)` — the [[SnapshotSource]] version-offset
   *     incremental stream.
@@ -363,28 +367,7 @@ class SnapshotSourceProvider extends StreamSourceProvider
       .getOrElse(Snapshots.latestVersion(spark, path).getOrElse(
         throw new IllegalArgumentException(
           s"snapshot: no committed version under $path")))
-    val (schema, partCols, entries, dvs, colMap) =
-      Snapshots.stateAt(spark, path, v)
-    if (dvs.isEmpty && colMap.isEmpty)
-      Snapshots.entriesRelation(spark, path, schema, partCols, entries)
-    else {
-      // delete files and renamed columns need the snapshot scan's
-      // merge-on-read: each scan is the version-pinned DSv2 read with
-      // Spark's pushed filters (manifest and shard skipping) and only
-      // the required columns; Spark re-applies every filter above
-      val sql = sqlContext
-      val liveSchema = Snapshots.readWhere(spark, path, v).schema
-      new BaseRelation with PrunedFilteredScan {
-        override val sqlContext: SQLContext = sql
-        override def schema: StructType = liveSchema
-        override def buildScan(cols: Array[String], filters: Array[Filter])
-            : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-          val df = Snapshots.readWhere(spark, path, v, filters.toSeq)
-          df.select(cols.toSeq.map(c =>
-            df.col("`" + c.replace("`", "``") + "`")): _*).rdd
-        }
-      }
-    }
+    Snapshots.readWhereRelation(spark, path, v)
   }
 
   override def sourceSchema(sqlContext: SQLContext,

@@ -55,8 +55,9 @@ object ScanBridge {
     // returning_batch=false: the vectorized reader hands back ROWS
     // (its internal batch iterated row-wise) - the row-based
     // PartitionReader contract downstream. partitionSchema columns
-    // (identity partition values, directory-borne) are appended
-    // after the data columns from each call's partValues row.
+    // (per-file constants: directory-borne identity values, the file
+    // path) are appended after the data columns from each call's
+    // partValues row.
     val f = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, dataSchema, partitionSchema, requiredSchema, filters,
       Map(org.apache.spark.sql.execution.datasources.FileFormat

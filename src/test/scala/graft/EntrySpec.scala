@@ -125,6 +125,14 @@ class EntrySpec extends SparkSpec {
     }.get
     assert(!tvf.contains("entriesRelation"),
       "graft_snapshot() must return the pinned DSv2 relation")
+    // the snapshot scan is the only code turning data files into
+    // rows: no file index or V1 file relation beside it
+    val second = Seq("SnapshotFileIndex", "entriesRelation",
+      "HadoopFsRelation", "baseRelationToDataFrame", "_metadata.")
+    val stack = sources.filter(_._1.startsWith("graft/")).flatMap {
+      case (rel, src) => second.filter(src.contains).map(n => s"$rel: $n")
+    }
+    assert(stack.isEmpty, s"second read stack is back: $stack")
   }
 
   test("no `.limit(1).count()` emptiness probe in the engine") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.{col, format_string}
 
@@ -106,14 +105,8 @@ class SnapshotReadRouteSpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("LeftAnti"), s"$name:\n$plan")
       assert(sorted(df) === want, name)
-      // the data files the anti-join plan's manifest relations hold
-      val opened = df.queryExecution.optimizedPlan.collect {
-        case l: LogicalRelation => l.relation
-      }.collect {
-        case h: HadoopFsRelation
-            if h.location.isInstanceOf[graft.io.SnapshotFileIndex] =>
-          h.location.inputFiles.toSeq
-      }.flatten.distinct
+      // the data files the anti-join plan's scans plan
+      val opened = plannedFiles(df)
       assert(opened.nonEmpty, s"$name:\n$plan")
       if (skipping(name))
         assert(opened.size < total,
@@ -153,6 +146,56 @@ class SnapshotReadRouteSpec extends SparkSpec {
     val all = spark.read.format("graft-snapshot").option("path", path)
       .load().select("c").collect().map(_.getString(0)).sorted.toSeq
     assert(all === (0L until 400L).filter(_ % 3 != 0).map(k => f"c$k%04d"))
+  }
+
+  test("format(graft-snapshot) loads keep manifest column order with or without delete files") {
+    val path = newStore
+    Snapshots.commit(spark.range(0L, 60L).toDF("k")
+      .withColumn("p", col("k") % 3)
+      .withColumn("c", format_string("c%04d", col("k")))
+      .select("p", "k", "c"), path, Seq("p"))
+    def load(): DataFrame =
+      spark.read.format("graft-snapshot").option("path", path).load()
+    val clean = load().columns.toSeq
+    assert(clean === Seq("p", "k", "c"))
+    assert(clean === Snapshots.read(spark, path).columns.toSeq)
+    Snapshots.deleteWhere(spark, path, col("k") % 5 === 0, mode = "mor")
+    assert(load().columns.toSeq === clean)
+    assert(Snapshots.read(spark, path).columns.toSeq === clean)
+    assert(load().count() === 48L)
+  }
+
+  test("a __graft_file-only scan keeps columnar range splits; __graft_pos reads row-based whole files") {
+    val path = newStore
+    Snapshots.commit(spark.range(0L, 20000L).toDF("k")
+      .withColumn("c", format_string("c%08d", col("k"))).coalesce(2),
+      path)
+    val files = storeFiles(path)
+    assert(files === 2)
+    withSQLConf("spark.sql.files.maxPartitionBytes" -> "4096") {
+      val byFile = Snapshots.read(spark, path).select("k", "__graft_file")
+      val filePlan = byFile.queryExecution.executedPlan.toString
+      assert(filePlan.contains("ColumnarToRow"), filePlan)
+      val fileParts = byFile.queryExecution.sparkPlan.collect {
+        case b: BatchScanExec => b.scan
+      }.collect { case s: graft.io.SnapshotBatchScan =>
+        s.planInputPartitions().length }.sum
+      assert(fileParts > files, s"$fileParts partitions for $files files")
+      val perFile = byFile.groupBy("__graft_file").count().collect()
+      assert(perFile.length === files)
+      assert(perFile.map(_.getLong(1)).sum === 20000L)
+      val byPos = Snapshots.read(spark, path)
+        .select("k", "__graft_file", "__graft_pos")
+      val posPlan = byPos.queryExecution.executedPlan.toString
+      assert(!posPlan.contains("ColumnarToRow"), posPlan)
+      val posParts = byPos.queryExecution.sparkPlan.collect {
+        case b: BatchScanExec => b.scan
+      }.collect { case s: graft.io.SnapshotBatchScan =>
+        s.planInputPartitions().length }.sum
+      assert(posParts === files)
+      assert(byPos.select("__graft_file", "__graft_pos").distinct()
+        .count() === 20000L)
+    }
   }
 
   test("input_file_name() names each data file on a catalog table") {

@@ -937,19 +937,23 @@ class SnapshotsSpec extends SparkSpec {
   test("merge discovery scans only the key columns, never the payload") {
     val path = newStore
     Snapshots.commit(docs, path)
-    // merge discovers over the manifest relation its internals open
-    val (schema, partCols, entries, _, _) =
+    // merge discovers over the relation its internals open: the
+    // snapshot scan over the version's files with no delete files
+    val (schema, partCols, entries, _, colMap) =
       Snapshots.stateAt(spark, path, 1L)
-    val table = spark.baseRelationToDataFrame(
-      Snapshots.entriesRelation(spark, path, schema, partCols, entries))
-    val plan = Snapshots.affectedFilesPlan(
-      table, docs.limit(10), Seq("doc_id"))
-      .queryExecution.executedPlan.toString
-    // the table-side parquet scan must prune to doc_id (+ metadata);
-    // reading `text` for file discovery would scan the 100 TB payload
-    val tableScan = plan.linesIterator
-      .filter(l => l.contains("ReadSchema") && l.contains("data"))
-      .mkString("\n")
+    val table = Snapshots.readWhere(spark, path, 1L,
+      state = Some((schema, partCols, entries, Nil, colMap)))
+    val qe = Snapshots.affectedFilesPlan(
+      table, docs.limit(10), Seq("doc_id")).queryExecution
+    val plan = qe.executedPlan.toString
+    // the table-side snapshot scan must prune to doc_id (+ the file
+    // path); reading `text` for file discovery would scan the 100 TB
+    // payload
+    val tableScan = qe.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2
+        .BatchScanExec => b.scan
+    }.collect { case s: graft.io.SnapshotBatchScan =>
+      s.readSchema().catalogString }.mkString("\n")
     assert(tableScan.contains("doc_id"), plan)
     assert(!tableScan.contains("text"), s"payload read in discovery:\n$plan")
   }
