@@ -1411,22 +1411,30 @@ private[graft] final class SnapshotBatchScan(
         ScanBridge.parquetBatchReadFunc(spark, physData, physRequired,
           parquetFilters, conf, partSchema)
       else None
-    // the filterless twin for positional-delete files (row-group
-    // skipping would desynchronize position counting); only built
-    // when the scan both batches and carries deletes
+    // every reader function broadcasts the Hadoop conf when built,
+    // so the scan builds only those it can call. Delete-bearing files
+    // and position reads need a FILTERLESS twin (row-group skipping
+    // would desynchronize position counting; Spark re-applies every
+    // filter above the scan, so this costs IO only), which is the
+    // filtered function itself when no filter reaches parquet; a
+    // batched scan calls no row function at all
     val plainBatchRead =
-      if (batchRead.isDefined && dvs.nonEmpty)
-        ScanBridge.parquetBatchReadFunc(spark, physData, physRequired,
-          Nil, conf, partSchema)
-      else None
+      if (batchRead.isEmpty || dvs.isEmpty) None
+      else if (parquetFilters.isEmpty) batchRead
+      else ScanBridge.parquetBatchReadFunc(spark, physData,
+        physRequired, Nil, conf, partSchema)
+    def rowRead(fs: Seq[Filter]) = ScanBridge.parquetReadFunc(spark,
+      physData, physRequired, fs, conf, partSchema)
+    val (readFunc, plainReadFunc) =
+      if (batchRead.isDefined) (SnapshotReaderFactory.noRowRead,
+        SnapshotReaderFactory.noRowRead)
+      else {
+        val r = rowRead(parquetFilters)
+        (r, if (dvs.isEmpty || parquetFilters.isEmpty) r else rowRead(Nil))
+      }
     new SnapshotReaderFactory(
-      ScanBridge.parquetReadFunc(spark, physData, physRequired,
-        parquetFilters, conf, partSchema),
-      // delete-bearing files read FILTERLESS (row-group skipping
-      // would desynchronize position counting); Spark re-applies
-      // every filter above the scan, so this costs IO only
-      ScanBridge.parquetReadFunc(spark, physData, physRequired,
-        Nil, conf, partSchema),
+      readFunc,
+      plainReadFunc,
       ordinals,
       required.fields.map(_.dataType),
       eqApplies,
@@ -1792,6 +1800,12 @@ private[graft] object SnapshotReaderFactory {
     * any IO (meaningful in local mode, where executors share the
     * JVM; production never reads it). */
   val filesOpened = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The row functions of a batched scan, which Spark never calls. */
+  val noRowRead: (String, Long, Long, Long, InternalRow)
+      => Iterator[InternalRow] = (_, _, _, _, _) =>
+    throw new IllegalStateException(
+      "graft: row read requested on a columnar scan")
 }
 
 /** A zero-copy SELECTION view over one batch column: `sel` maps the

@@ -2267,7 +2267,9 @@ object Snapshots {
   private[graft] def entryMetaStat(e: String): (String, Option[Long]) =
     (relOf(e), entryRows(e))
 
-  private def entryLen(f: FileSystem, path: String, e: String): Long =
+  // `f` by name: a `__len`-bearing entry opens no filesystem, so a
+  // per-entry caller builds no Hadoop configuration copy
+  private def entryLen(f: => FileSystem, path: String, e: String): Long =
     statsOf(e).get(LenStat).map(_._1.toLong)
       .getOrElse(f.getFileStatus(entryFilePath(path, relOf(e))).getLen)
 
