@@ -3998,8 +3998,8 @@ object Snapshots {
       // (file, pos) identities — only files the delete file names
       val morKilled =
         if (freshDvs.isEmpty) None
-        else Some(liveWithId(spark, path, v, sA, mA.partCols, mA.entries,
-            mA.dvs, mA.colMap)
+        else Some(liveWithId(spark, path, v, sA, mA.partCols,
+            mA.entries, mA.dvs, mA.colMap)
           .join(dvRows(spark, path, freshDvs),
             Seq(DvFileCol, DvPosCol), "left_semi")
           .select(sel: _*))
@@ -4032,8 +4032,8 @@ object Snapshots {
       // double count.
       val morRevived =
         if (droppedDvs.isEmpty) None
-        else Some(liveWithId(spark, path, v + 1, sB, mB.partCols, mB.entries,
-            mB.dvs, mB.colMap)
+        else Some(liveWithId(spark, path, v + 1, sB, mB.partCols,
+            mB.entries, mB.dvs, mB.colMap)
           .join(dvRows(spark, path, droppedDvs),
             Seq(DvFileCol, DvPosCol), "left_semi")
           .select(sel: _*))
