@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder,
+  SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
 import org.apache.spark.sql.types.StructType
@@ -224,14 +225,37 @@ private[graft] class GraftTable(spark: SparkSession, path: String,
 
   /** Past the delete-shipping budget: the V1 relation over
     * [[Snapshots.readWhere]] ([[Snapshots.readWhereRelation]]), which
-    * plans the distributed anti-join. */
-  private def v1ScanBuilder: ScanBuilder = new ScanBuilder {
+    * plans the distributed anti-join. Spark's filters and required
+    * columns reach its `buildScan(cols, filters)`, so the manifest
+    * skips files there too; every filter is also re-applied above
+    * the scan. */
+  private def v1ScanBuilder: ScanBuilder = new ScanBuilder
+      with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+    private var pushed = Array.empty[Filter]
+    private var required = GraftTable.this.schema()
+    override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+      pushed = filters
+      filters
+    }
+    override def pushedFilters(): Array[Filter] = pushed
+    // whole top-level columns: the relation selects columns by name
+    override def pruneColumns(requiredSchema: StructType): Unit =
+      required = StructType(GraftTable.this.schema().fields
+        .filter(f => requiredSchema.fieldNames.contains(f.name)))
     override def build(): Scan = new V1Scan {
-      override def readSchema(): StructType = GraftTable.this.schema()
+      override def readSchema(): StructType = required
       override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        Snapshots.readWhereRelation(spark, path, pinnedV, state)
-          .asInstanceOf[T]
+          context: SQLContext): T = {
+        val rel = Snapshots.readWhereRelation(spark, path, pinnedV, state)
+        new BaseRelation with TableScan {
+          override def sqlContext: SQLContext = context
+          override def schema: StructType = required
+          override def needConversion: Boolean = false
+          override def buildScan()
+              : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+            rel.buildScan(required.fieldNames, pushed)
+        }.asInstanceOf[T]
+      }
     }
   }
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, log, not, pmod, round, when}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType,
-  FloatType, IntegerType, LongType, ShortType, StructType, TimestampType}
+  FloatType, IntegerType, LongType, ShortType, StringType, StructType,
+  TimestampType}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Snapshot-versioned parquet store: manifest-based time travel,
@@ -963,6 +964,14 @@ object Snapshots {
       case PBucket(n, s) => PBucket(n, colMap.getOrElse(s, s)).spec
       case PTruncate(w, s) => PTruncate(w, colMap.getOrElse(s, s)).spec
     }
+
+  /** A derived directory value as the writer names its directory:
+    * Spark names both NULL and empty-string partition values with
+    * the default-partition sentinel. */
+  private def dirValue(s: String): String =
+    if (s == null || s.isEmpty) org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    else s
 
   private[graft] def partValsOf(rel: String): Map[String, String] =
     rel.split('/').iterator
@@ -3071,14 +3080,8 @@ object Snapshots {
           .cast("string").as(fld.dirName)
       }: _*)
       .distinct()
-      .collect().map(r => lp.indices.map { i =>
-        val s = r.getString(i)
-        // Spark names both NULL and empty-string partition values
-        // with the default-partition sentinel
-        if (s == null || s.isEmpty) org.apache.spark.sql.catalyst
-          .catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else s
-      }.toSeq: Seq[String]).toSet
+      .collect().map(r =>
+        lp.indices.map(i => dirValue(r.getString(i))): Seq[String]).toSet
     val carried = all.filterNot { e =>
       val vals = partValsOf(relOf(e))
       doomed.contains(fields.map(fld => vals.getOrElse(fld.dirName,
@@ -3395,11 +3398,7 @@ object Snapshots {
           fld.derive(lit(value).cast(dt), dt).cast("string")
             .as(fld.dirName)): _*).head()
         fields.zipWithIndex.map { case (fld, i) =>
-          val s = if (row.isNullAt(i)) null else row.getString(i)
-          fld.dirName -> (if (s == null || s.isEmpty)
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .DEFAULT_PARTITION_NAME
-          else s)
+          fld.dirName -> dirValue(row.getString(i))
         }.toMap
       }
     val numVal: Option[Double] = (dt, value) match {
@@ -4409,13 +4408,29 @@ object Snapshots {
     * is the Delta/Iceberg MERGE surface; [[merge]]/[[mergeUpdate]]
     * remain the cheaper special cases for plain upserts.
     *
-    * Scale shape: with no `notMatchedBySource` clauses, discovery
-    * scans ONLY the target key columns + file metadata and the
-    * rewrite touches ONLY files holding a matched key — [[merge]]'s
-    * copy-on-write economics. `notMatchedBySource` clauses
-    * necessarily inspect EVERY target row (their predicate is "no
-    * source row matches"), so their presence makes the commit a
-    * whole-table rewrite, exactly as in Delta.
+    * Scale shape: with no `notMatchedBySource` clauses the target's
+    * keys are read once, and only in the source's partitions. One
+    * aggregate over the persisted source alone ([[mergeScope]])
+    * finds the partition tuples the source touches and whether any
+    * ON key tuple repeats in it. The target is pruned to the entries
+    * whose own directory values are one of those tuples, derived the
+    * way the writer derives them, for identity and time partition
+    * fields whose source column is an ON key; more than
+    * [[SnapshotBatchScan.MaxStaticInSet]] tuples, or a non-UTC
+    * layout's zone-sensitive fields, keep every entry. The
+    * cardinality semi-join runs over the pruned target, and only
+    * when some source key tuple repeats. Discovery scans only the
+    * pruned target's key columns + file metadata, the rewrite
+    * touches only files holding a matched key — [[merge]]'s
+    * copy-on-write economics — and the not-matched inserts
+    * anti-join against the pruned (with matched clauses, the
+    * affected) files' keys. They are written without an emptiness
+    * probe: a merge that writes no file and rewrites none deletes
+    * its staged directory and returns the current version.
+    * `notMatchedBySource` clauses necessarily inspect EVERY target
+    * row (their predicate is "no source row matches"), so their
+    * presence makes the commit a whole-table rewrite, exactly as in
+    * Delta.
     *
     * Refused loudly: duplicate source key tuples that match a target
     * row (the SQL cardinality violation — which clause output wins
@@ -4518,13 +4533,21 @@ object Snapshots {
         col(t) === col(s"$SrcPrefix$sCol") }.reduce(_ && _)
       val srcKeys = srcR.select(on.map { case (t, sCol) =>
         col(s"$SrcPrefix$sCol").as(t) }: _*)
-      val live = openLive(spark, path, v, schema, partCols, all, dvs, colMap)
-      val touchesMatched = matched.nonEmpty || notMatchedBySource.nonEmpty
+      def keysOf(es: Seq[String]): DataFrame =
+        openLive(spark, path, v, schema, partCols, es, dvs, colMap)
+          .select(keyCols.map(col): _*)
+      // an empty target matches nothing; a whole-table rewrite reads
+      // every entry anyway: no pruning
+      val (targets, repeats) =
+        if (all.isEmpty) (all, false)
+        else mergeScope(spark, srcR, on, st, schema,
+          prune = notMatchedBySource.isEmpty)
       // SQL cardinality rule: >1 source row matching one target row
-      // is an error (which clause output survives would be arbitrary)
-      if (touchesMatched || notMatched.nonEmpty) {
+      // is an error (which clause output survives would be arbitrary);
+      // only a key tuple the source repeats can match one row twice
+      if (repeats) {
         require(srcKeys
-            .join(live.select(keyCols.map(col): _*), keyCols, "left_semi")
+            .join(keysOf(targets), keyCols, "left_semi")
             .groupBy(keyCols.map(col): _*)
             .count().filter(col("count") > 1).isEmpty,
           "snapshot: more than one source row matches a single target " +
@@ -4534,7 +4557,7 @@ object Snapshots {
       val affected: Set[String] =
         if (notMatchedBySource.nonEmpty) all.map(relOf).toSet
         else if (matched.nonEmpty)
-          discoverAffected(spark, path, v, schema, partCols, all, dvs,
+          discoverAffected(spark, path, v, schema, partCols, targets, dvs,
             srcKeys, keyCols, colMap)
         else Set.empty
       def condOf(c: Option[Column], base: Column): Column =
@@ -4573,8 +4596,14 @@ object Snapshots {
       val inserts =
         if (notMatched.isEmpty) None
         else {
-          val unmatchedSrc = srcR.join(
-            live.select(keyCols.map(col): _*), joinCond, "left_anti")
+          // every stored source key sits in a target entry; with
+          // matched clauses, in an affected one (a file holding a
+          // matched key is affected by definition)
+          val stored =
+            if (matched.isEmpty) targets
+            else all.filter(e => affected(relOf(e)))
+          val unmatchedSrc = srcR.join(keysOf(stored), joinCond,
+            "left_anti")
           // first-match-wins across insert clauses: clause i fires only
           // where every earlier clause's condition failed
           val rows = notMatched.zipWithIndex.map { case (cl, i) =>
@@ -4590,28 +4619,106 @@ object Snapshots {
                 .getOrElse(lit(null).cast(f.dataType)).as(f.name)
             }: _*)
           }
-          // the clauses insert a row iff any own condition holds; one
-          // probe over that OR, not over the union (a limit pushed
-          // into union branches plans a code-generated LocalLimit,
-          // whose source differs on every call)
-          val anyClause = notMatched.map(_.condition
-              .map(c => coalesce(c, lit(false))).getOrElse(lit(true)))
-            .reduce(_ || _)
-          if (unmatchedSrc.filter(anyClause).isEmpty) None
-          else Some(rows.reduce(_ unionByName _))
+          Some(rows.reduce(_ unionByName _))
         }
-      (rewritten, inserts) match {
-        case (None, None) => v // nothing matched, nothing to insert
-        case (r, i) =>
-          val fresh = (r.toSeq ++ i.toSeq).reduce(_ unionByName _)
-          val carried = all.filterNot(e => affected(relOf(e)))
-          writeCommit(spark, fresh, path, carried, schema, partCols,
+      (rewritten.toSeq ++ inserts.toSeq).reduceOption(_ unionByName _) match {
+        case None => v
+        case Some(out) =>
+          // the inserts are written without an emptiness probe: a
+          // write that lands no file and rewrites none is no commit
+          val (commitDir, fresh) = writeBatchFiles(spark, out, path,
+            partCols, colMap, st.props)
+          if (fresh.isEmpty && affected.isEmpty) {
+            fs(spark, path).delete(new Path(s"$path/$commitDir"), true)
+            v
+          } else publishLoop(spark, path, Seq(commitDir), fresh,
+            all.filterNot(e => affected(relOf(e))), schema, partCols,
             dropped, txns, dvs, colMap, Some(v),
-            RebaseRewrite("merging into", affected, dvs), "mergeInto", st.props)
+            RebaseRewrite("merging into", affected, dvs), "mergeInto",
+            st.props, None, out.schema, out.columns.toSeq)
       }
     } finally { srcR.unpersist(); () }
   }
+
   private[graft] val SrcHitCol = "__graft_src_hit"
+
+  /** [[mergeInto]]'s one pass over the source alone, before any
+    * target read: the entries a source row can match, and whether
+    * some ON key tuple repeats in the source (only a repeated tuple
+    * can match one target row twice, so without one the cardinality
+    * check is skipped). The source's per-key-tuple counts group by
+    * the source columns equated in ON to the sources of the table's
+    * identity and time partition fields, keeping each group's
+    * largest count; at most [[SnapshotBatchScan.MaxStaticInSet]] + 1
+    * groups reach the driver, largest first, so the first carries
+    * the verdict, NULL keys included. With `prune` and no more
+    * groups than the bound, each group without a NULL derives its
+    * directory tuple as the writer named directories (the UTC derive
+    * session), and only entries in those directories, or lacking
+    * one of them, stay. Fields a non-UTC layout derives
+    * zone-sensitively are left out ([[dirDeriveTrusted]]), as are
+    * bucket and truncate fields: their directory name is the same
+    * for every width, so after a spec change an old entry's value
+    * means another width. Identity fields cannot change on a
+    * non-empty table and time kinds name their own directories.
+    */
+  private def mergeScope(spark: SparkSession, srcR: DataFrame,
+                         on: Seq[(String, String)], st: CurState,
+                         schema: StructType, prune: Boolean)
+      : (Seq[String], Boolean) = {
+    // keys equal under the join name one identity directory: not so
+    // for -0.0 and 0.0, nor under a string collation
+    def oneDir(dt: DataType): Boolean = dt match {
+      case FloatType | DoubleType => false
+      case s: StringType => s.catalogString == "string"
+      case _ => true
+    }
+    val fields: Seq[(PartField, String)] =
+      if (!prune) Nil
+      else st.partCols.map(parsePartField).flatMap { fld =>
+        val t = st.colMap.getOrElse(fld.source, fld.source)
+        val dt = schema(t).dataType
+        val exact = fld match {
+          case _: PIdentity => oneDir(dt)
+          case _: PTime => true
+          case _ => false
+        }
+        on.find(_._1 == t)
+          .filter(_ => exact && dirDeriveTrusted(st.props, fld, dt))
+          .map(p => (fld, s"$SrcPrefix${p._2}"))
+      }
+    val by = fields.map(_._2).distinct
+    val top = srcR.groupBy(on.map(p => col(s"$SrcPrefix${p._2}")): _*)
+      .count()
+      .groupBy(by.map(col): _*)
+      .agg(org.apache.spark.sql.functions.max("count").as("count"))
+      .orderBy(col("count").desc)
+      .limit(SnapshotBatchScan.MaxStaticInSet + 1)
+      .collect()
+    val repeats = top.headOption.exists(r =>
+      !r.isNullAt(by.size) && r.getLong(by.size) > 1L)
+    if (fields.isEmpty || top.length > SnapshotBatchScan.MaxStaticInSet)
+      return (st.entries, repeats)
+    // a NULL key matches nothing
+    val keys = top.filterNot(r => by.indices.exists(r.isNullAt))
+      .map(r => org.apache.spark.sql.Row.fromSeq(by.indices.map(r.get)))
+    val dirs: Set[Seq[String]] =
+      if (keys.isEmpty) Set.empty
+      else utcDeriveSession(spark)
+        .createDataFrame(java.util.Arrays.asList(keys: _*),
+          StructType(by.map(srcR.schema(_))))
+        .select(fields.map { case (fld, c) =>
+          fld.derive(col(c), srcR.schema(c).dataType).cast("string")
+        }: _*)
+        .collect().map(r =>
+          fields.indices.map(i => dirValue(r.getString(i))): Seq[String])
+        .toSet
+    (st.entries.filter { e =>
+      val vals = partValsOf(relOf(e))
+      fields.exists(f => !vals.contains(f._1.dirName)) ||
+        dirs(fields.map(f => vals(f._1.dirName)))
+    }, repeats)
+  }
 
   /** Mutation batches must carry the table's exact column types:
     * name-matched columns with a different type would either write

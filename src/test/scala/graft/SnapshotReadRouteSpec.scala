@@ -148,6 +148,40 @@ class SnapshotReadRouteSpec extends SparkSpec {
     assert(all === (0L until 400L).filter(_ % 3 != 0).map(k => f"c$k%04d"))
   }
 
+  test("catalog SQL past spark.graft.snapshot.v2.maxDeleteBytes pushes its WHERE into the scan") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_route_cat")
+      .toString
+    val cat = s"rcat${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.io.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT, c STRING)")
+    val path = s"$wh/db/t"
+    (0L until 400L by 100L).foreach(lo => Snapshots.commitAppend(
+      spark.range(lo, lo + 100L).toDF("k")
+        .withColumn("c", format_string("c%04d", col("k"))).coalesce(1),
+      path))
+    Snapshots.deleteWhere(spark, path, col("k") % 3 === 0, mode = "mor")
+    val total = storeFiles(path)
+    assert(total === 4)
+    spark.conf.set(Snapshots.MaxDeleteBytesConf, "1")
+    try {
+      graft.io.SnapshotReaderFactory.filesOpened.set(0L)
+      val got = spark.sql(s"SELECT c FROM $cat.db.t WHERE k = 250")
+        .collect().toSeq
+      val opened = graft.io.SnapshotReaderFactory.filesOpened.get()
+      assert(got === Seq(Row("c0250")))
+      assert(opened < total, s"opened $opened of $total files")
+      assert(spark.sql(s"SELECT c FROM $cat.db.t WHERE k = 252")
+        .collect().isEmpty, "a deleted row stays deleted")
+      val ranged = spark.sql(
+        s"SELECT k FROM $cat.db.t WHERE k BETWEEN 95 AND 104")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(ranged === (95L to 104L).filter(_ % 3 != 0))
+    } finally spark.conf.unset(Snapshots.MaxDeleteBytesConf)
+  }
+
   test("format(graft-snapshot) loads keep manifest column order with or without delete files") {
     val path = newStore
     Snapshots.commit(spark.range(0L, 60L).toDF("k")
