@@ -871,11 +871,19 @@ private[graft] final class SnapshotBatchScan(
     * partition-against-partition with ZERO Exchange: bucket resolves
     * through [[GraftCatalog]]'s V2 function, identity is the one
     * transform Spark resolves bare. Layouts carrying time/truncate
-    * transforms stay per-file (`UnknownPartitioning`).
+    * transforms stay per-file (`UnknownPartitioning`), and so does
+    * a plan holding a file with no directory for some bucket field
+    * (written before the field was added): its key is unknown.
     */
-  private val keyGrouped = fields.nonEmpty && fields.forall(f =>
+  private lazy val keyGrouped = fields.nonEmpty && fields.forall(f =>
     f.isInstanceOf[Snapshots.PBucket] ||
-      f.isInstanceOf[Snapshots.PIdentity])
+      f.isInstanceOf[Snapshots.PIdentity]) && {
+    val dirs = fields.collect { case b: Snapshots.PBucket => b.dirName }
+    dirs.isEmpty || scanEntries.forall { e =>
+      val vals = Snapshots.partValsOf(Snapshots.relOfEntry(e))
+      dirs.forall(vals.contains)
+    }
+  }
 
   private def logicalName(phys: String): String =
     colMap.getOrElse(phys, phys)

@@ -138,17 +138,8 @@ object Snapshots {
     * amplification: amortized, each entry is rewritten into a shard
     * O(1) times per fanout-window instead of once per commit.
     */
-  private val shardFanoutOverrideTl =
-    new InheritableThreadLocal[Option[Int]] {
-      override def initialValue(): Option[Int] = None
-    }
-  private[graft] def shardFanoutOverride: Option[Int] =
-    shardFanoutOverrideTl.get()
-  private[graft] def shardFanoutOverride_=(v: Option[Int]): Unit =
-    shardFanoutOverrideTl.set(v)
   private def shardFanout(f: FileSystem): Int = {
-    val s = shardFanoutOverride.getOrElse(
-      f.getConf.getInt("graft.snapshot.manifestShardFanout", 64))
+    val s = f.getConf.getInt("graft.snapshot.manifestShardFanout", 64)
     require(s >= 2, s"snapshot: manifestShardFanout must be >= 2: $s")
     s
   }
@@ -4116,100 +4107,70 @@ object Snapshots {
     * nothing. Both refuse loudly.
     */
   private def requireNoNullKeys(df: DataFrame, keyCols: Seq[String],
-                                what: String): Unit = {
+                                what: String): Unit =
     require(df.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty,
-      s"snapshot: $what carries a NULL in a key column " +
-        s"(${keyCols.mkString(", ")}) - a NULL key never joins, so it " +
-        "cannot address a row; filter or repair NULL keys first")
-  }
+      nullKeyMessage(keyCols, what))
+
+  private def nullKeyMessage(keyCols: Seq[String], what: String): String =
+    s"snapshot: $what carries a NULL in a key column " +
+      s"(${keyCols.mkString(", ")}) - a NULL key never joins, so it " +
+      "cannot address a row; filter or repair NULL keys first"
 
   /** Copy-on-write MERGE (upsert) keyed on `keyCols`: an update row
     * whose key exists in the table REPLACES that row (whole-row
     * semantics); a row whose key is absent is INSERTED. Returns the
-    * new committed version; every prior version stays readable (time
-    * travel across the merge). For updating a NAMED SUBSET of columns
-    * (the column-sparse CDC shape), see [[mergeUpdate]].
+    * new committed version; every prior version stays readable. For
+    * updating a NAMED SUBSET of columns, see [[mergeUpdate]].
     *
-    * Scale shape — the Delta/Iceberg copy-on-write contract:
-    *   1. *Discovery* scans ONLY the key columns plus the file-path
-    *      metadata column (columnar prune) and semi-joins the update
-    *      keys; the collected result is O(affected files) — bounded
-    *      by the file count, like the manifest itself, never by rows.
-    *   2. *Rewrite* reads just the affected files, anti-joins the
-    *      update keys, and writes survivors + updates as the commit's
-    *      fresh files. Unaffected files are carried by reference —
-    *      a merge touching 1 of 10,000 files costs 1 file of IO.
-    *
-    * Refused loudly: duplicate keys within `updates` (two update rows
-    * for one key make the upsert non-deterministic), NULL keys (a
-    * NULL key never equi-joins — it would insert a duplicate on every
-    * replayed batch), a column set differing from the table's
-    * (whole-row replacement needs whole rows), and a concurrent
-    * commit landing between this merge's base read and its publish.
+    * It is [[mergeInto]] on `keyCols` with `WHEN MATCHED THEN UPDATE
+    * SET c = src(c)` for every column and `WHEN NOT MATCHED THEN
+    * INSERT` of every column. Refused loudly beyond mergeInto's
+    * refusals: duplicate keys within `updates` (the upsert would be
+    * non-deterministic), NULL keys (one would insert a duplicate on
+    * every replayed batch), a column set differing from the table's,
+    * and a table holding several rows for a merged key (they would
+    * collapse silently into one; checked in the affected files).
     */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
-            keyCols: Seq[String]): Long = {
+            keyCols: Seq[String]): Long =
+    mergeDeleting(spark, path, updates, None, keyCols)
+
+  /** [[merge]], deleting the rows keyed by `deletes` in the same
+    * commit: `WHEN MATCHED AND <delete row> THEN DELETE` goes first,
+    * and merge's clauses apply to the update rows only. The
+    * copy-on-write CDC sink lands a micro-batch this way. A key listed
+    * twice in `deletes` deletes once.
+    */
+  private[graft] def mergeDeleting(spark: SparkSession, path: String,
+                                   updates: DataFrame,
+                                   deletes: Option[DataFrame],
+                                   keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "snapshot: merge needs at least one key column")
-    val st @ CurState(v, schema, partCols, dropped, txns, dvs, colMap, all) =
-      currentState(spark, path, "merge into")
-    requireLocalEntries(all, path, "merge into")
-    val table = openLive(spark, path, v, schema, partCols, all, dvs, colMap)
-    require(table.columns.sorted.sameElements(updates.columns.sorted),
+    val st = currentState(spark, path, "merge into")
+    requireLocalEntries(st.entries, path, "merge into")
+    val cols = st.schema.fieldNames.toSeq
+    require(cols.sorted == updates.columns.toSeq.sorted,
       s"snapshot: merge updates columns ${updates.columns.sorted.mkString(",")} " +
-        s"differ from the table's ${table.columns.sorted.mkString(",")}")
+        s"differ from the table's ${cols.sorted.mkString(",")}")
     require(keyCols.forall(updates.columns.contains),
       s"snapshot: key columns ${keyCols.filterNot(updates.columns.contains)} " +
         "missing from updates")
-    requireSameTypes(table.schema, updates.schema, "merge updates")
-    val keyExprs = keyCols.map(col)
-    // merge runs several actions over `updates` (null/dup-key guards,
-    // affected-file discovery, rewrite) — pin it so the caller's plan
-    // isn't re-executed per pass; the write below drains every pass
-    // before the unpersist
-    val upd0 = updates.persist()
-    try {
-      requireNoNullKeys(upd0, keyCols, "merge updates")
-      // a zero-row updates batch is a no-op, not a burned version (a
-      // CDC pipeline commonly delivers empty micro-batches) — same
-      // idempotence as a delete matching nothing
-      if (upd0.isEmpty) return v
-      require(upd0.groupBy(keyExprs: _*)
-          .count().filter(col("count") > 1).isEmpty,
+    requireSameTypes(st.schema, updates.schema, "merge updates")
+    val upd = deletes.map(_ => !src(DeleteCol))
+    // a delete key's type drift meets mergeInto's ON type refusal
+    val source = deletes.fold(updates)(d =>
+      updates.withColumn(DeleteCol, lit(false)).unionByName(
+        d.select(keyCols.map(col): _*).distinct()
+          .withColumn(DeleteCol, lit(true)), allowMissingColumns = true))
+    val whole = cols.map(c => c -> src(c))
+    mergeEngine(spark, path, st, source, keyCols.map(k => k -> k),
+      deletes.map(_ => WhenMatchedDelete(Some(src(DeleteCol)))).toSeq :+
+        WhenMatchedUpdate(upd, whole),
+      Seq(WhenNotMatchedInsert(upd, whole)), Nil, evolve = false,
+      "merge", "merging into", Some(KeyRules("merge updates",
         "snapshot: updates carry duplicate keys - the upsert would be " +
-          "non-deterministic; deduplicate (e.g. keep-latest) before merging")
-      val affected = discoverAffected(spark, path, v, schema, partCols,
-        all, dvs, upd0, keyCols, colMap)
-      val carried = all.filterNot(e => affected(relOf(e)))
-      val cols = table.columns.toSeq.map(col)
-      val upd = upd0.select(cols: _*)
-      val fresh =
-        if (affected.isEmpty) upd // pure insert: nothing to rewrite
-        else {
-          val hit = openLive(spark, path, v, schema, partCols,
-            all.filter(e => affected(relOf(e))), dvs, colMap)
-          // whole-row replacement collapses EVERY table row of an
-          // updated key into the single update row; if the table
-          // itself holds N > 1 rows for such a key (appends never
-          // enforce key uniqueness), N−1 rows would vanish SILENTLY —
-          // refuse like the updates-side dup guard, not lose data
-          require(hit
-              .join(upd.select(keyExprs: _*), keyCols, "left_semi")
-              .groupBy(keyExprs: _*).count()
-              .filter(col("count") > 1).isEmpty,
-            "snapshot: the table holds duplicate rows for a merged " +
-              "key - whole-row merge would silently collapse them " +
-              "into one update row; deduplicate the table first " +
-              "(compact after a deleteKeys/re-append) or merge on a " +
-              "unique key")
-          hit
-            .join(upd.select(keyExprs: _*), keyCols, "left_anti")
-            .select(cols: _*)
-            .unionByName(upd)
-        }
-      writeCommit(spark, fresh, path, carried, schema, partCols,
-        dropped, txns, dvs, colMap, Some(v),
-        RebaseRewrite("merging into", affected, dvs), "merge", st.props)
-    } finally { upd0.unpersist(); () }
+          "non-deterministic; deduplicate (e.g. keep-latest) before merging",
+        wholeRow = Some(upd.getOrElse(lit(true))))))
   }
 
   /** Conditional, PARTIAL-COLUMN copy-on-write MERGE — the SQL
@@ -4220,19 +4181,17 @@ object Snapshots {
     * key matches but fail `condition` (evaluated against the TARGET
     * row's columns; NULL ⇒ no update, SQL semantics) stay untouched.
     * With `insertUnmatched`, update rows matching no table key INSERT
-    * as fresh rows — named columns from the update, the rest NULL
-    * (`WHEN NOT MATCHED THEN INSERT`, unconditional as in SQL);
+    * as fresh rows — named columns from the update, the rest NULL;
     * without it they are ignored.
     *
-    * Same copy-on-write economics and discovery plan as [[merge]]
-    * (key-column + file-path scan, affected files only rewritten, a
-    * file whose matches all fail `condition` is rewritten with
-    * identical rows — correctness never depends on pushing the
-    * condition into discovery, which would widen the key-only scan).
-    * Same refusals: duplicate or NULL update keys, type drift,
-    * unknown columns (an update column that is neither key nor set
-    * refuses — a silently ignored column is a typo'd lost write),
-    * and concurrent commits.
+    * It is [[mergeInto]] on `keyCols` with `WHEN MATCHED [AND
+    * condition] THEN UPDATE SET s = src(s)` for each set column and,
+    * with `insertUnmatched`, `WHEN NOT MATCHED THEN INSERT` of
+    * `keyCols ++ setCols`. Refused loudly beyond mergeInto's
+    * refusals: empty key or set lists, a column named as both,
+    * duplicate or NULL update keys, type drift, and unknown columns
+    * (an update column that is neither key nor set is a typo'd lost
+    * write).
     */
   def mergeUpdate(spark: SparkSession, path: String, updates: DataFrame,
                   keyCols: Seq[String], setCols: Seq[String],
@@ -4245,10 +4204,9 @@ object Snapshots {
     require(keyCols.intersect(setCols).isEmpty,
       s"snapshot: columns ${keyCols.intersect(setCols).mkString(",")} " +
         "appear as both key and set - a merge key cannot be updated")
-    val st @ CurState(v, schema, partCols, dropped, txns, dvs, colMap, all) =
-      currentState(spark, path, "mergeUpdate into")
-    requireLocalEntries(all, path, "mergeUpdate into")
-    val tableCols = schema.fieldNames.toSeq
+    val st = currentState(spark, path, "mergeUpdate into")
+    requireLocalEntries(st.entries, path, "mergeUpdate into")
+    val tableCols = st.schema.fieldNames.toSeq
     val missing = (keyCols ++ setCols).filterNot(tableCols.contains)
     require(missing.isEmpty,
       s"snapshot: columns ${missing.mkString(",")} are not in the " +
@@ -4262,56 +4220,18 @@ object Snapshots {
     require(expected.forall(updates.columns.contains),
       s"snapshot: columns ${expected.filterNot(updates.columns.contains)
         .mkString(",")} missing from updates")
-    requireSameTypes(schema, updates.schema, "mergeUpdate updates")
-    val table = openLive(spark, path, v, schema, partCols, all, dvs, colMap)
-    val keyExprs = keyCols.map(col)
-    val upd0 = updates.persist()
-    try {
-      requireNoNullKeys(upd0, keyCols, "mergeUpdate updates")
-      require(upd0.groupBy(keyExprs: _*)
-          .count().filter(col("count") > 1).isEmpty,
+    requireSameTypes(st.schema, updates.schema, "mergeUpdate updates")
+    def fromSrc(cs: Seq[String]) = cs.map(c => c -> src(c))
+    mergeEngine(spark, path, st, updates, keyCols.map(k => k -> k),
+      Seq(WhenMatchedUpdate(condition, fromSrc(setCols))),
+      if (insertUnmatched)
+        Seq(WhenNotMatchedInsert(None, fromSrc(keyCols ++ setCols)))
+      else Nil,
+      Nil, evolve = false, "mergeUpdate", "mergeUpdate into",
+      Some(KeyRules("mergeUpdate updates",
         "snapshot: updates carry duplicate keys - the update would be " +
-          "non-deterministic; deduplicate (e.g. keep-latest) first")
-      val affected = discoverAffected(spark, path, v, schema, partCols,
-        all, dvs, upd0, keyCols, colMap)
-      val renamed = upd0.select(keyExprs ++
-        setCols.map(c => col(c).as(s"__u_$c")) :+
-        lit(true).as("__u_hit"): _*)
-      val cond = condition.map(c => coalesce(c, lit(false)))
-        .getOrElse(lit(true))
-      val rewritten =
-        if (affected.isEmpty) None
-        else Some(openLive(spark, path, v, schema, partCols,
-            all.filter(e => affected(relOf(e))), dvs, colMap)
-          .join(renamed, keyCols, "left")
-          .select(tableCols.map { c =>
-            if (setCols.contains(c))
-              when(col("__u_hit").isNotNull && cond, col(s"__u_$c"))
-                .otherwise(col(c)).as(c)
-            else col(c)
-          }: _*))
-      val inserts =
-        if (!insertUnmatched) None
-        else {
-          val fresh = upd0
-            .join(table.select(keyExprs: _*), keyCols, "left_anti")
-          if (fresh.isEmpty) None
-          else Some(fresh.select(schema.fields.toSeq.map { f =>
-            if (keyCols.contains(f.name) || setCols.contains(f.name))
-              col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }: _*))
-        }
-      (rewritten, inserts) match {
-        case (None, None) => v // nothing matched, nothing to insert
-        case (r, i) =>
-          val fresh = (r.toSeq ++ i.toSeq).reduce(_ unionByName _)
-          val carried = all.filterNot(e => affected(relOf(e)))
-          writeCommit(spark, fresh, path, carried, schema, partCols,
-            dropped, txns, dvs, colMap, Some(v),
-            RebaseRewrite("mergeUpdate into", affected, dvs), "mergeUpdate", st.props)
-      }
-    } finally { upd0.unpersist(); () }
+          "non-deterministic; deduplicate (e.g. keep-latest) first",
+        wholeRow = None)))
   }
 
   /** Copy-on-write SQL UPDATE: rows where `predicate` evaluates TRUE
@@ -4405,15 +4325,16 @@ object Snapshots {
     * `notMatched` insert clauses to unmatched SOURCE rows, and
     * `notMatchedBySource` clauses (update/delete whose conditions and
     * values see target columns only) to unmatched TARGET rows. This
-    * is the Delta/Iceberg MERGE surface; [[merge]]/[[mergeUpdate]]
-    * remain the cheaper special cases for plain upserts.
+    * is the Delta/Iceberg MERGE surface and the one merge engine:
+    * [[merge]] and [[mergeUpdate]] are clause sets over it.
     *
     * Scale shape: with no `notMatchedBySource` clauses the target's
     * keys are read once, and only in the source's partitions. One
     * aggregate over the persisted source alone ([[mergeScope]])
     * finds the partition tuples the source touches and whether any
-    * ON key tuple repeats in it. The target is pruned to the entries
-    * whose own directory values are one of those tuples, derived the
+    * ON key tuple repeats in it (an empty source commits nothing).
+    * The target is pruned to the entries whose own directory values
+    * are one of those tuples, derived the
     * way the writer derives them, for identity and time partition
     * fields whose source column is an ON key; more than
     * [[SnapshotBatchScan.MaxStaticInSet]] tuples, or a non-UTC
@@ -4421,8 +4342,8 @@ object Snapshots {
     * cardinality semi-join runs over the pruned target, and only
     * when some source key tuple repeats. Discovery scans only the
     * pruned target's key columns + file metadata, the rewrite
-    * touches only files holding a matched key — [[merge]]'s
-    * copy-on-write economics — and the not-matched inserts
+    * touches only files holding a matched key — the rest are carried
+    * by reference — and the not-matched inserts
     * anti-join against the pruned (with matched clauses, the
     * affected) files' keys. They are written without an emptiness
     * probe: a merge that writes no file and rewrites none deletes
@@ -4450,9 +4371,29 @@ object Snapshots {
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty,
       "snapshot: mergeInto needs at least one WHEN clause")
-    val st @ CurState(v, schema0, partCols, dropped, txns, dvs, colMap0,
-      all) = currentState(spark, path, "mergeInto")
-    requireLocalEntries(all, path, "MERGE INTO")
+    val st = currentState(spark, path, "mergeInto")
+    requireLocalEntries(st.entries, path, "MERGE INTO")
+    mergeEngine(spark, path, st, source, on, matched, notMatched,
+      notMatchedBySource, evolve, "mergeInto", "merging into", None)
+  }
+
+  /** [[merge]]'s and [[mergeUpdate]]'s refusals: no NULL (`what`)
+    * or repeated (`duplicate`) source key, no `wholeRow` source row
+    * matching several table rows. */
+  private final case class KeyRules(what: String, duplicate: String,
+                                    wholeRow: Option[Column])
+
+  /** [[mergeInto]] over `st`: `op` names the commit in [[history]],
+    * `verb` the operation a lost commit race reports. */
+  private def mergeEngine(spark: SparkSession, path: String,
+                          st: CurState, source: DataFrame,
+                          on: Seq[(String, String)],
+                          matched: Seq[WhenMatched],
+                          notMatched: Seq[WhenNotMatchedInsert],
+                          notMatchedBySource: Seq[WhenMatched],
+                          evolve: Boolean, op: String, verb: String,
+                          keys: Option[KeyRules]): Long = {
+    val CurState(v, schema0, partCols, dropped, txns, dvs, colMap0, all) = st
     val tCols0 = schema0.fieldNames.toSeq
     val keyCols = on.map(_._1)
     val srcKeyCols = on.map(_._2)
@@ -4523,29 +4464,33 @@ object Snapshots {
           nullableAll(StructType(schema0.fields ++ newFields)), path,
           dropped, colMap0, partCols = partCols)
       }
-    val tCols = schema.fieldNames.toSeq
-    val _ = tCols
     val srcR = source.select(source.columns.toSeq.map(c =>
         col(c).as(s"$SrcPrefix$c")) :+ lit(true).as(SrcHitCol): _*)
       .persist()
     try {
       val joinCond = on.map { case (t, sCol) =>
         col(t) === col(s"$SrcPrefix$sCol") }.reduce(_ && _)
-      val srcKeys = srcR.select(on.map { case (t, sCol) =>
-        col(s"$SrcPrefix$sCol").as(t) }: _*)
+      val asKeys = on.map { case (t, sCol) => col(s"$SrcPrefix$sCol").as(t) }
+      val srcKeys = srcR.select(asKeys: _*)
       def keysOf(es: Seq[String]): DataFrame =
         openLive(spark, path, v, schema, partCols, es, dvs, colMap)
           .select(keyCols.map(col): _*)
-      // an empty target matches nothing; a whole-table rewrite reads
-      // every entry anyway: no pruning
-      val (targets, repeats) =
-        if (all.isEmpty) (all, false)
+      // an empty target matches nothing (the wrappers still need the
+      // key verdicts); a whole-table rewrite reads every entry anyway
+      val scope =
+        if (all.isEmpty && keys.isEmpty) MergeScope(all, false, false, false)
         else mergeScope(spark, srcR, on, st, schema,
-          prune = notMatchedBySource.isEmpty)
+          prune = notMatchedBySource.isEmpty, nullsFirst = keys.nonEmpty)
+      keys.foreach { k =>
+        require(!scope.nullKey, nullKeyMessage(keyCols, k.what))
+        require(!scope.repeats, k.duplicate)
+      }
+      if (scope.empty && notMatchedBySource.isEmpty) return v
+      val targets = scope.targets
       // SQL cardinality rule: >1 source row matching one target row
       // is an error (which clause output survives would be arbitrary);
       // only a key tuple the source repeats can match one row twice
-      if (repeats) {
+      if (scope.repeats) {
         require(srcKeys
             .join(keysOf(targets), keyCols, "left_semi")
             .groupBy(keyCols.map(col): _*)
@@ -4554,12 +4499,39 @@ object Snapshots {
             "row (the SQL MERGE cardinality violation) - deduplicate " +
             "the source on the ON keys first")
       }
+      val wholeRow = keys.flatMap(_.wholeRow)
       val affected: Set[String] =
         if (notMatchedBySource.nonEmpty) all.map(relOf).toSet
-        else if (matched.nonEmpty)
+        else if (matched.isEmpty) Set.empty
+        else if (wholeRow.isEmpty)
           discoverAffected(spark, path, v, schema, partCols, targets, dvs,
             srcKeys, keyCols, colMap)
-        else Set.empty
+        else {
+          // whole-row replacement collapses EVERY table row of a
+          // matched key into one source row, and appends never enforce
+          // key uniqueness: discovery also counts each key's live rows
+          // (source keys are unique here, so the join adds no row)
+          import org.apache.spark.sql.functions.{collect_set, count,
+            explode, max}
+          val perFile = liveWithId(spark, path, v, schema, partCols,
+              targets, dvs, colMap)
+            .select(keyCols.map(col) :+ col(DvFileCol): _*)
+            .join(srcR.select(asKeys :+ wholeRow.get.as("w"): _*), keyCols)
+            .groupBy(keyCols.map(col): _*)
+            .agg((count(lit(1)) > 1 && max("w")).as("dup"),
+              collect_set(DvFileCol).as("files"))
+            .select(explode(col("files")).as(DvFileCol), col("dup"))
+            .groupBy(DvFileCol).agg(max("dup"))
+            .collect()
+          require(!perFile.exists(_.getBoolean(1)),
+            "snapshot: the table holds duplicate rows for a merged " +
+              "key - whole-row merge would silently collapse them " +
+              "into one update row; deduplicate the table first " +
+              "(compact after a deleteKeys/re-append) or merge on a " +
+              "unique key")
+          perFile.map(_.getString(0)).toSet
+        }
+      val hitEntries = all.filter(e => affected(relOf(e)))
       def condOf(c: Option[Column], base: Column): Column =
         c.map(cc => base && coalesce(cc, lit(false))).getOrElse(base)
       val rewritten =
@@ -4573,7 +4545,7 @@ object Snapshots {
             matched.map(cl => (condOf(cl.condition, hit), cl)) ++
             notMatchedBySource.map(cl => (condOf(cl.condition, miss), cl))
           val joined = openLive(spark, path, v, schema, partCols,
-              all.filter(e => affected(relOf(e))), dvs, colMap)
+              hitEntries, dvs, colMap)
             .join(srcR, joinCond, "left")
           val killed = guarded.foldRight(lit(false)) { case ((g, cl), els) =>
             when(g, lit(cl.isInstanceOf[WhenMatchedDelete])).otherwise(els)
@@ -4599,9 +4571,7 @@ object Snapshots {
           // every stored source key sits in a target entry; with
           // matched clauses, in an affected one (a file holding a
           // matched key is affected by definition)
-          val stored =
-            if (matched.isEmpty) targets
-            else all.filter(e => affected(relOf(e)))
+          val stored = if (matched.isEmpty) targets else hitEntries
           val unmatchedSrc = srcR.join(keysOf(stored), joinCond,
             "left_anti")
           // first-match-wins across insert clauses: clause i fires only
@@ -4634,13 +4604,18 @@ object Snapshots {
           } else publishLoop(spark, path, Seq(commitDir), fresh,
             all.filterNot(e => affected(relOf(e))), schema, partCols,
             dropped, txns, dvs, colMap, Some(v),
-            RebaseRewrite("merging into", affected, dvs), "mergeInto",
+            RebaseRewrite(verb, affected, dvs), op,
             st.props, None, out.schema, out.columns.toSeq)
       }
     } finally { srcR.unpersist(); () }
   }
 
   private[graft] val SrcHitCol = "__graft_src_hit"
+  // marks [[mergeDeleting]]'s delete rows in its merge source
+  private val DeleteCol = "__graft_delete"
+
+  private final case class MergeScope(targets: Seq[String],
+    repeats: Boolean, nullKey: Boolean, empty: Boolean)
 
   /** [[mergeInto]]'s one pass over the source alone, before any
     * target read: the entries a source row can match, and whether
@@ -4649,9 +4624,10 @@ object Snapshots {
     * check is skipped). The source's per-key-tuple counts group by
     * the source columns equated in ON to the sources of the table's
     * identity and time partition fields, keeping each group's
-    * largest count; at most [[SnapshotBatchScan.MaxStaticInSet]] + 1
-    * groups reach the driver, largest first, so the first carries
-    * the verdict, NULL keys included. With `prune` and no more
+    * largest count and whether it holds a NULL key; at most
+    * [[SnapshotBatchScan.MaxStaticInSet]] + 1 groups reach the
+    * driver, largest first (with `nullsFirst`, NULL-holding groups
+    * before all), so the first carries the verdicts. With `prune` and no more
     * groups than the bound, each group without a NULL derives its
     * directory tuple as the writer named directories (the UTC derive
     * session), and only entries in those directories, or lacking
@@ -4664,8 +4640,8 @@ object Snapshots {
     */
   private def mergeScope(spark: SparkSession, srcR: DataFrame,
                          on: Seq[(String, String)], st: CurState,
-                         schema: StructType, prune: Boolean)
-      : (Seq[String], Boolean) = {
+                         schema: StructType, prune: Boolean,
+                         nullsFirst: Boolean): MergeScope = {
     // keys equal under the join name one identity directory: not so
     // for -0.0 and 0.0, nor under a string collation
     def oneDir(dt: DataType): Boolean = dt match {
@@ -4688,17 +4664,26 @@ object Snapshots {
           .map(p => (fld, s"$SrcPrefix${p._2}"))
       }
     val by = fields.map(_._2).distinct
-    val top = srcR.groupBy(on.map(p => col(s"$SrcPrefix${p._2}")): _*)
+    val srcKeys = on.map(p => col(s"$SrcPrefix${p._2}"))
+    val top = srcR.groupBy(srcKeys: _*)
       .count()
       .groupBy(by.map(col): _*)
-      .agg(org.apache.spark.sql.functions.max("count").as("count"))
-      .orderBy(col("count").desc)
+      .agg(org.apache.spark.sql.functions.max("count").as("count"),
+        org.apache.spark.sql.functions.max(
+          srcKeys.map(_.isNull).reduce(_ || _)).as("nul"))
+      .orderBy((if (nullsFirst) Seq(col("nul").desc) else Nil) :+
+        col("count").desc: _*)
       .limit(SnapshotBatchScan.MaxStaticInSet + 1)
       .collect()
     val repeats = top.headOption.exists(r =>
       !r.isNullAt(by.size) && r.getLong(by.size) > 1L)
+    val nullKey = top.headOption.exists(r =>
+      !r.isNullAt(by.size + 1) && r.getBoolean(by.size + 1))
+    // an empty source: no group, or one whose count is NULL
+    def scoped(targets: Seq[String]) = MergeScope(targets, repeats,
+      nullKey, top.forall(_.isNullAt(by.size)))
     if (fields.isEmpty || top.length > SnapshotBatchScan.MaxStaticInSet)
-      return (st.entries, repeats)
+      return scoped(st.entries)
     // a NULL key matches nothing
     val keys = top.filterNot(r => by.indices.exists(r.isNullAt))
       .map(r => org.apache.spark.sql.Row.fromSeq(by.indices.map(r.get)))
@@ -4713,11 +4698,11 @@ object Snapshots {
         .collect().map(r =>
           fields.indices.map(i => dirValue(r.getString(i))): Seq[String])
         .toSet
-    (st.entries.filter { e =>
+    scoped(st.entries.filter { e =>
       val vals = partValsOf(relOf(e))
       fields.exists(f => !vals.contains(f._1.dirName)) ||
         dirs(fields.map(f => vals(f._1.dirName)))
-    }, repeats)
+    })
   }
 
   /** Mutation batches must carry the table's exact column types:
@@ -5883,6 +5868,22 @@ object Snapshots {
           "directory names, not data files, so existing files would " +
           "misread; evolve hidden transforms freely, or rewrite into " +
           "a fresh table for identity changes")
+      // a bucket or truncate directory name carries no width: a live
+      // file under a new field's directory name may hold another one
+      val held = all.iterator.flatMap(e => partValsOf(relOf(e)).keys).toSet
+      val rewidth = newSpecs.filterNot(partCols.contains)
+        .map(parsePartField).filter {
+          case f @ (_: PBucket | _: PTruncate) => held(f.dirName)
+          case _ => false
+        }
+      require(rewidth.isEmpty,
+        "snapshot: partition-spec evolution cannot change the WIDTH " +
+          "of a bucket or truncate field on a non-empty table (old: " +
+          s"${partCols.mkString(",")}; new: " +
+          s"${rewidth.map(_.spec).mkString(",")}) - the directory " +
+          "name carries no width, so existing files would misread " +
+          "under the new one; add new fields freely, or rewrite into " +
+          "a fresh table for width changes")
     }
     val f = fs(spark, path)
     val next = v + 1L

@@ -788,7 +788,7 @@ object Streams {
     * copy-on-write [[graft.io.Snapshots.merge]] on `keyCols` — the
     * CDC-sink posture (replace-by-key, insert-when-new) over the
     * same versioned store the append stream feeds. Each batch is
-    * persisted for the merge's multiple passes (dup-key guard,
+    * persisted for the merge's passes (the source key aggregate,
     * affected-file discovery, rewrite) so the source isn't re-read
     * per pass. Same checkpoint contract as the other index streams:
     * durable `checkpoint` → restartable; a replayed batch is
@@ -849,17 +849,22 @@ object Streams {
 
   /** CDC sink over the snapshot store: each micro-batch carries an
     * `opCol` routing column — upsert codes (`u`/`c`/`i`/`insert`/
-    * `update`/`upsert`) apply as a copy-on-write
-    * [[graft.io.Snapshots.merge]] (first batch bootstraps via
-    * commit), delete codes (`d`/`delete`) as a distributed
-    * [[graft.io.Snapshots.deleteKeys]] — the Debezium-sink posture
-    * with NO driver-side key lists. Contract refusals, loud: an
-    * unknown op code, and a key appearing under BOTH an upsert and a
-    * delete in the same batch (the batch gives no order between
-    * them; a CDC feed that compacts per key per transaction — the
-    * standard connector behavior — never trips this). Upserts apply
-    * before deletes within a batch, so disjoint-key batches are
-    * order-independent.
+    * `update`/`upsert`) and delete codes (`d`/`delete`) — the
+    * Debezium-sink posture with NO driver-side key lists. The first
+    * batch bootstraps the table by commit. After it, under
+    * `deleteMode = "cow"` a batch lands as ONE copy-on-write merge
+    * and one commit: a matched delete for the delete rows, and
+    * [[graft.io.Snapshots.merge]]'s whole-row update and insert for
+    * the upsert rows; a reader never sees half a batch. Under
+    * `"mor"` and `"eq"` the upserts apply as a merge and the deletes
+    * commit next as a delete file, two versions per batch. Contract
+    * refusals, loud: an unknown or NULL op code, a NULL key, and a key
+    * appearing under BOTH an upsert and a delete in the same batch
+    * (the batch gives no order between them; a CDC feed that
+    * compacts per key per transaction — the standard connector
+    * behavior — never trips this). A delete key listed twice deletes
+    * once. Since upsert and delete keys are disjoint, the order they
+    * apply in cannot change the result.
     */
   def snapshotCdcStream(data: DataFrame, path: String,
                         keyCols: Seq[String], opCol: String = "op",
@@ -895,7 +900,13 @@ object Streams {
             "cdc: a key appears under both an upsert and a delete in " +
               "one batch - the batch gives no order between them; " +
               "compact the feed per key first")
-          if (!ups.isEmpty) {
+          // a copy-on-write batch on a live table is one merge, one
+          // commit: no reader sees its upserts without its deletes
+          val oneMerge = deleteMode == "cow" &&
+            graft.io.Snapshots.latestVersion(b.sparkSession, path).nonEmpty
+          if (oneMerge) graft.io.Snapshots.mergeDeleting(b.sparkSession,
+            path, ups, Some(dels), keyCols)
+          if (!oneMerge && !ups.isEmpty) {
             if (graft.io.Snapshots.latestVersion(b.sparkSession, path).isEmpty) {
               // same bootstrap guard as the upsert stream: the seed
               // commit must satisfy what later merges enforce
@@ -903,14 +914,15 @@ object Streams {
               graft.io.Snapshots.commit(ups, path)
             } else graft.io.Snapshots.merge(b.sparkSession, path, ups, keyCols)
           }
-          if (!dels.isEmpty &&
+          if (!oneMerge && !dels.isEmpty &&
               graft.io.Snapshots.latestVersion(b.sparkSession, path).nonEmpty) {
             // 'eq' is the 100 TB CDC shape: the delete batch commits
             // AS a key file (zero table reads, zero rewrites) and is
             // applied physically at the next compact; replays re-kill
             // the same keys harmlessly. 'mor' commits row positions
-            // (one table scan, no rewrites); 'cow' rewrites the
-            // affected files. All three converge under replay.
+            // (one table scan, no rewrites); 'cow' (bootstrap batch
+            // only) rewrites the affected files. All three converge
+            // under replay.
             deleteMode match {
               case "eq" => graft.io.Snapshots.deleteKeysEq(
                 b.sparkSession, path, dels, keyCols)

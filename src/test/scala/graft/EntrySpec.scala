@@ -135,6 +135,29 @@ class EntrySpec extends SparkSpec {
     assert(stack.isEmpty, s"second read stack is back: $stack")
   }
 
+  test("merge and mergeUpdate are clause sets over mergeInto's engine: " +
+    "no scan, join or commit code of their own") {
+    val snapshots = sources.collectFirst {
+      case (rel, s) if rel == "graft/io/Snapshots.scala" => s
+    }.get
+    // a member of `object Snapshots` runs from its `def` at two-space
+    // indent to the next two-space-indent line
+    val member = """(?m)^  (?:private\[graft\] )?def (\w+)\b""".r
+    val bodies = member.findAllMatchIn(snapshots).map { m =>
+      val rest = snapshots.substring(m.end)
+      val end = """(?m)^  \S""".r.findFirstMatchIn(rest)
+        .fold(rest.length)(_.start)
+      m.group(1) -> rest.take(end)
+    }.toSeq
+    val wrappers = Seq("merge", "mergeDeleting", "mergeUpdate")
+    assert(wrappers.forall(bodies.map(_._1).contains), bodies.map(_._1))
+    val own = Seq("openLive", "liveWithId", "discoverAffected",
+      "writeCommit", "publishLoop", "writeBatchFiles")
+    val hits = bodies.collect { case (n, b) if wrappers.contains(n) =>
+      own.filter(b.contains).map(c => s"$n: $c") }.flatten
+    assert(hits.isEmpty, s"a merge wrapper holds engine code: $hits")
+  }
+
   test("no `.limit(1).count()` emptiness probe in the engine") {
     // a code-generated limit names its counter after a JVM-wide id, so
     // its generated class never repeats and every call compiles anew;

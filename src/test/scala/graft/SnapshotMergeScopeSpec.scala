@@ -149,4 +149,51 @@ class SnapshotMergeScopeSpec extends SparkSpec {
       s"read $read records; the touched partition holds $perPart rows, " +
         s"the source $srcRows, the store ${parts * perPart}")
   }
+
+  /** An upsert batch in partition 5: 30 stored keys, all in its first
+    * file, and one new key. */
+  private def upsertFive(): DataFrame = {
+    import spark.implicits._
+    ((5L until 305L by parts.toLong).map(k => (k, 5, f"u$k%04d"))
+      :+ ((5005L, 5, "u5005"))).toDF("k", "p", "v")
+  }
+
+  test("merge and mergeUpdate prune to the source's partition: at most " +
+    "4 of 20 files opened, the replay's rows, that partition's records") {
+    val upd = upsertFive()
+    val srcRows = upd.count()
+    val (path, base) = partitioned()
+    graft.io.SnapshotReaderFactory.filesOpened.set(0L)
+    val read = recordsRead {
+      Snapshots.merge(spark, path, upd, Seq("k", "p"))
+    }
+    val opened = graft.io.SnapshotReaderFactory.filesOpened.get()
+    assert(opened <= 4L, s"merge opened $opened of ${2 * parts} files")
+    val replay = base.join(upd.select("k"), Seq("k"), "left_anti")
+      .unionByName(upd)
+    assert(rows(Snapshots.read(spark, path)) === rows(replay))
+    // discovery reads the touched partition's keys; the rewrite and
+    // the inserts' anti-join each read its affected file, half of it
+    assert(read <= 2 * perPart + srcRows,
+      s"merge read $read records; the touched partition holds " +
+        s"$perPart rows, the source $srcRows, the store ${parts * perPart}")
+    // the same batch as a partial-column update with inserts
+    val (path2, base2) = partitioned()
+    val upd2 = upd.select(col("k"), col("p"), concat(col("v"), lit("!"))
+      .as("v"))
+    graft.io.SnapshotReaderFactory.filesOpened.set(0L)
+    val read2 = recordsRead {
+      Snapshots.mergeUpdate(spark, path2, upd2, Seq("k", "p"), Seq("v"),
+        insertUnmatched = true)
+    }
+    val opened2 = graft.io.SnapshotReaderFactory.filesOpened.get()
+    assert(opened2 <= 4L,
+      s"mergeUpdate opened $opened2 of ${2 * parts} files")
+    val replay2 = base2.join(upd2.select("k"), Seq("k"), "left_anti")
+      .unionByName(upd2)
+    assert(rows(Snapshots.read(spark, path2)) === rows(replay2))
+    assert(read2 <= 2 * perPart + srcRows,
+      s"mergeUpdate read $read2 records; the touched partition holds " +
+        s"$perPart rows, the source $srcRows, the store ${parts * perPart}")
+  }
 }

@@ -1164,6 +1164,43 @@ class SnapshotsSpec extends SparkSpec {
       e3.toString)
   }
 
+  test("a copy-on-write CDC batch of upserts, inserts and deletes lands as one version") {
+    val store = newStore
+    Snapshots.commit(docs, store)
+    val cols = docs.columns.map(col).toSeq
+    val up = docs.filter(col("doc_id") % 10 === 0)
+      .withColumn("text", upper(col("text"))).select(cols: _*)
+    val ins = docs.filter(col("doc_id") % 10 === 5)
+      .withColumn("doc_id", -col("doc_id") - 1).select(cols: _*)
+    val del = docs.filter(col("doc_id") % 10 === 7).select(cols: _*)
+    val twice = del.limit(1)
+    val staged = graft.io.Scratch.dir("graft_snapspec_cdc_one_")
+    graft.io.Scratch.stageSingleParquetFile(
+      up.withColumn("op", lit("u"))
+        .unionByName(ins.withColumn("op", lit("c")))
+        .unionByName(del.withColumn("op", lit("d")))
+        .unionByName(twice.withColumn("op", lit("delete"))),
+      staged, "batch.parquet")
+    val cdcSchema = org.apache.spark.sql.types.StructType(
+      graft.streaming.Streams.DocsRawSchema.fields :+
+        org.apache.spark.sql.types.StructField("op",
+          org.apache.spark.sql.types.StringType))
+    graft.streaming.Streams.snapshotCdcStream(
+      graft.streaming.Streams.fileStream(spark, staged.toString,
+        cdcSchema), store, Seq("doc_id"))
+    assert(Snapshots.versions(spark, store) === Seq(1L, 2L))
+    assert(Snapshots.history(spark, store).collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap ===
+      Map(1L -> "overwrite", 2L -> "merge"))
+    val want = docs.join(up.select("doc_id"), Seq("doc_id"), "left_anti")
+      .join(del.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(up).unionByName(ins)
+    val got = Snapshots.read(spark, store)
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).count() === 0L)
+    assert(want.exceptAll(got).count() === 0L)
+  }
+
   test("manifest stats skip files a range scan cannot need; no-stats columns never prune") {
     val path = newStore
     (0 until 4).foreach(q =>
